@@ -21,8 +21,8 @@ Workloads (the north-rule core):
 - ``emb_topk``       — brute-force cosine top-10 for 50 query vectors.
 
 Scaling-efficiency evidence (north rule: N vs 4N cores) is produced by
-``scripts/scaling_bench.py``, which re-runs this file at two parallelism
-levels in fresh JVMs.
+``scripts/scaling_pagerank.py``, which times the same PageRank job at two
+parallelism levels in fresh JVMs.
 """
 
 from __future__ import annotations

@@ -493,7 +493,6 @@ def betweenness_centrality(
         out = out.persist()
         out.count()
         vertices.unpersist()
-        cache.close(keep_result=True)
         return out
 
     arcs = (
@@ -581,7 +580,6 @@ def betweenness_centrality(
     if bet_acc is None:
         out = vertices.select("id", F.lit(0.0).alias("betweenness"))
         arcs.unpersist()
-        cache.close(keep_result=True)
         return out
 
     bet = bet_acc
@@ -607,7 +605,6 @@ def betweenness_centrality(
     out.count()
     arcs.unpersist()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -696,7 +693,6 @@ def edge_betweenness_centrality(
         out.count()
         vertices.unpersist()
         edge_keys.unpersist()
-        cache.close(keep_result=True)
         return out
 
     arcs = (
@@ -800,7 +796,6 @@ def edge_betweenness_centrality(
     arcs.unpersist()
     vertices.unpersist()
     edge_keys.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -867,7 +862,6 @@ def percolation_centrality(
         out.count()
         st.unpersist()
         vertices.unpersist()
-        cache.close(keep_result=True)
         return out
 
     arcs = (
@@ -955,7 +949,6 @@ def percolation_centrality(
     arcs.unpersist()
     vertices.unpersist()
     st.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -995,7 +988,6 @@ def load_centrality(
         out = out.persist()
         out.count()
         vertices.unpersist()
-        cache.close(keep_result=True)
         return out
     arcs = (
         (g.edges if g.directed else g.symmetric_edges())
@@ -1068,7 +1060,6 @@ def load_centrality(
     out.count()
     arcs.unpersist()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -1157,7 +1148,6 @@ def edge_load_centrality(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFram
         out.count()
     arcs.unpersist()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -1302,7 +1292,6 @@ def _subset_betweenness(
     out.count()
     arcs.unpersist()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -1345,7 +1334,6 @@ def betweenness_centrality_subset(
     out = out.persist()
     out.count()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -1395,7 +1383,6 @@ def edge_betweenness_centrality_subset(
         ).persist()
         out.count()
     vertices.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -1539,7 +1526,6 @@ def group_betweenness_centrality(
         arcs_avoid.unpersist()
     outside.unpersist()
     c_ids.unpersist()
-    cache.close()
     if normalized:
         denom = (n - c) * (n - c - 1)
         return float(total) / denom if denom > 0 else 0.0

@@ -273,7 +273,6 @@ def biconnected_components(g: SparkGraph) -> DataFrame:
         pre.unpersist()
         return out
     finally:
-        cache.close()
         e.unpersist()
 
 

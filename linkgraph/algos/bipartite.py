@@ -250,25 +250,13 @@ def birank(
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     m = bt.count()
     parts = loop_partitions(m, cap, rows_per_partition=40_000)
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.shuffle.partitions",
-        )
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    cache = SuperstepCache(spark)
-    try:
-        arcs = arcs.repartition(parts, "i").persist()
+    with SuperstepCache(spark, partitions=parts) as loop:
+        arcs = loop.pin(arcs, "i")
         arcs.count()
         p0 = _pers(top_personalization, top, "p0")
         u0 = _pers(bottom_personalization, bottom, "u0")
-        base_t = cache.truncate(p0)  # (id, p0)
-        base_b = cache.truncate(u0)  # (id, u0)
+        base_t = loop.truncate(p0)  # (id, p0)
+        base_b = loop.truncate(u0)  # (id, u0)
 
         def s_p(p):  # u-side contribution: (S p)_i = Σ_j s_ij p_j
             return (
@@ -292,8 +280,8 @@ def birank(
                 + F.lit(1.0 - beta) * F.col("u0")
             ).alias("val"),
         )
-        state_p = cache.truncate(p)
-        state_u = cache.truncate(u)
+        state_p = loop.truncate(p)
+        state_u = loop.truncate(u)
         n_iter = fixed_iter if fixed_iter is not None else max_iter
         converged = fixed_iter is not None
         for _ in range(n_iter):
@@ -304,7 +292,7 @@ def birank(
                     + F.lit(1.0 - alpha) * F.col("p0")
                 ).alias("val"),
             )
-            new_p = cache.truncate(new_p)
+            new_p = loop.truncate(new_p)
             new_u = base_b.join(s_p(new_p), "id", "left").select(
                 "id",
                 (
@@ -312,7 +300,7 @@ def birank(
                     + F.lit(1.0 - beta) * F.col("u0")
                 ).alias("val"),
             )
-            new_u = cache.truncate(new_u)
+            new_u = loop.truncate(new_u)
             if fixed_iter is None:
                 # relative-L1 errors, both sides in one pass each
                 def _err(old, new):
@@ -335,8 +323,8 @@ def birank(
                 done = err_u < n_bottom * tol and _err(state_p, new_p) < n_top * tol
             else:
                 done = False
-            cache.release(state_p)
-            cache.release(state_u)
+            loop.release(state_p)
+            loop.release(state_u)
             state_p, state_u = new_p, new_u
             if done:
                 converged = True
@@ -358,13 +346,7 @@ def birank(
                 )
             )
         res = out.select("id", F.col("val").alias("score"))
-        res = res.localCheckpoint(eager=True)
-        arcs.unpersist()
-        cache.close(keep_result=True)
-        return res
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        return loop.result(res)
 
 
 def color(g: SparkGraph) -> DataFrame:
@@ -522,7 +504,6 @@ def to_vertex_cover(g: SparkGraph, matching: DataFrame, top_nodes: DataFrame) ->
         seen = cache.truncate(seen.unionByName(nxt))
         frontier = nxt
     z = seen.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     cover = top.join(z, "id", "left_anti").unionByName(
         bottom.join(z, "id", "left_semi")
     )

@@ -89,7 +89,6 @@ def _rooted(edges: DataFrame, n0: int, root: int, spark) -> DataFrame:
             )
         )
         if picks.count() < n_nodes - 1:
-            cache.close()
             raise NetworkXError("No spanning arborescence in G.")
 
         # cycle nodes = image of the 2^K-step ancestor map, root excluded
@@ -166,7 +165,6 @@ def _rooted(edges: DataFrame, n0: int, root: int, spark) -> DataFrame:
         )
         n_contracted = labels.count() - labels.select("super").distinct().count()
         if n_contracted <= 0:
-            cache.close()
             raise RuntimeError("arborescence contraction failed to shrink")
         n_nodes -= n_contracted
 
@@ -191,7 +189,6 @@ def _rooted(edges: DataFrame, n0: int, root: int, spark) -> DataFrame:
     out = sel.select(
         F.col("ou").alias("src"), F.col("ov").alias("dst"), F.col("ow").alias("weight")
     ).localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 

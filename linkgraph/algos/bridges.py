@@ -187,7 +187,6 @@ def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
             out = out.unionAll(f_)
         return out.localCheckpoint()
     finally:
-        cache.close()
         e.unpersist()
 
 

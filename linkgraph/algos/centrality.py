@@ -20,13 +20,12 @@ Semantics match the reference exactly:
 Both use the centrality-of-predecessors direction: contributions flow
 along arcs src→dst (left eigenvector), i.e. the same
 ``join on src → groupBy(dst)`` shuffle as PageRank; the L2 norms are
-in-plan one-row broadcasts. Loop tuning (AQE off, shuffled-hash joins,
-localCheckpoint per iteration) mirrors pagerank.py.
+in-plan one-row broadcasts. Both run under the shared superstep runtime
+(:class:`linkgraph.iterutils.SuperstepCache`), like pagerank.py.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
@@ -36,39 +35,21 @@ from linkgraph.iterutils import SuperstepCache
 from linkgraph.algos.pagerank import PowerIterationFailedConvergence
 
 
-@contextmanager
-def _loop_conf(spark):
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.join.preferSortMergeJoin",
-        )
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-
-
-def _prep(g: SparkGraph):
-    spark = g.spark
-    vertices = g.vertices.select("id").persist()
+def _prep(g: SparkGraph, loop: SuperstepCache):
+    vertices = loop.pin(g.vertices.select("id"))
     n = vertices.count()
     num_parts = g.num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+        loop.spark.conf.get("spark.sql.shuffle.partitions")
     )
-    edges = (
+    # Laid out by src but pinned without a key: these loops keep automatic
+    # broadcasts (pin(df, key) would turn them off).
+    edges = loop.pin(
         g.symmetric_edges()
         .select("src", "dst", "weight")
         .repartition(num_parts, "src")
-        .persist()
     )
     edges.count()
-    return spark, vertices, n, edges
+    return vertices, n, edges
 
 
 def _l2_scale(x: DataFrame) -> DataFrame:
@@ -110,24 +91,24 @@ def eigenvector_centrality(
     step-for-step (same role as ``pagerank(fixed_iter=...)``); it also
     skips the per-iteration L1-delta job, halving driver round-trips.
     """
-    spark, vertices, n, edges = _prep(g)
     if fixed_iter is not None:
         if fixed_iter < 1:
             raise ValueError("fixed_iter must be >= 1")
         max_iter = fixed_iter
-    if n == 0:
-        raise ValueError("cannot compute centrality for the null graph")
-    if nstart is None:
-        x = vertices.select("id", F.lit(1.0 / n).alias("x"))
-    else:
-        if all(v == 0 for v in nstart.values()):
-            raise ValueError("initial vector cannot have all zero values")
-        s = float(sum(nstart.values()))
-        rows = [(int(k), float(v) / s) for k, v in nstart.items()]
-        x = spark.createDataFrame(rows, "id long, x double")
+    spark = g.spark
+    with SuperstepCache(spark) as loop:
+        vertices, n, edges = _prep(g, loop)
+        if n == 0:
+            raise ValueError("cannot compute centrality for the null graph")
+        if nstart is None:
+            x = vertices.select("id", F.lit(1.0 / n).alias("x"))
+        else:
+            if all(v == 0 for v in nstart.values()):
+                raise ValueError("initial vector cannot have all zero values")
+            s = float(sum(nstart.values()))
+            rows = [(int(k), float(v) / s) for k, v in nstart.items()]
+            x = spark.createDataFrame(rows, "id long, x double")
 
-    cache = SuperstepCache(spark)
-    with _loop_conf(spark):
         for _ in range(max_iter):
             xlast = x
             pushed = _push(edges, xlast, weight)
@@ -149,7 +130,7 @@ def eigenvector_centrality(
                     ).alias("x"),
                 )
             )
-            x_new = cache.truncate(x_new)
+            x_new = loop.truncate(x_new)
             if fixed_iter is None:
                 err = (
                     x_new.join(xlast.select("id", F.col("x").alias("xp")), "id")
@@ -158,13 +139,10 @@ def eigenvector_centrality(
                 ) or 0.0
             x = x_new
             if fixed_iter is None and err < n * tol:
-                cache.close(keep_result=True)
-                return x.select("id", F.col("x").alias("centrality"))
-    if fixed_iter is not None:
-        cache.close(keep_result=True)
-        return x.select("id", F.col("x").alias("centrality"))
-    cache.close()
-    raise PowerIterationFailedConvergence(max_iter)
+                return loop.result(x.select("id", F.col("x").alias("centrality")))
+        if fixed_iter is not None:
+            return loop.result(x.select("id", F.col("x").alias("centrality")))
+        raise PowerIterationFailedConvergence(max_iter)
 
 
 def katz_centrality(
@@ -183,29 +161,32 @@ def katz_centrality(
     ``fixed_iter=k``: exactly k iterations, no convergence test — matches
     the SQL-unrolled oracle and skips the per-iteration delta job.
     """
-    spark, vertices, n, edges = _prep(g)
-    if n == 0:
-        return spark.createDataFrame([], "id long, centrality double")
     if fixed_iter is not None:
         if fixed_iter < 1:
             raise ValueError("fixed_iter must be >= 1")
         max_iter = fixed_iter
-    if isinstance(beta, dict):
-        b = spark.createDataFrame(
-            [(int(k), float(v)) for k, v in beta.items()], "id long, b double"
-        ).persist()
-        # coverage check without collecting the vertex set (katz.py:168-169
-        # raises on missing nodes): two anti-join existence probes.
-        missing = vertices.join(b.select("id"), "id", "left_anti")
-        extra = b.select("id").join(vertices, "id", "left_anti")
-        if missing.limit(1).count() or extra.limit(1).count():
-            raise ValueError("beta dictionary must have a value for every node")
-    else:
-        b = vertices.select("id", F.lit(float(beta)).alias("b")).persist()
+    spark = g.spark
+    with SuperstepCache(spark) as loop:
+        vertices, n, edges = _prep(g, loop)
+        if n == 0:
+            return spark.createDataFrame([], "id long, centrality double")
+        if isinstance(beta, dict):
+            b = loop.pin(
+                spark.createDataFrame(
+                    [(int(k), float(v)) for k, v in beta.items()], "id long, b double"
+                )
+            )
+            # coverage check without collecting the vertex set
+            # (katz.py:168-169 raises on missing nodes): two anti-join
+            # existence probes.
+            missing = vertices.join(b.select("id"), "id", "left_anti")
+            extra = b.select("id").join(vertices, "id", "left_anti")
+            if missing.limit(1).count() or extra.limit(1).count():
+                raise ValueError("beta dictionary must have a value for every node")
+        else:
+            b = loop.pin(vertices.select("id", F.lit(float(beta)).alias("b")))
 
-    x = vertices.select("id", F.lit(0.0).alias("x"))
-    cache = SuperstepCache(spark)
-    with _loop_conf(spark):
+        x = vertices.select("id", F.lit(0.0).alias("x"))
         for _ in range(max_iter):
             xlast = x
             pushed = _push(edges, xlast, weight)
@@ -218,7 +199,7 @@ def katz_centrality(
                     ),
                 )
             )
-            x_new = cache.truncate(x_new)
+            x_new = loop.truncate(x_new)
             if fixed_iter is None:
                 err = (
                     x_new.join(xlast.select("id", F.col("x").alias("xp")), "id")
@@ -229,15 +210,12 @@ def katz_centrality(
             if fixed_iter is None and err < n * tol:
                 if normalized:
                     x = _l2_scale(x)
-                cache.close(keep_result=True)
-                return x.select("id", F.col("x").alias("centrality"))
-    if fixed_iter is not None:
-        if normalized:
-            x = _l2_scale(x)
-        cache.close(keep_result=True)
-        return x.select("id", F.col("x").alias("centrality"))
-    cache.close()
-    raise PowerIterationFailedConvergence(max_iter)
+                return loop.result(x.select("id", F.col("x").alias("centrality")))
+        if fixed_iter is not None:
+            if normalized:
+                x = _l2_scale(x)
+            return loop.result(x.select("id", F.col("x").alias("centrality")))
+        raise PowerIterationFailedConvergence(max_iter)
 
 
 def eigenvector_centrality_numpy(g, weight=None, **kwargs):

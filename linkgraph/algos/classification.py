@@ -149,7 +149,6 @@ def _spread(
         out = out.localCheckpoint(eager=True)
         return out
     finally:
-        cache.close()
         arcs.unpersist()
         lids.unpersist()
 

@@ -116,7 +116,6 @@ def k_cliques(g: SparkGraph, k: int) -> DataFrame:
         if cur.limit(1).count() == 0:
             break
     out = cur.select("members").localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out if size == k else g.spark.createDataFrame([], "members array<bigint>")
 
 
@@ -199,7 +198,6 @@ def find_cliques(g: SparkGraph, max_size: Optional[int] = None) -> DataFrame:
             maximal = lvl.select("members")
         out = out.unionByName(maximal)
     out = out.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 

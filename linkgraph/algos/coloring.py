@@ -151,7 +151,6 @@ def greedy_color(
         out = _jones_plassmann_coloring(
             sym, g.vertices.select("id"), cache, seed=int(seed) or 17
         ).localCheckpoint(eager=True)
-        cache.close(keep_result=True)
         return out
 
     edges, nodes = _collect(g, max_driver_edges)

@@ -37,7 +37,6 @@ executors the same waste in reverse).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -52,37 +51,6 @@ __all__ = [
     "greedy_modularity_communities",
     "partition_quality",
 ]
-
-@contextmanager
-def _loop_conf(spark, extra=None):
-    """Freeze planner features that charge per-plan costs the iterative
-    loop cannot amortize: AQE re-planning, sort-merge preference, and
-    runtime-filter injection (whose search is superlinear in join count)."""
-    keys = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
-        "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": "false",
-    }
-    if extra:
-        keys.update(extra)
-    saved = {}
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            pass
-    for k, v in keys.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-
 
 def _require_partition(g: SparkGraph, communities: DataFrame) -> None:
     """Raise like ``NotAPartition`` (``quality.py:107``) unless every node
@@ -272,8 +240,8 @@ def _one_level(
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     parts = loop_partitions(n_arcs, default_parts)
 
-    with _loop_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
-        arcs = arcs.repartition(parts, "dst").persist()
+    with SuperstepCache(spark, partitions=parts) as level:
+        arcs = level.pin(arcs.repartition(parts, "dst"))
         state = cache.truncate(state0)
         carry = ["kout", "kin"] if directed else ["k"]
         for rnd in range(max_move_rounds):
@@ -363,7 +331,6 @@ def _one_level(
             state = nxt
             if state.filter(F.col("_gain")).limit(1).count() == 0:
                 break
-        arcs.unpersist()
     return state.select("id", "community")
 
 
@@ -519,16 +486,14 @@ def _partition_levels(
     seed: int,
     max_move_rounds: int,
 ) -> DataFrame:
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    # mapping from original id to current community
-    mapping = cache.truncate(g.vertices.select("id", F.col("id").alias("community")))
-    level_g = g
-    prev_q = _modularity_unchecked(
-        g, g.vertices.select("id", F.col("id").alias("community")), resolution
-    )
-    level = 0
-    with _loop_conf(spark):
+    with SuperstepCache(g.spark) as cache:
+        # mapping from original id to current community
+        mapping = cache.truncate(g.vertices.select("id", F.col("id").alias("community")))
+        level_g = g
+        prev_q = _modularity_unchecked(
+            g, g.vertices.select("id", F.col("id").alias("community")), resolution
+        )
+        level = 0
         while True:
             level += 1
             comm = _one_level(
@@ -583,14 +548,13 @@ def _partition_levels(
                 directed=g.directed,
                 coalesce_edges=False,
             )
-    # deterministic label: min original member id
-    canon = mapping.groupBy("community").agg(F.min("id").alias("label"))
-    out = mapping.join(canon, "community").select(
-        "id", F.col("label").alias("community")
-    )
-    out = cache.truncate(out, retire=mapping)
-    cache.close(keep_result=True)
-    return out
+        # deterministic label: min original member id
+        canon = mapping.groupBy("community").agg(F.min("id").alias("label"))
+        out = mapping.join(canon, "community").select(
+            "id", F.col("label").alias("community")
+        )
+        out = cache.truncate(out, retire=mapping)
+        return cache.result(out)
 
 def greedy_modularity_communities(
     g: SparkGraph,

@@ -33,7 +33,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, loop_partitions
 from linkgraph.state import CheckpointStore, IterationMetrics
 
 
@@ -102,88 +102,57 @@ def connected_components(
         .select("src", "dst")
         .distinct()
     )
-
-    start_round = 0
-    if resume and checkpoint_store is not None and checkpoint_store.latest_iteration() >= 0:
-        start_round = checkpoint_store.latest_iteration() + 1
-        e = checkpoint_store.load(start_round - 1, g.spark)
-
-    cache = SuperstepCache(g.spark)
-
-    # Same loop tuning as PageRank: no AQE re-planning, hash joins instead
-    # of per-round re-sorts of the star edge sets. Restored on exit.
     spark = g.spark
-    saved_conf = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.join.preferSortMergeJoin": spark.conf.get(
-            "spark.sql.join.preferSortMergeJoin"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try:
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with SuperstepCache(spark, store=checkpoint_store) as loop:
+        start_round, stored = loop.resume() if resume else (0, None)
+        if stored is not None:
+            e = stored
         # Lazy checkpoint + fingerprint: the fingerprint aggregation is the
-        # action that materializes the checkpointed RDD, so lineage
-        # truncation and convergence detection share ONE job per round
-        # (AQE is off inside the loop, so the lazy variant runs the plan
-        # exactly once).
-        e = e.localCheckpoint(eager=False)
+        # action that materializes the snapshot, so lineage truncation and
+        # convergence detection share ONE job per round (AQE is off inside
+        # the loop, so the lazy variant runs the plan exactly once).
+        e = loop.truncate(e, eager=False)
         fp = _fingerprint(e)
-        # Size the loop's shuffle partitions by DATA VOLUME (~250k pair
+        # Size the rounds' shuffle partitions by DATA VOLUME (~250k pair
         # rows per reduce task), capped at the session default: with AQE
         # off, a small graph would otherwise pay the session's full
         # partition count in per-task fixed cost EVERY round — pure
         # overhead locally, and the same rows-per-task rule is how a
         # 1000-executor run would be sized (it hits the session cap and
         # keeps the configured parallelism).
-        default_parts = int(saved_conf["spark.sql.shuffle.partitions"])
-        loop_parts = max(4, min(default_parts, (fp[0] or 1) // 250_000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for k in range(start_round, max_rounds):
-            t0 = time.monotonic()
-            e2 = _small_star(_large_star(e))
-            if checkpoint_store is not None:
-                e2 = checkpoint_store.commit(
-                    e2,
-                    IterationMetrics(
-                        k,
-                        wall_ms=int((time.monotonic() - t0) * 1000),
-                    ),
+        with SuperstepCache(spark, partitions=max(4, loop_partitions(fp[0], cap))):
+            for k in range(start_round, max_rounds):
+                t0 = time.monotonic()
+                e2 = loop.commit(
+                    _small_star(_large_star(e)),
+                    IterationMetrics(k, wall_ms=int((time.monotonic() - t0) * 1000)),
+                    eager=False,
                 )
+                fp2 = _fingerprint(e2)
+                loop.release(e)  # prev round's blocks are dead past this point
+                if checkpoint_store is not None:
+                    checkpoint_store.update_metrics(
+                        k, changed=0 if fp2 == fp else 1, edges_processed=fp2[0]
+                    )
+                if fp2 == fp:
+                    e = e2
+                    break
+                e, fp = e2, fp2
             else:
-                e2 = e2.localCheckpoint(eager=False)
-            fp2 = _fingerprint(e2)
-            cache.release(e)  # prev round's blocks are dead past this point
-            if checkpoint_store is not None:
-                checkpoint_store.update_metrics(
-                    k, changed=0 if fp2 == fp else 1, edges_processed=fp2[0]
-                )
-            if fp2 == fp:
-                e = e2
-                break
-            e, fp = e2, fp2
-        else:
-            if start_round < max_rounds:
-                cache.close()
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_rounds} rounds"
-                )
-    finally:
-        for key, val in saved_conf.items():
-            spark.conf.set(key, val)
+                if start_round < max_rounds:
+                    raise RuntimeError(
+                        f"connected_components did not converge in {max_rounds} rounds"
+                    )
 
-    # Converged star edges map node -> component min; roots and isolated
-    # nodes map to themselves.
-    labels = vertices.join(
-        e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
-        "id",
-        "left",
-    ).select("id", F.coalesce("component", "id").alias("component"))
-    cache.close(keep_result=True)
-    return labels
+        # Converged star edges map node -> component min; roots and
+        # isolated nodes map to themselves.
+        labels = vertices.join(
+            e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
+            "id",
+            "left",
+        ).select("id", F.coalesce("component", "id").alias("component"))
+        return loop.result(labels)
 
 
 def weakly_connected_components(g: SparkGraph, **kwargs) -> DataFrame:

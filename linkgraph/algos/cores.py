@@ -82,7 +82,6 @@ def core_number(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFrame:
         return g.spark.createDataFrame([], "id long, core long")
     res = out.persist()
     res.count()
-    cache.close(keep_result=False)
     return res
 
 
@@ -205,7 +204,6 @@ def onion_layers(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFrame:
         return spark.createDataFrame([], "id long, layer long")
     res = out.persist()
     res.count()
-    cache.close(keep_result=False)
     return res
 
 
@@ -247,27 +245,27 @@ def k_truss(g: SparkGraph, k: int, *, max_rounds: int = 10_000) -> SparkGraph:
     # dead triangles → decrement the surviving edges' support — instead of
     # re-running the full wedge join on the remaining edge set every round.
     cur = SparkGraph(edges, directed=False, coalesce_edges=False)
-    tri = _triangle_corners(cur)
-    tri_edges = cache.truncate(
-        tri.select(
-            "a",
-            "b",
-            "c",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
-                    ),
-                    F.struct(
-                        F.least("a", "c").alias("src"), F.greatest("a", "c").alias("dst")
-                    ),
-                    F.struct(
-                        F.least("b", "c").alias("src"), F.greatest("b", "c").alias("dst")
-                    ),
-                )
-            ).alias("e"),
-        ).select("a", "b", "c", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-    )
+    with _triangle_corners(cur) as tri:
+        tri_edges = cache.truncate(
+            tri.select(
+                "a",
+                "b",
+                "c",
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
+                        ),
+                        F.struct(
+                            F.least("a", "c").alias("src"), F.greatest("a", "c").alias("dst")
+                        ),
+                        F.struct(
+                            F.least("b", "c").alias("src"), F.greatest("b", "c").alias("dst")
+                        ),
+                    )
+                ).alias("e"),
+            ).select("a", "b", "c", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
+        )
     support = cache.truncate(
         edges.join(
             tri_edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("support")),
@@ -323,7 +321,6 @@ def k_truss(g: SparkGraph, k: int, *, max_rounds: int = 10_000) -> SparkGraph:
         directed=False,
         coalesce_edges=False,
     )
-    cache.close(keep_result=True)
     return sub
 
 
@@ -351,5 +348,4 @@ def k_core(g: SparkGraph, k: int) -> SparkGraph:
     sub = SparkGraph(
         edges, vertices, directed=g.directed, coalesce_edges=False
     )
-    cache.close(keep_result=True)
     return sub

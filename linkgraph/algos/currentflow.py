@@ -152,10 +152,8 @@ def _batched_cg_diag(
         )
         rr = rr_new
     else:
-        cache.close()
         raise NetworkXError(f"batched CG did not converge in {max_iter} iterations")
     out = state.select("s", "id", "x").localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 

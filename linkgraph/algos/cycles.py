@@ -121,7 +121,6 @@ def simple_cycles(
             if paths.limit(1).count() == 0:
                 break
         result = out.localCheckpoint(eager=True)
-        cache.close(keep_result=True)
         return result
     return out.localCheckpoint(eager=True)
 
@@ -298,7 +297,6 @@ def cycle_basis(g: SparkGraph, *, max_iter: int = 100_000) -> DataFrame:
         done = cache.truncate(done.unionByName(finished), retire=done)
         state = cache.truncate(stepped.filter(F.col("au") != F.col("av")))
     else:
-        cache.close()
         raise NetworkXError(f"cycle_basis did not converge in {max_iter} rounds")
 
     # pu = [u..lca], pv = [v..lca]  →  cycle = u..lca..v (lca kept once)
@@ -308,7 +306,6 @@ def cycle_basis(g: SparkGraph, *, max_iter: int = 100_000) -> DataFrame:
         ).alias("cycle")
     )
     out = selfloops.unionByName(cycles).localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 

@@ -71,7 +71,6 @@ def topological_generations(
         with_preds = edges.select(F.col("dst").alias("id")).distinct()
         zero_in = cache.truncate(remaining.join(with_preds, "id", "left_anti"))
         if zero_in.limit(1).count() == 0:
-            cache.close()
             raise GraphContainsCycle()
         assigned.append((zero_in, gen))
         gen += 1
@@ -87,7 +86,6 @@ def topological_generations(
         return spark.createDataFrame([], "id long, generation long")
     res = out.persist()
     res.count()
-    cache.close(keep_result=False)
     return res
 
 
@@ -140,7 +138,6 @@ def transitive_closure(
             break
         n = n2
     else:
-        cache.close()
         raise RuntimeError("transitive_closure did not converge")
     if reflexive is True:
         r = r.unionByName(
@@ -159,7 +156,6 @@ def transitive_closure(
         directed=True,
         coalesce_edges=False,
     )
-    cache.close(keep_result=True)
     return out
 
 
@@ -213,7 +209,6 @@ def dag_longest_path_length(
         )
     best = dist.agg(F.max("dist")).first()[0] or 0.0
     arcs.unpersist()
-    cache.close(keep_result=False)
     return float(best)
 
 
@@ -473,7 +468,6 @@ def dag_longest_path(
         )
     n = dist.count()
     if n > max_driver_nodes:
-        cache.close()
         raise ValueError(
             f"dag_longest_path extraction needs the {n}-row parent map on "
             f"the driver > max_driver_nodes={max_driver_nodes}; use "
@@ -486,7 +480,6 @@ def dag_longest_path(
     path = [best["id"]]
     while parent.get(path[-1]) is not None:
         path.append(parent[path[-1]])
-    cache.close(keep_result=False)
     return list(reversed(path))
 
 
@@ -661,7 +654,6 @@ def root_to_leaf_paths(
         out = out.unionByName(df)
     out = out.persist()
     out.count()
-    cache.close(keep_result=True)
     return out
 
 

@@ -99,7 +99,6 @@ def _peel_rounds(g: SparkGraph, eps, max_rounds):
     )
     removed = removed.persist()
     removed.count()
-    cache.close(keep_result=True)
     return rounds, removed
 
 

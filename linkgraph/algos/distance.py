@@ -131,7 +131,6 @@ def all_pairs_shortest_path_lengths(
         visited = cache.truncate(visited.unionByName(nxt))
         frontier = nxt
     adj.unpersist()
-    cache.close(keep_result=True)
     return visited
 
 
@@ -198,7 +197,6 @@ def _all_pairs_weighted(g: SparkGraph, src_df, reverse: bool, distance):
         dist = new_dist
         frontier = improved
     adj.unpersist()
-    cache.close(keep_result=True)
     return dist
 
 

@@ -94,10 +94,8 @@ def dominator_pairs(g: SparkGraph, start, *, max_iter: int = 100) -> DataFrame:
         dom = new_dom
         if prev_sig == (sig["c"], sig["h"]):
             out = dom.localCheckpoint(eager=True)
-            cache.close(keep_result=True)
             return out
         prev_sig = (sig["c"], sig["h"])
-    cache.close()
     raise NetworkXError(f"dominator fixpoint did not converge in {max_iter} rounds")
 
 

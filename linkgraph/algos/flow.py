@@ -273,7 +273,6 @@ def _max_flow(
             }
             bottleneck = min(caps[p] for p in path)
             if bottleneck == _INF:
-                cache.close()
                 raise NetworkXUnbounded(
                     "Infinite capacity path, flow unbounded above."
                 )
@@ -284,7 +283,6 @@ def _max_flow(
                 larcs.collect(), s, t
             )
             if unbounded:
-                cache.close()
                 raise NetworkXUnbounded(
                     "Infinite capacity path, flow unbounded above."
                 )
@@ -292,7 +290,6 @@ def _max_flow(
                 break
         n_aug += len(phase_flow)
         if n_aug > max_augmentations:
-            cache.close()
             raise RuntimeError("maximum_flow exceeded max_augmentations")
         total += phase_value
         updates = [(u, v, -f) for (u, v), f in phase_flow.items()] + [
@@ -316,7 +313,6 @@ def _max_flow(
         .filter(F.col("flow") > 0)
     )
     flow = flow.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return float(total), flow, res
 
 
@@ -367,7 +363,6 @@ def minimum_cut(
         frontier = nxt
     reachable = seen.select(F.col("node").alias("id")).localCheckpoint(eager=True)
     rest = g.vertices.select("id").join(reachable, "id", "left_anti")
-    cache.close(keep_result=True)
     return value, (reachable, rest)
 
 

@@ -113,5 +113,4 @@ def girth(g: SparkGraph, *, max_rounds: int = 10_000) -> float:
     )
     arcs.unpersist()
     full.unpersist()
-    cache.close()
     return float("inf") if best is None else float(best)

@@ -296,7 +296,6 @@ def _weighted_reach_table(g: SparkGraph, weight, sources):
     )
     out = out.localCheckpoint(eager=True)
     arcs.unpersist()
-    cache.close()
     return out, total_w
 
 

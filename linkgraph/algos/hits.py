@@ -44,15 +44,14 @@ def hits(
     the deterministic workload the SQL-unrolled DuckDB oracle replicates
     step-for-step (same role as ``pagerank(fixed_iter=...)``).
     """
+    if fixed_iter is not None:
+        if fixed_iter < 1:
+            raise ValueError("fixed_iter must be >= 1")
+        max_iter = fixed_iter
     spark = g.spark
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, hub double, authority double")
-
-    # Volume-sized loop layout (cap = graph/session setting); forced onto
-    # shuffle.partitions inside the loop so the score joins match the pinned
-    # edge layout instead of re-shuffling it every iteration (see pagerank).
+    # Volume-sized loop layout (cap = graph/session setting), the same
+    # partition count as the pinned edge layout so the score joins reuse it
+    # instead of re-shuffling the edges every iteration (see pagerank).
     cap_parts = g.num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
@@ -60,28 +59,14 @@ def hits(
     num_parts = loop_partitions(
         m_raw if g.directed else 2 * m_raw, cap_parts, rows_per_partition=40_000
     )
-    edges = g.symmetric_edges().select("src", "dst", "weight")
-    edges = edges.repartition(num_parts, "src").persist()
-    edges.count()
+    with SuperstepCache(spark, partitions=num_parts) as loop:
+        vertices = loop.pin(g.vertices.select("id"))
+        n = vertices.count()
+        if n == 0:
+            return spark.createDataFrame([], "id long, hub double, authority double")
+        edges = loop.pin(g.symmetric_edges().select("src", "dst", "weight"), "src")
+        edges.count()
 
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", str(num_parts))
-    cache = SuperstepCache(spark)
-    if fixed_iter is not None:
-        if fixed_iter < 1:
-            raise ValueError("fixed_iter must be >= 1")
-        max_iter = fixed_iter
-    try:
         h = vertices.select("id", F.lit(1.0 / n).alias("h"))
         state = None
         for _ in range(max_iter):
@@ -115,7 +100,7 @@ def hits(
                     (F.col("a") / F.col("_ma")).alias("a"),
                 )
             )
-            state = cache.truncate(state)
+            state = loop.truncate(state)
             if fixed_iter is None:
                 err = (
                     state.join(hlast.select("id", F.col("h").alias("h_prev")), "id")
@@ -129,7 +114,6 @@ def hits(
                 break
         else:
             if fixed_iter is None:
-                cache.close()
                 raise PowerIterationFailedConvergence(max_iter)
         out = state
         if normalized:
@@ -145,8 +129,4 @@ def hits(
         res = out.select(
             "id", F.col("h").alias("hub"), F.col("a").alias("authority")
         )
-        cache.close(keep_result=True)
-        return res
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        return loop.result(res)

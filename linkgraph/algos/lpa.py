@@ -42,7 +42,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, loop_partitions
 from linkgraph.state import CheckpointStore, IterationMetrics
 from linkgraph.exceptions import NotImplementedForDirected
 
@@ -175,147 +175,145 @@ def label_propagation_communities(
             "label_propagation_communities: not implemented for directed type"
         )
     spark = g.spark
-    vertices = g.vertices.select("id").persist()
-
-    simple = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    m = simple.count()
-
-    sym_early = simple.unionAll(
-        simple.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-
-    if coloring == "auto":
-        if m > max_driver_edges:
-            import warnings
-
-            warnings.warn(
-                f"label_propagation_communities: {m} edges > "
-                f"max_driver_edges={max_driver_edges}; using distributed "
-                "Jones-Plassmann coloring (schedule differs from the "
-                "reference's greedy_color; the partition is LPA-valid but "
-                "not bit-identical)",
-                stacklevel=2,
-            )
-            coloring = "distributed"
-        else:
-            coloring = "reference"
-
-    if coloring == "distributed":
-        _cc = SuperstepCache(spark)
-        color_df = _jones_plassmann_coloring(sym_early, vertices, _cc).persist()
-        n_colors = (color_df.agg(F.max("color")).first()[0] or 0) + 1
-    else:
-        if m > max_driver_edges:
-            raise ValueError(
-                f"exact-parity LPA collects the edge list for greedy coloring; "
-                f"{m} edges > max_driver_edges={max_driver_edges}; "
-                "use coloring='distributed' for the scale path"
-            )
-        edge_list = [(r["src"], r["dst"]) for r in simple.collect()]
-        node_list = sorted(r["id"] for r in vertices.collect())
-        cmap = _greedy_color_largest_first(edge_list, node_list)
-        n_colors = (max(cmap.values()) + 1) if cmap else 0
-        color_df = (
-            spark.createDataFrame(list(cmap.items()), ["id", "color"])
-            if cmap
-            else spark.createDataFrame([], "id long, color int")
-        ).persist()
-
-    sym = sym_early
-
-    cache = SuperstepCache(spark, truncate_interval=1)
-    labels = vertices.select("id", F.col("id").alias("label"))
-
-    def neighbor_freq(lbls: DataFrame) -> DataFrame:
-        """(id, nlab, cnt): frequency of each label among id's neighbors."""
-        return (
-            sym.join(
-                lbls.select(
-                    F.col("id").alias("dst"), F.col("label").alias("nlab")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("id"), "nlab")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with SuperstepCache(spark) as loop:
+        vertices = loop.pin(g.vertices.select("id"))
+        simple = loop.pin(
+            g.edges.filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-
-    # Termination: the reference checks ``_labeling_complete``
-    # (``label_propagation.py:297-307``: every node-with-neighbors' label is
-    # in its neighborhood argmax) BEFORE each sweep — a full neighbor_freq
-    # pass over all m edges. A sweep's Prec-Max update changes a node iff
-    # its label is NOT in that argmax, and color classes partition the
-    # nodes, so "a full sweep changed nothing" is exactly the same predicate
-    # — checked here with one n-row label comparison instead of an extra
-    # m-edge aggregation pass per sweep. (When the initial labeling is
-    # already complete this runs one provably-no-op sweep; the result is
-    # identical.)
-    labels = cache.truncate(labels)
-    sweeps = 0
-    while True:
-        if sweeps >= max_sweeps:
-            raise RuntimeError(f"LPA did not stabilize in {max_sweeps} sweeps")
-        prev = labels
-        t0 = time.monotonic()
-        for c in range(n_colors):
-            cls = color_df.filter(F.col("color") == c).select("id")
-            freq = neighbor_freq(labels).join(cls, "id", "left_semi")
-            mx = freq.groupBy("id").agg(F.max("cnt").alias("mx"))
-            cand = freq.join(mx, "id").filter(F.col("cnt") == F.col("mx"))
-            upd = (
-                cand.join(labels, "id")
-                .groupBy("id")
-                .agg(
-                    F.max("nlab").alias("maxlab"),
-                    F.max(
-                        F.when(F.col("nlab") == F.col("label"), 1).otherwise(0)
-                    ).alias("curin"),
-                    F.first("label").alias("cur"),
-                )
-                .select(
-                    "id",
-                    F.when(F.col("curin") == 1, F.col("cur"))
-                    .otherwise(F.col("maxlab"))
-                    .alias("label"),
+        m = simple.count()
+        # One color class is a few cheap aggregations over the 2m arcs:
+        # size its shuffles by that volume, not by the session.
+        with SuperstepCache(spark, partitions=loop_partitions(2 * m, cap)):
+            sym = loop.pin(
+                simple.unionAll(
+                    simple.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
             )
-            # Truncate lineage per color class: each class references the
-            # previous labels plan ~5×, so chaining a whole sweep lazily
-            # grows the Catalyst tree exponentially in the color count.
-            # Retire the pre-update snapshot (except the sweep-start one,
-            # which the changed-count below still reads).
-            old = labels
-            labels = cache.truncate(
-                labels.join(upd, "id", "left_anti").unionByName(upd),
-                retire=None if old is prev else old,
-            )
-        sweeps += 1
-        changed = (
-            labels.join(
-                prev.select("id", F.col("label").alias("plab")), "id"
-            )
-            .filter(F.col("label") != F.col("plab"))
-            .count()
-        )
-        cache.release(prev)
-        if checkpoint_store is not None:
-            labels = checkpoint_store.commit(
-                labels,
-                IterationMetrics(
-                    sweeps - 1,
-                    changed=changed,
-                    edges_processed=m * n_colors,
-                    wall_ms=int((time.monotonic() - t0) * 1000),
-                ),
-            )
-        if changed == 0:
-            break
-    cache.close(keep_result=True)
-    return labels
+
+            if coloring == "auto":
+                if m > max_driver_edges:
+                    import warnings
+
+                    warnings.warn(
+                        f"label_propagation_communities: {m} edges > "
+                        f"max_driver_edges={max_driver_edges}; using distributed "
+                        "Jones-Plassmann coloring (schedule differs from the "
+                        "reference's greedy_color; the partition is LPA-valid but "
+                        "not bit-identical)",
+                        stacklevel=2,
+                    )
+                    coloring = "distributed"
+                else:
+                    coloring = "reference"
+
+            if coloring == "distributed":
+                color_df = loop.pin(_jones_plassmann_coloring(sym, vertices, loop))
+                n_colors = (color_df.agg(F.max("color")).first()[0] or 0) + 1
+            else:
+                if m > max_driver_edges:
+                    raise ValueError(
+                        f"exact-parity LPA collects the edge list for greedy coloring; "
+                        f"{m} edges > max_driver_edges={max_driver_edges}; "
+                        "use coloring='distributed' for the scale path"
+                    )
+                edge_list = [(r["src"], r["dst"]) for r in simple.collect()]
+                node_list = sorted(r["id"] for r in vertices.collect())
+                cmap = _greedy_color_largest_first(edge_list, node_list)
+                n_colors = (max(cmap.values()) + 1) if cmap else 0
+                color_df = loop.pin(
+                    spark.createDataFrame(list(cmap.items()), ["id", "color"])
+                    if cmap
+                    else spark.createDataFrame([], "id long, color int")
+                )
+
+            labels = vertices.select("id", F.col("id").alias("label"))
+
+            def neighbor_freq(lbls: DataFrame) -> DataFrame:
+                """(id, nlab, cnt): frequency of each label among id's neighbors."""
+                return (
+                    sym.join(
+                        lbls.select(
+                            F.col("id").alias("dst"), F.col("label").alias("nlab")
+                        ),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("id"), "nlab")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                )
+
+            # Termination: the reference checks ``_labeling_complete``
+            # (``label_propagation.py:297-307``: every node-with-neighbors' label is
+            # in its neighborhood argmax) BEFORE each sweep — a full neighbor_freq
+            # pass over all m edges. A sweep's Prec-Max update changes a node iff
+            # its label is NOT in that argmax, and color classes partition the
+            # nodes, so "a full sweep changed nothing" is exactly the same predicate
+            # — checked here with one n-row label comparison instead of an extra
+            # m-edge aggregation pass per sweep. (When the initial labeling is
+            # already complete this runs one provably-no-op sweep; the result is
+            # identical.)
+            labels = loop.truncate(labels)
+            sweeps = 0
+            while True:
+                if sweeps >= max_sweeps:
+                    raise RuntimeError(f"LPA did not stabilize in {max_sweeps} sweeps")
+                prev = labels
+                t0 = time.monotonic()
+                for c in range(n_colors):
+                    cls = color_df.filter(F.col("color") == c).select("id")
+                    freq = neighbor_freq(labels).join(cls, "id", "left_semi")
+                    mx = freq.groupBy("id").agg(F.max("cnt").alias("mx"))
+                    cand = freq.join(mx, "id").filter(F.col("cnt") == F.col("mx"))
+                    upd = (
+                        cand.join(labels, "id")
+                        .groupBy("id")
+                        .agg(
+                            F.max("nlab").alias("maxlab"),
+                            F.max(
+                                F.when(F.col("nlab") == F.col("label"), 1).otherwise(0)
+                            ).alias("curin"),
+                            F.first("label").alias("cur"),
+                        )
+                        .select(
+                            "id",
+                            F.when(F.col("curin") == 1, F.col("cur"))
+                            .otherwise(F.col("maxlab"))
+                            .alias("label"),
+                        )
+                    )
+                    # Truncate lineage per color class: each class references the
+                    # previous labels plan ~5×, so chaining a whole sweep lazily
+                    # grows the Catalyst tree exponentially in the color count.
+                    # Retire the pre-update snapshot (except the sweep-start one,
+                    # which the changed-count below still reads).
+                    old = labels
+                    labels = loop.truncate(
+                        labels.join(upd, "id", "left_anti").unionByName(upd),
+                        retire=None if old is prev else old,
+                    )
+                sweeps += 1
+                changed = (
+                    labels.join(
+                        prev.select("id", F.col("label").alias("plab")), "id"
+                    )
+                    .filter(F.col("label") != F.col("plab"))
+                    .count()
+                )
+                loop.release(prev)
+                if checkpoint_store is not None:
+                    labels = checkpoint_store.commit(
+                        labels,
+                        IterationMetrics(
+                            sweeps - 1,
+                            changed=changed,
+                            edges_processed=m * n_colors,
+                            wall_ms=int((time.monotonic() - t0) * 1000),
+                        ),
+                    )
+                if changed == 0:
+                    return loop.result(labels)
 
 
 def communities_as_sets(labels: DataFrame) -> list[frozenset]:

@@ -110,10 +110,8 @@ def asyn_lpa_communities(
         labels = new_labels
     else:
         sym.unpersist()
-        cache.close()
         raise RuntimeError(f"asyn_lpa did not stabilize in {max_sweeps} sweeps")
     sym.unpersist()
-    cache.close(keep_result=True)
     return labels
 
 
@@ -166,12 +164,10 @@ def fast_label_propagation_communities(
         labels = new_labels
     else:
         sym.unpersist()
-        cache.close()
         raise RuntimeError(
             f"fast_label_propagation did not drain in {max_rounds} rounds"
         )
     sym.unpersist()
-    cache.close(keep_result=True)
     return labels
 
 
@@ -337,5 +333,4 @@ def asyn_fluidc(
     out = state.filter(F.col("community").isNotNull()).persist()
     out.count()
     sym.unpersist()
-    cache.close(keep_result=True)
     return out

@@ -248,7 +248,6 @@ def _min_cost_flow(
     while pushed < required - 1e-9:
         phases += 1
         if phases > max_phases:
-            cache.close()
             raise RuntimeError("min_cost_flow exceeded max_phases")
         live = res.filter(F.col("cap") > 1e-12)
         # ---- distributed Bellman-Ford from S over (u, v, cost) ----------
@@ -281,7 +280,6 @@ def _min_cost_flow(
                 break
         row_t = dist.filter(F.col("id") == T).first()
         if row_t is None:
-            cache.close()
             raise NetworkXUnfeasible(
                 "no flow satisfies all node demands (sink unreachable "
                 f"with {required - pushed} units left to route)"
@@ -317,14 +315,12 @@ def _min_cost_flow(
         adm = cache.truncate(adm)
         n_arcs = adm.count()
         if n_arcs > max_driver_edges:
-            cache.close()
             raise RuntimeError(
                 f"admissible phase subgraph has {n_arcs} arcs > "
                 f"max_driver_edges={max_driver_edges}"
             )
         value, phase_flow = _driver_max_flow(adm.collect(), S, T)
         if value <= 1e-12:
-            cache.close()
             raise NetworkXUnfeasible(
                 "admissible subgraph carries no flow — demands unsatisfiable"
             )
@@ -376,7 +372,6 @@ def _min_cost_flow(
     cost = float(cost_row["c"] or 0.0)
     integral = (cost_row["frac"] or 0.0) < 1e-9
     flow = flow.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return cost, flow, integral
 
 

@@ -144,7 +144,6 @@ def minimum_spanning_edges(
             out = spark.createDataFrame([], "src long, dst long, weight double")
         else:
             out = chosen.localCheckpoint(eager=True)
-        cache.close(keep_result=True)
         return out
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)

@@ -327,7 +327,6 @@ def local_bridges(
         out = out.localCheckpoint()
         return out
     finally:
-        cache.close()
         bridges.unpersist()
 
 
@@ -396,7 +395,6 @@ def _local_bridge_spans_weighted(g, bridges, weight):
         out = bridges.join(spans, ["u", "v"], "left").select("u", "v", "span")
         return out.localCheckpoint()
     finally:
-        cache.close()
         warcs.unpersist()
         bridges.unpersist()
 
@@ -668,7 +666,6 @@ def local_efficiency(g: SparkGraph) -> float:
         total = eff.agg(F.sum("eff")).first()[0] or 0.0
         return float(total) / n
     finally:
-        cache.close()
         ego_arcs.unpersist()
 
 

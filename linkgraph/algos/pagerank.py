@@ -79,12 +79,9 @@ def pagerank(
     *,
     hub_salt: int = 0,
     checkpoint_store: Optional[CheckpointStore] = None,
-    checkpoint_interval: int = 1,
     resume: bool = False,
-    lineage_truncate_interval: int = 10,
     fixed_iter: Optional[int] = None,
     check_interval: int = 4,
-    kernel: str = "edges",
 ) -> DataFrame:
     """Return DataFrame ``(id BIGINT, rank DOUBLE)``; ranks sum to 1.
 
@@ -101,47 +98,26 @@ def pagerank(
     convergence mode the L1 error is evaluated after every iteration,
     exactly the reference's stopping rule.
 
-    Inside the loop AQE and automatic broadcast joins are disabled: the
-    rank-vector joins run as shuffle joins against the statically
-    co-partitioned cached edge table, so after the first iteration only the
-    contribution ``groupBy(dst)`` shuffle moves data — the plan shape that
-    survives a 100x scale-up (a broadcast rank vector would not). They are
+    The call runs under the shared superstep runtime
+    (:class:`linkgraph.iterutils.SuperstepCache`): AQE off, shuffled-hash
+    joins, and — because the edge table is pinned hash-partitioned on
+    ``src`` — no automatic broadcast joins in the iterations, so the
+    rank-vector joins run as shuffle joins against the co-partitioned
+    cached edge table and after the first iteration only the contribution
+    ``groupBy(dst)`` shuffle moves data — the plan shape that survives a
+    100x scale-up (a broadcast rank vector would not). The caller's conf is
     restored on exit.
-
-    ``kernel`` picks the contribution (x @ A) implementation — all three
-    candidates were measured head-to-head on a 26M-edge crawl
-    (BENCH_CSR.json; local[8], 10 fixed iterations):
-
-    - ``"edges"`` (default): per-edge join against the pinned
-      src-partitioned table + hash agg. In the production regime (lazy
-      iteration batching via ``check_interval``, shuffled-hash joins, no
-      AQE) this is the fastest: 50s vs 71s for adjacency.
-    - ``"adjacency"``: edges compacted ONCE to (src, [(dst, p), ...]) rows
-      (degree-proportional hash chunks cap hub rows at 64k entries). Wins
-      2.8x ONLY when every iteration materializes (e.g. convergence-mode
-      with per-iteration durable checkpoints on a shared cluster): the
-      rank join probes |V| compacted rows instead of m edge rows.
-    - per-partition numpy CSR SpMV via ``mapInArrow`` (the SURVEY §1.6
-      hypothesis): measured 0.86x the per-edge join — Arrow transfer of
-      the rank vector outweighs the vectorized multiply. Retired by that
-      measurement; not exposed.
     """
     if fixed_iter is not None:
         max_iter = fixed_iter
     spark = g.spark
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, rank double")
-
     # Loop layout: the graph/session partition setting is a CAP (it encodes
     # the cluster size); the actual count is sized by arc volume so a small
     # graph on a wide session doesn't pay hundreds of near-empty tasks per
-    # iteration (measured 3x on 634k edges at local[32]). The same count is
-    # forced onto spark.sql.shuffle.partitions inside the loop — if they
-    # differed, the rank join's required partitioning would not match the
-    # pinned edge layout and Catalyst would re-shuffle the edge table every
-    # iteration, defeating the pinning entirely.
+    # iteration (measured 3x on 634k edges at local[32]). The loop runs with
+    # the same shuffle.partitions as the pinned edge layout — if they
+    # differed, the rank join's required partitioning would not match it
+    # and Catalyst would re-shuffle the edge table every iteration.
     cap_parts = g.num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
@@ -149,234 +125,157 @@ def pagerank(
     num_parts = loop_partitions(
         m_raw if g.directed else 2 * m_raw, cap_parts, rows_per_partition=40_000
     )
+    with SuperstepCache(spark, partitions=num_parts, store=checkpoint_store) as loop:
+        vertices = loop.pin(g.vertices.select("id"))
+        n = vertices.count()
+        if n == 0:
+            return spark.createDataFrame([], "id long, rank double")
 
-    # --- one-time edge prep: stochastic normalization ------------------- #
-    # (stochastic_graph semantics, networkx/generators/stochastic.py:17)
-    # ``weight`` follows the reference kwarg: None counts every edge as 1
-    # (unweighted walk), any other value resolves per
-    # resolve_weight_column (column name / SQL expression / Column).
-    from linkgraph.graph import resolve_weight_column
+        # --- one-time edge prep: stochastic normalization --------------- #
+        # (stochastic_graph semantics, networkx/generators/stochastic.py:17)
+        # ``weight`` follows the reference kwarg: None counts every edge as
+        # 1 (unweighted walk), any other value resolves per
+        # resolve_weight_column (column name / SQL expression / Column).
+        from linkgraph.graph import resolve_weight_column
 
-    adj = g.symmetric_edges()
-    if weight is None:
-        adj = adj.select("src", "dst", F.lit(1.0).alias("weight"))
-    elif weight != "weight" or "weight" not in adj.columns:
-        adj = adj.select(
-            "src", "dst", resolve_weight_column(adj, weight).alias("weight")
+        adj = g.symmetric_edges()
+        if weight is None:
+            adj = adj.select("src", "dst", F.lit(1.0).alias("weight"))
+        elif weight != "weight" or "weight" not in adj.columns:
+            adj = adj.select(
+                "src", "dst", resolve_weight_column(adj, weight).alias("weight")
+            )
+        out_w = adj.groupBy("src").agg(F.sum("weight").alias("out_w"))
+        norm = (
+            adj.join(out_w, "src")
+            .filter(F.col("out_w") != 0)
+            .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p_edge"))
         )
-    out_w = adj.groupBy("src").agg(
-        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_cnt")
-    )
-    norm = (
-        adj.join(out_w, "src")
-        .filter(F.col("out_w") != 0)
-        .select(
-            "src",
-            "dst",
-            (F.col("weight") / F.col("out_w")).alias("p_edge"),
-            "out_cnt",
-        )
-    )
-    # Hash-partition by src once and pin: every iteration's rank join then
-    # reuses this layout (only the small rank side shuffles).
-    if kernel == "adjacency":
-        # Relational CSR row: (src, [(dst, p), ...]). Hub sources are split
-        # into ceil(out_degree / 65536) hash chunks so no row is unbounded,
-        # while low-degree sources stay a single row (full compaction).
-        # Build = ONE groupBy shuffle of the edges + one repact shuffle of
-        # the already-compacted rows — cheaper than the window-sort
-        # alternative, which re-sorts all m rows.
-        n_ck = F.greatest(
-            F.lit(1), F.ceil(F.col("out_cnt") / F.lit(65536))
-        ).cast("long")
-        A_t = (
-            norm.withColumn("_ck", F.pmod(F.hash("dst"), n_ck))
-            .groupBy("src", "_ck")
-            .agg(F.collect_list(F.struct("dst", "p_edge")).alias("nbrs"))
-            .drop("_ck")
-            .repartition(num_parts, "src")
-            .persist()
-        )
-        edge_count = int(
-            A_t.agg(F.sum(F.size("nbrs"))).first()[0] or 0
-        )  # materialize once; also the per-iter work metric
-    else:
-        A_t = (
-            norm.select("src", "dst", "p_edge")
-            .repartition(num_parts, "src")
-            .persist()
-        )
+        # Hash-partition by src once and pin: every iteration's rank join
+        # then reuses this layout (only the small rank side shuffles).
+        A_t = loop.pin(norm, "src")
         edge_count = A_t.count()
 
-    # Dangling nodes: zero out-weight rows of A (pagerank_alg.py:489).
-    # Carried as a flag on the per-node base table so the dangling-mass sum
-    # fuses into the convergence aggregation (one driver job per iteration).
-    nondangling = out_w.filter(F.col("out_w") != 0).select(F.col("src").alias("id"))
-    base = vertices.join(
-        nondangling.withColumn("_nd", F.lit(True)), "id", "left"
-    ).select("id", F.coalesce("_nd", F.lit(False)).alias("is_nd"))
-    base = base.select("id", (~F.col("is_nd")).alias("is_dang"))
-    n_dangling = base.filter("is_dang").count()
+        # Dangling nodes: zero out-weight rows of A (pagerank_alg.py:489).
+        # Carried as a flag on the per-node base table so the dangling-mass
+        # sum fuses into the convergence aggregation.
+        nondangling = out_w.filter(F.col("out_w") != 0).select(
+            F.col("src").alias("id")
+        )
+        base = vertices.join(
+            nondangling.withColumn("_nd", F.lit(True)), "id", "left"
+        ).select("id", F.coalesce("_nd", F.lit(False)).alias("is_nd"))
+        base = base.select("id", (~F.col("is_nd")).alias("is_dang"))
+        n_dangling = base.filter("is_dang").count()
 
-    # --- per-node constant vectors p (teleport) and dw (dangling) ------- #
-    uniform = personalization is None and dangling is None
-    if not uniform:
-        p_df = (
-            _node_vector(g, personalization, "p")
-            if personalization is not None
-            else vertices.withColumn("p", F.lit(1.0 / n))
-        )
-        dw_df = (
-            _node_vector(g, dangling, "dw")
-            if dangling is not None
-            else p_df.select("id", F.col("p").alias("dw"))
-        )
-        base = (
-            base.join(p_df, "id", "left")
-            .join(dw_df, "id", "left")
-            .select(
-                "id",
-                "is_dang",
-                F.coalesce("p", F.lit(0.0)).alias("p"),
-                F.coalesce("dw", F.lit(0.0)).alias("dw"),
+        # --- per-node constant vectors p (teleport) and dw (dangling) --- #
+        uniform = personalization is None and dangling is None
+        if not uniform:
+            p_df = (
+                _node_vector(g, personalization, "p")
+                if personalization is not None
+                else vertices.withColumn("p", F.lit(1.0 / n))
             )
-        )
-    base = base.persist()
-    base.count()
-
-    # --- initial vector -------------------------------------------------- #
-    start_iter = 0
-    if resume and checkpoint_store is not None and checkpoint_store.latest_iteration() >= 0:
-        start_iter = checkpoint_store.latest_iteration() + 1
-        x = checkpoint_store.load(start_iter - 1, spark).select("id", "rank")
-    elif nstart is not None:
-        x = _node_vector(g, nstart, "rank").join(vertices, "id", "right").select(
-            "id", F.coalesce("rank", F.lit(0.0)).alias("rank")
-        )
-    else:
-        x = vertices.select("id", F.lit(1.0 / n).alias("rank"))
-
-    dang_ids = base.filter("is_dang").select("id").persist() if n_dangling else None
-    if dang_ids is not None:
-        dang_ids.count()  # materialize now, not inside the first iteration
-    cache = SuperstepCache(spark, truncate_interval=lineage_truncate_interval)
-    inv_n = 1.0 / n
-
-    def cleanup() -> None:
-        """Drop the loop's internal caches before returning: the result is
-        rooted at its own checkpoint/parquet snapshot, so none of these are
-        reachable from it — leaving them pinned just taxes the block
-        manager and GC of whatever runs next in the session."""
-        for df in (vertices, A_t, base, dang_ids):
-            if df is not None:
-                df.unpersist()
-
-    def step(xc: DataFrame) -> DataFrame:
-        """One lazy power iteration (pagerank_alg.py:491-493).
-
-        The dangling mass is a one-row in-plan aggregation broadcast into
-        the rank expression — no driver-side scalar, so any number of
-        iterations can chain lazily. Catalyst's exchange reuse dedups the
-        shared ``xc`` shuffles between the contribution and dangling
-        branches.
-        """
-        # x @ A : join ranks to the pinned edge layout on src, sum into dst.
-        if kernel == "adjacency":
-            contrib_rows = (
-                A_t.join(xc.withColumnRenamed("id", "src"), "src")
-                .select("src", "rank", F.explode("nbrs").alias("e"))
+            dw_df = (
+                _node_vector(g, dangling, "dw")
+                if dangling is not None
+                else p_df.select("id", F.col("p").alias("dw"))
+            )
+            base = (
+                base.join(p_df, "id", "left")
+                .join(dw_df, "id", "left")
                 .select(
-                    "src",
-                    F.col("e.dst").alias("dst"),
-                    (F.col("rank") * F.col("e.p_edge")).alias("c"),
+                    "id",
+                    "is_dang",
+                    F.coalesce("p", F.lit(0.0)).alias("p"),
+                    F.coalesce("dw", F.lit(0.0)).alias("dw"),
                 )
             )
+        base = loop.pin(base)
+        base.count()
+
+        # --- initial vector ---------------------------------------------- #
+        start_iter, x = loop.resume() if resume else (0, None)
+        if x is not None:
+            x = x.select("id", "rank")
+        elif nstart is not None:
+            x = _node_vector(g, nstart, "rank").join(vertices, "id", "right").select(
+                "id", F.coalesce("rank", F.lit(0.0)).alias("rank")
+            )
         else:
+            x = vertices.select("id", F.lit(1.0 / n).alias("rank"))
+        x0 = x
+
+        dang_ids = None
+        if n_dangling:
+            dang_ids = loop.pin(base.filter("is_dang").select("id"))
+            dang_ids.count()  # materialize now, not inside the first iteration
+        inv_n = 1.0 / n
+
+        def step(xc: DataFrame) -> DataFrame:
+            """One lazy power iteration (pagerank_alg.py:491-493).
+
+            The dangling mass is a one-row in-plan aggregation broadcast
+            into the rank expression — no driver-side scalar, so any number
+            of iterations can chain lazily. Catalyst's exchange reuse dedups
+            the shared ``xc`` shuffles between the contribution and
+            dangling branches.
+            """
+            # x @ A : join ranks to the pinned edge layout on src, sum into dst.
             contrib_rows = A_t.join(
                 xc.withColumnRenamed("id", "src"), "src"
             ).select("src", "dst", (F.col("rank") * F.col("p_edge")).alias("c"))
-        if hub_salt > 1:
-            # explicit two-phase salted aggregation for hot dst keys: spread a
-            # hub's incoming contributions over `hub_salt` partial keys by the
-            # hash of the contributing src, then combine.
-            contrib = (
-                contrib_rows.withColumn(
-                    "_salt", F.pmod(F.hash("src"), F.lit(hub_salt))
+            if hub_salt > 1:
+                # explicit two-phase salted aggregation for hot dst keys:
+                # spread a hub's incoming contributions over `hub_salt`
+                # partial keys by the hash of the contributing src, then
+                # combine.
+                contrib = (
+                    contrib_rows.withColumn(
+                        "_salt", F.pmod(F.hash("src"), F.lit(hub_salt))
+                    )
+                    .groupBy("dst", "_salt")
+                    .agg(F.sum("c").alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("c"))
                 )
-                .groupBy("dst", "_salt")
-                .agg(F.sum("c").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            contrib = contrib_rows.groupBy("dst").agg(F.sum("c").alias("c"))
+            else:
+                contrib = contrib_rows.groupBy("dst").agg(F.sum("c").alias("c"))
 
-        joined = base.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
-        if dang_ids is not None:
-            # danglesum = sum of ranks over dangling nodes (pagerank_alg.py:492)
-            ds = xc.join(dang_ids, "id", "left_semi").agg(
-                F.sum("rank").alias("_ds")
-            )
-            joined = joined.crossJoin(F.broadcast(ds))
-            ds_col = F.coalesce(F.col("_ds"), F.lit(0.0))
-        else:
-            ds_col = F.lit(0.0)
-        if uniform:
-            rank_expr = (
-                F.lit(alpha) * (F.coalesce("c", F.lit(0.0)) + ds_col * F.lit(inv_n))
-                + F.lit((1.0 - alpha) * inv_n)
-            )
-        else:
-            rank_expr = (
-                F.lit(alpha) * (F.coalesce("c", F.lit(0.0)) + ds_col * F.col("dw"))
-                + F.lit(1.0 - alpha) * F.col("p")
-            )
-        return joined.select("id", rank_expr.alias("rank"))
+            joined = base.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
+            if dang_ids is not None:
+                # danglesum = sum of ranks over dangling nodes (pagerank_alg.py:492)
+                ds = xc.join(dang_ids, "id", "left_semi").agg(
+                    F.sum("rank").alias("_ds")
+                )
+                joined = joined.crossJoin(F.broadcast(ds))
+                ds_col = F.coalesce(F.col("_ds"), F.lit(0.0))
+            else:
+                ds_col = F.lit(0.0)
+            if uniform:
+                rank_expr = (
+                    F.lit(alpha)
+                    * (F.coalesce("c", F.lit(0.0)) + ds_col * F.lit(inv_n))
+                    + F.lit((1.0 - alpha) * inv_n)
+                )
+            else:
+                rank_expr = (
+                    F.lit(alpha) * (F.coalesce("c", F.lit(0.0)) + ds_col * F.col("dw"))
+                    + F.lit(1.0 - alpha) * F.col("p")
+                )
+            return joined.select("id", rank_expr.alias("rank"))
 
-    def materialize(
-        df: DataFrame, k_end: int, t0: float, err=None, commit: bool = True
-    ) -> DataFrame:
-        if checkpoint_store is not None and commit:
-            out = checkpoint_store.commit(
+        def materialize(df: DataFrame, k_end: int, t0: float) -> DataFrame:
+            return loop.commit(
                 df,
                 IterationMetrics(
                     k_end,
                     edges_processed=edge_count * (k_end - start_iter + 1),
                     wall_ms=int((time.monotonic() - t0) * 1000),
-                    l1_err=None if err is None else float(err),
                     extra={"alpha": alpha},
                 ),
             )
-        else:
-            out = cache.truncate(df)
-        return out
 
-    # Iterative loop settings: AQE off (no per-stage driver re-planning;
-    # the loop's shapes are static) and no automatic broadcast joins (the
-    # rank vector must stay a shuffle join to survive scale; the one-row
-    # dangling mass keeps its explicit broadcast() hint). Restored on exit.
-    saved_conf = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.join.preferSortMergeJoin": spark.conf.get(
-            "spark.sql.join.preferSortMergeJoin"
-        ),
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # Must equal the pinned A_t layout or every rank join re-shuffles A_t.
-    spark.conf.set("spark.sql.shuffle.partitions", str(num_parts))
-    # Shuffled-hash instead of sort-merge: the per-iteration joins would
-    # otherwise re-sort the (cached, co-partitioned) edge table every
-    # iteration — pure CPU burn that dominates at scale. The hash side is
-    # the rank vector (n rows), which fits executor memory by design.
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try:
         if fixed_iter is not None:
             # Chain `check_interval` lazy iterations per materialization;
             # persisted intermediates keep the dangling/contribution fan-out
@@ -397,42 +296,34 @@ def pagerank(
                 if dang_ids is not None:
                     for it in iterates[1:]:
                         it.unpersist()
-                # previous batch's checkpoint blocks are dead once the new
-                # one is materialized — release, don't pin one per batch
-                cache.release(x_old)
+                # previous batch's snapshot is dead once the new one is
+                # materialized — release, don't pin one per batch
+                if x_old is not x0:
+                    loop.release(x_old)
                 k += steps
-            cache.close(keep_result=True)
-            cleanup()
-            return x
+            return loop.result(x)
 
         # Convergence mode: the reference's per-iteration stopping rule
         # (pagerank_alg.py:495-497). Two jobs per iteration: the superstep
         # materialization (localCheckpoint or durable commit — re-roots the
         # logical plan, which otherwise grows 3^k) and the L1-error
-        # aggregation over the two checkpointed iterates (tiny scans).
+        # aggregation over the two materialized iterates (tiny scans).
         for k in range(start_iter, max_iter):
             t0 = time.monotonic()
-            commit = k % max(1, checkpoint_interval) == 0
-            x_new = materialize(step(x), k, t0, commit=commit)
+            x_new = materialize(step(x), k, t0)
             err = (
                 x_new.join(x.select("id", F.col("rank").alias("rank_prev")), "id")
                 .agg(F.sum(F.abs(F.col("rank") - F.col("rank_prev"))).alias("err"))
                 .first()["err"]
             ) or 0.0
-            cache.release(x)  # prev iterate: last read was the err join
+            if x is not x0:
+                loop.release(x)  # prev iterate: last read was the err join
             x = x_new
-            if checkpoint_store is not None and commit:
+            if checkpoint_store is not None:
                 checkpoint_store.update_metrics(k, l1_err=float(err))
             if err < n * tol:
-                cache.close(keep_result=True)
-                cleanup()
-                return x
-        cache.close()
-        cleanup()
+                return loop.result(x)
         raise PowerIterationFailedConvergence(max_iter)
-    finally:
-        for key, val in saved_conf.items():
-            spark.conf.set(key, val)
 
 
 def top_pagerank(g: SparkGraph, k: int = 20, **kwargs) -> DataFrame:

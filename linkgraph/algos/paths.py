@@ -359,7 +359,6 @@ def _paths_from_tree(tree: DataFrame, source) -> DataFrame:
         )
         frontier = nxt
     result = result.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return result
 
 
@@ -880,7 +879,6 @@ def bfs_beam_edges(
     if edges_acc is None:
         edges_acc = spark.createDataFrame([], "src long, dst long, depth long")
     edges_acc = edges_acc.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return edges_acc
 
 
@@ -978,7 +976,6 @@ def _bfs_ranked(
         ranked = cache.truncate(ranked.unionByName(nxt))
         frontier = nxt
     adj.unpersist()
-    cache.close(keep_result=True)
     return ranked
 
 

@@ -157,7 +157,6 @@ def resistance_distance(
     }
     arcs.unpersist()
     deg.unpersist()
-    cache.close()
     return float(vals[node_a] - vals[node_b])
 
 

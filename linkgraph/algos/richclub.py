@@ -109,23 +109,24 @@ def generalized_degree(g: SparkGraph) -> DataFrame:
     (``cluster.py:533``; the reference returns a Counter per node)."""
     from linkgraph.algos.triangles import _simple_edges, _triangle_corners
 
-    e = _simple_edges(g).persist()
-    tri_edges = _triangle_corners(g).select(
-        F.explode(
-            F.array(
-                F.struct(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")),
-                F.struct(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")),
-                F.struct(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")),
-            )
-        ).alias("e")
-    ).select("e.u", "e.v")
-    support = tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("t"))
-    with_support = e.join(support, ["u", "v"], "left").select(
-        "u", "v", F.coalesce("t", F.lit(0)).alias("t")
-    )
-    ends = with_support.select(F.col("u").alias("id"), "t").unionAll(
-        with_support.select(F.col("v").alias("id"), "t")
-    )
-    return ends.groupBy("id", "t").agg(
-        F.count(F.lit(1)).cast("long").alias("n_edges")
-    ).select("id", F.col("t").cast("long"), "n_edges")
+    e = _simple_edges(g)
+    with _triangle_corners(g) as corners:
+        tri_edges = corners.select(
+            F.explode(
+                F.array(
+                    F.struct(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")),
+                    F.struct(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")),
+                    F.struct(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")),
+                )
+            ).alias("e")
+        ).select("e.u", "e.v")
+        support = tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("t"))
+        with_support = e.join(support, ["u", "v"], "left").select(
+            "u", "v", F.coalesce("t", F.lit(0)).alias("t")
+        )
+        ends = with_support.select(F.col("u").alias("id"), "t").unionAll(
+            with_support.select(F.col("v").alias("id"), "t")
+        )
+        return ends.groupBy("id", "t").agg(
+            F.count(F.lit(1)).cast("long").alias("n_edges")
+        ).select("id", F.col("t").cast("long"), "n_edges").localCheckpoint(eager=True)

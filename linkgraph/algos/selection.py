@@ -144,7 +144,6 @@ def maximal_independent_set(
             out = out.unionAll(p)
         return out.localCheckpoint()
     finally:
-        cache.close()
         sym.unpersist()
 
 
@@ -161,55 +160,52 @@ def maximal_matching(g: SparkGraph, seed: int = 42) -> DataFrame:
     )
     cache = SuperstepCache(g.spark)
     parts = []
-    try:
-        active = cache.truncate(e0)
-        rnd = 0
-        while not active.isEmpty():
-            rnd += 1
-            pri = active.select(
-                "u", "v",
-                F.xxhash64(F.col("u"), F.col("v"), F.lit(seed), F.lit(rnd)).alias("h"),
+    active = cache.truncate(e0)
+    rnd = 0
+    while not active.isEmpty():
+        rnd += 1
+        pri = active.select(
+            "u", "v",
+            F.xxhash64(F.col("u"), F.col("v"), F.lit(seed), F.lit(rnd)).alias("h"),
+        )
+        ends = pri.select(F.col("u").alias("node"), "u", "v", "h").unionAll(
+            pri.select(F.col("v").alias("node"), "u", "v", "h")
+        )
+        node_min = ends.groupBy("node").agg(
+            F.min(F.struct("h", "u", "v")).alias("m")
+        )
+        sel = (
+            pri.join(
+                node_min.withColumnRenamed("node", "u").withColumnRenamed("m", "mu"),
+                "u",
             )
-            ends = pri.select(F.col("u").alias("node"), "u", "v", "h").unionAll(
-                pri.select(F.col("v").alias("node"), "u", "v", "h")
+            .join(
+                node_min.withColumnRenamed("node", "v").withColumnRenamed("m", "mv"),
+                "v",
             )
-            node_min = ends.groupBy("node").agg(
-                F.min(F.struct("h", "u", "v")).alias("m")
+            .filter(
+                (F.struct("h", "u", "v") == F.col("mu"))
+                & (F.struct("h", "u", "v") == F.col("mv"))
             )
-            sel = (
-                pri.join(
-                    node_min.withColumnRenamed("node", "u").withColumnRenamed("m", "mu"),
-                    "u",
-                )
-                .join(
-                    node_min.withColumnRenamed("node", "v").withColumnRenamed("m", "mv"),
-                    "v",
-                )
-                .filter(
-                    (F.struct("h", "u", "v") == F.col("mu"))
-                    & (F.struct("h", "u", "v") == F.col("mv"))
-                )
-                .select("u", "v")
-            )
-            sel = cache.truncate(sel)
-            parts.append(sel)
-            matched = sel.select(F.col("u").alias("node")).unionAll(
-                sel.select(F.col("v").alias("node"))
-            )
-            active = cache.truncate(
-                active.join(
-                    matched.withColumnRenamed("node", "u"), "u", "left_anti"
-                ).join(matched.withColumnRenamed("node", "v"), "v", "left_anti"),
-                retire=active,
-            )
-        if not parts:
-            return e0.limit(0)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out.localCheckpoint()
-    finally:
-        cache.close()
+            .select("u", "v")
+        )
+        sel = cache.truncate(sel)
+        parts.append(sel)
+        matched = sel.select(F.col("u").alias("node")).unionAll(
+            sel.select(F.col("v").alias("node"))
+        )
+        active = cache.truncate(
+            active.join(
+                matched.withColumnRenamed("node", "u"), "u", "left_anti"
+            ).join(matched.withColumnRenamed("node", "v"), "v", "left_anti"),
+            retire=active,
+        )
+    if not parts:
+        return e0.limit(0)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out.localCheckpoint()
 
 
 def voterank(g: SparkGraph, number_of_nodes: Optional[int] = None) -> DataFrame:
@@ -246,51 +242,48 @@ def voterank(g: SparkGraph, number_of_nodes: Optional[int] = None) -> DataFrame:
         )
     )
     chosen = []
-    try:
-        for _ in range(number_of_nodes):
-            # votes flow dst→src: score(src) = Σ ability(dst)
-            scores = (
-                arcs.join(
-                    state.select(F.col("id").alias("dst"), "ability"), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("ability").alias("score"))
+    for _ in range(number_of_nodes):
+        # votes flow dst→src: score(src) = Σ ability(dst)
+        scores = (
+            arcs.join(
+                state.select(F.col("id").alias("dst"), "ability"), "dst"
             )
-            top = (
-                state.filter(~F.col("elected"))
-                .join(scores, "id", "left")
-                .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
-                .orderBy(F.desc("score"), F.asc("id"))
-                .limit(1)
-                .first()
-            )
-            if top is None or top["score"] == 0.0:
-                break
-            nid = top["id"]
-            chosen.append(nid)
-            nbrs = arcs.filter(F.col("src") == nid).select(
-                F.col("dst").alias("id")
-            )
-            state = cache.truncate(
-                state.join(F.broadcast(nbrs.withColumn("hit", F.lit(True))), "id", "left")
-                .select(
-                    "id",
-                    F.when(F.col("id") == nid, 0.0)
-                    .when(
-                        F.col("hit").isNotNull(),
-                        F.greatest(F.col("ability") - f, F.lit(0.0)),
-                    )
-                    .otherwise(F.col("ability"))
-                    .alias("ability"),
-                    (F.col("elected") | (F.col("id") == nid)).alias("elected"),
-                ),
-                retire=state,
-            )
-        return g.spark.createDataFrame(
-            [(i, int(v)) for i, v in enumerate(chosen)], "rank long, id long"
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("ability").alias("score"))
         )
-    finally:
-        cache.close()
+        top = (
+            state.filter(~F.col("elected"))
+            .join(scores, "id", "left")
+            .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
+            .orderBy(F.desc("score"), F.asc("id"))
+            .limit(1)
+            .first()
+        )
+        if top is None or top["score"] == 0.0:
+            break
+        nid = top["id"]
+        chosen.append(nid)
+        nbrs = arcs.filter(F.col("src") == nid).select(
+            F.col("dst").alias("id")
+        )
+        state = cache.truncate(
+            state.join(F.broadcast(nbrs.withColumn("hit", F.lit(True))), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("id") == nid, 0.0)
+                .when(
+                    F.col("hit").isNotNull(),
+                    F.greatest(F.col("ability") - f, F.lit(0.0)),
+                )
+                .otherwise(F.col("ability"))
+                .alias("ability"),
+                (F.col("elected") | (F.col("id") == nid)).alias("elected"),
+            ),
+            retire=state,
+        )
+    return g.spark.createDataFrame(
+        [(i, int(v)) for i, v in enumerate(chosen)], "rank long, id long"
+    )
 
 
 def dominating_set(g: SparkGraph, seed: int = 42) -> DataFrame:

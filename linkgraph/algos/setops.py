@@ -258,7 +258,6 @@ def shortest_path_lengths(
         visited = cache.truncate(visited.unionByName(nxt))
         frontier = nxt
     adj.unpersist()
-    cache.close(keep_result=True)
     return visited
 
 

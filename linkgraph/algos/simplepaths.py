@@ -76,7 +76,6 @@ def all_simple_paths(
     out = out.persist()
     out.count()
     arcs.unpersist()
-    cache.close(keep_result=True)
     return out
 
 

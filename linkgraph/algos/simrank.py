@@ -29,7 +29,6 @@ SimRank approximation), bounding state at the pairs anyone would read.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -39,24 +38,6 @@ from linkgraph.iterutils import SuperstepCache
 
 
 from linkgraph.exceptions import ExceededMaxIterations  # noqa: E402 (shared hierarchy)
-
-
-@contextmanager
-def _loop_conf(spark):
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.join.preferSortMergeJoin",
-        )
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def simrank_similarity(
@@ -77,29 +58,25 @@ def simrank_similarity(
     SQL-unrolled oracle workload). ``min_sim``: truncated-SimRank pruning
     floor for scale.
     """
-    spark = g.spark
-    c = float(importance_factor)
-
-    # in-neighbor arcs (w -> u): predecessors when directed, adj otherwise
-    arcs = (g.edges if g.directed else g.symmetric_edges()).select(
-        F.col("dst").alias("node"), F.col("src").alias("inn")
-    )
-    arcs = arcs.persist()
-    indeg = arcs.groupBy("node").agg(F.count(F.lit(1)).alias("d")).persist()
-
-    cache = SuperstepCache(spark)
-    s = cache.truncate(
-        g.vertices.select(
-            F.col("id").alias("u"), F.col("id").alias("v"), F.lit(1.0).alias("s")
-        )
-    )
-
     if fixed_iter is not None:
         if fixed_iter < 1:
             raise ValueError("fixed_iter must be >= 1")
         max_iterations = fixed_iter
+    c = float(importance_factor)
 
-    with _loop_conf(spark):
+    with SuperstepCache(g.spark) as loop:
+        # in-neighbor arcs (w -> u): predecessors when directed, adj otherwise
+        arcs = loop.pin(
+            (g.edges if g.directed else g.symmetric_edges()).select(
+                F.col("dst").alias("node"), F.col("src").alias("inn")
+            )
+        )
+        indeg = loop.pin(arcs.groupBy("node").agg(F.count(F.lit(1)).alias("d")))
+        s = loop.truncate(
+            g.vertices.select(
+                F.col("id").alias("u"), F.col("id").alias("v"), F.lit(1.0).alias("s")
+            )
+        )
         for _ in range(max_iterations):
             summed = (
                 s.join(arcs.select(F.col("inn").alias("u"), F.col("node").alias("nu")), "u")
@@ -122,7 +99,7 @@ def simrank_similarity(
             diag = g.vertices.select(
                 F.col("id").alias("u"), F.col("id").alias("v"), F.lit(1.0).alias("s")
             )
-            s_new = cache.truncate(offdiag.unionByName(diag))
+            s_new = loop.truncate(offdiag.unionByName(diag))
             if fixed_iter is None:
                 # relative convergence over the UNION of supports (absent = 0)
                 moved = (
@@ -138,22 +115,15 @@ def simrank_similarity(
                     .agg(F.max("over").alias("m"))
                     .first()["m"]
                 )
-                cache.release(s)
+                loop.release(s)
                 s = s_new
                 if moved is not None and moved <= 0:
-                    arcs.unpersist()
-                    indeg.unpersist()
-                    cache.close(keep_result=True)
-                    return s.select("u", "v", F.col("s").alias("simrank"))
+                    return loop.result(s.select("u", "v", F.col("s").alias("simrank")))
             else:
-                cache.release(s)
+                loop.release(s)
                 s = s_new
-    arcs.unpersist()
-    indeg.unpersist()
-    if fixed_iter is not None:
-        cache.close(keep_result=True)
-        return s.select("u", "v", F.col("s").alias("simrank"))
-    cache.close()
-    raise ExceededMaxIterations(
-        f"simrank did not converge within {max_iterations} iterations"
-    )
+        if fixed_iter is not None:
+            return loop.result(s.select("u", "v", F.col("s").alias("simrank")))
+        raise ExceededMaxIterations(
+            f"simrank did not converge within {max_iterations} iterations"
+        )

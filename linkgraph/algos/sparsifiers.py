@@ -236,5 +236,4 @@ def spanner(
         .persist()
     )
     out.count()
-    cache.close(keep_result=True)
     return out

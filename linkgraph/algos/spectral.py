@@ -74,11 +74,8 @@ def _zero_one_arcs(g: SparkGraph) -> DataFrame:
 
 def _expm_pairs(
     g: SparkGraph, tol: float, max_terms: int
-) -> tuple[DataFrame, SuperstepCache]:
-    """(src, dst, comm) = truncated-Taylor expm(A) over the 0/1 adjacency.
-
-    Caller must ``cache.close(keep_result=True)`` after materializing.
-    """
+) -> DataFrame:
+    """(src, dst, comm) = truncated-Taylor expm(A) over the 0/1 adjacency."""
     spark = g.spark
     arcs = _zero_one_arcs(g).persist()
     cache = SuperstepCache(spark)
@@ -123,7 +120,7 @@ def _expm_pairs(
     )
     out = total.localCheckpoint(eager=True)
     arcs.unpersist()
-    return out, cache
+    return out
 
 
 def communicability(
@@ -134,11 +131,10 @@ def communicability(
     returns a dense dict-of-dicts including exact zeros for cross-component
     pairs; the relational form drops those structural zeros, like
     ``number_of_walks``."""
-    pairs, cache = _expm_pairs(g, tol, max_terms)
+    pairs = _expm_pairs(g, tol, max_terms)
     out = pairs.select(
         "src", "dst", F.col("comm").alias("communicability")
     ).localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 
@@ -189,7 +185,6 @@ def _spectral_radius(
         if prev_lam is not None and abs(lam - prev_lam) < tol:
             break
         prev_lam = lam
-    cache.close()
     return lam
 
 
@@ -204,7 +199,7 @@ def subgraph_centrality(
     (``subgraph_alg.py`` ``subgraph_centrality``). ``normalized=True``
     divides by e^{λ_max} (the reference's ``exp(w - w.max())`` shift),
     with λ_max from shifted power iteration."""
-    pairs, cache = _expm_pairs(g, tol, max_terms)
+    pairs = _expm_pairs(g, tol, max_terms)
     diag = pairs.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("id"), F.col("comm").alias("centrality")
     )
@@ -216,7 +211,6 @@ def subgraph_centrality(
             "id", (F.col("centrality") / F.lit(math.exp(lam))).alias("centrality")
         )
     out = diag.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 
@@ -232,13 +226,12 @@ def estrada_index(
 ) -> float:
     """EE(G) = tr(expm(A)) = Σ_u subgraph_centrality(u)
     (``subgraph_alg.py`` ``estrada_index``)."""
-    pairs, cache = _expm_pairs(g, tol, max_terms)
+    pairs = _expm_pairs(g, tol, max_terms)
     row = (
         pairs.filter(F.col("src") == F.col("dst"))
         .agg(F.sum("comm").alias("ee"))
         .collect()[0]
     )
-    cache.close()
     return float(row["ee"])
 
 

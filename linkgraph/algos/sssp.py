@@ -104,7 +104,6 @@ def weighted_shortest_path_lengths(
                 n_limit = g.number_of_nodes()
             if n_limit is not None and rounds > n_limit:
                 adj.unpersist()
-                cache.close()
                 raise NegativeCycleError(
                     "Negative cost cycle detected: relaxation still "
                     f"improving after {n_limit} rounds"
@@ -147,7 +146,6 @@ def weighted_shortest_path_lengths(
         if n_improved == 0:
             break
     adj.unpersist()
-    cache.close(keep_result=True)
     return dist
 
 
@@ -245,7 +243,6 @@ def voronoi_cells(
                 n_limit = g.number_of_nodes()
             if n_limit is not None and rounds > n_limit:
                 adj.unpersist()
-                cache.close()
                 raise NegativeCycleError(
                     "voronoi_cells: relaxation still improving after "
                     f"{n_limit} rounds (negative weights?)"
@@ -290,7 +287,6 @@ def voronoi_cells(
         F.col("best.distance").alias("distance"),
     ).localCheckpoint(eager=True)
     adj.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -345,7 +341,6 @@ def all_pairs_bellman_ford_path_lengths(
                 n_limit = g.number_of_nodes()
             if n_limit is not None and rounds > n_limit:
                 adj.unpersist()
-                cache.close()
                 raise NegativeCycleError(
                     "Negative cost cycle detected: relaxation still "
                     f"improving after {n_limit} rounds"
@@ -377,7 +372,6 @@ def all_pairs_bellman_ford_path_lengths(
         if frontier.limit(1).count() == 0:
             break
     adj.unpersist()
-    cache.close(keep_result=True)
     return dist
 
 

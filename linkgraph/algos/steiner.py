@@ -186,5 +186,4 @@ def steiner_tree(
     out.count()
     for df in (terms, arcs, vor, tagged, parents, cand, chosen_arcs, tree_edges):
         df.unpersist()
-    cache.close(keep_result=True)
     return out

@@ -150,7 +150,6 @@ def strongly_connected_components(
             out = out.unionByName(df)
         out = out.persist()
         out.count()
-    cache.close(keep_result=False)
     return out
 
 

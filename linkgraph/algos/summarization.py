@@ -217,7 +217,6 @@ def snap_aggregation(
         .persist()
     )
     assignment.count()
-    cache.close()
 
     supernodes = (
         g.vertices.select("id", *node_attributes)

@@ -55,7 +55,6 @@ def double_edge_swap(
     edges = cache.truncate(e)
     m = edges.count()
     if m < 2:
-        cache.close()
         return SparkGraph(
             e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             g.vertices.select("id"),
@@ -64,95 +63,92 @@ def double_edge_swap(
         )
     done = 0
     rnd = 0
-    try:
-        while done < nswap and rnd < max_rounds:
-            rnd += 1
-            # random pairing: hash-rank edges, pair rank 2i with 2i+1
-            # inside hash buckets (window over bucket keeps the sort local)
-            h = F.xxhash64("u", "v", F.lit(seed), F.lit(rnd))
-            n_buckets = max(1, m // 10_000)
-            ranked = edges.select(
-                "u", "v", h.alias("h"), F.pmod(h, F.lit(n_buckets)).alias("b")
-            ).withColumn(
-                "rn", F.row_number().over(Window.partitionBy("b").orderBy("h"))
-            )
-            a = ranked.filter(F.col("rn") % 2 == 1).select(
-                "b", ((F.col("rn") + 1) / 2).cast("long").alias("pair"),
-                F.col("u").alias("u1"), F.col("v").alias("v1"),
-            )
-            bb = ranked.filter(F.col("rn") % 2 == 0).select(
-                "b", (F.col("rn") / 2).cast("long").alias("pair"),
-                F.col("u").alias("u2"), F.col("v").alias("v2"),
-            )
-            prop = (
-                a.join(bb, ["b", "pair"])
-                # swap (u1,v1),(u2,v2) -> (u1,v2),(u2,v1); all 4 distinct
-                .filter(
-                    (F.col("u1") != F.col("u2")) & (F.col("u1") != F.col("v2"))
-                    & (F.col("v1") != F.col("u2")) & (F.col("v1") != F.col("v2"))
-                )
-                .select(
-                    F.col("u1").alias("ou1"), F.col("v1").alias("ov1"),
-                    F.col("u2").alias("ou2"), F.col("v2").alias("ov2"),
-                    F.least("u1", "v2").alias("n1u"), F.greatest("u1", "v2").alias("n1v"),
-                    F.least("u2", "v1").alias("n2u"), F.greatest("u2", "v1").alias("n2v"),
-                )
-                .filter(  # no self-loops in the replacements
-                    (F.col("n1u") != F.col("n1v")) & (F.col("n2u") != F.col("n2v"))
-                )
-            )
-            # replacements must not already exist in the graph
-            prop = prop.join(
-                edges.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
-                ["n1u", "n1v"], "left_anti",
-            ).join(
-                edges.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
-                ["n2u", "n2v"], "left_anti",
-            )
-            # no two proposals may create the same new edge, and a
-            # proposal's two replacements must differ from each other
-            prop = prop.filter(
-                ~((F.col("n1u") == F.col("n2u")) & (F.col("n1v") == F.col("n2v")))
-            )
-            news = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
-                prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
-            )
-            clash = (
-                news.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > 1)
-            )
-            prop = prop.join(
-                clash.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
-                ["n1u", "n1v"], "left_anti",
-            ).join(
-                clash.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
-                ["n2u", "n2v"], "left_anti",
-            )
-            prop = cache.truncate(prop)
-            applied = prop.count()
-            if applied == 0:
-                continue
-            olds = prop.select(F.col("ou1").alias("u"), F.col("ov1").alias("v")).unionAll(
-                prop.select(F.col("ou2").alias("u"), F.col("ov2").alias("v"))
-            )
-            adds = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
-                prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
-            )
-            edges = cache.truncate(
-                edges.join(olds, ["u", "v"], "left_anti").unionAll(adds),
-                retire=edges,
-            )
-            done += applied
-        out = SparkGraph(
-            edges.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            g.vertices.select("id"),
-            directed=False,
-            coalesce_edges=False,
+    while done < nswap and rnd < max_rounds:
+        rnd += 1
+        # random pairing: hash-rank edges, pair rank 2i with 2i+1
+        # inside hash buckets (window over bucket keeps the sort local)
+        h = F.xxhash64("u", "v", F.lit(seed), F.lit(rnd))
+        n_buckets = max(1, m // 10_000)
+        ranked = edges.select(
+            "u", "v", h.alias("h"), F.pmod(h, F.lit(n_buckets)).alias("b")
+        ).withColumn(
+            "rn", F.row_number().over(Window.partitionBy("b").orderBy("h"))
         )
-        out.edges = out.edges.localCheckpoint(eager=True)
-        return out
-    finally:
-        cache.close()
+        a = ranked.filter(F.col("rn") % 2 == 1).select(
+            "b", ((F.col("rn") + 1) / 2).cast("long").alias("pair"),
+            F.col("u").alias("u1"), F.col("v").alias("v1"),
+        )
+        bb = ranked.filter(F.col("rn") % 2 == 0).select(
+            "b", (F.col("rn") / 2).cast("long").alias("pair"),
+            F.col("u").alias("u2"), F.col("v").alias("v2"),
+        )
+        prop = (
+            a.join(bb, ["b", "pair"])
+            # swap (u1,v1),(u2,v2) -> (u1,v2),(u2,v1); all 4 distinct
+            .filter(
+                (F.col("u1") != F.col("u2")) & (F.col("u1") != F.col("v2"))
+                & (F.col("v1") != F.col("u2")) & (F.col("v1") != F.col("v2"))
+            )
+            .select(
+                F.col("u1").alias("ou1"), F.col("v1").alias("ov1"),
+                F.col("u2").alias("ou2"), F.col("v2").alias("ov2"),
+                F.least("u1", "v2").alias("n1u"), F.greatest("u1", "v2").alias("n1v"),
+                F.least("u2", "v1").alias("n2u"), F.greatest("u2", "v1").alias("n2v"),
+            )
+            .filter(  # no self-loops in the replacements
+                (F.col("n1u") != F.col("n1v")) & (F.col("n2u") != F.col("n2v"))
+            )
+        )
+        # replacements must not already exist in the graph
+        prop = prop.join(
+            edges.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
+            ["n1u", "n1v"], "left_anti",
+        ).join(
+            edges.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
+            ["n2u", "n2v"], "left_anti",
+        )
+        # no two proposals may create the same new edge, and a
+        # proposal's two replacements must differ from each other
+        prop = prop.filter(
+            ~((F.col("n1u") == F.col("n2u")) & (F.col("n1v") == F.col("n2v")))
+        )
+        news = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
+            prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
+        )
+        clash = (
+            news.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") > 1)
+        )
+        prop = prop.join(
+            clash.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
+            ["n1u", "n1v"], "left_anti",
+        ).join(
+            clash.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
+            ["n2u", "n2v"], "left_anti",
+        )
+        prop = cache.truncate(prop)
+        applied = prop.count()
+        if applied == 0:
+            continue
+        olds = prop.select(F.col("ou1").alias("u"), F.col("ov1").alias("v")).unionAll(
+            prop.select(F.col("ou2").alias("u"), F.col("ov2").alias("v"))
+        )
+        adds = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
+            prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
+        )
+        edges = cache.truncate(
+            edges.join(olds, ["u", "v"], "left_anti").unionAll(adds),
+            retire=edges,
+        )
+        done += applied
+    out = SparkGraph(
+        edges.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+        g.vertices.select("id"),
+        directed=False,
+        coalesce_edges=False,
+    )
+    out.edges = out.edges.localCheckpoint(eager=True)
+    return out
 
 
 def directed_edge_swap(
@@ -175,7 +171,6 @@ def directed_edge_swap(
     edges = cache.truncate(e)
     m = edges.count()
     if m < 2:
-        cache.close()
         return SparkGraph(
             e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             g.vertices.select("id"),
@@ -254,7 +249,6 @@ def directed_edge_swap(
     finally:
         out = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         out = out.localCheckpoint(eager=True)
-        cache.close(keep_result=True)
     return SparkGraph(
         out, g.vertices.select("id"), directed=True, coalesce_edges=False
     )

@@ -57,7 +57,6 @@ def number_of_walks(g: SparkGraph, walk_length: int) -> DataFrame:
     out = walks.persist()
     out.count()
     arcs.unpersist()
-    cache.close(keep_result=True)
     return out
 
 
@@ -138,7 +137,6 @@ def generate_random_paths(
         frontier = nxt
     trans.unpersist()
     res = out.localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return res
 
 

@@ -157,7 +157,6 @@ def weisfeiler_lehman_graph_hash(
         allpairs = allpairs.unionByName(df)
     n_pairs = allpairs.count()
     if n_pairs == 0:
-        cache.close()
         return blake2b(b"()", digest_size=digest_size).hexdigest()
     # "('<label>', <n>)" is repr((label, n)); string sort of the formatted
     # pair equals Python's tuple sort because "'" precedes every label
@@ -183,7 +182,6 @@ def weisfeiler_lehman_graph_hash(
         ).alias("raw")
     )
     digest = joined.select(h(F.col("raw")).alias("d")).first()["d"]
-    cache.close()
     return digest
 
 
@@ -287,5 +285,4 @@ def weisfeiler_lehman_subgraph_hashes(
     vertices.unpersist()
     if sym is not None:
         sym.unpersist()
-    cache.close(keep_result=True)
     return out

@@ -8,7 +8,7 @@ matrix lives in one address space), so they are for the small-graph /
 test / linear-algebra-interop regime only — guarded by ``max_nodes``, the
 same role the reference's "fast path for small graphs" plays
 (``pagerank_alg.py:271``). The distributed twin of CSR (per-partition Arrow
-blocks) is benchmarked in scripts/csr_kernel_bench.py; see BASELINE.md.
+blocks) was benchmarked and retired (BENCH_CSR.json; see BASELINE.md).
 
 The core egress is ``to_csr_arrays`` — plain NumPy ``(indptr, indices,
 data, ids)`` CSR triplets, the exact memory layout scipy's csr_array wraps

@@ -11,8 +11,8 @@ code path, no drift between the two forms.
 
 from __future__ import annotations
 
+import atexit
 import os
-import shutil
 import tempfile
 from typing import Iterable, List
 
@@ -45,23 +45,17 @@ __all__ = [
 def _lines_to_graph(spark, lines, reader, **kw) -> SparkGraph:
     if isinstance(lines, str):
         lines = lines.splitlines()
-    tmp = tempfile.mkdtemp(prefix="lg_parse_")
-    try:
-        p = os.path.join(tmp, "input.txt")
-        with open(p, "w") as f:
-            f.write("\n".join(str(x).rstrip("\n") for x in lines))
-        return reader(spark, p, **kw)
-    finally:
-        # the distributed readers materialize eagerly enough for the small
-        # parse form; keep the dir until the graph is realized
-        import atexit
-
-        atexit.register(shutil.rmtree, tmp, True)
+    # the distributed readers are lazy: keep the dir until interpreter exit
+    tmp = tempfile.TemporaryDirectory(prefix="lg_parse_")
+    atexit.register(tmp.cleanup)
+    p = os.path.join(tmp.name, "input.txt")
+    with open(p, "w") as f:
+        f.write("\n".join(str(x).rstrip("\n") for x in lines))
+    return reader(spark, p, **kw)
 
 
 def _graph_to_lines(g: SparkGraph, writer, **kw) -> List[str]:
-    tmp = tempfile.mkdtemp(prefix="lg_generate_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="lg_generate_") as tmp:
         p = os.path.join(tmp, "out")
         writer(g, p, **kw)
         lines: List[str] = []
@@ -74,8 +68,6 @@ def _graph_to_lines(g: SparkGraph, writer, **kw) -> List[str]:
             with open(p) as f:
                 lines = f.read().splitlines()
         return lines
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---- edgelist -------------------------------------------------------- #

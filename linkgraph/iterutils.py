@@ -1,37 +1,43 @@
-"""Superstep lineage management for iterative DataFrame loops.
+"""The superstep runtime shared by iterative DataFrame loops.
 
 Iterative Spark has one classic failure mode (SURVEY.md §4 risk 1): each
 superstep's plan embeds the previous superstep's plan several times (a rank
 vector is joined, aggregated and diffed), so the logical tree grows by a
 branching factor per iteration and Catalyst analysis goes exponential after
 a few dozen supersteps. ``persist()`` does not help — it caches data but
-leaves the logical plan intact — and ``localCheckpoint()`` pins its RDD in
+leaves the logical plan intact. ``localCheckpoint(eager=True)`` re-roots the
+plan at an RDD scan (measured ~0.6 s/superstep fixed cost on local[4] vs
+2-7 s for the lazy variant under AQE), but pins its RDD in
 ``SparkContext.persistentRdds`` with no public release API, which leaks
 executor storage until the JVM OOMs on long runs (observed at ~90
 iterations on a 1 GiB driver).
 
-Two truncation modes, picked by durability needs:
+:class:`SuperstepCache` owns everything a loop shares, so the algorithms
+carry none of it themselves. Used as a context manager it:
 
-- ``mode="local"`` (default): ``df.localCheckpoint(eager=True)`` — the
-  logical plan is re-rooted at an RDD scan and the RDD materializes to
-  executor-local storage immediately. Measured ~0.6 s/superstep fixed
-  cost on local[4] vs 2-7 s for the lazy variant (lazy re-materializes
-  under AQE) and unbounded plan growth with no truncation at all. The
-  pinned-RDD footprint grows by one small state table per superstep,
-  which is fine for the ≤100-iteration loops the algorithms run;
-  durable restartable state is not provided here.
-- ``mode="parquet"``: write the state DataFrame to a rotating scratch
-  directory and read it back (plan = one file scan). Slower (a write job
-  per superstep) but leaves nothing pinned; durable, manifest-carrying
-  checkpoints with resume are :class:`linkgraph.state.CheckpointStore`'s
-  job and replace this mode when requested.
+- sets the loop conf on entry and restores the caller's values on exit,
+  also when the loop raises: AQE off (the loop's shapes are static, and AQE
+  splits every superstep into one job per stage), shuffled-hash joins
+  instead of sort-merge (no per-superstep re-sort of the pinned tables),
+  runtime bloom filters off (their search is superlinear in join count),
+  and ``spark.sql.shuffle.partitions`` when the loop was sized;
+- pins the loop's constant tables (:meth:`SuperstepCache.pin`); a table
+  hash-partitioned on its join key also turns automatic broadcasts off
+  from the first superstep on, as they would bypass that layout;
+- truncates lineage per superstep (:meth:`~SuperstepCache.truncate`), or
+  commits it to a :class:`linkgraph.state.CheckpointStore` when the loop
+  was given one (:meth:`~SuperstepCache.commit`), and reads it back from the
+  store's latest manifest (:meth:`~SuperstepCache.resume`);
+- on exit unpersists every pinned table and releases every snapshot it
+  made, except the snapshots the loop's :meth:`~SuperstepCache.result`
+  reads. The caller releases those with :meth:`~SuperstepCache.release`.
+
+Without ``with`` it is only a truncate/release helper: the conf is left
+alone and nothing is released on the caller's behalf.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,76 +115,150 @@ def _strip_origin_stats(df: DataFrame) -> DataFrame:
         return df
 
 
+# The loop conf every superstep runtime sets on entry (module docstring).
+LOOP_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+}
+_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _snapshot_rdd_ids(df: DataFrame) -> set:
+    """Ids of the RDDs behind every ``LogicalRDD`` leaf of ``df``'s plan —
+    the local-checkpoint snapshots (and any other RDD scans) it reads."""
+    ids = set()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
 class SuperstepCache:
-    """Per-superstep lineage truncation (see module docstring)."""
+    """The superstep runtime of one iterative loop (see module docstring).
+
+    ``partitions`` sizes the loop's shuffles (see :func:`loop_partitions`);
+    ``store`` makes :meth:`commit` durable and :meth:`resume` possible.
+    """
 
     def __init__(
         self,
         spark: SparkSession,
-        truncate_interval: int = 1,
-        tmp_root: Optional[str] = None,
-        mode: str = "local",
+        partitions: Optional[int] = None,
+        store=None,
     ):
         self.spark = spark
-        self.truncate_interval = max(1, truncate_interval)
-        self.mode = mode
-        self._own_tmp = tmp_root is None
-        self.tmp_root = tmp_root or tempfile.mkdtemp(prefix="linkgraph-superstep-")
-        self._n = 0
+        self.partitions = partitions
+        self.store = store
+        self._saved: dict = {}
+        self._pinned: list = []
+        self._snapshots: set = set()
+        self._result: Optional[DataFrame] = None
+        self._keyed = False
 
-    def truncate(self, df: DataFrame, retire: Optional[DataFrame] = None) -> DataFrame:
+    def __enter__(self) -> "SuperstepCache":
+        conf = self.spark.conf
+        self._saved = {k: conf.get(k) for k in (*LOOP_CONF, _BROADCAST, _PARTITIONS)}
+        for k, v in LOOP_CONF.items():
+            conf.set(k, v)
+        if self.partitions is not None:
+            conf.set(_PARTITIONS, str(self.partitions))
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            for df in self._pinned:
+                df.unpersist()
+            keep = set()
+            if exc_type is None and self._result is not None:
+                keep = _snapshot_rdd_ids(self._result)
+            self._unpersist(self._snapshots - keep)
+        finally:
+            for k, v in self._saved.items():
+                self.spark.conf.set(k, v)
+
+    def pin(self, df: DataFrame, key: Optional[str] = None) -> DataFrame:
+        """Persist a table the loop reads every superstep; unpersisted on
+        exit. With ``key`` it is first hash-partitioned on ``key`` into the
+        loop's partitions, and from the first superstep on automatic
+        broadcasts are off, so every join on ``key`` reuses that layout
+        (only the small side shuffles) instead of broadcasting around it.
+        The one-time set-up before it still broadcasts its small sides:
+        forcing shuffle joins there cost durable PageRank on a 200-page
+        crawl ~1.8 of ~5 CPU-s per call (local[4] on 4 vCPUs)."""
+        if key is not None:
+            df = df.repartition(self.partitions, key)
+            self._keyed = True
+        df = df.persist()
+        self._pinned.append(df)
+        return df
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as what the loop returns: the snapshots it reads
+        survive the exit (release them with :meth:`release` once done)."""
+        self._result = df
+        return df
+
+    def resume(self) -> "tuple[int, Optional[DataFrame]]":
+        """``(start iteration, state)`` from the store's latest complete
+        snapshot; ``(0, None)`` when there is no store or no snapshot."""
+        k = self.store.latest_iteration() if self.store is not None else -1
+        if k < 0:
+            return 0, None
+        return k + 1, self.store.load(k, self.spark)
+
+    def commit(self, df: DataFrame, metrics, eager: bool = True) -> DataFrame:
+        """One superstep's state: a durable store commit carrying
+        ``metrics`` when the loop has a store, else :meth:`truncate`."""
+        if self.store is not None:
+            self._superstep_conf()
+            return self.store.commit(df, metrics)
+        return self.truncate(df, eager=eager)
+
+    def truncate(
+        self, df: DataFrame, retire: Optional[DataFrame] = None, eager: bool = True
+    ) -> DataFrame:
         """Checkpoint ``df``; optionally release a PREVIOUS truncate result
         the caller guarantees nothing will read again. Passing ``retire``
         caps the loop's pinned-RDD footprint at the live generations instead
         of growing by one snapshot per superstep (the leak documented
-        above)."""
-        if self.mode == "local":
+        above). ``eager=False`` leaves the snapshot to be materialized by
+        the caller's next action (one job for both) and keeps the origin
+        statistics the planner sees."""
+        self._superstep_conf()
+        if eager:
             out = _strip_origin_stats(df.localCheckpoint(eager=True))
-            if retire is not None:
-                self.release(retire)
-            return out
-        self._n += 1
-        path = os.path.join(self.tmp_root, f"trunc-{self._n:05d}")
-        df.write.mode("overwrite").parquet(path)
-        prev = os.path.join(self.tmp_root, f"trunc-{self._n - 1:05d}")
-        shutil.rmtree(prev, ignore_errors=True)
-        return self.spark.read.parquet(path)
+        else:
+            out = df.localCheckpoint(eager=False)
+        self._snapshots |= _snapshot_rdd_ids(out)
+        if retire is not None:
+            self.release(retire)
+        return out
 
     def release(self, dfs) -> None:
-        """Unpersist the executor-pinned RDDs backing previously-truncated
-        DataFrames (``SparkContext.persistentRdds`` has no public release
-        API; the id comes off the checkpointed plan's ``LogicalRDD``).
-        Safe on non-checkpointed input (no-op). The released DataFrames
-        must never be read again — their blocks are gone."""
+        """Unpersist the executor-pinned RDDs behind every snapshot the
+        given DataFrames read (``SparkContext.persistentRdds`` has no public
+        release API; the ids come off the plans' ``LogicalRDD`` leaves).
+        A no-op for frames that read no snapshot. Those snapshots must
+        never be read again — their blocks are gone."""
         if isinstance(dfs, DataFrame):
             dfs = [dfs]
-        jsc = self.spark.sparkContext._jsc
+        ids = set()
         for d in dfs:
-            try:
-                rid = d._jdf.queryExecution().analyzed().rdd().id()
-            except Exception:
-                continue  # not a checkpointed LogicalRDD plan
-            try:
-                jrdd = jsc.getPersistentRDDs().get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-            except Exception:
-                pass
+            if d is not None:
+                ids |= _snapshot_rdd_ids(d)
+        self._unpersist(ids)
 
-    def maybe_truncate(self, df: DataFrame, k: int) -> DataFrame:
-        if (k + 1) % self.truncate_interval == 0:
-            return self.truncate(df)
-        return df
+    def _superstep_conf(self) -> None:
+        if self._keyed:
+            self.spark.conf.set(_BROADCAST, "-1")
 
-    def close(self, keep_result: bool = False) -> None:
-        """With ``keep_result=True`` the latest snapshot directory stays on
-        disk until interpreter exit so the caller's returned DataFrame (which
-        scans it) remains computable."""
-        if not self._own_tmp:
-            return
-        if keep_result and self._n > 0:
-            import atexit
-
-            atexit.register(shutil.rmtree, self.tmp_root, ignore_errors=True)
-        else:
-            shutil.rmtree(self.tmp_root, ignore_errors=True)
+    def _unpersist(self, rdd_ids) -> None:
+        pinned = self.spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in rdd_ids:
+            jrdd = pinned.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)

@@ -336,7 +336,6 @@ def spring_layout(
         t -= dt
     arcs.unpersist()
     out = rescale_layout(p, scale=scale).localCheckpoint(eager=True)
-    cache.close(keep_result=True)
     return out
 
 

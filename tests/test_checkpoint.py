@@ -75,3 +75,100 @@ def test_connected_components_resume(spark, tmp_path, G):
         ).collect()
     }
     assert resumed == want
+
+
+# Loop conf keys a superstep runtime may touch; each call must hand them
+# back exactly as it found them.
+LOOP_CONF_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.join.preferSortMergeJoin",
+    "spark.sql.shuffle.partitions",
+)
+
+
+def _call_cases():
+    from linkgraph.algos.lpa import label_propagation_communities
+    from linkgraph.algos.triangles import triangles
+    from linkgraph.exceptions import PowerIterationFailedConvergence
+
+    return {
+        "pagerank": (lambda g: pagerank(g), None),
+        "pagerank-zero-personalization": (
+            lambda g: pagerank(g, personalization={0: 0.0}),
+            ZeroDivisionError,
+        ),
+        "pagerank-max-iter": (
+            lambda g: pagerank(g, max_iter=1),
+            PowerIterationFailedConvergence,
+        ),
+        "components": (lambda g: connected_components(g), None),
+        "components-max-rounds": (
+            lambda g: connected_components(g, max_rounds=1),
+            RuntimeError,
+        ),
+        "lpa": (lambda g: label_propagation_communities(g), None),
+        "lpa-max-sweeps": (
+            lambda g: label_propagation_communities(g, max_sweeps=1),
+            RuntimeError,
+        ),
+        "triangles": (lambda g: triangles(g), None),
+    }
+
+
+def _superstep_dirs():
+    import glob
+    import tempfile
+
+    return set(glob.glob(f"{tempfile.gettempdir()}/linkgraph-superstep-*"))
+
+
+@pytest.mark.parametrize("case", sorted(_call_cases()))
+def test_call_leaves_no_pinned_state(spark, G, case):
+    """A call, raising or not, leaves nothing cached or pinned once its
+    result is consumed and released, and restores the loop conf."""
+    from linkgraph.iterutils import SuperstepCache
+
+    fn, raises = _call_cases()[case]
+    g = from_nx(spark, G)
+    # start clean: earlier tests' results may still pin RDDs, and the JVM's
+    # context cleaner drops those at unpredictable times
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs()
+    for rid in list(pinned.keys()):
+        pinned.get(rid).unpersist(True)
+    conf0 = {k: spark.conf.get(k) for k in LOOP_CONF_KEYS}
+    dirs0 = _superstep_dirs()
+    if raises is None:
+        result = fn(g)
+        assert result.count() == G.number_of_nodes()
+        SuperstepCache(spark).release(result)
+    else:
+        with pytest.raises(raises):
+            fn(g)
+    assert jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {k: spark.conf.get(k) for k in LOOP_CONF_KEYS} == conf0
+    assert _superstep_dirs() <= dirs0
+
+
+def test_superstep_calls_leave_no_temp_dirs(spark, G):
+    """Neither d-separation nor distributed-coloring LPA leaves a scratch
+    directory behind."""
+    import networkx as nx
+    from linkgraph.algos.dseparation import (
+        find_minimal_d_separator,
+        is_d_separator,
+    )
+    from linkgraph.algos.lpa import label_propagation_communities
+
+    def ids(xs):
+        return spark.createDataFrame([(int(i),) for i in xs], "id bigint")
+
+    dirs0 = _superstep_dirs()
+    dag = from_nx(spark, nx.DiGraph([(0, 1), (1, 2), (3, 1), (1, 4)]))
+    assert not is_d_separator(dag, ids([0]), ids([2]), ids([]))
+    find_minimal_d_separator(dag, ids([0]), ids([2]))
+    label_propagation_communities(from_nx(spark, G), coloring="distributed").count()
+    assert _superstep_dirs() <= dirs0

@@ -148,17 +148,3 @@ def test_top_pagerank(spark):
     g = from_edgelist(spark, LM_EDGES, directed=True)
     top = top_pagerank(g, k=2, alpha=0.9, tol=1e-8).collect()
     assert [r["id"] for r in top] == [4, 6]
-
-
-def test_adjacency_kernel_parity(spark):
-    """kernel="adjacency" (compacted CSR rows) must be value-identical to
-    the default per-edge join kernel and to the reference."""
-    G = nx.gnp_random_graph(60, 0.1, seed=11, directed=True)
-    g = from_nx(spark, G)
-    want = _pagerank_python(G, alpha=0.85, tol=1e-10, max_iter=500)
-    for kern in ("edges", "adjacency"):
-        got = {
-            r["id"]: r["rank"]
-            for r in pagerank(g, tol=1e-10, max_iter=500, kernel=kern).collect()
-        }
-        assert max(abs(got[k] - want[k]) for k in want) < 1e-9, kern
