@@ -22,28 +22,36 @@ hub skew. Lineage is truncated each round (localCheckpoint / CheckpointStore).
 
 Convergence detection at scale: comparing edge sets with ``except`` is a
 full shuffle, so we compare (count, sum(xxhash64(src, dst))) fingerprints —
-deterministic, one aggregation, and collision-safe for any practical input.
+deterministic and collision-safe for any practical input. Each round
+observes its fingerprint, and whether it moved from the previous round's,
+on the one job that materializes the round's edges: no side job.
 """
 
 from __future__ import annotations
 
-import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.iterutils import SuperstepCache, loop_partitions
-from linkgraph.state import CheckpointStore, IterationMetrics
+from linkgraph.state import CheckpointStore
 
 
-def _fingerprint(e: DataFrame):
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal(38,0) accumulator: exact and overflow-free under ANSI mode
-        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
+def _edge_figures(prev: Optional[dict] = None) -> dict:
+    """A round's observed figures: the edge count, the sum of
+    ``xxhash64(src, dst)`` and, given the previous round's figures, whether
+    either changed (0/1)."""
+    count = F.count(F.lit(1))
+    # decimal(38,0) accumulator: exact and overflow-free under ANSI mode
+    hashes = F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
+    figures = {"edges_processed": count, "fingerprint": hashes}
+    if prev is not None:
+        same = (count == F.lit(prev["edges_processed"])) & hashes.eqNullSafe(
+            F.lit(prev["fingerprint"])
+        )
+        figures["changed"] = (~same).cast("int")
+    return figures
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -108,12 +116,7 @@ def connected_components(
         start_round, stored = loop.resume() if resume else (0, None)
         if stored is not None:
             e = stored
-        # Lazy checkpoint + fingerprint: the fingerprint aggregation is the
-        # action that materializes the snapshot, so lineage truncation and
-        # convergence detection share ONE job per round (AQE is off inside
-        # the loop, so the lazy variant runs the plan exactly once).
-        e = loop.truncate(e, eager=False)
-        fp = _fingerprint(e)
+        e, seen = loop.truncate(e, figures=_edge_figures())
         # Size the rounds' shuffle partitions by DATA VOLUME (~250k pair
         # rows per reduce task), capped at the session default: with AQE
         # off, a small graph would otherwise pay the session's full
@@ -121,24 +124,16 @@ def connected_components(
         # overhead locally, and the same rows-per-task rule is how a
         # 1000-executor run would be sized (it hits the session cap and
         # keeps the configured parallelism).
-        with SuperstepCache(spark, partitions=max(4, loop_partitions(fp[0], cap))):
+        parts = max(4, loop_partitions(seen["edges_processed"], cap))
+        with SuperstepCache(spark, partitions=parts):
             for k in range(start_round, max_rounds):
-                t0 = time.monotonic()
-                e2 = loop.commit(
-                    _small_star(_large_star(e)),
-                    IterationMetrics(k, wall_ms=int((time.monotonic() - t0) * 1000)),
-                    eager=False,
+                e2, seen = loop.commit(
+                    _small_star(_large_star(e)), k, _edge_figures(seen)
                 )
-                fp2 = _fingerprint(e2)
                 loop.release(e)  # prev round's blocks are dead past this point
-                if checkpoint_store is not None:
-                    checkpoint_store.update_metrics(
-                        k, changed=0 if fp2 == fp else 1, edges_processed=fp2[0]
-                    )
-                if fp2 == fp:
-                    e = e2
+                e = e2
+                if seen["changed"] == 0:
                     break
-                e, fp = e2, fp2
             else:
                 if start_round < max_rounds:
                     raise RuntimeError(

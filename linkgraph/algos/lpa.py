@@ -35,7 +35,6 @@ schedule-agnostic and unchanged.
 
 from __future__ import annotations
 
-import time
 from collections import defaultdict
 from typing import Optional
 
@@ -43,7 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.iterutils import SuperstepCache, loop_partitions
-from linkgraph.state import CheckpointStore, IterationMetrics
+from linkgraph.state import CheckpointStore
 from linkgraph.exceptions import NotImplementedForDirected
 
 __all__ = [
@@ -176,7 +175,7 @@ def label_propagation_communities(
         )
     spark = g.spark
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with SuperstepCache(spark) as loop:
+    with SuperstepCache(spark, store=checkpoint_store) as loop:
         vertices = loop.pin(g.vertices.select("id"))
         simple = loop.pin(
             g.edges.filter(F.col("src") != F.col("dst"))
@@ -250,70 +249,53 @@ def label_propagation_communities(
             # pass over all m edges. A sweep's Prec-Max update changes a node iff
             # its label is NOT in that argmax, and color classes partition the
             # nodes, so "a full sweep changed nothing" is exactly the same predicate
-            # — checked here with one n-row label comparison instead of an extra
-            # m-edge aggregation pass per sweep. (When the initial labeling is
-            # already complete this runs one provably-no-op sweep; the result is
-            # identical.)
+            # — observed as the sum over the classes of each class's changed
+            # labels (a node changes only in its own class), on the jobs that
+            # checkpoint them. (When the initial labeling is already complete
+            # this runs one provably-no-op sweep; the result is identical.)
             labels = loop.truncate(labels)
             sweeps = 0
             while True:
                 if sweeps >= max_sweeps:
                     raise RuntimeError(f"LPA did not stabilize in {max_sweeps} sweeps")
-                prev = labels
-                t0 = time.monotonic()
+                changed = 0
                 for c in range(n_colors):
                     cls = color_df.filter(F.col("color") == c).select("id")
                     freq = neighbor_freq(labels).join(cls, "id", "left_semi")
-                    mx = freq.groupBy("id").agg(F.max("cnt").alias("mx"))
-                    cand = freq.join(mx, "id").filter(F.col("cnt") == F.col("mx"))
-                    upd = (
-                        cand.join(labels, "id")
-                        .groupBy("id")
-                        .agg(
-                            F.max("nlab").alias("maxlab"),
-                            F.max(
-                                F.when(F.col("nlab") == F.col("label"), 1).otherwise(0)
-                            ).alias("curin"),
-                            F.first("label").alias("cur"),
-                        )
-                        .select(
-                            "id",
-                            F.when(F.col("curin") == 1, F.col("cur"))
-                            .otherwise(F.col("maxlab"))
-                            .alias("label"),
-                        )
+                    # Prec-Max (label_propagation.py:326-338) as one
+                    # aggregation: the highest count, then the current
+                    # label, then the largest label.
+                    keep = (F.col("nlab") == F.col("cur")).alias("keep")
+                    best = (
+                        freq.join(labels.select("id", F.col("label").alias("cur")), "id")
+                        .groupBy("id", "cur")
+                        .agg(F.max(F.struct("cnt", keep, "nlab")).alias("b"))
+                        .select("id", F.col("b.nlab").alias("new"))
                     )
                     # Truncate lineage per color class: each class references the
-                    # previous labels plan ~5×, so chaining a whole sweep lazily
-                    # grows the Catalyst tree exponentially in the color count.
-                    # Retire the pre-update snapshot (except the sweep-start one,
-                    # which the changed-count below still reads).
-                    old = labels
-                    labels = loop.truncate(
-                        labels.join(upd, "id", "left_anti").unionByName(upd),
-                        retire=None if old is prev else old,
+                    # previous labels plan several times, so chaining a whole sweep
+                    # lazily grows the Catalyst tree exponentially in the color
+                    # count. The last class of a sweep is its durable commit.
+                    nxt = labels.join(best, "id", "left").select(
+                        "id",
+                        F.coalesce("new", "label").alias("label"),
+                        F.col("label").alias("prev"),
                     )
+                    figures = {
+                        "changed": F.count_if(F.col("label") != F.col("prev"))
+                        + F.lit(changed),
+                        "edges_processed": F.lit(m * n_colors),
+                    }
+                    nxt, seen = (
+                        loop.commit(nxt, sweeps, figures)
+                        if c == n_colors - 1
+                        else loop.truncate(nxt, figures=figures)
+                    )
+                    loop.release(labels)
+                    labels, changed = nxt, seen["changed"]
                 sweeps += 1
-                changed = (
-                    labels.join(
-                        prev.select("id", F.col("label").alias("plab")), "id"
-                    )
-                    .filter(F.col("label") != F.col("plab"))
-                    .count()
-                )
-                loop.release(prev)
-                if checkpoint_store is not None:
-                    labels = checkpoint_store.commit(
-                        labels,
-                        IterationMetrics(
-                            sweeps - 1,
-                            changed=changed,
-                            edges_processed=m * n_colors,
-                            wall_ms=int((time.monotonic() - t0) * 1000),
-                        ),
-                    )
                 if changed == 0:
-                    return loop.result(labels)
+                    return loop.result(labels.select("id", "label"))
 
 
 def communities_as_sets(labels: DataFrame) -> list[frozenset]:

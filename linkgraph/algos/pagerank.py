@@ -27,8 +27,13 @@ Scale design (the 100 TB story):
   ``hub_salt`` enables an explicit two-phase salted aggregation
   (``groupBy(dst, pmod(hash(src), s))`` → ``groupBy(dst)``) for clusters
   where a single final-agg partition would still be hot.
-- Dangling mass is a driver-side scalar per iteration (one tiny agg job),
-  exactly the reference's closed form — never a dense N×N correction.
+- Dangling mass is a scalar per iteration, exactly the reference's closed
+  form — never a dense N×N correction. It is observed on the job that
+  materializes the previous iterate (an in-plan aggregation where that
+  iterate is not materialized).
+- The rank vector carries the per-node base columns and its previous rank,
+  so each iteration's L1 error is observed on the one job that
+  materializes it.
 - Lineage is truncated every iteration (localCheckpoint) or re-rooted at a
   parquet snapshot via :class:`linkgraph.state.CheckpointStore`, which also
   provides mid-run resume with per-iteration convergence metrics.
@@ -36,14 +41,13 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-import time
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.iterutils import SuperstepCache, loop_partitions
-from linkgraph.state import CheckpointStore, IterationMetrics
+from linkgraph.state import CheckpointStore
 from linkgraph.exceptions import PowerIterationFailedConvergence
 
 __all__ = ["pagerank", "top_pagerank", "PowerIterationFailedConvergence"]
@@ -157,15 +161,15 @@ def pagerank(
         edge_count = A_t.count()
 
         # Dangling nodes: zero out-weight rows of A (pagerank_alg.py:489).
-        # Carried as a flag on the per-node base table so the dangling-mass
-        # sum fuses into the convergence aggregation.
+        # Flagged on the per-node base table, whose columns the rank vector
+        # carries from superstep to superstep: the rank join, the dangling
+        # mass and the L1 error then need no join against it.
         nondangling = out_w.filter(F.col("out_w") != 0).select(
-            F.col("src").alias("id")
+            F.col("src").alias("id"), F.lit(True).alias("_nd")
         )
-        base = vertices.join(
-            nondangling.withColumn("_nd", F.lit(True)), "id", "left"
-        ).select("id", F.coalesce("_nd", F.lit(False)).alias("is_nd"))
-        base = base.select("id", (~F.col("is_nd")).alias("is_dang"))
+        base = vertices.join(nondangling, "id", "left").select(
+            "id", F.col("_nd").isNull().alias("is_dang")
+        )
         n_dangling = base.filter("is_dang").count()
 
         # --- per-node constant vectors p (teleport) and dw (dangling) --- #
@@ -196,34 +200,30 @@ def pagerank(
 
         # --- initial vector ---------------------------------------------- #
         start_iter, x = loop.resume() if resume else (0, None)
-        if x is not None:
-            x = x.select("id", "rank")
-        elif nstart is not None:
-            x = _node_vector(g, nstart, "rank").join(vertices, "id", "right").select(
-                "id", F.coalesce("rank", F.lit(0.0)).alias("rank")
-            )
+        if x is None and nstart is not None:
+            x = _node_vector(g, nstart, "rank")
+        if x is None:
+            x = base.withColumn("rank", F.lit(1.0 / n))
         else:
-            x = vertices.select("id", F.lit(1.0 / n).alias("rank"))
+            x = base.join(x.select("id", "rank"), "id", "left").withColumn(
+                "rank", F.coalesce("rank", F.lit(0.0))
+            )
         x0 = x
-
-        dang_ids = None
-        if n_dangling:
-            dang_ids = loop.pin(base.filter("is_dang").select("id"))
-            dang_ids.count()  # materialize now, not inside the first iteration
         inv_n = 1.0 / n
 
-        def step(xc: DataFrame) -> DataFrame:
-            """One lazy power iteration (pagerank_alg.py:491-493).
+        def step(xc: DataFrame, ds: Optional[float] = None) -> DataFrame:
+            """One lazy power iteration (pagerank_alg.py:491-493), carrying
+            ``xc``'s rank as ``prev`` for the L1 error.
 
-            The dangling mass is a one-row in-plan aggregation broadcast
-            into the rank expression — no driver-side scalar, so any number
-            of iterations can chain lazily. Catalyst's exchange reuse dedups
-            the shared ``xc`` shuffles between the contribution and
-            dangling branches.
+            ``ds`` is ``xc``'s dangling mass, observed on the job that
+            materialized ``xc``. When ``xc`` was not materialized (the first
+            iteration, or inside a ``fixed_iter`` batch) it is a one-row
+            in-plan aggregation broadcast into the rank expression instead,
+            so any number of iterations can chain lazily.
             """
             # x @ A : join ranks to the pinned edge layout on src, sum into dst.
             contrib_rows = A_t.join(
-                xc.withColumnRenamed("id", "src"), "src"
+                xc.select(F.col("id").alias("src"), "rank"), "src"
             ).select("src", "dst", (F.col("rank") * F.col("p_edge")).alias("c"))
             if hub_salt > 1:
                 # explicit two-phase salted aggregation for hot dst keys:
@@ -242,13 +242,13 @@ def pagerank(
             else:
                 contrib = contrib_rows.groupBy("dst").agg(F.sum("c").alias("c"))
 
-            joined = base.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
-            if dang_ids is not None:
+            joined = xc.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
+            if ds is not None:
+                ds_col = F.lit(ds)
+            elif n_dangling:
                 # danglesum = sum of ranks over dangling nodes (pagerank_alg.py:492)
-                ds = xc.join(dang_ids, "id", "left_semi").agg(
-                    F.sum("rank").alias("_ds")
-                )
-                joined = joined.crossJoin(F.broadcast(ds))
+                ds_df = xc.filter("is_dang").agg(F.sum("rank").alias("_ds"))
+                joined = joined.crossJoin(F.broadcast(ds_df))
                 ds_col = F.coalesce(F.col("_ds"), F.lit(0.0))
             else:
                 ds_col = F.lit(0.0)
@@ -263,66 +263,57 @@ def pagerank(
                     F.lit(alpha) * (F.coalesce("c", F.lit(0.0)) + ds_col * F.col("dw"))
                     + F.lit(1.0 - alpha) * F.col("p")
                 )
-            return joined.select("id", rank_expr.alias("rank"))
-
-        def materialize(df: DataFrame, k_end: int, t0: float) -> DataFrame:
-            return loop.commit(
-                df,
-                IterationMetrics(
-                    k_end,
-                    edges_processed=edge_count * (k_end - start_iter + 1),
-                    wall_ms=int((time.monotonic() - t0) * 1000),
-                    extra={"alpha": alpha},
-                ),
+            return joined.select(
+                *base.columns, rank_expr.alias("rank"), F.col("rank").alias("prev")
             )
+
+        def figures(k_end: int) -> dict:
+            return {
+                "l1_err": F.sum(F.abs(F.col("rank") - F.col("prev"))),
+                "edges_processed": F.lit(edge_count * (k_end - start_iter + 1)),
+                "dangling": F.coalesce(
+                    F.sum(F.when(F.col("is_dang"), F.col("rank"))), F.lit(0.0)
+                ),
+            }
 
         if fixed_iter is not None:
             # Chain `check_interval` lazy iterations per materialization;
-            # persisted intermediates keep the dangling/contribution fan-out
-            # from recomputing subplans 2^B times.
+            # persisted intermediates keep each step's two or three reads of
+            # its input from recomputing subplans exponentially in B.
             B = max(1, check_interval)
-            k = start_iter
+            k, ds = start_iter, None
             while k < max_iter:
-                t0 = time.monotonic()
                 steps = min(B, max_iter - k)
-                iterates = [x]
-                for _ in range(steps):
-                    nxt = step(iterates[-1])
-                    if dang_ids is not None:
-                        nxt = nxt.persist()
-                    iterates.append(nxt)
+                xc, chain = x, []
+                for _ in range(steps - 1):
+                    xc, ds = step(xc, ds).persist(), None
+                    chain.append(xc)
                 x_old = x
-                x = materialize(iterates[-1], k + steps - 1, t0)
-                if dang_ids is not None:
-                    for it in iterates[1:]:
-                        it.unpersist()
+                k_end = k + steps - 1
+                x, seen = loop.commit(step(xc, ds), k_end, figures(k_end))
+                ds = seen["dangling"]
+                for it in chain:
+                    it.unpersist()
                 # previous batch's snapshot is dead once the new one is
                 # materialized — release, don't pin one per batch
                 if x_old is not x0:
                     loop.release(x_old)
                 k += steps
-            return loop.result(x)
+            return loop.result(x.select("id", "rank"))
 
         # Convergence mode: the reference's per-iteration stopping rule
-        # (pagerank_alg.py:495-497). Two jobs per iteration: the superstep
+        # (pagerank_alg.py:495-497). One job per iteration: the superstep
         # materialization (localCheckpoint or durable commit — re-roots the
-        # logical plan, which otherwise grows 3^k) and the L1-error
-        # aggregation over the two materialized iterates (tiny scans).
+        # logical plan, which otherwise grows 3^k), which also returns the
+        # observed L1 error and the dangling mass the next iteration needs.
+        ds = None
         for k in range(start_iter, max_iter):
-            t0 = time.monotonic()
-            x_new = materialize(step(x), k, t0)
-            err = (
-                x_new.join(x.select("id", F.col("rank").alias("rank_prev")), "id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("rank_prev"))).alias("err"))
-                .first()["err"]
-            ) or 0.0
+            x_new, seen = loop.commit(step(x, ds), k, figures(k))
             if x is not x0:
-                loop.release(x)  # prev iterate: last read was the err join
-            x = x_new
-            if checkpoint_store is not None:
-                checkpoint_store.update_metrics(k, l1_err=float(err))
-            if err < n * tol:
-                return loop.result(x)
+                loop.release(x)
+            x, ds = x_new, seen["dangling"]
+            if seen["l1_err"] < n * tol:
+                return loop.result(x.select("id", "rank"))
         raise PowerIterationFailedConvergence(max_iter)
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NetworkXUnbounded
 from linkgraph.iterutils import SuperstepCache
-from linkgraph.state import CheckpointStore, IterationMetrics
+from linkgraph.state import CheckpointStore
 
 
 class NegativeCycleError(NetworkXUnbounded):
@@ -75,78 +75,60 @@ def weighted_shortest_path_lengths(
     improve via a negative cycle — the certificate the reference uses,
     ``weighted.py:1252``).
     """
-    import time
-
     from linkgraph.graph import resolve_weight_column
 
     spark = g.spark
     base = g.symmetric_edges() if not g.directed else g.edges
-    adj = base.select(
-        "src", "dst", resolve_weight_column(base, weight).alias("weight")
-    ).persist()
-
-    cache = SuperstepCache(spark)
-    dist = cache.truncate(
-        _source_df(g, sources).select("id", F.lit(0.0).alias("distance"))
-    )
-    frontier = dist
-    last_trunc = dist  # the live checkpoint both dist and frontier root at
-    n_limit = None  # computed lazily — only needed to certify a neg. cycle
-
-    rounds = 0
-    while True:
-        t0 = time.monotonic()
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            break
-        if max_rounds is None:
-            if n_limit is None and rounds > 64:
-                n_limit = g.number_of_nodes()
-            if n_limit is not None and rounds > n_limit:
-                adj.unpersist()
-                raise NegativeCycleError(
-                    "Negative cost cycle detected: relaxation still "
-                    f"improving after {n_limit} rounds"
-                )
-        # relax arcs out of the improved frontier only
-        cand = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("distance") + F.col("weight")).alias("cand"))
+    with SuperstepCache(spark, store=checkpoint_store) as loop:
+        adj = loop.pin(
+            base.select(
+                "src", "dst", resolve_weight_column(base, weight).alias("weight")
+            )
         )
-        merged = (
-            dist.join(cand, "id", "full")
-            .select(
+        dist = loop.truncate(
+            _source_df(g, sources).select("id", F.lit(0.0).alias("distance"))
+        )
+        frontier = dist
+        n_limit = None  # computed lazily — only needed to certify a neg. cycle
+
+        rounds = 0
+        while True:
+            rounds += 1
+            if max_rounds is not None and rounds > max_rounds:
+                break
+            if max_rounds is None:
+                if n_limit is None and rounds > 64:
+                    n_limit = g.number_of_nodes()
+                if n_limit is not None and rounds > n_limit:
+                    raise NegativeCycleError(
+                        "Negative cost cycle detected: relaxation still "
+                        f"improving after {n_limit} rounds"
+                    )
+            # relax arcs out of the improved frontier only
+            cand = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(F.col("distance") + F.col("weight")).alias("cand"))
+            )
+            merged = dist.join(cand, "id", "full").select(
                 "id",
                 F.least(
                     F.coalesce("distance", F.lit(float("inf"))),
                     F.coalesce("cand", F.lit(float("inf"))),
                 ).alias("distance"),
                 (
-                    F.col("distance").isNull()
-                    | (F.col("cand") < F.col("distance"))
+                    F.col("distance").isNull() | (F.col("cand") < F.col("distance"))
                 ).alias("_improved"),
             )
-        )
-        merged = cache.truncate(merged, retire=last_trunc)
-        last_trunc = merged
-        frontier = merged.filter("_improved").select("id", "distance")
-        dist_new = merged.select("id", "distance")
-        n_improved = frontier.limit(1).count()
-        if checkpoint_store is not None:
-            dist_new = checkpoint_store.commit(
-                dist_new,
-                IterationMetrics(
-                    rounds - 1,
-                    changed=n_improved,
-                    wall_ms=int((time.monotonic() - t0) * 1000),
-                ),
+            merged, seen = loop.commit(
+                merged, rounds - 1, {"changed": F.count_if("_improved")}
             )
-        dist = dist_new
-        if n_improved == 0:
-            break
-    adj.unpersist()
-    return dist
+            loop.release(dist)
+            frontier = merged.filter("_improved").select("id", "distance")
+            dist = merged.select("id", "distance")
+            if seen["changed"] == 0:
+                break
+        return loop.result(dist)
 
 
 def single_source_weighted_path_length(

@@ -27,7 +27,11 @@ carry none of it themselves. Used as a context manager it:
 - truncates lineage per superstep (:meth:`~SuperstepCache.truncate`), or
   commits it to a :class:`linkgraph.state.CheckpointStore` when the loop
   was given one (:meth:`~SuperstepCache.commit`), and reads it back from the
-  store's latest manifest (:meth:`~SuperstepCache.resume`);
+  store's latest manifest (:meth:`~SuperstepCache.resume`). ``truncate``
+  and ``commit`` attach the superstep's convergence figures (aggregate
+  Columns) with ``DataFrame.observe`` and return their values from the one
+  job that checkpoints or durably writes the state, so a loop needs no side
+  job to decide whether to stop; there is no lazy variant;
 - on exit unpersists every pinned table and releases every snapshot it
   made, except the snapshots the loop's :meth:`~SuperstepCache.result`
   reads. The caller releases those with :meth:`~SuperstepCache.release`.
@@ -38,9 +42,10 @@ alone and nothing is released on the caller's behalf.
 
 from __future__ import annotations
 
+import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 # Target shuffle-partition payload for iterative loops. Small relative to
@@ -125,6 +130,16 @@ _BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 _PARTITIONS = "spark.sql.shuffle.partitions"
 
 
+def _observed(df: DataFrame, figures: Optional[dict]):
+    """``df`` with ``figures`` (name -> aggregate Column; literals allowed)
+    attached by ``DataFrame.observe``, and a function returning their values
+    once the first action on the frame has run."""
+    if not figures:
+        return df, dict
+    obs = Observation()
+    return df.observe(obs, *[c.alias(k) for k, c in figures.items()]), lambda: obs.get
+
+
 def _snapshot_rdd_ids(df: DataFrame) -> set:
     """Ids of the RDDs behind every ``LogicalRDD`` leaf of ``df``'s plan —
     the local-checkpoint snapshots (and any other RDD scans) it reads."""
@@ -158,6 +173,7 @@ class SuperstepCache:
         self._snapshots: set = set()
         self._result: Optional[DataFrame] = None
         self._keyed = False
+        self._t0 = time.monotonic()
 
     def __enter__(self) -> "SuperstepCache":
         conf = self.spark.conf
@@ -166,6 +182,7 @@ class SuperstepCache:
             conf.set(k, v)
         if self.partitions is not None:
             conf.set(_PARTITIONS, str(self.partitions))
+        self._t0 = time.monotonic()
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
@@ -194,6 +211,7 @@ class SuperstepCache:
             self._keyed = True
         df = df.persist()
         self._pinned.append(df)
+        self._t0 = time.monotonic()
         return df
 
     def result(self, df: DataFrame) -> DataFrame:
@@ -210,33 +228,45 @@ class SuperstepCache:
             return 0, None
         return k + 1, self.store.load(k, self.spark)
 
-    def commit(self, df: DataFrame, metrics, eager: bool = True) -> DataFrame:
-        """One superstep's state: a durable store commit carrying
-        ``metrics`` when the loop has a store, else :meth:`truncate`."""
-        if self.store is not None:
+    def commit(
+        self, df: DataFrame, iteration: int, figures: Optional[dict] = None
+    ) -> "tuple[DataFrame, dict]":
+        """Superstep ``iteration``'s state and its observed ``figures``
+        (see :meth:`truncate`), from the one job that materializes it. With
+        a store that job is the durable write, and the manifest records the
+        iteration, the figures and ``wall_ms``: the time since the loop's
+        previous commit, last :meth:`pin` or entry, whichever came last.
+        Without a store it is :meth:`truncate`."""
+        if self.store is None:
+            out, seen = self.truncate(df, figures=figures or {})
+        else:
             self._superstep_conf()
-            return self.store.commit(df, metrics)
-        return self.truncate(df, eager=eager)
+            df, observed = _observed(df, figures)
+            out = self.store.commit(df, iteration, observed, started=self._t0)
+            seen = observed()
+        self._t0 = time.monotonic()
+        return out, seen
 
     def truncate(
-        self, df: DataFrame, retire: Optional[DataFrame] = None, eager: bool = True
-    ) -> DataFrame:
+        self,
+        df: DataFrame,
+        retire: Optional[DataFrame] = None,
+        figures: Optional[dict] = None,
+    ):
         """Checkpoint ``df``; optionally release a PREVIOUS truncate result
         the caller guarantees nothing will read again. Passing ``retire``
         caps the loop's pinned-RDD footprint at the live generations instead
         of growing by one snapshot per superstep (the leak documented
-        above). ``eager=False`` leaves the snapshot to be materialized by
-        the caller's next action (one job for both) and keeps the origin
-        statistics the planner sees."""
+        above). With ``figures`` (name -> aggregate Column over ``df``,
+        literals allowed) returns ``(snapshot, {name: value})``, the values
+        observed on the checkpoint's own job."""
         self._superstep_conf()
-        if eager:
-            out = _strip_origin_stats(df.localCheckpoint(eager=True))
-        else:
-            out = df.localCheckpoint(eager=False)
+        df, observed = _observed(df, figures)
+        out = _strip_origin_stats(df.localCheckpoint(eager=True))
         self._snapshots |= _snapshot_rdd_ids(out)
         if retire is not None:
             self.release(retire)
-        return out
+        return out if figures is None else (out, observed())
 
     def release(self, dfs) -> None:
         """Unpersist the executor-pinned RDDs behind every snapshot the

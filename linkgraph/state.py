@@ -7,60 +7,38 @@ snapshot commits, partition-level manifests); this sandbox has no Iceberg
 runtime jar, so the store writes **parquet snapshots + a JSON manifest per
 iteration** with the same contract:
 
-- ``<root>/<name>/iter=<k>/part-*.parquet``  — the state DataFrame
-- ``<root>/<name>/iter=<k>/_MANIFEST.json``  — metrics (l1_err, changed,
-  edges_processed, wall_ms), schema fingerprint, per-partition row counts
-  (the lineage record), written **after** the parquet commit so a complete
-  manifest implies a complete snapshot (poor-man's atomicity).
+- ``<root>/<name>/iter=<k>/data/part-*.parquet``  — the state DataFrame
+- ``<root>/<name>/iter=<k>/_MANIFEST.json``  — metrics (iteration, l1_err,
+  changed, edges_processed, wall_ms and any other figure the loop
+  observed), schema, per-partition row counts (the lineage record),
+  written once, **after** the parquet commit, so a complete manifest
+  implies a complete snapshot (poor-man's atomicity).
 
-Checkpointing also truncates Spark lineage: each superstep's plan is
-re-rooted at a parquet scan, which is what keeps 100-iteration PageRank from
-exponential plan growth (SURVEY.md §4 risk 1).
+The convergence figures come from the job that writes the snapshot
+(``DataFrame.observe``, attached by
+:meth:`linkgraph.iterutils.SuperstepCache.commit`), so they are known when
+the manifest is written. Checkpointing also truncates Spark lineage: each
+superstep's plan is re-rooted at a parquet scan, which is what keeps
+100-iteration PageRank from exponential plan growth (SURVEY.md §4 risk 1).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
-from dataclasses import dataclass, field
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-@dataclass
-class IterationMetrics:
-    iteration: int
-    l1_err: Optional[float] = None
-    changed: Optional[int] = None
-    edges_processed: Optional[int] = None
-    wall_ms: Optional[int] = None
-    extra: dict = field(default_factory=dict)
-
-    def to_dict(self) -> dict:
-        d = {
-            "iteration": self.iteration,
-            "l1_err": self.l1_err,
-            "changed": self.changed,
-            "edges_processed": self.edges_processed,
-            "wall_ms": self.wall_ms,
-        }
-        d.update(self.extra)
-        return d
 
 
 class CheckpointStore:
     """Parquet-backed superstep state with resume support.
 
-    Usage::
-
-        store = CheckpointStore("/tmp/ckpt", "pagerank_ranks")
-        start = store.latest_iteration()          # -1 if fresh
-        ranks = store.load(start) if start >= 0 else init_ranks
-        ...
-        ranks = store.commit(ranks, IterationMetrics(k, l1_err=err))
+    Loops commit through :class:`linkgraph.iterutils.SuperstepCache`
+    (``SuperstepCache(spark, store=store)``), which observes each
+    superstep's figures on the write job and resumes from
+    :meth:`latest_iteration`.
     """
 
     def __init__(self, root: str, name: str, spark: Optional[SparkSession] = None):
@@ -88,15 +66,23 @@ class CheckpointStore:
                     best = max(best, k)
         return best
 
-    def commit(self, df: DataFrame, metrics: IterationMetrics) -> DataFrame:
-        """Write `df` as iteration `metrics.iteration`, record per-partition
-        lineage, and return the re-read (lineage-truncated) DataFrame."""
+    def commit(
+        self,
+        df: DataFrame,
+        iteration: int,
+        figures: Callable[[], dict] = dict,
+        started: Optional[float] = None,
+    ) -> DataFrame:
+        """Write ``df`` as snapshot ``iteration``, then its manifest, and
+        return the snapshot re-read with the schema just written (no
+        schema-inference job). ``figures()`` is called after the write, so
+        it may return figures observed on the write job. ``wall_ms`` runs
+        from ``started`` (``time.monotonic()``; default: this call) and
+        ``commit_wall_ms`` from this call, both to the manifest."""
         t0 = time.monotonic()
-        path = self._iter_dir(metrics.iteration)
-        data_path = os.path.join(path, "data")
+        data_path = os.path.join(self._iter_dir(iteration), "data")
         df.write.mode("overwrite").parquet(data_path)
-        spark = df.sparkSession
-        reread = spark.read.parquet(data_path)
+        reread = df.sparkSession.read.schema(df.schema).parquet(data_path)
         # Per-partition lineage from the parquet FOOTERS (file metadata) —
         # zero data scanned, mirroring how an Iceberg manifest carries
         # per-file row counts. (A groupBy(input_file_name) would re-read the
@@ -108,29 +94,26 @@ class CheckpointStore:
             if fname.endswith(".parquet"):
                 meta = pq.ParquetFile(os.path.join(data_path, fname)).metadata
                 part_counts.append({"file": fname, "rows": meta.num_rows})
+        metrics = {
+            "iteration": iteration,
+            **dict.fromkeys(("l1_err", "changed", "edges_processed")),
+            **figures(),
+        }
+        now = time.monotonic()
+        metrics["wall_ms"] = int((now - (t0 if started is None else started)) * 1000)
         manifest = {
-            "metrics": metrics.to_dict(),
+            "metrics": metrics,
             "schema": reread.schema.jsonValue(),
             "partitions": part_counts,
             "committed_unix_ms": int(time.time() * 1000),
-            "commit_wall_ms": int((time.monotonic() - t0) * 1000),
+            "commit_wall_ms": int((now - t0) * 1000),
         }
-        tmp = self._manifest_path(metrics.iteration) + ".tmp"
+        tmp = self._manifest_path(iteration) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(metrics.iteration))
+            # default=str: exact text for observed decimals (edge hashes)
+            json.dump(manifest, f, indent=1, default=str)
+        os.replace(tmp, self._manifest_path(iteration))
         return reread
-
-    def update_metrics(self, k: int, **fields) -> None:
-        """Amend iteration k's manifest with metrics only known after the
-        snapshot was consumed (e.g. the convergence error computed by the
-        aggregation that reads the snapshot)."""
-        m = self.manifest(k)
-        m["metrics"].update(fields)
-        tmp = self._manifest_path(k) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path(k))
 
     def load(self, k: int, spark: Optional[SparkSession] = None) -> DataFrame:
         spark = spark or self.spark
@@ -149,7 +132,3 @@ class CheckpointStore:
             if os.path.exists(p):
                 out.append(self.manifest(k)["metrics"])
         return out
-
-    def clear(self) -> None:
-        shutil.rmtree(self.dir, ignore_errors=True)
-        os.makedirs(self.dir, exist_ok=True)

@@ -77,6 +77,39 @@ def test_connected_components_resume(spark, tmp_path, G):
     assert resumed == want
 
 
+def test_manifest_wall_covers_commit(spark, tmp_path, G):
+    """Every durable PageRank, CC and LPA manifest times the whole
+    superstep, so its ``wall_ms`` is at least the commit's own time."""
+    from linkgraph.algos.lpa import label_propagation_communities
+
+    g = from_nx(spark, G)
+    stores = {
+        name: CheckpointStore(str(tmp_path), name, spark)
+        for name in ("pr", "cc", "lpa")
+    }
+    pagerank(g, checkpoint_store=stores["pr"])
+    connected_components(g, checkpoint_store=stores["cc"])
+    label_propagation_communities(g, checkpoint_store=stores["lpa"]).count()
+    for name, store in stores.items():
+        last = store.latest_iteration()
+        assert last >= 0, name
+        for k in range(last + 1):
+            m = store.manifest(k)
+            assert m["metrics"]["wall_ms"] >= m["commit_wall_ms"], (name, k)
+
+
+def test_sssp_manifest_counts_improved_nodes(spark, tmp_path):
+    """A durable weighted-shortest-path run records how many nodes each
+    round improved: all five leaves of a star, then none."""
+    from linkgraph.algos.sssp import weighted_shortest_path_lengths
+
+    store = CheckpointStore(str(tmp_path), "sssp", spark)
+    g = from_nx(spark, nx.star_graph(5))
+    dist = weighted_shortest_path_lengths(g, [0], checkpoint_store=store)
+    assert sorted(r["distance"] for r in dist.collect()) == [0.0] + [1.0] * 5
+    assert [m["changed"] for m in store.metrics_history()] == [5, 0]
+
+
 # Loop conf keys a superstep runtime may touch; each call must hand them
 # back exactly as it found them.
 LOOP_CONF_KEYS = (
@@ -89,6 +122,7 @@ LOOP_CONF_KEYS = (
 
 def _call_cases():
     from linkgraph.algos.lpa import label_propagation_communities
+    from linkgraph.algos.sssp import NegativeCycleError, weighted_shortest_path_lengths
     from linkgraph.algos.triangles import triangles
     from linkgraph.exceptions import PowerIterationFailedConvergence
 
@@ -113,6 +147,14 @@ def _call_cases():
             RuntimeError,
         ),
         "triangles": (lambda g: triangles(g), None),
+        "weighted-shortest-paths": (
+            lambda g: weighted_shortest_path_lengths(g, [0]),
+            None,
+        ),
+        "weighted-shortest-paths-negative-cycle": (
+            lambda g: weighted_shortest_path_lengths(g, [0], weight="-weight"),
+            NegativeCycleError,
+        ),
     }
 
 

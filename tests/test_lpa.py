@@ -77,6 +77,10 @@ def test_termination_and_cover(spark):
         lambda: nx.fast_gnp_random_graph(60, 0.08, seed=42),
         lambda: nx.barabasi_albert_graph(60, 2, seed=42),
         lambda: nx.caveman_graph(4, 5),
+        # a 4-path whose middle nodes are 2 and 1: node 1 keeps its own
+        # label on a tie (Prec-Max keep-current), else it takes label 2
+        # and the path becomes one community
+        lambda: nx.Graph([(0, 2), (2, 1), (1, 3)]),
     ],
 )
 def test_exact_partition_parity(spark, maker):

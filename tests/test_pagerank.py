@@ -148,3 +148,34 @@ def test_top_pagerank(spark):
     g = from_edgelist(spark, LM_EDGES, directed=True)
     top = top_pagerank(g, k=2, alpha=0.9, tol=1e-8).collect()
     assert [r["id"] for r in top] == [4, 6]
+
+
+def test_convergence_runs_no_side_error_job(spark, tmp_path):
+    """Convergence mode observes each iteration's L1 error on the job that
+    materializes the iteration, so it runs no more Spark jobs than
+    ``fixed_iter`` over the same iterations with one job per iteration."""
+    from linkgraph.state import CheckpointStore
+
+    G = nx.DiGraph(LM_EDGES)
+    g = from_nx(spark, G)
+    store = CheckpointStore(str(tmp_path), "pr", spark)
+    pagerank(g, tol=1e-8, checkpoint_store=store)
+    iterations = store.latest_iteration() + 1
+    assert iterations > 2
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    converged = jobs("pr-converge", lambda: pagerank(g, tol=1e-8))
+    fixed = jobs(
+        "pr-fixed",
+        lambda: pagerank(g, fixed_iter=iterations, check_interval=1),
+    )
+    assert converged <= fixed
