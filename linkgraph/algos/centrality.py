@@ -88,8 +88,8 @@ def eigenvector_centrality(
 
     ``fixed_iter=k`` runs exactly k iterations with no convergence test —
     the deterministic workload the SQL-unrolled DuckDB oracle replicates
-    step-for-step (same role as ``pagerank(fixed_iter=...)``); it also
-    skips the per-iteration L1-delta job, halving driver round-trips.
+    step-for-step (same role as ``pagerank(fixed_iter=...)``). Either way
+    each iteration's L1 change is observed on the job that materializes it.
     """
     if fixed_iter is not None:
         if fixed_iter < 1:
@@ -109,18 +109,20 @@ def eigenvector_centrality(
             rows = [(int(k), float(v) / s) for k, v in nstart.items()]
             x = spark.createDataFrame(rows, "id long, x double")
 
+        x_new = None
         for _ in range(max_iter):
-            xlast = x
-            pushed = _push(edges, xlast, weight)
-            # x = xlast + A^T xlast  (the (A+I) start, eigenvector.py:179)
-            y = (
-                xlast.join(pushed, "id", "left")
-                .select("id", (F.col("x") + F.coalesce("y", F.lit(0.0))).alias("y"))
+            pushed = _push(edges, x, weight)
+            # x = xlast + A^T xlast  (the (A+I) start, eigenvector.py:179);
+            # the previous x rides along as xp for the L1 error
+            y = x.join(pushed, "id", "left").select(
+                "id",
+                (F.col("x") + F.coalesce("y", F.lit(0.0))).alias("y"),
+                F.col("x").alias("xp"),
             )
             norm = y.select(
                 F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("_n")
             )
-            x_new = (
+            x_new, seen = loop.truncate(
                 y.crossJoin(F.broadcast(norm))
                 .select(
                     "id",
@@ -128,17 +130,13 @@ def eigenvector_centrality(
                         F.col("y")
                         / F.when(F.col("_n") == 0, F.lit(1.0)).otherwise(F.col("_n"))
                     ).alias("x"),
-                )
+                    "xp",
+                ),
+                retire=x_new,
+                figures={"err": F.sum(F.abs(F.col("x") - F.col("xp")))},
             )
-            x_new = loop.truncate(x_new)
-            if fixed_iter is None:
-                err = (
-                    x_new.join(xlast.select("id", F.col("x").alias("xp")), "id")
-                    .agg(F.sum(F.abs(F.col("x") - F.col("xp"))).alias("e"))
-                    .first()["e"]
-                ) or 0.0
-            x = x_new
-            if fixed_iter is None and err < n * tol:
+            x = x_new.select("id", "x")
+            if fixed_iter is None and seen["err"] < n * tol:
                 return loop.result(x.select("id", F.col("x").alias("centrality")))
         if fixed_iter is not None:
             return loop.result(x.select("id", F.col("x").alias("centrality")))
@@ -159,7 +157,7 @@ def katz_centrality(
     """Return DataFrame ``(id BIGINT, centrality DOUBLE)``.
 
     ``fixed_iter=k``: exactly k iterations, no convergence test — matches
-    the SQL-unrolled oracle and skips the per-iteration delta job.
+    the SQL-unrolled oracle.
     """
     if fixed_iter is not None:
         if fixed_iter < 1:
@@ -187,27 +185,25 @@ def katz_centrality(
             b = loop.pin(vertices.select("id", F.lit(float(beta)).alias("b")))
 
         x = vertices.select("id", F.lit(0.0).alias("x"))
+        x_new = None
         for _ in range(max_iter):
-            xlast = x
-            pushed = _push(edges, xlast, weight)
-            x_new = (
+            pushed = _push(edges, x, weight)
+            # the previous x rides along as xp for the L1 error
+            x_new, seen = loop.truncate(
                 b.join(pushed, "id", "left")
+                .join(x.select("id", F.col("x").alias("xp")), "id")
                 .select(
                     "id",
                     (F.lit(alpha) * F.coalesce("y", F.lit(0.0)) + F.col("b")).alias(
                         "x"
                     ),
-                )
+                    "xp",
+                ),
+                retire=x_new,
+                figures={"err": F.sum(F.abs(F.col("x") - F.col("xp")))},
             )
-            x_new = loop.truncate(x_new)
-            if fixed_iter is None:
-                err = (
-                    x_new.join(xlast.select("id", F.col("x").alias("xp")), "id")
-                    .agg(F.sum(F.abs(F.col("x") - F.col("xp"))).alias("e"))
-                    .first()["e"]
-                ) or 0.0
-            x = x_new
-            if fixed_iter is None and err < n * tol:
+            x = x_new.select("id", "x")
+            if fixed_iter is None and seen["err"] < n * tol:
                 if normalized:
                     x = _l2_scale(x)
                 return loop.result(x.select("id", F.col("x").alias("centrality")))

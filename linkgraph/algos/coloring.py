@@ -147,11 +147,11 @@ def greedy_color(
     spark = g.spark
     if strategy == "jones_plassmann":
         sym = g.symmetric_edges().select("src", "dst").distinct()
-        cache = SuperstepCache(spark)
-        out = _jones_plassmann_coloring(
-            sym, g.vertices.select("id"), cache, seed=int(seed) or 17
-        ).localCheckpoint(eager=True)
-        return out
+        with SuperstepCache(spark) as loop:
+            colors = _jones_plassmann_coloring(
+                sym, g.vertices.select("id"), loop, seed=int(seed) or 17
+            )
+            return loop.result(colors)
 
     edges, nodes = _collect(g, max_driver_edges)
     if strategy == "largest_first":

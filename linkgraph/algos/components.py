@@ -104,6 +104,15 @@ def connected_components(
     Directed input is treated as its underlying undirected graph, i.e. this
     doubles as ``weakly_connected_components`` (``weakly_connected.py:15``).
     """
+    with SuperstepCache(g.spark, store=checkpoint_store) as loop:
+        return loop.result(_components(g, loop, max_rounds, resume))
+
+
+def _components(
+    g: SparkGraph, loop: SuperstepCache, max_rounds: int = 50, resume: bool = False
+) -> DataFrame:
+    """The component labeling of ``g``, computed on ``loop``: the snapshots
+    it reads are the loop's."""
     vertices = g.vertices.select("id")
     e = (
         g.edges.filter(F.col("src") != F.col("dst"))
@@ -112,42 +121,40 @@ def connected_components(
     )
     spark = g.spark
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with SuperstepCache(spark, store=checkpoint_store) as loop:
-        start_round, stored = loop.resume() if resume else (0, None)
-        if stored is not None:
-            e = stored
-        e, seen = loop.truncate(e, figures=_edge_figures())
-        # Size the rounds' shuffle partitions by DATA VOLUME (~250k pair
-        # rows per reduce task), capped at the session default: with AQE
-        # off, a small graph would otherwise pay the session's full
-        # partition count in per-task fixed cost EVERY round — pure
-        # overhead locally, and the same rows-per-task rule is how a
-        # 1000-executor run would be sized (it hits the session cap and
-        # keeps the configured parallelism).
-        parts = max(4, loop_partitions(seen["edges_processed"], cap))
-        with SuperstepCache(spark, partitions=parts):
-            for k in range(start_round, max_rounds):
-                e2, seen = loop.commit(
-                    _small_star(_large_star(e)), k, _edge_figures(seen)
+    start_round, stored = loop.resume() if resume else (0, None)
+    if stored is not None:
+        e = stored
+    e, seen = loop.truncate(e, figures=_edge_figures())
+    # Size the rounds' shuffle partitions by DATA VOLUME (~250k pair
+    # rows per reduce task), capped at the session default: with AQE
+    # off, a small graph would otherwise pay the session's full
+    # partition count in per-task fixed cost EVERY round — pure
+    # overhead locally, and the same rows-per-task rule is how a
+    # 1000-executor run would be sized (it hits the session cap and
+    # keeps the configured parallelism).
+    parts = max(4, loop_partitions(seen["edges_processed"], cap))
+    with SuperstepCache(spark, partitions=parts):
+        for k in range(start_round, max_rounds):
+            e2, seen = loop.commit(
+                _small_star(_large_star(e)), k, _edge_figures(seen)
+            )
+            loop.release(e)  # prev round's blocks are dead past this point
+            e = e2
+            if seen["changed"] == 0:
+                break
+        else:
+            if start_round < max_rounds:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_rounds} rounds"
                 )
-                loop.release(e)  # prev round's blocks are dead past this point
-                e = e2
-                if seen["changed"] == 0:
-                    break
-            else:
-                if start_round < max_rounds:
-                    raise RuntimeError(
-                        f"connected_components did not converge in {max_rounds} rounds"
-                    )
 
-        # Converged star edges map node -> component min; roots and
-        # isolated nodes map to themselves.
-        labels = vertices.join(
-            e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
-            "id",
-            "left",
-        ).select("id", F.coalesce("component", "id").alias("component"))
-        return loop.result(labels)
+    # Converged star edges map node -> component min; roots and
+    # isolated nodes map to themselves.
+    return vertices.join(
+        e.select(F.col("src").alias("id"), F.col("dst").alias("component")),
+        "id",
+        "left",
+    ).select("id", F.coalesce("component", "id").alias("component"))
 
 
 def weakly_connected_components(g: SparkGraph, **kwargs) -> DataFrame:
@@ -156,12 +163,18 @@ def weakly_connected_components(g: SparkGraph, **kwargs) -> DataFrame:
     return connected_components(g, **kwargs)
 
 
+def _component_scalar(g: SparkGraph, scalar, checkpoint_store=None, **kwargs):
+    """``scalar`` of ``g``'s component labeling. It runs inside the
+    labeling's runtime, whose exit releases every snapshot the run made
+    and none that ``g`` reads."""
+    with SuperstepCache(g.spark, store=checkpoint_store) as loop:
+        return scalar(_components(g, loop, **kwargs))
+
+
 def number_connected_components(g: SparkGraph, **kwargs) -> int:
     """``connected.py:94``."""
-    return (
-        connected_components(g, **kwargs)
-        .agg(F.countDistinct("component"))
-        .first()[0]
+    return _component_scalar(
+        g, lambda cc: cc.agg(F.countDistinct("component")).first()[0], **kwargs
     )
 
 
@@ -204,13 +217,8 @@ def is_weakly_connected(g: SparkGraph) -> bool:
         raise ValueError(
             "Connectivity is undefined for the null graph."
         )
-    return (
-        weakly_connected_components(g)
-        .select("component")
-        .distinct()
-        .limit(2)
-        .count()
-        == 1
+    return _component_scalar(
+        g, lambda cc: cc.select("component").distinct().limit(2).count() == 1
     )
 
 
@@ -227,9 +235,6 @@ def node_connected_component(g: SparkGraph, n: int) -> DataFrame:
 
 def number_weakly_connected_components(g: SparkGraph) -> int:
     """``weakly_connected.py:109`` — distinct WCC labels."""
-    return (
-        weakly_connected_components(g)
-        .select("component")
-        .distinct()
-        .count()
+    return _component_scalar(
+        g, lambda cc: cc.select("component").distinct().count()
     )

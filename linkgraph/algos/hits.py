@@ -16,7 +16,8 @@ Semantics match the reference's pure-Python kernel
 Plan shape per iteration: two shuffle join+agg passes over the pinned edge
 table (one per direction) with the max-rescale as an in-plan one-row
 broadcast; state ``(id, h, a)`` localCheckpoints per superstep like
-PageRank.
+PageRank, carrying the previous h so the L1 error is observed on that
+checkpoint's own job (no side error job).
 """
 
 from __future__ import annotations
@@ -89,28 +90,24 @@ def hits(
             hh = vertices.join(hh, "id", "left").select(
                 "id", F.coalesce("h", F.lit(0.0)).alias("h")
             )
-            # rescale both by their max (hits_alg.py:132-134)
-            state = (
+            # rescale both by their max (hits_alg.py:132-134); hlast rides
+            # along so the L1 error is observed on the superstep's own job
+            state, seen = loop.truncate(
                 hh.join(a, "id")
+                .join(hlast.select("id", F.col("h").alias("h_prev")), "id")
                 .crossJoin(F.broadcast(hh.agg(F.max("h").alias("_mh"))))
                 .crossJoin(F.broadcast(a.agg(F.max("a").alias("_ma"))))
                 .select(
                     "id",
                     (F.col("h") / F.col("_mh")).alias("h"),
                     (F.col("a") / F.col("_ma")).alias("a"),
-                )
+                    "h_prev",
+                ),
+                retire=state,
+                figures={"err": F.sum(F.abs(F.col("h") - F.col("h_prev")))},
             )
-            state = loop.truncate(state)
-            if fixed_iter is None:
-                err = (
-                    state.join(hlast.select("id", F.col("h").alias("h_prev")), "id")
-                    .agg(F.sum(F.abs(F.col("h") - F.col("h_prev"))).alias("err"))
-                    .first()["err"]
-                ) or 0.0
-            else:
-                err = None
             h = state.select("id", "h")
-            if fixed_iter is None and err < tol:
+            if fixed_iter is None and seen["err"] < tol:
                 break
         else:
             if fixed_iter is None:

@@ -75,32 +75,36 @@ def _greedy_color_largest_first(edges: list[tuple[int, int]], nodes: list[int]):
 
 
 def _jones_plassmann_coloring(
-    sym: DataFrame, vertices: DataFrame, cache: SuperstepCache, seed: int = 17
+    sym: DataFrame, vertices: DataFrame, loop: SuperstepCache, seed: int = 17
 ) -> DataFrame:
     """Distributed proper coloring (Jones & Plassmann 1993): random
-    priorities from a hash; a node takes the smallest color unused by its
-    already-colored higher-priority neighbors, rounds until all colored.
+    priorities from a hash; each round, every uncolored node with no
+    higher-priority uncolored neighbor takes the smallest color unused by
+    its colored neighbors, until all are colored. Returns ``(id, color)``.
 
     Any proper coloring yields a valid semi-synchronous LPA schedule
     (color classes are independent sets); it just differs from the
     reference's sequential ``largest_first`` order, so the resulting
     partition is LPA-valid but not bit-identical to NetworkX's. This is the
     scale path — no driver-side edge collection.
+
+    Runs on ``loop``: the priorities and the arcs with both ends'
+    priorities are pinned; each round is one ``(id, color)`` state (color
+    null while uncolored) that retires the previous round's and observes
+    ``uncolored`` on its own job; the rounds stop when it is 0.
     """
-    pri = vertices.select(
-        "id", F.xxhash64(F.col("id"), F.lit(seed)).alias("pri")
-    ).persist()
-    nbr_pri = (
+    pri = loop.pin(vertices.select("id", F.xxhash64(F.col("id"), F.lit(seed)).alias("pri")))
+    nbr_pri = loop.pin(
         sym.join(pri.withColumnRenamed("id", "src").withColumnRenamed("pri", "src_pri"), "src")
         .join(pri.withColumnRenamed("id", "dst").withColumnRenamed("pri", "dst_pri"), "dst")
         .select("src", "dst", "src_pri", "dst_pri")
-        .persist()
     )
-    colored = cache.truncate(
-        vertices.limit(0).select("id", F.lit(0).cast("int").alias("color"))
+    figures = {"uncolored": F.count_if(F.col("color").isNull())}
+    state, seen = loop.truncate(
+        vertices.select("id", F.lit(None).cast("int").alias("color")), figures=figures
     )
-    uncolored = cache.truncate(vertices.select("id"))
-    while uncolored.limit(1).count() > 0:
+    while seen["uncolored"]:
+        uncolored = state.filter(F.col("color").isNull()).select("id")
         # higher-priority uncolored neighbors block a node this round
         blocked = (
             nbr_pri.join(uncolored.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -113,39 +117,31 @@ def _jones_plassmann_coloring(
             .distinct()
         )
         ready = uncolored.join(blocked, "id", "left_anti")
-        # smallest color not used by already-colored neighbors
+        # the smallest color in 0..|used| not used by a colored neighbor
+        # (collect_set skips the uncolored ones' null)
         used = (
             nbr_pri.select("src", "dst")
             .join(ready.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(colored.withColumnRenamed("id", "dst"), "dst")
+            .join(state.withColumnRenamed("id", "dst"), "dst")
             .select(F.col("src").alias("id"), "color")
             .groupBy("id")
             .agg(F.collect_set("color").alias("used"))
         )
-        empty = F.expr("array()").cast("array<int>")
-        used_arr = F.coalesce("used", empty)
-        assigned = (
-            ready.join(used, "id", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.array_position(
-                        F.transform(
-                            F.sequence(F.lit(0), F.size(used_arr)),
-                            lambda c: ~F.array_contains(used_arr, c.cast("int")),
-                        ),
-                        True,
-                    ).cast("int")
-                    - 1,
-                    F.lit(0),
-                ).alias("color"),
-            )
+        used_arr = F.coalesce("used", F.expr("array()").cast("array<int>"))
+        assigned = ready.join(used, "id", "left").select(
+            "id",
+            F.array_min(
+                F.array_except(F.sequence(F.lit(0), F.size(used_arr)), used_arr)
+            ).alias("new"),
         )
-        colored = cache.truncate(colored.unionByName(assigned))
-        uncolored = cache.truncate(uncolored.join(assigned, "id", "left_anti"))
-    pri.unpersist()
-    nbr_pri.unpersist()
-    return colored
+        state, seen = loop.truncate(
+            state.join(assigned, "id", "left").select(
+                "id", F.coalesce("color", "new").alias("color")
+            ),
+            retire=state,
+            figures=figures,
+        )
+    return state
 
 
 def label_propagation_communities(

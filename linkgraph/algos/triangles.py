@@ -209,40 +209,43 @@ def clustering(g: SparkGraph, nodes=None, weight=None) -> DataFrame:
             (F.least(x, y) == F.col("_u")) & (F.greatest(x, y) == F.col("_v")),
         ).drop("_u", "_v")
 
-    with _triangle_corners(g) as corners:
-        t = _wjoin(corners, F.col("a"), F.col("b"), "w_ab")
-        t = _wjoin(t, F.col("a"), F.col("c"), "w_ac")
-        t = _wjoin(t, F.col("b"), F.col("c"), "w_bc")
-        term = F.cbrt(F.col("w_ab") * F.col("w_ac") * F.col("w_bc"))
-        per = (
-            t.select(F.explode(F.array("a", "b", "c")).alias("id"), term.alias("t"))
-            .groupBy("id")
-            .agg(F.sum("t").alias("wt"))
-        )
-        deg = (
-            base.select(F.col("u").alias("id"))
-            .unionAll(base.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        out = (
-            g.vertices.select("id")
-            .join(per, "id", "left")
-            .join(deg, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.coalesce("deg", F.lit(0)) < 2, F.lit(0.0)
-                )
-                .otherwise(
-                    2.0
-                    * F.coalesce("wt", F.lit(0.0))
-                    / (F.col("deg") * (F.col("deg") - 1))
-                )
-                .alias("clustering"),
+    try:
+        with _triangle_corners(g) as corners:
+            t = _wjoin(corners, F.col("a"), F.col("b"), "w_ab")
+            t = _wjoin(t, F.col("a"), F.col("c"), "w_ac")
+            t = _wjoin(t, F.col("b"), F.col("c"), "w_bc")
+            term = F.cbrt(F.col("w_ab") * F.col("w_ac") * F.col("w_bc"))
+            per = (
+                t.select(F.explode(F.array("a", "b", "c")).alias("id"), term.alias("t"))
+                .groupBy("id")
+                .agg(F.sum("t").alias("wt"))
             )
-        )
-        return out.localCheckpoint(eager=True)
+            deg = (
+                base.select(F.col("u").alias("id"))
+                .unionAll(base.select(F.col("v").alias("id")))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            out = (
+                g.vertices.select("id")
+                .join(per, "id", "left")
+                .join(deg, "id", "left")
+                .select(
+                    "id",
+                    F.when(
+                        F.coalesce("deg", F.lit(0)) < 2, F.lit(0.0)
+                    )
+                    .otherwise(
+                        2.0
+                        * F.coalesce("wt", F.lit(0.0))
+                        / (F.col("deg") * (F.col("deg") - 1))
+                    )
+                    .alias("clustering"),
+                )
+            )
+            return out.localCheckpoint(eager=True)
+    finally:
+        nw.unpersist()
 
 
 def average_clustering(

@@ -339,6 +339,36 @@ def test_katz_centrality_parity(spark):
         assert got[n] == pytest.approx(want[n], abs=1e-6)
 
 
+@pytest.mark.parametrize("name", ["hits", "eigenvector", "katz"])
+def test_convergence_runs_no_side_error_job(spark, name):
+    """Convergence mode observes each iteration's L1 error on the job that
+    materializes the iteration: three non-converging iterations run no
+    more Spark jobs than ``fixed_iter=3``."""
+    from linkgraph.algos.centrality import eigenvector_centrality, katz_centrality
+
+    fn = {"hits": hits, "eigenvector": eigenvector_centrality, "katz": katz_centrality}[
+        name
+    ]
+    g = from_nx(spark, nx.karate_club_graph())
+    sc = spark.sparkContext
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def converge():
+        with pytest.raises(PowerIterationFailedConvergence):
+            fn(g, max_iter=3, tol=0)
+
+    assert jobs(f"{name}-converge", converge) <= jobs(
+        f"{name}-fixed", lambda: fn(g, fixed_iter=3)
+    )
+
+
 def test_katz_beta_dict_and_errors(spark):
     from linkgraph.algos.centrality import katz_centrality
 

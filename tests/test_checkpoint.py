@@ -121,12 +121,30 @@ LOOP_CONF_KEYS = (
 
 
 def _call_cases():
+    from linkgraph.algos.coloring import greedy_color
     from linkgraph.algos.lpa import label_propagation_communities
+    from linkgraph.algos.lpa_variants import (
+        asyn_fluidc,
+        asyn_lpa_communities,
+        fast_label_propagation_communities,
+    )
     from linkgraph.algos.sssp import NegativeCycleError, weighted_shortest_path_lengths
-    from linkgraph.algos.triangles import triangles
+    from linkgraph.algos.triangles import clustering, triangles
     from linkgraph.exceptions import PowerIterationFailedConvergence
 
     return {
+        "asyn-lpa": (lambda g: asyn_lpa_communities(g, seed=7), None),
+        "fast-lpa": (lambda g: fast_label_propagation_communities(g, seed=7), None),
+        "fluidc": (lambda g: asyn_fluidc(g, 3), None),
+        "lpa-distributed": (
+            lambda g: label_propagation_communities(g, coloring="distributed"),
+            None,
+        ),
+        "greedy-color-jp": (
+            lambda g: greedy_color(g, strategy="jones_plassmann"),
+            None,
+        ),
+        "clustering-weighted": (lambda g: clustering(g, weight="weight"), None),
         "pagerank": (lambda g: pagerank(g), None),
         "pagerank-zero-personalization": (
             lambda g: pagerank(g, personalization={0: 0.0}),
@@ -165,6 +183,18 @@ def _superstep_dirs():
     return set(glob.glob(f"{tempfile.gettempdir()}/linkgraph-superstep-*"))
 
 
+def _start_clean(spark):
+    """Drop every cached table and pinned RDD (earlier tests' results may
+    still pin RDDs, and the JVM's context cleaner drops those at
+    unpredictable times); returns the Java SparkContext."""
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs()
+    for rid in list(pinned.keys()):
+        pinned.get(rid).unpersist(True)
+    return jsc
+
+
 @pytest.mark.parametrize("case", sorted(_call_cases()))
 def test_call_leaves_no_pinned_state(spark, G, case):
     """A call, raising or not, leaves nothing cached or pinned once its
@@ -173,13 +203,7 @@ def test_call_leaves_no_pinned_state(spark, G, case):
 
     fn, raises = _call_cases()[case]
     g = from_nx(spark, G)
-    # start clean: earlier tests' results may still pin RDDs, and the JVM's
-    # context cleaner drops those at unpredictable times
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    pinned = jsc.getPersistentRDDs()
-    for rid in list(pinned.keys()):
-        pinned.get(rid).unpersist(True)
+    jsc = _start_clean(spark)
     conf0 = {k: spark.conf.get(k) for k in LOOP_CONF_KEYS}
     dirs0 = _superstep_dirs()
     if raises is None:
@@ -214,3 +238,98 @@ def test_superstep_calls_leave_no_temp_dirs(spark, G):
     find_minimal_d_separator(dag, ids([0]), ids([2]))
     label_propagation_communities(from_nx(spark, G), coloring="distributed").count()
     assert _superstep_dirs() <= dirs0
+
+
+def test_component_scalars_release_their_result(spark, G):
+    """The scalar wrappers over connected components release the labeling
+    they reduce, so nothing stays pinned after they return — and nothing
+    the graph itself reads."""
+    from linkgraph.algos import components as cc
+    from linkgraph.graph import SparkGraph
+
+    und, dig = from_nx(spark, G), from_nx(spark, nx.DiGraph(G))
+    for fn, g, want in (
+        (cc.number_connected_components, und, 1),
+        (cc.is_connected, und, True),
+        (cc.is_weakly_connected, dig, True),
+        (cc.number_weakly_connected_components, dig, 1),
+    ):
+        jsc = _start_clean(spark)
+        assert fn(g) == want, fn.__name__
+        assert jsc.getPersistentRDDs().size() == 0, fn.__name__
+    snap = SparkGraph(
+        und.edges.localCheckpoint(),
+        vertices=und.vertices.localCheckpoint(),
+        directed=False,
+    )
+    assert cc.is_connected(snap)
+    assert snap.edges.count() == G.number_of_edges()
+
+
+def _family_cases():
+    """Label-propagation-family calls on the superstep runtime, each with
+    its set-up allowance: the Spark jobs a call runs outside its
+    supersteps."""
+    from linkgraph.algos.coloring import greedy_color
+    from linkgraph.algos.lpa import label_propagation_communities
+    from linkgraph.algos.lpa_variants import (
+        asyn_fluidc,
+        asyn_lpa_communities,
+        fast_label_propagation_communities,
+    )
+
+    return {
+        # one job per superstep, the initial state included: no set-up
+        "asyn-lpa": (lambda g: asyn_lpa_communities(g, seed=7), 0),
+        "fast-lpa": (lambda g: fast_label_propagation_communities(g, seed=7), 0),
+        "greedy-color-jp": (lambda g: greedy_color(g, strategy="jones_plassmann"), 0),
+        # the node count (k <= n check), and inside is_connected a second
+        # node count (null-graph check) and the component count
+        "fluidc": (lambda g: asyn_fluidc(g, 3), 3),
+        # the simple-edge count (loop sizing) and the color count (max
+        # color over the coloring)
+        "lpa-distributed": (
+            lambda g: label_propagation_communities(g, coloring="distributed"),
+            2,
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_family_cases()))
+def test_label_propagation_family_runs_one_job_per_superstep(spark, monkeypatch, case):
+    """With automatic broadcasts and adaptive execution off (each action
+    is then one job), a label-propagation-family call on the karate club runs at most one
+    Spark job per superstep — decisions come from figures observed on the
+    superstep's own job — plus its stated set-up allowance."""
+    from linkgraph.iterutils import SuperstepCache
+
+    fn, setup = _family_cases()[case]
+    supersteps = []
+    truncate = SuperstepCache.truncate
+
+    def counted(self, *args, **kwargs):
+        supersteps.append(1)
+        return truncate(self, *args, **kwargs)
+
+    monkeypatch.setattr(SuperstepCache, "truncate", counted)
+    g = from_nx(spark, nx.karate_club_graph())
+    sc = spark.sparkContext
+    group = f"lpa-family-{case}"
+    one_job_per_action = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    session = {k: spark.conf.get(k) for k in one_job_per_action}
+    for k, v in one_job_per_action.items():
+        spark.conf.set(k, v)
+    sc.setJobGroup(group, group)
+    try:
+        result = fn(g)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in session.items():
+            spark.conf.set(k, v)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    SuperstepCache(spark).release(result)
+    assert supersteps
+    assert jobs <= len(supersteps) + setup, (jobs, len(supersteps))
