@@ -12,14 +12,15 @@ tree (public algorithm; see also its Wikipedia exposition):
 
 1. BFS spanning forest from each component's min-id root (shared with
    :mod:`linkgraph.algos.bridges`), depths recorded per level.
-2. Subtree sizes nd(v) by leaf peeling (one groupBy per tree level).
+2. Subtree sizes nd(v) by a bottom-up level sweep (one groupBy per tree
+   level, deepest first).
 3. **Preorder numbering by top-down level sweep**: preorder(child) =
    preorder(parent) + 1 + Σ nd(earlier siblings); the sibling prefix sums
    are a window partitioned by parent, so each tree level is one join +
    one window — no sequential DFS. Ancestor tests become interval tests:
    u is an ancestor of x iff pre(u) ≤ pre(x) < pre(u) + nd(u).
 4. low/high(v) = min/max preorder reachable from subtree(v) via at most
-   one non-tree edge — the same leaf-peel aggregation as nd.
+   one non-tree edge — the same bottom-up sweep as nd.
 5. Auxiliary graph on tree edges (each named by its child endpoint):
    - non-tree edge (u, w), neither an ancestor of the other → aux edge
      (u, w);
@@ -40,48 +41,40 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.algos.components import connected_components
-from linkgraph.algos.bridges import _simple, _bfs_forest
+from linkgraph.algos.components import _components
+from linkgraph.algos.bridges import _bfs_forest, _simple
 from linkgraph.iterutils import SuperstepCache
 
 __all__ = ["biconnected_components", "articulation_points"]
 
 
 def _subtree_sizes(
-    tree: DataFrame, roots: DataFrame, cache: SuperstepCache
+    tree: DataFrame, roots: DataFrame, max_depth: int, cache: SuperstepCache
 ) -> DataFrame:
     """(id, nd): descendants including self — for children AND roots (a
     root's nd is its component size, needed for ancestor interval tests on
-    root-incident non-tree edges) — by leaf peeling."""
-    remaining = cache.truncate(tree.select("id", "parent"))
-    acc = cache.truncate(
-        tree.select("id").unionAll(roots.select("id")).select(
-            "id", F.lit(1).cast("long").alias("nd")
+    root-incident non-tree edges) — folded up the tree one level per
+    superstep, deepest first (a level's children are one level deeper, so
+    already final)."""
+    levels = []
+    pushed = None
+    for d in range(max_depth, -1, -1):
+        if d:
+            lvl = tree.filter(F.col("depth") == d).select("id", "parent")
+        else:
+            lvl = roots.select("id", F.lit(None).cast("long").alias("parent"))
+        add = F.lit(0)
+        if pushed is not None:
+            lvl = lvl.join(pushed, "id", "left")
+            add = F.coalesce("add", add)
+        lvl = cache.truncate(
+            lvl.select("id", "parent", (F.lit(1).cast("long") + add).alias("nd"))
         )
-    )
-    out = []
-    while not remaining.isEmpty():
-        inner = remaining.select(F.col("parent").alias("id")).distinct()
-        leaves = remaining.join(inner, "id", "left_anti")
-        done = leaves.join(acc, "id").select("id", "nd", "parent")
-        out.append(cache.truncate(done.select("id", "nd")))
-        pushed = done.groupBy(F.col("parent").alias("id")).agg(
-            F.sum("nd").alias("add")
-        )
-        acc = cache.truncate(
-            acc.join(leaves.select("id"), "id", "left_anti")
-            .join(pushed, "id", "left")
-            .select("id", (F.col("nd") + F.coalesce("add", F.lit(0))).alias("nd")),
-            retire=acc,
-        )
-        remaining = cache.truncate(
-            remaining.join(leaves.select("id"), "id", "left_anti"),
-            retire=remaining,
-        )
-    # the never-peeled rows left in acc are exactly the roots
-    res = acc
-    for o in out:
-        res = res.unionAll(o)
+        levels.append(lvl.select("id", "nd"))
+        pushed = lvl.groupBy(F.col("parent").alias("id")).agg(F.sum("nd").alias("add"))
+    res = levels[0]
+    for l in levels[1:]:
+        res = res.unionAll(l)
     return cache.truncate(res)
 
 
@@ -117,11 +110,11 @@ def _preorder(
 
 
 def _low_high(
-    tree: DataFrame, pre: DataFrame, nontree_sym: DataFrame,
+    tree: DataFrame, pre: DataFrame, nontree_sym: DataFrame, max_depth: int,
     cache: SuperstepCache,
 ) -> DataFrame:
     """(id, low, high): min/max preorder reachable from the subtree via ≤1
-    non-tree edge, by the same leaf peel as subtree sizes."""
+    non-tree edge, folded up the tree like the subtree sizes."""
     own = (
         pre.select("id", F.col("pre").alias("low"), F.col("pre").alias("high"))
         .unionAll(
@@ -136,36 +129,27 @@ def _low_high(
         .groupBy("id")
         .agg(F.min("low").alias("low"), F.max("high").alias("high"))
     )
-    remaining = cache.truncate(tree.select("id", "parent"))
     acc = cache.truncate(own)
-    out = []
-    while not remaining.isEmpty():
-        inner = remaining.select(F.col("parent").alias("id")).distinct()
-        leaves = remaining.join(inner, "id", "left_anti")
-        done = leaves.join(acc, "id")  # (id, parent, low, high)
-        out.append(cache.truncate(done.select("id", "low", "high")))
-        pushed = done.groupBy(F.col("parent").alias("id")).agg(
-            F.min("low").alias("plow"), F.max("high").alias("phigh")
-        )
-        acc = cache.truncate(
-            acc.join(leaves.select("id"), "id", "left_anti")
-            .join(pushed, "id", "left")
-            .select(
+    levels = []
+    pushed = None
+    for d in range(max_depth, 0, -1):
+        lvl = tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id")
+        if pushed is not None:
+            lvl = lvl.join(pushed, "id", "left").select(
                 "id",
+                "parent",
                 F.least("low", F.coalesce("plow", F.col("low"))).alias("low"),
                 F.greatest("high", F.coalesce("phigh", F.col("high"))).alias("high"),
-            ),
-            retire=acc,
+            )
+        lvl = cache.truncate(lvl)  # (id, parent, low, high)
+        levels.append(lvl.select("id", "low", "high"))
+        pushed = lvl.groupBy(F.col("parent").alias("id")).agg(
+            F.min("low").alias("plow"), F.max("high").alias("phigh")
         )
-        remaining = cache.truncate(
-            remaining.join(leaves.select("id"), "id", "left_anti"),
-            retire=remaining,
-        )
-    # roots (never peeled) keep their acc values but are not tree-edge
-    # children, so they are not needed in the result.
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionAll(o)
+    # roots are not tree-edge children, so they are not needed here
+    res = levels[0]
+    for l in levels[1:]:
+        res = res.unionAll(l)
     return cache.truncate(res)
 
 
@@ -177,20 +161,18 @@ def biconnected_components(g: SparkGraph) -> DataFrame:
         raise NotImplementedForDirected(
             "biconnected_components: not implemented for directed type"
         )
-    e = _simple(g).persist()
-    cache = SuperstepCache(g.spark)
-    try:
-        tree = _bfs_forest(g, e, cache)  # (id=child, parent, depth)
-        if tree.isEmpty():
+    with SuperstepCache(g.spark) as cache:
+        e = cache.pin(_simple(g))
+        tree, max_depth = _bfs_forest(g, e, cache)  # (id=child, parent, depth)
+        if max_depth == 0:
             return g.spark.createDataFrame([], "u long, v long, block long")
-        max_depth = tree.agg(F.max("depth")).first()[0]
         roots = (
             tree.select(F.col("parent").alias("id"))
             .distinct()
             .join(tree.select("id"), "id", "left_anti")
         )
-        nd = _subtree_sizes(tree, roots, cache)
-        pre = _preorder(tree, roots, nd, int(max_depth), cache).persist()
+        nd = _subtree_sizes(tree, roots, max_depth, cache)
+        pre = _preorder(tree, roots, nd, max_depth, cache)
 
         tree_pairs = tree.select(
             F.least("id", "parent").alias("u"), F.greatest("id", "parent").alias("v")
@@ -199,7 +181,7 @@ def biconnected_components(g: SparkGraph) -> DataFrame:
         nontree_sym = nontree.select(
             F.col("u").alias("src"), F.col("v").alias("dst")
         ).unionAll(nontree.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        lh = _low_high(tree, pre, nontree_sym, cache)
+        lh = _low_high(tree, pre, nontree_sym, max_depth, cache)
 
         # relabel non-tree edges by preorder, classify ancestor relation
         pnd = pre.join(nd, "id").select("id", "pre", "nd")
@@ -247,7 +229,7 @@ def biconnected_components(g: SparkGraph) -> DataFrame:
             directed=False,
             coalesce_edges=True,
         )
-        blocks = connected_components(aux_g)  # (id=tree child, component)
+        blocks = _components(aux_g, cache)  # (id=tree child, component)
 
         tree_blocks = (
             tree.select("id", "parent")
@@ -269,11 +251,7 @@ def biconnected_components(g: SparkGraph) -> DataFrame:
                 F.col("component").alias("block"),
             )
         )
-        out = tree_blocks.unionAll(nt_blocks).localCheckpoint(eager=True)
-        pre.unpersist()
-        return out
-    finally:
-        e.unpersist()
+        return cache.result(cache.truncate(tree_blocks.unionAll(nt_blocks)))
 
 
 def articulation_points(g: SparkGraph) -> DataFrame:

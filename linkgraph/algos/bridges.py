@@ -24,10 +24,10 @@ map-side-combinable SUM aggregate applies):
    *endpoint-difference* encoding (+v at one endpoint, −v ≡ p−v at the
    other) is 0 mod both primes (false-positive probability ≈ 2⁻⁶², and
    deterministic for a given ``seed``).
-4. Subtree sums run by leaf peeling: each round the current leaves push
-   their accumulated value to their parents — one groupBy per round,
-   O(forest height) rounds (the BFS tree's height is the component radius,
-   small for web-scale graphs).
+4. Subtree sums run as a bottom-up level sweep: deepest level first, each
+   level's nodes push their accumulated value to their parents — one
+   groupBy per level, O(forest height) rounds (the BFS tree's height is
+   the component radius, small for web-scale graphs).
 
 Non-tree edges are never bridges; tree edges with subtree sum 0 are.
 """
@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.algos.components import connected_components
+from linkgraph.algos.components import _components, connected_components
 from linkgraph.iterutils import SuperstepCache
 
 __all__ = ["bridges", "has_bridges", "two_edge_connected_components"]
@@ -59,38 +59,46 @@ def _simple(g: SparkGraph) -> DataFrame:
     )
 
 
-def _bfs_forest(g: SparkGraph, e: DataFrame, cache: SuperstepCache) -> DataFrame:
+def _rows() -> dict:
+    """The row count of a superstep, observed on its own job."""
+    return {"rows": F.count(F.lit(1))}
+
+
+def _bfs_forest(
+    g: SparkGraph, e: DataFrame, cache: SuperstepCache
+) -> "tuple[DataFrame, int]":
     """(child, parent, depth) rows of a BFS spanning forest rooted at each
-    component's min id. Deterministic: ties pick the minimum parent."""
+    component's min id, and the forest's depth. Deterministic: ties pick
+    the minimum parent. One superstep per level: in an undirected graph a
+    level's neighbours lie one level up, on the level itself or one level
+    down, so the next level is the frontier's neighbours minus the last
+    two levels (no growing visited set)."""
     sym = e.select("u", "v").unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    comp = connected_components(g)
-    roots = comp.select(F.col("component").alias("id")).distinct()
-    visited = cache.truncate(roots)
-    frontier = visited
+    comp = _components(g, cache)
+    frontier = cache.truncate(comp.select(F.col("component").alias("id")).distinct())
+    done = frontier
     parents = []
-    depth = 0
     while True:
-        depth += 1
         nxt = (
             sym.join(frontier.select(F.col("id").alias("u")), "u")
             .select(F.col("v").alias("id"), F.col("u").alias("parent"))
-            .join(visited, "id", "left_anti")
+            .join(done, "id", "left_anti")
             .groupBy("id")
             .agg(F.min("parent").alias("parent"))
-            .select("id", "parent", F.lit(depth).cast("long").alias("depth"))
+            .select("id", "parent", F.lit(len(parents) + 1).cast("long").alias("depth"))
         )
-        nxt = cache.truncate(nxt)
-        if nxt.isEmpty():
+        nxt, seen = cache.truncate(nxt, figures=_rows())
+        if seen["rows"] == 0:
             break
         parents.append(nxt)
+        done = frontier.unionAll(nxt.select("id"))
         frontier = nxt.select("id")
-        visited = cache.truncate(visited.unionAll(frontier), retire=visited)
     if not parents:
-        return g.spark.createDataFrame([], "id long, parent long, depth long")
+        return g.spark.createDataFrame([], "id long, parent long, depth long"), 0
     out = parents[0]
     for p in parents[1:]:
         out = out.unionAll(p)
-    return cache.truncate(out)
+    return cache.truncate(out), len(parents)
 
 
 def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
@@ -110,10 +118,9 @@ def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
         return (
             out.join(members.withColumnRenamed("id", "u"), "u", "left_semi")
         )
-    e = _simple(g).persist()
-    cache = SuperstepCache(g.spark)
-    try:
-        tree = _bfs_forest(g, e, cache)  # (id=child, parent)
+    with SuperstepCache(g.spark) as cache:
+        e = cache.pin(_simple(g))
+        tree, depth = _bfs_forest(g, e, cache)  # (id=child, parent, depth)
         tree_pairs = tree.select(
             F.least("id", "parent").alias("u"),
             F.greatest("id", "parent").alias("v"),
@@ -148,46 +155,36 @@ def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
                 F.coalesce("a2", F.lit(0)).alias("a2"),
             )
         )
-        remaining = cache.truncate(tree)
+        # fold the residues up the tree, deepest level first: a level's
+        # children are all one level deeper, so already final
         acc = cache.truncate(acc)
         found = []
-        while not remaining.isEmpty():
-            inner = remaining.select(F.col("parent").alias("id")).distinct()
-            leaves = remaining.join(inner, "id", "left_anti")  # (id, parent)
-            leaf_acc = leaves.join(acc, "id")  # (id, parent, a1, a2)
-            found.append(
-                cache.truncate(
-                    leaf_acc.filter((F.col("a1") == 0) & (F.col("a2") == 0)).select(
-                        F.least("id", "parent").alias("u"),
-                        F.greatest("id", "parent").alias("v"),
-                    )
-                )
-            )
-            pushed = leaf_acc.groupBy(F.col("parent").alias("id")).agg(
-                F.sum("a1").alias("p1"), F.sum("a2").alias("p2")
-            )
-            acc = cache.truncate(
-                acc.join(leaves.select("id"), "id", "left_anti")
-                .join(pushed, "id", "left")
-                .select(
+        pushed = None
+        for d in range(depth, 0, -1):
+            lvl = tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id")
+            if pushed is not None:
+                lvl = lvl.join(pushed, "id", "left").select(
                     "id",
+                    "parent",
                     F.pmod(F.col("a1") + F.coalesce("p1", F.lit(0)), F.lit(_P1)).alias("a1"),
                     F.pmod(F.col("a2") + F.coalesce("p2", F.lit(0)), F.lit(_P2)).alias("a2"),
-                ),
-                retire=acc,
+                )
+            lvl = cache.truncate(lvl)  # (id, parent, a1, a2)
+            found.append(
+                lvl.filter((F.col("a1") == 0) & (F.col("a2") == 0)).select(
+                    F.least("id", "parent").alias("u"),
+                    F.greatest("id", "parent").alias("v"),
+                )
             )
-            remaining = cache.truncate(
-                remaining.join(leaves.select("id"), "id", "left_anti"),
-                retire=remaining,
+            pushed = lvl.groupBy(F.col("parent").alias("id")).agg(
+                F.sum("a1").alias("p1"), F.sum("a2").alias("p2")
             )
         if not found:
             return e.limit(0).select("u", "v")
         out = found[0]
         for f_ in found[1:]:
             out = out.unionAll(f_)
-        return out.localCheckpoint()
-    finally:
-        e.unpersist()
+        return cache.result(cache.truncate(out))
 
 
 def has_bridges(g: SparkGraph, seed: int = 42) -> bool:

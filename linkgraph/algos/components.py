@@ -16,9 +16,9 @@ node id — yielding the exact same partition as BFS.
 - converged when the edge set stops changing; then every surviving edge is
   ``(v, component_min)``.
 
-Everything is joins + groupBy-min: per round, one shuffle for the
-neighborhood-min aggregation and one for dedup. Map-side partial min bounds
-hub skew. Lineage is truncated each round (localCheckpoint / CheckpointStore).
+Everything is windowed mins + one dedup: per round, one shuffle for each
+star's neighborhood min and one for the dedup. Lineage is truncated each
+round (localCheckpoint / CheckpointStore).
 
 Convergence detection at scale: comparing edge sets with ``except`` is a
 full shuffle, so we compare (count, sum(xxhash64(src, dst))) fingerprints —
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.iterutils import SuperstepCache, loop_partitions
@@ -57,16 +57,16 @@ def _edge_figures(prev: Optional[dict] = None) -> dict:
 def _large_star(e: DataFrame) -> DataFrame:
     """Emit (v, m) for every neighbor v > u, m = min(Γ(u) ∪ {u}).
 
-    No dedup here: duplicates are harmless to the following small-star's
-    min aggregation and its single per-round ``distinct`` — one shuffle per
-    round instead of two."""
+    The neighborhood min is a window over the arcs partitioned by ``u``:
+    one shuffle, where an aggregate joined back to the arcs would scan and
+    shuffle them twice. No dedup here: duplicates are harmless to the
+    following small-star's min and its single per-round ``distinct``."""
     sym = e.unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    mins = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    mins = mins.select("src", F.least("mn", "src").alias("m"))
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        sym.join(mins, "src")
+        sym.select("src", "dst", m.alias("m"))
         .filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
@@ -74,17 +74,22 @@ def _large_star(e: DataFrame) -> DataFrame:
 
 def _small_star(e: DataFrame) -> DataFrame:
     """Orient edges (max, min); connect all smaller neighbors and u to the
-    minimum of the closed smaller-neighborhood."""
+    minimum of the closed smaller-neighborhood. Like :func:`_large_star`,
+    the min is a window, and each oriented edge emits both its neighbor
+    edge and its endpoint's self edge (the ``distinct`` folds repeats)."""
     t = e.filter(F.col("src") != F.col("dst")).select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
-    mins = t.groupBy("src").agg(F.min("dst").alias("m"))
-    nbr_edges = t.join(mins, "src").select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
+    t = t.select("src", "dst", F.min("dst").over(Window.partitionBy("src")).alias("m"))
+    pair = F.explode(
+        F.array(
+            F.struct(F.col("dst").alias("src"), F.col("m").alias("dst")),
+            F.struct(F.col("src").alias("src"), F.col("m").alias("dst")),
+        )
     )
-    self_edges = mins.select("src", F.col("m").alias("dst"))
     return (
-        nbr_edges.unionAll(self_edges)
+        t.select(pair.alias("p"))
+        .select("p.src", "p.dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )

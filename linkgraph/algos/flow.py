@@ -567,9 +567,6 @@ def stoer_wagner(
     driver-gated under a size guard; values are exact, not approximate.
     ``weight`` accepts a column/SQL expression; ``_unit=True`` forces
     unit weights (the whole-graph :func:`edge_connectivity` path)."""
-    import heapq
-    from itertools import count
-
     from linkgraph.graph import resolve_weight_column
 
     if g.directed:
@@ -610,6 +607,15 @@ def stoer_wagner(
         adj.setdefault(v, {})[u] = adj.setdefault(v, {}).get(u, 0.0) + w
     for r in g.vertices.select("id").collect():
         adj.setdefault(int(r["id"]), {})
+    return _stoer_wagner_phases(adj)
+
+
+def _stoer_wagner_phases(adj: dict) -> Tuple[float, Tuple[list, list]]:
+    """The driver kernel of :func:`stoer_wagner` over a connected graph's
+    adjacency ``{u: {v: weight}}`` (both directions, no self-loops; it is
+    contracted in place)."""
+    import heapq
+    from itertools import count
 
     # contraction tracking: each supernode owns a set of original ids
     groups = {u: [u] for u in adj}
@@ -1131,7 +1137,9 @@ def k_edge_components(g: SparkGraph, k: int) -> DataFrame:
     return spark.createDataFrame(all_rows, "id long, component long")
 
 
-def k_edge_subgraphs(g: SparkGraph, k: int) -> DataFrame:
+def k_edge_subgraphs(
+    g: SparkGraph, k: int, *, max_driver_edges: int = 5_000_000
+) -> DataFrame:
     """(id, component): maximal node sets whose INDUCED subgraphs are
     k-edge-connected (``edge_kcomponents.py:115`` ``k_edge_subgraphs``;
     label = min member id).
@@ -1139,75 +1147,60 @@ def k_edge_subgraphs(g: SparkGraph, k: int) -> DataFrame:
     k=1 coincides with connected components; k>=2 runs the standard
     cut-and-recurse: while some piece's induced subgraph has a global min
     cut below k, split it along that cut. Each global cut is the
-    driver-gated Stoer–Wagner kernel on the induced piece (unit weights);
-    the recursion depth is at most n. Undirected only.
+    driver-gated Stoer–Wagner kernel on the induced piece (unit weights),
+    so the graph is collected once under the same ``max_driver_edges``
+    guard and every piece is split on the driver; the recursion depth is
+    at most n. Undirected only.
     """
     if g.directed:
         raise ValueError("k_edge_subgraphs: undirected graphs only")
     if k < 1:
         raise ValueError(f"k cannot be less than 1; k={k}")
-    from linkgraph.algos.components import connected_components
-
     if k == 1:
+        from linkgraph.algos.components import connected_components
+
         return connected_components(g)
-    spark = g.spark
-    cc = connected_components(g).persist()
-    comps = [r["component"] for r in cc.select("component").distinct().collect()]
-    out_rows = []
-    # driver worklist of node-id frozensets; each piece's cut is distributed
-    work = []
-    for comp in comps:
-        members = frozenset(
-            r["id"] for r in cc.filter(F.col("component") == comp).collect()
+    from linkgraph.algos.edge_augmentation import _connected_parts
+
+    arcs = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+    m = arcs.count()
+    if m > max_driver_edges:
+        from linkgraph.exceptions import NetworkXError
+
+        raise NetworkXError(
+            f"k_edge_subgraphs cuts with the sequential Stoer-Wagner kernel; "
+            f"{m} edges > max_driver_edges={max_driver_edges}."
         )
-        work.append(members)
-    cc.unpersist()
-    base = g.edges.select("src", "dst").persist()
+    adj = {int(r["id"]): set() for r in g.vertices.select("id").collect()}
+    for r in arcs.collect():
+        u, v = int(r["src"]), int(r["dst"])
+        adj[u].add(v)
+        adj[v].add(u)
+    out_rows = []
+    # driver worklist of node-id sets, split until each is k-edge-connected
+    work = [frozenset(adj)] if adj else []
     while work:
         piece = work.pop()
+        sub = {u: adj[u] & piece for u in piece}
+        # a disconnected piece (the input, or one side of a cut) breaks
+        # into its components
+        parts = _connected_parts(sub)
+        if len(parts) > 1:
+            work.extend(frozenset(p) for p in parts)
+            continue
         if len(piece) == 1:
-            (only,) = piece
-            out_rows.append((int(only), int(only)))
-            continue
-        pdf = spark.createDataFrame([(int(x),) for x in piece], "id long")
-        sub = SparkGraph(
-            base.join(pdf.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(pdf.withColumnRenamed("id", "dst"), "dst", "left_semi"),
-            pdf,
-            directed=False,
-            coalesce_edges=False,
-        )
-        # a disconnected piece (post-split) breaks into its components
-        from linkgraph.algos.components import connected_components as _cc
-
-        sub_cc = _cc(sub).persist()
-        n_sub = sub_cc.select("component").distinct().count()
-        if n_sub > 1:
-            for comp in [
-                r["component"] for r in sub_cc.select("component").distinct().collect()
-            ]:
-                work.append(
-                    frozenset(
-                        r["id"]
-                        for r in sub_cc.filter(F.col("component") == comp).collect()
-                    )
-                )
-            sub_cc.unpersist()
-            continue
-        sub_cc.unpersist()
-        if sub.number_of_edges() == 0:
-            for x in piece:
-                out_rows.append((int(x), int(x)))
-            continue
-        val, (side_a, side_b) = stoer_wagner(sub, weight=None, _unit=True)
+            val = float("inf")
+        else:
+            val, (side_a, side_b) = _stoer_wagner_phases(
+                {u: {v: 1.0 for v in nbrs} for u, nbrs in sub.items()}
+            )
         if val >= k:
             lead = min(piece)
             out_rows.extend((int(x), int(lead)) for x in piece)
         else:
             work.append(frozenset(side_a))
             work.append(frozenset(side_b))
-    base.unpersist()
-    return spark.createDataFrame(out_rows, "id long, component long")
+    return g.spark.createDataFrame(out_rows, "id long, component long")
 
 
 def is_k_edge_connected(g: SparkGraph, k: int) -> bool:

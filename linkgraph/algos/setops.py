@@ -235,30 +235,28 @@ def shortest_path_lengths(
     src_df = src_df.join(g.vertices.select("id"), "id", "left_semi")
 
     adj = g.symmetric_edges().select("src", "dst") if not g.directed else g.edges.select("src", "dst")
-    adj = adj.persist()
-
-    cache = SuperstepCache(spark)
-    visited = cache.truncate(src_df.select("id", F.lit(0).cast("long").alias("distance")))
-    frontier = visited
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        depth += 1
-        nxt = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .select("id", F.lit(depth).cast("long").alias("distance"))
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(adj)
+        visited = cache.truncate(
+            src_df.select("id", F.lit(0).cast("long").alias("distance"))
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = cache.truncate(visited.unionByName(nxt))
-        frontier = nxt
-    adj.unpersist()
-    return visited
+        frontier = visited
+        depth = 0
+        while max_depth is None or depth < max_depth:
+            depth += 1
+            nxt = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, "id", "left_anti")
+                .select("id", F.lit(depth).cast("long").alias("distance"))
+            )
+            nxt, seen = cache.truncate(nxt, figures={"rows": F.count(F.lit(1))})
+            if seen["rows"] == 0:
+                break
+            visited = cache.truncate(visited.unionByName(nxt), retire=visited)
+            frontier = nxt
+        return cache.result(visited)
 
 
 def bfs_layers(g: SparkGraph, sources) -> DataFrame:

@@ -298,63 +298,66 @@ def all_pairs_bellman_ford_path_lengths(
     base = g.symmetric_edges() if not g.directed else g.edges
     adj = base.select(
         "src", "dst", resolve_weight_column(base, weight).alias("weight")
-    ).persist()
+    )
     if sources is None:
         src_df = g.vertices.select(F.col("id").alias("source"))
     else:
         src_df = _source_df(g, sources).select(F.col("id").alias("source"))
 
-    cache = SuperstepCache(spark)
-    dist = cache.truncate(
-        src_df.select(
-            "source", F.col("source").alias("id"), F.lit(0.0).alias("distance")
-        )
-    )
-    frontier = dist
-    last_trunc = dist
-    n_limit = None
-    rounds = 0
-    while True:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            break
-        if max_rounds is None:
-            if n_limit is None and rounds > 64:
-                n_limit = g.number_of_nodes()
-            if n_limit is not None and rounds > n_limit:
-                adj.unpersist()
-                raise NegativeCycleError(
-                    "Negative cost cycle detected: relaxation still "
-                    f"improving after {n_limit} rounds"
-                )
-        cand = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy("source", F.col("dst").alias("id"))
-            .agg(F.min(F.col("distance") + F.col("weight")).alias("cand"))
-        )
-        merged = (
-            dist.join(cand, ["source", "id"], "full")
-            .select(
-                "source",
-                "id",
-                F.least(
-                    F.coalesce("distance", F.lit(float("inf"))),
-                    F.coalesce("cand", F.lit(float("inf"))),
-                ).alias("distance"),
-                (
-                    F.col("distance").isNull()
-                    | (F.col("cand") < F.col("distance"))
-                ).alias("_improved"),
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(adj)
+        dist = cache.truncate(
+            src_df.select(
+                "source", F.col("source").alias("id"), F.lit(0.0).alias("distance")
             )
         )
-        merged = cache.truncate(merged, retire=last_trunc)
-        last_trunc = merged
-        frontier = merged.filter("_improved").select("source", "id", "distance")
-        dist = merged.select("source", "id", "distance")
-        if frontier.limit(1).count() == 0:
-            break
-    adj.unpersist()
-    return dist
+        frontier = dist
+        last_trunc = dist
+        n_limit = None
+        rounds = 0
+        while True:
+            rounds += 1
+            if max_rounds is not None and rounds > max_rounds:
+                break
+            if max_rounds is None:
+                if n_limit is None and rounds > 64:
+                    n_limit = g.number_of_nodes()
+                if n_limit is not None and rounds > n_limit:
+                    raise NegativeCycleError(
+                        "Negative cost cycle detected: relaxation still "
+                        f"improving after {n_limit} rounds"
+                    )
+            cand = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .groupBy("source", F.col("dst").alias("id"))
+                .agg(F.min(F.col("distance") + F.col("weight")).alias("cand"))
+            )
+            merged = (
+                dist.join(cand, ["source", "id"], "full")
+                .select(
+                    "source",
+                    "id",
+                    F.least(
+                        F.coalesce("distance", F.lit(float("inf"))),
+                        F.coalesce("cand", F.lit(float("inf"))),
+                    ).alias("distance"),
+                    (
+                        F.col("distance").isNull()
+                        | (F.col("cand") < F.col("distance"))
+                    ).alias("_improved"),
+                )
+            )
+            merged, seen = cache.truncate(
+                merged,
+                retire=last_trunc,
+                figures={"improved": F.count_if(F.col("_improved"))},
+            )
+            last_trunc = merged
+            frontier = merged.filter("_improved").select("source", "id", "distance")
+            dist = merged.select("source", "id", "distance")
+            if seen["improved"] == 0:
+                break
+        return cache.result(dist)
 
 
 def floyd_warshall(g: SparkGraph, *, weight=None, sources=None) -> DataFrame:

@@ -44,6 +44,28 @@ EDGE_SCHEMA = StructType(
 VERTEX_SCHEMA = StructType([StructField("id", LongType(), False)])
 
 
+def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` that every later scan reads
+    in the JVM alone.
+
+    ``spark.createDataFrame(rows, schema)`` makes the same rows and
+    partitions, but its plan re-pickles them through a Python worker task
+    per partition on EVERY scan (an identity ``map`` that only converts
+    the parallelized batches' serializer), and a graph built from a list
+    is scanned by every superstep that reads it. The parallelized batches
+    are already pickled lists, which the JVM unpickles directly; a
+    ``groupBy().count()`` over 8 such rows measured ~1.4 s through the
+    Python tasks vs ~0.35 s without them (local[4], 8 partitions). Rows
+    must already match ``schema`` (they are not verified)."""
+    sc = spark.sparkContext
+    batches = sc.parallelize([schema.toInternal(r) for r in rows])
+    jrdd = sc._jvm.SerDeUtil.pythonToJava(batches._jrdd, True)
+    jdf = spark._jsparkSession.applySchemaToPythonRDD(
+        sc._jvm.SerDeUtil.toJavaArray(jrdd).rdd(), schema.json()
+    )
+    return DataFrame(jdf, spark)
+
+
 class SparkGraph:
     """A graph as a pair of DataFrames.
 
@@ -530,7 +552,7 @@ def from_edgelist(
             rows.append((int(t[0]), int(t[1]), 1.0))
         else:
             rows.append((int(t[0]), int(t[1]), float(t[2])))
-    df = spark.createDataFrame(rows, schema=EDGE_SCHEMA)
+    df = local_frame(spark, rows, EDGE_SCHEMA)
     return SparkGraph(df, directed=directed, num_partitions=num_partitions)
 
 
@@ -545,10 +567,8 @@ def from_nx(spark: SparkSession, G, *, num_partitions: Optional[int] = None):
         (int(u), int(v), float(d.get("weight", 1.0))) for u, v, d in G.edges(data=True)
     ]
     vert_rows = [(int(n),) for n in G.nodes()]
-    edf = spark.createDataFrame(edge_rows, schema=EDGE_SCHEMA) if edge_rows else (
-        spark.createDataFrame([], schema=EDGE_SCHEMA)
-    )
-    vdf = spark.createDataFrame(vert_rows, schema=VERTEX_SCHEMA)
+    edf = local_frame(spark, edge_rows, EDGE_SCHEMA)
+    vdf = local_frame(spark, vert_rows, VERTEX_SCHEMA)
     return SparkGraph(
         edf,
         vdf,

@@ -128,6 +128,7 @@ def _call_cases():
         asyn_lpa_communities,
         fast_label_propagation_communities,
     )
+    from linkgraph.algos.setops import shortest_path_lengths
     from linkgraph.algos.sssp import NegativeCycleError, weighted_shortest_path_lengths
     from linkgraph.algos.triangles import clustering, triangles
     from linkgraph.exceptions import PowerIterationFailedConvergence
@@ -165,6 +166,7 @@ def _call_cases():
             RuntimeError,
         ),
         "triangles": (lambda g: triangles(g), None),
+        "shortest-path-lengths": (lambda g: shortest_path_lengths(g, [0]), None),
         "weighted-shortest-paths": (
             lambda g: weighted_shortest_path_lengths(g, [0]),
             None,
