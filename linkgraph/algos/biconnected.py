@@ -37,12 +37,14 @@ the exact machinery the rest of the engine runs on.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
 from linkgraph.algos.components import _components
-from linkgraph.algos.bridges import _bfs_forest, _simple
+from linkgraph.algos.bridges import _bfs_forest, _fold_up, _simple
 from linkgraph.iterutils import SuperstepCache
 
 __all__ = ["biconnected_components", "articulation_points"]
@@ -54,28 +56,21 @@ def _subtree_sizes(
     """(id, nd): descendants including self — for children AND roots (a
     root's nd is its component size, needed for ancestor interval tests on
     root-incident non-tree edges) — folded up the tree one level per
-    superstep, deepest first (a level's children are one level deeper, so
-    already final)."""
-    levels = []
-    pushed = None
-    for d in range(max_depth, -1, -1):
+    superstep, deepest first."""
+    one = F.lit(1).cast("long").alias("nd")
+
+    def level(d):
         if d:
-            lvl = tree.filter(F.col("depth") == d).select("id", "parent")
-        else:
-            lvl = roots.select("id", F.lit(None).cast("long").alias("parent"))
-        add = F.lit(0)
-        if pushed is not None:
-            lvl = lvl.join(pushed, "id", "left")
-            add = F.coalesce("add", add)
-        lvl = cache.truncate(
-            lvl.select("id", "parent", (F.lit(1).cast("long") + add).alias("nd"))
-        )
-        levels.append(lvl.select("id", "nd"))
-        pushed = lvl.groupBy(F.col("parent").alias("id")).agg(F.sum("nd").alias("add"))
-    res = levels[0]
-    for l in levels[1:]:
-        res = res.unionAll(l)
-    return cache.truncate(res)
+            return tree.filter(F.col("depth") == d).select("id", "parent", one)
+        return roots.select("id", F.lit(None).cast("long").alias("parent"), one)
+
+    levels = _fold_up(
+        level,
+        range(max_depth, -1, -1),
+        {"nd": (F.sum, lambda own, kids: own + F.coalesce(kids, F.lit(0)))},
+        cache,
+    )
+    return cache.truncate(reduce(DataFrame.unionAll, levels).select("id", "nd"))
 
 
 def _preorder(
@@ -130,27 +125,19 @@ def _low_high(
         .agg(F.min("low").alias("low"), F.max("high").alias("high"))
     )
     acc = cache.truncate(own)
-    levels = []
-    pushed = None
-    for d in range(max_depth, 0, -1):
-        lvl = tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id")
-        if pushed is not None:
-            lvl = lvl.join(pushed, "id", "left").select(
-                "id",
-                "parent",
-                F.least("low", F.coalesce("plow", F.col("low"))).alias("low"),
-                F.greatest("high", F.coalesce("phigh", F.col("high"))).alias("high"),
-            )
-        lvl = cache.truncate(lvl)  # (id, parent, low, high)
-        levels.append(lvl.select("id", "low", "high"))
-        pushed = lvl.groupBy(F.col("parent").alias("id")).agg(
-            F.min("low").alias("plow"), F.max("high").alias("phigh")
-        )
+    levels = _fold_up(
+        lambda d: tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id"),
+        range(max_depth, 0, -1),
+        {
+            "low": (F.min, lambda own, kids: F.least(own, F.coalesce(kids, own))),
+            "high": (F.max, lambda own, kids: F.greatest(own, F.coalesce(kids, own))),
+        },
+        cache,
+    )
     # roots are not tree-edge children, so they are not needed here
-    res = levels[0]
-    for l in levels[1:]:
-        res = res.unionAll(l)
-    return cache.truncate(res)
+    return cache.truncate(
+        reduce(DataFrame.unionAll, levels).select("id", "low", "high")
+    )
 
 
 def biconnected_components(g: SparkGraph) -> DataFrame:

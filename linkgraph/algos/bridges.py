@@ -34,12 +34,14 @@ Non-tree edges are never bridges; tree edges with subtree sum 0 are.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
 from linkgraph.algos.components import _components, connected_components
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["bridges", "has_bridges", "two_edge_connected_components"]
 
@@ -57,11 +59,6 @@ def _simple(g: SparkGraph) -> DataFrame:
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-
-
-def _rows() -> dict:
-    """The row count of a superstep, observed on its own job."""
-    return {"rows": F.count(F.lit(1))}
 
 
 def _bfs_forest(
@@ -87,7 +84,7 @@ def _bfs_forest(
             .agg(F.min("parent").alias("parent"))
             .select("id", "parent", F.lit(len(parents) + 1).cast("long").alias("depth"))
         )
-        nxt, seen = cache.truncate(nxt, figures=_rows())
+        nxt, seen = cache.truncate(nxt, figures=row_count())
         if seen["rows"] == 0:
             break
         parents.append(nxt)
@@ -99,6 +96,33 @@ def _bfs_forest(
     for p in parents[1:]:
         out = out.unionAll(p)
     return cache.truncate(out), len(parents)
+
+
+def _fold_up(level, depths, fold: dict, cache: SuperstepCache) -> list:
+    """Snapshots ``(id, parent, *values)`` of the forest's levels at
+    ``depths`` (deepest first), each level's values folded up from its
+    children one level per superstep: a level's children lie one level
+    deeper, so they are already final. ``level(d)`` gives depth ``d``'s
+    ``(id, parent, *values)`` with each node's own values; ``fold`` maps a
+    value to (its aggregate over a node's children, ``combine(own,
+    aggregate)``), the aggregate null for a node without children."""
+    levels, pushed = [], None
+    for d in depths:
+        lvl, kids = level(d), lambda c: F.lit(None)
+        if pushed is not None:
+            lvl, kids = lvl.join(pushed, "id", "left"), lambda c: F.col("_" + c)
+        lvl = cache.truncate(
+            lvl.select(
+                "id",
+                "parent",
+                *(comb(F.col(c), kids(c)).alias(c) for c, (_, comb) in fold.items()),
+            )
+        )
+        levels.append(lvl)
+        pushed = lvl.groupBy(F.col("parent").alias("id")).agg(
+            *(agg(c).alias("_" + c) for c, (agg, _) in fold.items())
+        )
+    return levels
 
 
 def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
@@ -155,36 +179,30 @@ def bridges(g: SparkGraph, root=None, seed: int = 42) -> DataFrame:
                 F.coalesce("a2", F.lit(0)).alias("a2"),
             )
         )
-        # fold the residues up the tree, deepest level first: a level's
-        # children are all one level deeper, so already final
+        # fold the residues up the tree, deepest level first
         acc = cache.truncate(acc)
-        found = []
-        pushed = None
-        for d in range(depth, 0, -1):
-            lvl = tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id")
-            if pushed is not None:
-                lvl = lvl.join(pushed, "id", "left").select(
-                    "id",
-                    "parent",
-                    F.pmod(F.col("a1") + F.coalesce("p1", F.lit(0)), F.lit(_P1)).alias("a1"),
-                    F.pmod(F.col("a2") + F.coalesce("p2", F.lit(0)), F.lit(_P2)).alias("a2"),
-                )
-            lvl = cache.truncate(lvl)  # (id, parent, a1, a2)
-            found.append(
-                lvl.filter((F.col("a1") == 0) & (F.col("a2") == 0)).select(
+        levels = _fold_up(
+            lambda d: tree.filter(F.col("depth") == d).select("id", "parent").join(acc, "id"),
+            range(depth, 0, -1),
+            {
+                a: (F.sum, lambda own, kids, p=p: F.pmod(own + F.coalesce(kids, F.lit(0)), F.lit(p)))
+                for a, p in (("a1", _P1), ("a2", _P2))
+            },
+            cache,
+        )
+        if not levels:
+            return e.limit(0).select("u", "v")
+        out = reduce(DataFrame.unionAll, levels).filter(
+            (F.col("a1") == 0) & (F.col("a2") == 0)
+        )
+        return cache.result(
+            cache.truncate(
+                out.select(
                     F.least("id", "parent").alias("u"),
                     F.greatest("id", "parent").alias("v"),
                 )
             )
-            pushed = lvl.groupBy(F.col("parent").alias("id")).agg(
-                F.sum("a1").alias("p1"), F.sum("a2").alias("p2")
-            )
-        if not found:
-            return e.limit(0).select("u", "v")
-        out = found[0]
-        for f_ in found[1:]:
-            out = out.unionAll(f_)
-        return cache.result(cache.truncate(out))
+        )
 
 
 def has_bridges(g: SparkGraph, seed: int = 42) -> bool:

@@ -47,6 +47,9 @@ _INF = float("inf")
 
 from linkgraph.exceptions import NetworkXUnbounded  # noqa: E402 (shared hierarchy)
 
+# the most edges a driver-gated kernel (the Stoer–Wagner phases) collects
+_DRIVER_EDGES = 5_000_000
+
 
 def _residual(g: SparkGraph, capacity) -> DataFrame:
     """(u, v, cap) arcs: forward caps + 0-cap reverse arcs, undirected
@@ -554,7 +557,7 @@ def stoer_wagner(
     g: SparkGraph,
     *,
     weight=None,
-    max_driver_edges: int = 5_000_000,
+    max_driver_edges: int = _DRIVER_EDGES,
     _unit: bool = False,
 ) -> Tuple[float, Tuple[list, list]]:
     """(cut_value, (partition, rest)): the global minimum weighted edge
@@ -1137,9 +1140,7 @@ def k_edge_components(g: SparkGraph, k: int) -> DataFrame:
     return spark.createDataFrame(all_rows, "id long, component long")
 
 
-def k_edge_subgraphs(
-    g: SparkGraph, k: int, *, max_driver_edges: int = 5_000_000
-) -> DataFrame:
+def k_edge_subgraphs(g: SparkGraph, k: int) -> DataFrame:
     """(id, component): maximal node sets whose INDUCED subgraphs are
     k-edge-connected (``edge_kcomponents.py:115`` ``k_edge_subgraphs``;
     label = min member id).
@@ -1148,9 +1149,9 @@ def k_edge_subgraphs(
     cut-and-recurse: while some piece's induced subgraph has a global min
     cut below k, split it along that cut. Each global cut is the
     driver-gated Stoer–Wagner kernel on the induced piece (unit weights),
-    so the graph is collected once under the same ``max_driver_edges``
-    guard and every piece is split on the driver; the recursion depth is
-    at most n. Undirected only.
+    so the graph is collected in batches of whole components (see
+    :func:`_component_batches`) and every piece is split on the driver;
+    the recursion depth is at most n. Undirected only.
     """
     if g.directed:
         raise ValueError("k_edge_subgraphs: undirected graphs only")
@@ -1162,45 +1163,88 @@ def k_edge_subgraphs(
         return connected_components(g)
     from linkgraph.algos.edge_augmentation import _connected_parts
 
-    arcs = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    m = arcs.count()
-    if m > max_driver_edges:
-        from linkgraph.exceptions import NetworkXError
-
-        raise NetworkXError(
-            f"k_edge_subgraphs cuts with the sequential Stoer-Wagner kernel; "
-            f"{m} edges > max_driver_edges={max_driver_edges}."
-        )
-    adj = {int(r["id"]): set() for r in g.vertices.select("id").collect()}
-    for r in arcs.collect():
-        u, v = int(r["src"]), int(r["dst"])
-        adj[u].add(v)
-        adj[v].add(u)
     out_rows = []
-    # driver worklist of node-id sets, split until each is k-edge-connected
-    work = [frozenset(adj)] if adj else []
-    while work:
-        piece = work.pop()
-        sub = {u: adj[u] & piece for u in piece}
-        # a disconnected piece (the input, or one side of a cut) breaks
-        # into its components
-        parts = _connected_parts(sub)
-        if len(parts) > 1:
-            work.extend(frozenset(p) for p in parts)
-            continue
-        if len(piece) == 1:
-            val = float("inf")
-        else:
-            val, (side_a, side_b) = _stoer_wagner_phases(
-                {u: {v: 1.0 for v in nbrs} for u, nbrs in sub.items()}
-            )
-        if val >= k:
-            lead = min(piece)
-            out_rows.extend((int(x), int(lead)) for x in piece)
-        else:
-            work.append(frozenset(side_a))
-            work.append(frozenset(side_b))
+    for adj in _component_batches(g):
+        # driver worklist of node-id sets, split until each is
+        # k-edge-connected
+        work = [frozenset(adj)] if adj else []
+        while work:
+            piece = work.pop()
+            sub = {u: adj[u] & piece for u in piece}
+            # a disconnected piece (a batch, or one side of a cut) breaks
+            # into its components
+            parts = _connected_parts(sub)
+            if len(parts) > 1:
+                work.extend(frozenset(p) for p in parts)
+                continue
+            if len(piece) == 1:
+                val = float("inf")
+            else:
+                val, (side_a, side_b) = _stoer_wagner_phases(
+                    {u: {v: 1.0 for v in nbrs} for u, nbrs in sub.items()}
+                )
+            if val >= k:
+                lead = min(piece)
+                out_rows.extend((int(x), int(lead)) for x in piece)
+            else:
+                work.append(frozenset(side_a))
+                work.append(frozenset(side_b))
     return g.spark.createDataFrame(out_rows, "id long, component long")
+
+
+def _component_batches(g: SparkGraph):
+    """Adjacency sets ``{u: {v}}`` of undirected ``g`` on the driver, in
+    batches of whole connected components of at most ``_DRIVER_EDGES``
+    arcs each: the whole graph at once when it fits, else a CC on Spark
+    cuts the components (ordered by label) into contiguous label ranges.
+    A single component over the guard raises NetworkXError, as the
+    Stoer–Wagner kernel does on it."""
+    arcs = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+
+    def collect(ids: DataFrame, arcs: DataFrame) -> dict:
+        adj = {int(r["id"]): set() for r in ids.collect()}
+        for r in arcs.collect():
+            u, v = int(r["src"]), int(r["dst"])
+            adj[u].add(v)
+            adj[v].add(u)
+        return adj
+
+    if arcs.count() <= _DRIVER_EDGES:
+        yield collect(g.vertices.select("id"), arcs)
+        return
+    from linkgraph.algos.components import _components
+
+    with SuperstepCache(g.spark) as loop:
+        comp = _components(g, loop)  # (id, component)
+        arcs = arcs.join(comp.withColumnRenamed("id", "src"), "src")
+        sizes = (
+            comp.select("component")
+            .distinct()
+            .join(arcs.groupBy("component").count(), "component", "left")
+            .select("component", F.coalesce("count", F.lit(0)).alias("m"))
+            .orderBy("component")
+            .collect()
+        )
+        ranges = []  # [lo, hi, edges] of each batch
+        for r in sizes:
+            c, m = int(r["component"]), int(r["m"])
+            if m > _DRIVER_EDGES:
+                from linkgraph.exceptions import NetworkXError
+
+                raise NetworkXError(
+                    "k_edge_subgraphs cuts with the sequential Stoer-Wagner "
+                    f"kernel; component {c} has {m} edges > {_DRIVER_EDGES}."
+                )
+            if ranges and ranges[-1][2] + m <= _DRIVER_EDGES:
+                ranges[-1][1:] = [c, ranges[-1][2] + m]
+            else:
+                ranges.append([c, c, m])
+        for lo, hi, _ in ranges:
+            inside = F.col("component").between(lo, hi)
+            yield collect(
+                comp.filter(inside).select("id"),
+                arcs.filter(inside).select("src", "dst"),
+            )
 
 
 def is_k_edge_connected(g: SparkGraph, k: int) -> bool:

@@ -27,7 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 
 def _check_directedness(g: SparkGraph, h: SparkGraph):
@@ -251,7 +251,7 @@ def shortest_path_lengths(
                 .join(visited, "id", "left_anti")
                 .select("id", F.lit(depth).cast("long").alias("distance"))
             )
-            nxt, seen = cache.truncate(nxt, figures={"rows": F.count(F.lit(1))})
+            nxt, seen = cache.truncate(nxt, figures=row_count())
             if seen["rows"] == 0:
                 break
             visited = cache.truncate(visited.unionByName(nxt), retire=visited)

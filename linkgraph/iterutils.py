@@ -45,7 +45,7 @@ from __future__ import annotations
 import time
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 # Target shuffle-partition payload for iterative loops. Small relative to
@@ -138,6 +138,11 @@ def _observed(df: DataFrame, figures: Optional[dict]):
         return df, dict
     obs = Observation()
     return df.observe(obs, *[c.alias(k) for k, c in figures.items()]), lambda: obs.get
+
+
+def row_count() -> dict:
+    """The figure ``rows``: a superstep's row count, for ``figures=``."""
+    return {"rows": F.count(F.lit(1))}
 
 
 def _snapshot_rdd_ids(df: DataFrame) -> set:

@@ -44,6 +44,28 @@ def test_k_edge_subgraphs_parity(spark, k):
     assert got == want
 
 
+def test_k_edge_subgraphs_guards_each_component(spark, monkeypatch):
+    # past the driver edge guard the graph is collected in batches of whole
+    # components; only a single component over the guard is refused
+    from linkgraph.algos import flow
+    from linkgraph.exceptions import NetworkXError
+
+    G = nx.disjoint_union_all(
+        [nx.complete_graph(4), nx.cycle_graph(5), nx.path_graph(3), nx.empty_graph(1)]
+    )
+    g = from_nx(spark, G)
+    monkeypatch.setattr(flow, "_DRIVER_EDGES", 6)  # K4's 6 edges, of 13
+    for k in (2, 3):
+        by = {}
+        for r in k_edge_subgraphs(g, k).collect():
+            by.setdefault(r["component"], set()).add(r["id"])
+        want = {frozenset(c) for c in nx.k_edge_subgraphs(G, k)}
+        assert {frozenset(c) for c in by.values()} == want
+    monkeypatch.setattr(flow, "_DRIVER_EDGES", 5)
+    with pytest.raises(NetworkXError):
+        k_edge_subgraphs(g, 2)
+
+
 @pytest.mark.parametrize("directed", [False, True])
 def test_edge_dfs_parity(spark, directed):
     # gnp adds edges in ascending order, so the reference's
