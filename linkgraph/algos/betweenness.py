@@ -32,7 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, loop_partitions, row_count
 
 
 def _forward_levels(sources, arcs, cache, max_rounds):
@@ -59,15 +59,19 @@ def _forward_levels(sources, arcs, cache, max_rounds):
             .groupBy("s", F.col("dst").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        new = cache.truncate(
+        new, rows = cache.truncate(
             cand.join(seen, ["s", "v"], "left_anti").select(
                 "s", "v", F.lit(d).alias("dist"), "sigma"
-            )
+            ),
+            figures=row_count(),
         )
-        if new.limit(1).count() == 0:
+        if rows["rows"] == 0:
             break
         levels.append(new)
-        seen = cache.truncate(seen.unionByName(new.select("s", "v")))
+        # until the second level is in, ``seen`` is the first level itself
+        seen = cache.truncate(
+            seen.unionByName(new.select("s", "v")), retire=seen if d > 1 else None
+        )
         frontier = new
     return levels
 
@@ -97,8 +101,8 @@ def _weighted_levels_and_dag(sources, warcs, cache, max_rounds):
        O(k·m) like the unweighted pass.
 
     Returns ``(levels, dag)``: ``levels[d]`` holds ``(s, v, dist,
-    sigma)`` for topological round ``d``; ``dag`` is ``(s, src, dst)``,
-    persisted (caller unpersists).
+    sigma)`` for topological round ``d``; ``dag`` is ``(s, src, dst)``, a
+    snapshot of ``cache``.
     """
     # -- phase 1: distances ------------------------------------------- #
     dist = cache.truncate(
@@ -118,14 +122,15 @@ def _weighted_levels_and_dag(sources, warcs, cache, max_rounds):
             .groupBy("s", "v")
             .agg(F.min("dist").alias("dist"))
         )
-        improved = cache.truncate(
+        improved, seen = cache.truncate(
             cand.join(
                 dist.select("s", "v", F.col("dist").alias("old")), ["s", "v"], "left"
             )
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("s", "v", "dist")
+            .select("s", "v", "dist"),
+            figures=row_count(),
         )
-        if improved.limit(1).count() == 0:
+        if seen["rows"] == 0:
             cache.release(improved)
             break
         new_dist = cache.truncate(
@@ -147,9 +152,8 @@ def _weighted_levels_and_dag(sources, warcs, cache, max_rounds):
         )
         .filter(F.col("_dp") + F.col("w") == F.col("_dw"))
         .select("s", "src", "dst")
-        .persist()
     )
-    dag.count()
+    dag = cache.truncate(dag)
 
     # -- phase 3: topological sigma propagation ------------------------ #
     lvl0 = cache.truncate(
@@ -189,12 +193,13 @@ def _weighted_levels_and_dag(sources, warcs, cache, max_rounds):
             )
         )
         cache.release(state)
-        newly = cache.truncate(
+        newly, seen = cache.truncate(
             st.filter(F.col("indeg") == 0).select(
                 "s", "v", "dist", F.col("sig").alias("sigma")
-            )
+            ),
+            figures=row_count(),
         )
-        if newly.limit(1).count() == 0:
+        if seen["rows"] == 0:
             cache.release(newly)
             state = st
             break
@@ -205,22 +210,21 @@ def _weighted_levels_and_dag(sources, warcs, cache, max_rounds):
     return levels, dag
 
 
-def _weighted_arcs(g, weight, cache_unused=None):
+def _weighted_arcs(g, weight, cache):
     """(src, dst, w) arc table for the weighted kernels (min over
-    parallel rows like the reference's multigraph ``_weight_function``);
-    raises on non-positive weights, which would make the SP-DAG cyclic."""
+    parallel rows like the reference's multigraph ``_weight_function``),
+    pinned on ``cache``; raises on non-positive weights, which would make
+    the SP-DAG cyclic."""
     from linkgraph.graph import resolve_weight_column
 
     base = g.edges if g.directed else g.symmetric_edges()
-    warcs = (
+    warcs = cache.pin(
         base.filter(F.col("src") != F.col("dst"))
         .select("src", "dst", resolve_weight_column(base, weight).alias("w"))
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
-        .persist()
     )
     if warcs.filter(F.col("w") <= 0).limit(1).count():
-        warcs.unpersist()
         raise ValueError(
             "weighted betweenness requires strictly positive weights "
             "(the shortest-path DAG is only acyclic for w > 0; the "
@@ -261,7 +265,7 @@ def _weighted_betweenness(
     layers earlier — hence a pending-delta table merged per layer instead
     of the unweighted adjacent-level join).
     """
-    warcs = _weighted_arcs(g, weight)
+    warcs = _weighted_arcs(g, weight, cache)
     levels, dag = _weighted_levels_and_dag(sources, warcs, cache, max_rounds)
 
     from functools import reduce
@@ -277,8 +281,8 @@ def _weighted_betweenness(
         tgt_df = targets.select(F.col(targets.columns[0]).alias("v")).distinct()
     dag_indeg = None
     if split == "equal":
-        dag_indeg = (
-            dag.groupBy("s", "dst").agg(F.count(F.lit(1)).alias("_np")).persist()
+        dag_indeg = cache.pin(
+            dag.groupBy("s", "dst").agg(F.count(F.lit(1)).alias("_np"))
         )
 
     pending = None  # (s, v, delta) partial deltas for not-yet-processed layers
@@ -412,11 +416,17 @@ def _weighted_betweenness(
         pending = new_pending
         cache.release(levels[d])
         levels[d] = None
-    dag.unpersist()
-    if dag_indeg is not None:
-        dag_indeg.unpersist()
-    warcs.unpersist()
+    cache.release(dag)
     return acc
+
+
+def _pair_partitions(spark, n: int, k: Optional[int] = None) -> int:
+    """Shuffle partitions for a Brandes loop over ``n`` nodes from ``k``
+    sampled sources (all of them when None): its (source, node) state
+    holds up to n·k rows."""
+    sources = n if k is None else min(int(k), n)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return loop_partitions(n * sources, cap)
 
 
 def _sampled_sources(vertices, n, k, seed):
@@ -459,18 +469,126 @@ def betweenness_centrality(
     switches to 1/(n(n−1)) like ``_rescale`` with endpoints.
     """
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, betweenness double")
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n, k)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        if n == 0:
+            return spark.createDataFrame([], "id long, betweenness double")
 
-    sources, n_sources = _sampled_sources(vertices, n, k, seed)
+        sources, n_sources = _sampled_sources(vertices, n, k, seed)
 
-    if weight is not None:
-        bet_acc = _weighted_betweenness(
-            g, sources, n_sources, weight, cache, max_rounds, endpoints=endpoints
+        if weight is not None:
+            bet_acc = _weighted_betweenness(
+                g, sources, n_sources, weight, cache, max_rounds, endpoints=endpoints
+            )
+            if normalized:
+                if endpoints:
+                    scale = 1.0 / (n * (n - 1)) if n > 1 else None
+                else:
+                    scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
+            else:
+                scale = None if g.directed else 0.5
+            if scale is not None and n_sources < n:
+                scale *= n / n_sources
+            if bet_acc is None:
+                out = vertices.select("id", F.lit(0.0).alias("betweenness"))
+            else:
+                out = vertices.join(bet_acc, "id", "left").select(
+                    "id",
+                    (
+                        F.coalesce("b", F.lit(0.0))
+                        * F.lit(scale if scale is not None else 1.0)
+                    ).alias("betweenness"),
+                )
+            return cache.result(cache.truncate(out))
+
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
+
+        levels = _forward_levels(sources, arcs, cache, max_rounds)
+
+        # ---- backward: dependency accumulation level by level ------------- #
+        # Pinned-state discipline: a BFS level's delta is FINAL once computed
+        # (in the shortest-path DAG, level d-1 only receives from level d), so
+        # each level's per-node contribution folds into a running O(n)
+        # accumulator immediately and both the consumed level and the consumed
+        # delta table are released — peak pinned state is two levels + one
+        # delta + the accumulator, not the whole forward table times levels.
+        bet_acc = None  # (id, b) running CB[w] += delta[w], w != s
+        delta_next = None  # level d+1 dependencies
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]  # (s, v=w, sigma_w)
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                )
+            else:
+                lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
+            # predecessors: p at level d-1 with arc p -> w
+            pred = (
+                lvl.withColumnRenamed("v", "w")
+                .join(arcs.withColumnRenamed("dst", "w"), "w")
+                .select("s", F.col("src").alias("v"), "sigma", "delta")
+            )
+            prev = levels[d - 1].select(
+                "s", "v", F.col("sigma").alias("sigma_p")
+            )
+            contrib = (
+                pred.join(prev, ["s", "v"])
+                .select(
+                    "s",
+                    "v",
+                    (
+                        F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
+                    ).alias("c"),
+                )
+                .groupBy("s", "v")
+                .agg(F.sum("c").alias("delta"))
+            )
+            new_delta = cache.truncate(contrib)
+            # fold this level's final deltas into the accumulator
+            lvl_bet = (
+                new_delta.filter(F.col("s") != F.col("v"))
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.sum("delta").alias("b"))
+            )
+            if endpoints:
+                # _accumulate_endpoints terms, folded from this level's reach
+                # rows: +1 at each reached node v, +1 at its source s (reads
+                # lvl, so this fold precedes the level release below)
+                ep = (
+                    lvl.select(F.col("v").alias("id"))
+                    .unionByName(lvl.select(F.col("s").alias("id")))
+                    .groupBy("id")
+                    .agg(F.count(F.lit(1)).cast("double").alias("b"))
+                )
+                lvl_bet = (
+                    lvl_bet.unionByName(ep).groupBy("id").agg(F.sum("b").alias("b"))
+                )
+            if bet_acc is None:
+                bet_acc = cache.truncate(lvl_bet)
+            else:
+                folded = cache.truncate(
+                    bet_acc.unionByName(lvl_bet).groupBy("id").agg(F.sum("b").alias("b"))
+                )
+                cache.release(bet_acc)
+                bet_acc = folded
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])  # consumed; never read again
+            levels[d] = None
+            delta_next = new_delta
+
+        if bet_acc is None:
+            return vertices.select("id", F.lit(0.0).alias("betweenness"))
+
+        bet = bet_acc
+
+        # ---- rescale (betweenness.py:268 _rescale, replicated exactly) ---- #
         if normalized:
             if endpoints:
                 scale = 1.0 / (n * (n - 1)) if n > 1 else None
@@ -480,132 +598,14 @@ def betweenness_centrality(
             scale = None if g.directed else 0.5
         if scale is not None and n_sources < n:
             scale *= n / n_sources
-        if bet_acc is None:
-            out = vertices.select("id", F.lit(0.0).alias("betweenness"))
-        else:
-            out = vertices.join(bet_acc, "id", "left").select(
-                "id",
-                (
-                    F.coalesce("b", F.lit(0.0))
-                    * F.lit(scale if scale is not None else 1.0)
-                ).alias("betweenness"),
-            )
-        out = out.persist()
-        out.count()
-        vertices.unpersist()
-        return out
 
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-
-    levels = _forward_levels(sources, arcs, cache, max_rounds)
-
-    # ---- backward: dependency accumulation level by level ------------- #
-    # Pinned-state discipline: a BFS level's delta is FINAL once computed
-    # (in the shortest-path DAG, level d-1 only receives from level d), so
-    # each level's per-node contribution folds into a running O(n)
-    # accumulator immediately and both the consumed level and the consumed
-    # delta table are released — peak pinned state is two levels + one
-    # delta + the accumulator, not the whole forward table times levels.
-    bet_acc = None  # (id, b) running CB[w] += delta[w], w != s
-    delta_next = None  # level d+1 dependencies
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]  # (s, v=w, sigma_w)
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
-            )
-        else:
-            lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
-        # predecessors: p at level d-1 with arc p -> w
-        pred = (
-            lvl.withColumnRenamed("v", "w")
-            .join(arcs.withColumnRenamed("dst", "w"), "w")
-            .select("s", F.col("src").alias("v"), "sigma", "delta")
+        out = vertices.join(bet, "id", "left").select(
+            "id",
+            (F.coalesce("b", F.lit(0.0)) * F.lit(scale if scale is not None else 1.0)).alias(
+                "betweenness"
+            ),
         )
-        prev = levels[d - 1].select(
-            "s", "v", F.col("sigma").alias("sigma_p")
-        )
-        contrib = (
-            pred.join(prev, ["s", "v"])
-            .select(
-                "s",
-                "v",
-                (
-                    F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
-                ).alias("c"),
-            )
-            .groupBy("s", "v")
-            .agg(F.sum("c").alias("delta"))
-        )
-        new_delta = cache.truncate(contrib)
-        # fold this level's final deltas into the accumulator
-        lvl_bet = (
-            new_delta.filter(F.col("s") != F.col("v"))
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum("delta").alias("b"))
-        )
-        if endpoints:
-            # _accumulate_endpoints terms, folded from this level's reach
-            # rows: +1 at each reached node v, +1 at its source s (reads
-            # lvl, so this fold precedes the level release below)
-            ep = (
-                lvl.select(F.col("v").alias("id"))
-                .unionByName(lvl.select(F.col("s").alias("id")))
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).cast("double").alias("b"))
-            )
-            lvl_bet = (
-                lvl_bet.unionByName(ep).groupBy("id").agg(F.sum("b").alias("b"))
-            )
-        if bet_acc is None:
-            bet_acc = cache.truncate(lvl_bet)
-        else:
-            folded = cache.truncate(
-                bet_acc.unionByName(lvl_bet).groupBy("id").agg(F.sum("b").alias("b"))
-            )
-            cache.release(bet_acc)
-            bet_acc = folded
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])  # consumed; never read again
-        levels[d] = None
-        delta_next = new_delta
-
-    if bet_acc is None:
-        out = vertices.select("id", F.lit(0.0).alias("betweenness"))
-        arcs.unpersist()
-        return out
-
-    bet = bet_acc
-
-    # ---- rescale (betweenness.py:268 _rescale, replicated exactly) ---- #
-    if normalized:
-        if endpoints:
-            scale = 1.0 / (n * (n - 1)) if n > 1 else None
-        else:
-            scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
-    else:
-        scale = None if g.directed else 0.5
-    if scale is not None and n_sources < n:
-        scale *= n / n_sources
-
-    out = vertices.join(bet, "id", "left").select(
-        "id",
-        (F.coalesce("b", F.lit(0.0)) * F.lit(scale if scale is not None else 1.0)).alias(
-            "betweenness"
-        ),
-    )
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    return out
+        return cache.result(cache.truncate(out))
 
 
 def edge_betweenness_centrality(
@@ -632,39 +632,130 @@ def edge_betweenness_centrality(
     undirected, ``n/K`` directed (``K`` = sampled source count).
     """
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    edge_keys = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    if n == 0 or edge_keys.limit(1).count() == 0:
-        out = edge_keys.select("src", "dst", F.lit(0.0).alias("betweenness"))
-        vertices.unpersist()
-        return out
-
-    sources, n_sources = _sampled_sources(vertices, n, k, seed)
-
-    if weight is not None:
-        acc_w = _weighted_betweenness(
-            g, sources, n_sources, weight, cache, max_rounds, edges_out=True
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n, k)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        edge_keys = cache.pin(
+            g.edges.filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-        if acc_w is not None:
-            if g.directed:
-                acc_w = acc_w.select("u", F.col("v").alias("vv"), "b")
-            else:
-                acc_w = (
-                    acc_w.select(
-                        F.least("u", "v").alias("u"),
-                        F.greatest("u", "v").alias("vv"),
-                        "b",
+        if n == 0 or edge_keys.limit(1).count() == 0:
+            return edge_keys.select("src", "dst", F.lit(0.0).alias("betweenness"))
+
+        sources, n_sources = _sampled_sources(vertices, n, k, seed)
+
+        if weight is not None:
+            acc_w = _weighted_betweenness(
+                g, sources, n_sources, weight, cache, max_rounds, edges_out=True
+            )
+            if acc_w is not None:
+                if g.directed:
+                    acc_w = acc_w.select("u", F.col("v").alias("vv"), "b")
+                else:
+                    acc_w = (
+                        acc_w.select(
+                            F.least("u", "v").alias("u"),
+                            F.greatest("u", "v").alias("vv"),
+                            "b",
+                        )
+                        .groupBy("u", "vv")
+                        .agg(F.sum("b").alias("b"))
                     )
+            if normalized:
+                scale = 1.0 / (n_sources * (n - 1)) if n > 1 else None
+            else:
+                corr = 1.0 if g.directed else 2.0
+                scale = float(n) / (n_sources * corr)
+                if scale == 1.0:
+                    scale = None
+            acc_w = (
+                acc_w
+                if acc_w is not None
+                else spark.createDataFrame([], "u long, vv long, b double")
+            )
+            out = edge_keys.join(
+                acc_w,
+                (F.col("src") == F.col("u")) & (F.col("dst") == F.col("vv")),
+                "left",
+            ).select(
+                "src",
+                "dst",
+                (
+                    F.coalesce("b", F.lit(0.0))
+                    * F.lit(scale if scale is not None else 1.0)
+                ).alias("betweenness"),
+            )
+            return cache.result(cache.truncate(out))
+
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
+        )
+        levels = _forward_levels(sources, arcs, cache, max_rounds)
+
+        # ---- backward: per-arc contributions, folded level by level ------- #
+        ebet_acc = None  # (u, v, b) running per-edge accumulator
+        delta_next = None
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]  # (s, w, sigma)
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                )
+            else:
+                lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
+            prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
+            # arcs p -> w with w at level d and p at level d-1; keep BOTH ids
+            joined = (
+                lvl.withColumnRenamed("v", "w")
+                .join(arcs.withColumnRenamed("dst", "w"), "w")
+                .withColumnRenamed("src", "v")
+                .join(prev, ["s", "v"])
+                .select(
+                    "s",
+                    "v",
+                    "w",
+                    (
+                        F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
+                    ).alias("c"),
+                )
+            )
+            joined = cache.truncate(joined)
+            # per-edge fold (canonical key for undirected, the reference's
+            # single (v, w) edge entry)
+            if g.directed:
+                ukey, vkey = F.col("v"), F.col("w")
+            else:
+                ukey = F.least("v", "w")
+                vkey = F.greatest("v", "w")
+            lvl_ebet = joined.groupBy(
+                ukey.alias("u"), vkey.alias("vv")
+            ).agg(F.sum("c").alias("b"))
+            if ebet_acc is None:
+                ebet_acc = cache.truncate(lvl_ebet)
+            else:
+                folded = cache.truncate(
+                    ebet_acc.unionByName(lvl_ebet)
                     .groupBy("u", "vv")
                     .agg(F.sum("b").alias("b"))
                 )
+                cache.release(ebet_acc)
+                ebet_acc = folded
+            # node deltas for the next level down
+            new_delta = cache.truncate(
+                joined.groupBy("s", "v").agg(F.sum("c").alias("delta"))
+            )
+            cache.release(joined)
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])
+            levels[d] = None
+            delta_next = new_delta
+
+        # ---- rescale (_rescale endpoints=True, betweenness.py:455) -------- #
         if normalized:
             scale = 1.0 / (n_sources * (n - 1)) if n > 1 else None
         else:
@@ -672,131 +763,27 @@ def edge_betweenness_centrality(
             scale = float(n) / (n_sources * corr)
             if scale == 1.0:
                 scale = None
-        acc_w = (
-            acc_w
-            if acc_w is not None
+        acc = (
+            ebet_acc
+            if ebet_acc is not None
             else spark.createDataFrame([], "u long, vv long, b double")
         )
-        out = edge_keys.join(
-            acc_w,
-            (F.col("src") == F.col("u")) & (F.col("dst") == F.col("vv")),
-            "left",
-        ).select(
-            "src",
-            "dst",
-            (
-                F.coalesce("b", F.lit(0.0))
-                * F.lit(scale if scale is not None else 1.0)
-            ).alias("betweenness"),
-        )
-        out = out.persist()
-        out.count()
-        vertices.unpersist()
-        edge_keys.unpersist()
-        return out
-
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    levels = _forward_levels(sources, arcs, cache, max_rounds)
-
-    # ---- backward: per-arc contributions, folded level by level ------- #
-    ebet_acc = None  # (u, v, b) running per-edge accumulator
-    delta_next = None
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]  # (s, w, sigma)
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
+        out = (
+            edge_keys.join(
+                acc,
+                (F.col("src") == F.col("u")) & (F.col("dst") == F.col("vv")),
+                "left",
             )
-        else:
-            lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
-        prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
-        # arcs p -> w with w at level d and p at level d-1; keep BOTH ids
-        joined = (
-            lvl.withColumnRenamed("v", "w")
-            .join(arcs.withColumnRenamed("dst", "w"), "w")
-            .withColumnRenamed("src", "v")
-            .join(prev, ["s", "v"])
             .select(
-                "s",
-                "v",
-                "w",
+                "src",
+                "dst",
                 (
-                    F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
-                ).alias("c"),
+                    F.coalesce("b", F.lit(0.0))
+                    * F.lit(scale if scale is not None else 1.0)
+                ).alias("betweenness"),
             )
         )
-        joined = cache.truncate(joined)
-        # per-edge fold (canonical key for undirected, the reference's
-        # single (v, w) edge entry)
-        if g.directed:
-            ukey, vkey = F.col("v"), F.col("w")
-        else:
-            ukey = F.least("v", "w")
-            vkey = F.greatest("v", "w")
-        lvl_ebet = joined.groupBy(
-            ukey.alias("u"), vkey.alias("vv")
-        ).agg(F.sum("c").alias("b"))
-        if ebet_acc is None:
-            ebet_acc = cache.truncate(lvl_ebet)
-        else:
-            folded = cache.truncate(
-                ebet_acc.unionByName(lvl_ebet)
-                .groupBy("u", "vv")
-                .agg(F.sum("b").alias("b"))
-            )
-            cache.release(ebet_acc)
-            ebet_acc = folded
-        # node deltas for the next level down
-        new_delta = cache.truncate(
-            joined.groupBy("s", "v").agg(F.sum("c").alias("delta"))
-        )
-        cache.release(joined)
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])
-        levels[d] = None
-        delta_next = new_delta
-
-    # ---- rescale (_rescale endpoints=True, betweenness.py:455) -------- #
-    if normalized:
-        scale = 1.0 / (n_sources * (n - 1)) if n > 1 else None
-    else:
-        corr = 1.0 if g.directed else 2.0
-        scale = float(n) / (n_sources * corr)
-        if scale == 1.0:
-            scale = None
-    acc = (
-        ebet_acc
-        if ebet_acc is not None
-        else spark.createDataFrame([], "u long, vv long, b double")
-    )
-    out = (
-        edge_keys.join(
-            acc,
-            (F.col("src") == F.col("u")) & (F.col("dst") == F.col("vv")),
-            "left",
-        )
-        .select(
-            "src",
-            "dst",
-            (
-                F.coalesce("b", F.lit(0.0))
-                * F.lit(scale if scale is not None else 1.0)
-            ).alias("betweenness"),
-        )
-    )
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    edge_keys.unpersist()
-    return out
+        return cache.result(cache.truncate(out))
 
 
 def percolation_centrality(
@@ -821,135 +808,127 @@ def percolation_centrality(
     same percolation fold.
     """
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, percolation double")
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        if n == 0:
+            return spark.createDataFrame([], "id long, percolation double")
 
-    if states is not None:
-        st = states.select(
-            F.col(states.columns[0]).cast("long").alias("id"),
-            F.col(states.columns[1]).cast("double").alias("x"),
+        if states is not None:
+            st = states.select(
+                F.col(states.columns[0]).cast("long").alias("id"),
+                F.col(states.columns[1]).cast("double").alias("x"),
+            )
+        elif attribute in g.vertices.columns:
+            st = g.vertices.select(
+                "id", F.coalesce(F.col(attribute).cast("double"), F.lit(1.0)).alias("x")
+            )
+        else:
+            st = vertices.select("id", F.lit(1.0).alias("x"))
+        st = cache.pin(
+            vertices.join(st, "id", "left").select(
+                "id", F.coalesce("x", F.lit(1.0)).alias("x")
+            )
         )
-    elif attribute in g.vertices.columns:
-        st = g.vertices.select(
-            "id", F.coalesce(F.col(attribute).cast("double"), F.lit(1.0)).alias("x")
-        )
-    else:
-        st = vertices.select("id", F.lit(1.0).alias("x"))
-    st = vertices.join(st, "id", "left").select(
-        "id", F.coalesce("x", F.lit(1.0)).alias("x")
-    ).persist()
-    x_total = float(st.agg(F.sum("x")).first()[0] or 0.0)
+        x_total = float(st.agg(F.sum("x")).first()[0] or 0.0)
 
-    if weight is not None:
-        acc = _weighted_betweenness(
-            g, vertices, None, weight, cache, max_rounds,
-            percolation=(st, x_total),
+        if weight is not None:
+            acc = _weighted_betweenness(
+                g, vertices, None, weight, cache, max_rounds,
+                percolation=(st, x_total),
+            )
+            scale = 1.0 / (n - 2) if n > 2 else 1.0
+            base = (
+                acc
+                if acc is not None
+                else spark.createDataFrame([], "id long, b double")
+            )
+            out = vertices.join(base, "id", "left").select(
+                "id",
+                (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("percolation"),
+            )
+            return cache.result(cache.truncate(out))
+
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
+        levels = _forward_levels(vertices, arcs, cache, max_rounds)
+
+        st_s = F.broadcast(st.select(F.col("id").alias("s"), F.col("x").alias("x_s")))
+        st_v = F.broadcast(st.select(F.col("id").alias("v"), F.col("x").alias("x_v")))
+
+        perc_acc = None
+        delta_next = None
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                )
+            else:
+                lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
+            pred = (
+                lvl.withColumnRenamed("v", "w")
+                .join(arcs.withColumnRenamed("dst", "w"), "w")
+                .select("s", F.col("src").alias("v"), "sigma", "delta")
+            )
+            prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
+            contrib = (
+                pred.join(prev, ["s", "v"])
+                .select(
+                    "s",
+                    "v",
+                    (
+                        F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
+                    ).alias("c"),
+                )
+                .groupBy("s", "v")
+                .agg(F.sum("c").alias("delta"))
+            )
+            new_delta = cache.truncate(contrib)
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])
+            levels[d] = None
+            delta_next = new_delta
+            # weighted fold: delta(s, w) * x(s) / (x_total - x(w))
+            lvl_perc = (
+                new_delta.filter(F.col("s") != F.col("v"))
+                .join(st_s, "s")
+                .join(st_v, "v")
+                .select(
+                    F.col("v").alias("id"),
+                    (
+                        F.col("delta")
+                        * F.col("x_s")
+                        / (F.lit(x_total) - F.col("x_v"))
+                    ).alias("b"),
+                )
+                .groupBy("id")
+                .agg(F.sum("b").alias("b"))
+            )
+            if perc_acc is None:
+                perc_acc = cache.truncate(lvl_perc)
+            else:
+                folded = cache.truncate(
+                    perc_acc.unionByName(lvl_perc).groupBy("id").agg(F.sum("b").alias("b"))
+                )
+                cache.release(perc_acc)
+                perc_acc = folded
+
         scale = 1.0 / (n - 2) if n > 2 else 1.0
         base = (
-            acc
-            if acc is not None
+            perc_acc
+            if perc_acc is not None
             else spark.createDataFrame([], "id long, b double")
         )
         out = vertices.join(base, "id", "left").select(
-            "id",
-            (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("percolation"),
+            "id", (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("percolation")
         )
-        out = out.persist()
-        out.count()
-        st.unpersist()
-        vertices.unpersist()
-        return out
-
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    levels = _forward_levels(vertices, arcs, cache, max_rounds)
-
-    st_s = F.broadcast(st.select(F.col("id").alias("s"), F.col("x").alias("x_s")))
-    st_v = F.broadcast(st.select(F.col("id").alias("v"), F.col("x").alias("x_v")))
-
-    perc_acc = None
-    delta_next = None
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
-            )
-        else:
-            lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
-        pred = (
-            lvl.withColumnRenamed("v", "w")
-            .join(arcs.withColumnRenamed("dst", "w"), "w")
-            .select("s", F.col("src").alias("v"), "sigma", "delta")
-        )
-        prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
-        contrib = (
-            pred.join(prev, ["s", "v"])
-            .select(
-                "s",
-                "v",
-                (
-                    F.col("sigma_p") / F.col("sigma") * (F.lit(1.0) + F.col("delta"))
-                ).alias("c"),
-            )
-            .groupBy("s", "v")
-            .agg(F.sum("c").alias("delta"))
-        )
-        new_delta = cache.truncate(contrib)
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])
-        levels[d] = None
-        delta_next = new_delta
-        # weighted fold: delta(s, w) * x(s) / (x_total - x(w))
-        lvl_perc = (
-            new_delta.filter(F.col("s") != F.col("v"))
-            .join(st_s, "s")
-            .join(st_v, "v")
-            .select(
-                F.col("v").alias("id"),
-                (
-                    F.col("delta")
-                    * F.col("x_s")
-                    / (F.lit(x_total) - F.col("x_v"))
-                ).alias("b"),
-            )
-            .groupBy("id")
-            .agg(F.sum("b").alias("b"))
-        )
-        if perc_acc is None:
-            perc_acc = cache.truncate(lvl_perc)
-        else:
-            folded = cache.truncate(
-                perc_acc.unionByName(lvl_perc).groupBy("id").agg(F.sum("b").alias("b"))
-            )
-            cache.release(perc_acc)
-            perc_acc = folded
-
-    scale = 1.0 / (n - 2) if n > 2 else 1.0
-    base = (
-        perc_acc
-        if perc_acc is not None
-        else spark.createDataFrame([], "id long, b double")
-    )
-    out = vertices.join(base, "id", "left").select(
-        "id", (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("percolation")
-    )
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    st.unpersist()
-    return out
+        return cache.result(cache.truncate(out))
 
 
 def load_centrality(
@@ -969,15 +948,82 @@ def load_centrality(
     1/((n-1)(n-2)). ``weight=`` swaps in the weighted Dijkstra-DAG
     kernel with the same equal-split backward rule."""
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, load double")
-    if weight is not None:
-        acc = _weighted_betweenness(
-            g, vertices, None, weight, cache, max_rounds, split="equal"
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        if n == 0:
+            return spark.createDataFrame([], "id long, load double")
+        if weight is not None:
+            acc = _weighted_betweenness(
+                g, vertices, None, weight, cache, max_rounds, split="equal"
+            )
+            scale = 1.0 / ((n - 1) * (n - 2)) if (normalized and n > 2) else 1.0
+            if acc is None:
+                out = vertices.select("id", F.lit(0.0).alias("load"))
+            else:
+                out = vertices.join(acc, "id", "left").select(
+                    "id", (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("load")
+                )
+            return cache.result(cache.truncate(out))
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
+        levels = _forward_levels(vertices, arcs, cache, max_rounds)
+
+        acc = None
+        delta_next = None
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                )
+            else:
+                lvl = lvl.select("s", "v", F.lit(0.0).alias("delta"))
+            prev = levels[d - 1].select("s", F.col("v").alias("p"))
+            # DAG predecessor pairs (s, w, p): arc p -> w with p one level up
+            pairs = (
+                lvl.withColumnRenamed("v", "w")
+                .join(
+                    arcs.select(F.col("src").alias("p"), F.col("dst").alias("w")),
+                    "w",
+                )
+                .join(prev, ["s", "p"], "left_semi")
+            )
+            npred = pairs.groupBy("s", "w").agg(F.count(F.lit(1)).alias("np"))
+            contrib = (
+                pairs.join(npred, ["s", "w"])
+                .select(
+                    "s",
+                    F.col("p").alias("v"),
+                    ((F.lit(1.0) + F.col("delta")) / F.col("np")).alias("c"),
+                )
+                .groupBy("s", "v")
+                .agg(F.sum("c").alias("delta"))
+            )
+            new_delta = cache.truncate(contrib)
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])
+            levels[d] = None
+            delta_next = new_delta
+            lvl_load = (
+                new_delta.filter(F.col("s") != F.col("v"))
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.sum("delta").alias("b"))
+            )
+            if acc is None:
+                acc = cache.truncate(lvl_load)
+            else:
+                folded = cache.truncate(
+                    acc.unionByName(lvl_load).groupBy("id").agg(F.sum("b").alias("b"))
+                )
+                cache.release(acc)
+                acc = folded
+
         scale = 1.0 / ((n - 1) * (n - 2)) if (normalized and n > 2) else 1.0
         if acc is None:
             out = vertices.select("id", F.lit(0.0).alias("load"))
@@ -985,82 +1031,7 @@ def load_centrality(
             out = vertices.join(acc, "id", "left").select(
                 "id", (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("load")
             )
-        out = out.persist()
-        out.count()
-        vertices.unpersist()
-        return out
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    levels = _forward_levels(vertices, arcs, cache, max_rounds)
-
-    acc = None
-    delta_next = None
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
-            )
-        else:
-            lvl = lvl.select("s", "v", F.lit(0.0).alias("delta"))
-        prev = levels[d - 1].select("s", F.col("v").alias("p"))
-        # DAG predecessor pairs (s, w, p): arc p -> w with p one level up
-        pairs = (
-            lvl.withColumnRenamed("v", "w")
-            .join(
-                arcs.select(F.col("src").alias("p"), F.col("dst").alias("w")),
-                "w",
-            )
-            .join(prev, ["s", "p"], "left_semi")
-        )
-        npred = pairs.groupBy("s", "w").agg(F.count(F.lit(1)).alias("np"))
-        contrib = (
-            pairs.join(npred, ["s", "w"])
-            .select(
-                "s",
-                F.col("p").alias("v"),
-                ((F.lit(1.0) + F.col("delta")) / F.col("np")).alias("c"),
-            )
-            .groupBy("s", "v")
-            .agg(F.sum("c").alias("delta"))
-        )
-        new_delta = cache.truncate(contrib)
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])
-        levels[d] = None
-        delta_next = new_delta
-        lvl_load = (
-            new_delta.filter(F.col("s") != F.col("v"))
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum("delta").alias("b"))
-        )
-        if acc is None:
-            acc = cache.truncate(lvl_load)
-        else:
-            folded = cache.truncate(
-                acc.unionByName(lvl_load).groupBy("id").agg(F.sum("b").alias("b"))
-            )
-            cache.release(acc)
-            acc = folded
-
-    scale = 1.0 / ((n - 1) * (n - 2)) if (normalized and n > 2) else 1.0
-    if acc is None:
-        out = vertices.select("id", F.lit(0.0).alias("load"))
-    else:
-        out = vertices.join(acc, "id", "left").select(
-            "id", (F.coalesce("b", F.lit(0.0)) * F.lit(scale)).alias("load")
-        )
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    return out
+        return cache.result(cache.truncate(out))
 
 
 def edge_load_centrality(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFrame:
@@ -1068,87 +1039,85 @@ def edge_load_centrality(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFram
     of the equal-split flow: edge (p, w) carries (1 + delta(w))/|preds(w)|
     per source. Unnormalized (the reference exposes no normalization)."""
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    levels = _forward_levels(vertices, arcs, cache, max_rounds)
-    acc = None
-    delta_next = None
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
-            )
-        else:
-            lvl = lvl.select("s", "v", F.lit(0.0).alias("delta"))
-        prev = levels[d - 1].select("s", F.col("v").alias("p"))
-        pairs = (
-            lvl.withColumnRenamed("v", "w")
-            .join(
-                arcs.select(F.col("src").alias("p"), F.col("dst").alias("w")),
-                "w",
-            )
-            .join(prev, ["s", "p"], "left_semi")
+    with SuperstepCache(spark) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-        npred = pairs.groupBy("s", "w").agg(F.count(F.lit(1)).alias("np"))
-        flows = pairs.join(npred, ["s", "w"]).select(
-            "s", "p", "w",
-            ((F.lit(1.0) + F.col("delta")) / F.col("np")).alias("f"),
-        )
-        # materialize BOTH consumers of `flows` before releasing the level
-        # tables they read from (release after would truncate live lineage)
-        edge_lvl = cache.truncate(
-            flows.groupBy(F.col("p").alias("u"), F.col("w").alias("v")).agg(
-                F.sum("f").alias("b")
-            )
-        )
-        contrib = flows.groupBy("s", F.col("p").alias("v")).agg(
-            F.sum("f").alias("delta")
-        )
-        new_delta = cache.truncate(contrib)
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])
-        levels[d] = None
-        delta_next = new_delta
-        if acc is None:
-            acc = cache.truncate(edge_lvl)
-        else:
-            folded = cache.truncate(
-                acc.unionByName(edge_lvl)
-                .groupBy("u", "v")
-                .agg(F.sum("b").alias("b"))
-            )
-            cache.release(acc)
-            acc = folded
-    if acc is None:
-        out = spark.createDataFrame([], "u long, v long, load double")
-    else:
-        if not g.directed:
-            # the reference reports each undirected edge's TOTAL two-way
-            # flow (same value on both orientations); one canonical row
-            # here, u < v
-            acc = (
-                acc.select(
-                    F.least("u", "v").alias("u"),
-                    F.greatest("u", "v").alias("v"),
-                    "b",
+        levels = _forward_levels(vertices, arcs, cache, max_rounds)
+        acc = None
+        delta_next = None
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")
                 )
-                .groupBy("u", "v")
-                .agg(F.sum("b").alias("b"))
+            else:
+                lvl = lvl.select("s", "v", F.lit(0.0).alias("delta"))
+            prev = levels[d - 1].select("s", F.col("v").alias("p"))
+            pairs = (
+                lvl.withColumnRenamed("v", "w")
+                .join(
+                    arcs.select(F.col("src").alias("p"), F.col("dst").alias("w")),
+                    "w",
+                )
+                .join(prev, ["s", "p"], "left_semi")
             )
-        out = acc.select("u", "v", F.col("b").alias("load")).persist()
-        out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    return out
+            npred = pairs.groupBy("s", "w").agg(F.count(F.lit(1)).alias("np"))
+            flows = pairs.join(npred, ["s", "w"]).select(
+                "s", "p", "w",
+                ((F.lit(1.0) + F.col("delta")) / F.col("np")).alias("f"),
+            )
+            # materialize BOTH consumers of `flows` before releasing the level
+            # tables they read from (release after would truncate live lineage)
+            edge_lvl = cache.truncate(
+                flows.groupBy(F.col("p").alias("u"), F.col("w").alias("v")).agg(
+                    F.sum("f").alias("b")
+                )
+            )
+            contrib = flows.groupBy("s", F.col("p").alias("v")).agg(
+                F.sum("f").alias("delta")
+            )
+            new_delta = cache.truncate(contrib)
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])
+            levels[d] = None
+            delta_next = new_delta
+            if acc is None:
+                acc = cache.truncate(edge_lvl)
+            else:
+                folded = cache.truncate(
+                    acc.unionByName(edge_lvl)
+                    .groupBy("u", "v")
+                    .agg(F.sum("b").alias("b"))
+                )
+                cache.release(acc)
+                acc = folded
+        if acc is None:
+            out = spark.createDataFrame([], "u long, v long, load double")
+        else:
+            if not g.directed:
+                # the reference reports each undirected edge's TOTAL two-way
+                # flow (same value on both orientations); one canonical row
+                # here, u < v
+                acc = (
+                    acc.select(
+                        F.least("u", "v").alias("u"),
+                        F.greatest("u", "v").alias("v"),
+                        "b",
+                    )
+                    .groupBy("u", "v")
+                    .agg(F.sum("b").alias("b"))
+                )
+            out = cache.result(
+                cache.truncate(acc.select("u", "v", F.col("b").alias("load")))
+            )
+        return out
 
 
 def _subset_betweenness(
@@ -1165,134 +1134,129 @@ def _subset_betweenness(
     sources (``betweenness_subset.py:96`` ``_single_source_shortest_
     path_basic`` + ``_accumulate_subset``)."""
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    src_df = spark.createDataFrame(
-        [(int(x),) for x in sources], "id long"
-    ).join(vertices, "id", "left_semi")
-    tgt_df = spark.createDataFrame(
-        [(int(x),) for x in targets], "id long"
-    ).select(F.col("id").alias("v")).distinct()
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    levels = _forward_levels(src_df, arcs, cache, max_rounds)
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        src_df = spark.createDataFrame(
+            [(int(x),) for x in sources], "id long"
+        ).join(vertices, "id", "left_semi")
+        tgt_df = spark.createDataFrame(
+            [(int(x),) for x in targets], "id long"
+        ).select(F.col("id").alias("v")).distinct()
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
+        )
+        levels = _forward_levels(src_df, arcs, cache, max_rounds)
 
-    acc = None  # nodes: (id, b); edges: (u, v, b)
-    delta_next = None
-    for d in range(len(levels) - 1, 0, -1):
-        lvl = levels[d]
-        if delta_next is not None:
-            lvl = lvl.join(delta_next, ["s", "v"], "left").select(
-                "s", "v", "sigma",
-                F.coalesce("delta", F.lit(0.0)).alias("delta"),
-            )
-        else:
-            lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
-        # target seed: w contributes (t_hit + delta)
-        lvl = lvl.join(
-            tgt_df.withColumn("_t", F.lit(1.0)), "v", "left"
-        ).select(
-            "s", "v", "sigma",
-            (F.col("delta") + F.coalesce("_t", F.lit(0.0))).alias("load"),
-        )
-        pred = (
-            lvl.withColumnRenamed("v", "w")
-            .join(arcs.withColumnRenamed("dst", "w"), "w")
-            .select("s", F.col("src").alias("v"), "sigma", "load", "w")
-        )
-        prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
-        flows = pred.join(prev, ["s", "v"]).select(
-            "s", "v", "w",
-            (F.col("sigma_p") / F.col("sigma") * F.col("load")).alias("c"),
-        )
-        if edges_out:
-            edge_lvl = cache.truncate(
-                flows.groupBy(F.col("v").alias("u"), F.col("w").alias("vv"))
-                .agg(F.sum("c").alias("b"))
-                .select(F.col("u"), F.col("vv").alias("v"), "b")
-            )
-        contrib = flows.groupBy("s", "v").agg(F.sum("c").alias("delta"))
-        new_delta = cache.truncate(contrib)
-        if delta_next is not None:
-            cache.release(delta_next)
-        cache.release(levels[d])
-        levels[d] = None
-        delta_next = new_delta
-        if edges_out:
-            lvl_acc = edge_lvl
-            keys = ["u", "v"]
-        else:
-            lvl_acc = (
-                new_delta.filter(F.col("s") != F.col("v"))
-                .groupBy(F.col("v").alias("id"))
-                .agg(F.sum("delta").alias("b"))
-            )
-            keys = ["id"]
-        if acc is None:
-            acc = cache.truncate(lvl_acc)
-        else:
-            folded = cache.truncate(
-                acc.unionByName(lvl_acc).groupBy(*keys).agg(F.sum("b").alias("b"))
-            )
-            cache.release(acc)
-            acc = folded
-
-    # rescale: the subset forms reuse the standard _rescale/_rescale_e —
-    # nodes: 1/((n-1)(n-2)) normalized; edges: 1/(n(n-1)); undirected
-    # unnormalized halves in both
-    if normalized:
-        if edges_out:
-            scale = 1.0 / (n * (n - 1)) if n > 1 else None
-        else:
-            scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
-    else:
-        scale = None if g.directed else 0.5
-    if edges_out:
-        if acc is None:
-            out = spark.createDataFrame([], "u long, v long, betweenness double")
-        else:
-            res = acc
-            if not g.directed:
-                res = (
-                    res.select(
-                        F.least("u", "v").alias("u"),
-                        F.greatest("u", "v").alias("v"),
-                        "b",
-                    )
-                    .groupBy("u", "v")
-                    .agg(F.sum("b").alias("b"))
+        acc = None  # nodes: (id, b); edges: (u, v, b)
+        delta_next = None
+        for d in range(len(levels) - 1, 0, -1):
+            lvl = levels[d]
+            if delta_next is not None:
+                lvl = lvl.join(delta_next, ["s", "v"], "left").select(
+                    "s", "v", "sigma",
+                    F.coalesce("delta", F.lit(0.0)).alias("delta"),
                 )
-                # both orientations were accumulated; the reference reports
-                # the per-edge total once (no halving in its edge-subset
-                # rescale beyond the explicit scale)
-            out = res.select(
-                "u", "v",
-                (F.col("b") * F.lit(scale if scale is not None else 1.0)).alias(
-                    "betweenness"
-                ),
+            else:
+                lvl = lvl.select("s", "v", "sigma", F.lit(0.0).alias("delta"))
+            # target seed: w contributes (t_hit + delta)
+            lvl = lvl.join(
+                tgt_df.withColumn("_t", F.lit(1.0)), "v", "left"
+            ).select(
+                "s", "v", "sigma",
+                (F.col("delta") + F.coalesce("_t", F.lit(0.0))).alias("load"),
             )
-    else:
-        if acc is None:
-            out = vertices.select("id", F.lit(0.0).alias("betweenness"))
+            pred = (
+                lvl.withColumnRenamed("v", "w")
+                .join(arcs.withColumnRenamed("dst", "w"), "w")
+                .select("s", F.col("src").alias("v"), "sigma", "load", "w")
+            )
+            prev = levels[d - 1].select("s", "v", F.col("sigma").alias("sigma_p"))
+            flows = pred.join(prev, ["s", "v"]).select(
+                "s", "v", "w",
+                (F.col("sigma_p") / F.col("sigma") * F.col("load")).alias("c"),
+            )
+            if edges_out:
+                edge_lvl = cache.truncate(
+                    flows.groupBy(F.col("v").alias("u"), F.col("w").alias("vv"))
+                    .agg(F.sum("c").alias("b"))
+                    .select(F.col("u"), F.col("vv").alias("v"), "b")
+                )
+            contrib = flows.groupBy("s", "v").agg(F.sum("c").alias("delta"))
+            new_delta = cache.truncate(contrib)
+            if delta_next is not None:
+                cache.release(delta_next)
+            cache.release(levels[d])
+            levels[d] = None
+            delta_next = new_delta
+            if edges_out:
+                lvl_acc = edge_lvl
+                keys = ["u", "v"]
+            else:
+                lvl_acc = (
+                    new_delta.filter(F.col("s") != F.col("v"))
+                    .groupBy(F.col("v").alias("id"))
+                    .agg(F.sum("delta").alias("b"))
+                )
+                keys = ["id"]
+            if acc is None:
+                acc = cache.truncate(lvl_acc)
+            else:
+                folded = cache.truncate(
+                    acc.unionByName(lvl_acc).groupBy(*keys).agg(F.sum("b").alias("b"))
+                )
+                cache.release(acc)
+                acc = folded
+
+        # rescale: the subset forms reuse the standard _rescale/_rescale_e —
+        # nodes: 1/((n-1)(n-2)) normalized; edges: 1/(n(n-1)); undirected
+        # unnormalized halves in both
+        if normalized:
+            if edges_out:
+                scale = 1.0 / (n * (n - 1)) if n > 1 else None
+            else:
+                scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
         else:
-            out = vertices.join(acc, "id", "left").select(
-                "id",
-                (
-                    F.coalesce("b", F.lit(0.0))
-                    * F.lit(scale if scale is not None else 1.0)
-                ).alias("betweenness"),
-            )
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    vertices.unpersist()
-    return out
+            scale = None if g.directed else 0.5
+        if edges_out:
+            if acc is None:
+                out = spark.createDataFrame([], "u long, v long, betweenness double")
+            else:
+                res = acc
+                if not g.directed:
+                    res = (
+                        res.select(
+                            F.least("u", "v").alias("u"),
+                            F.greatest("u", "v").alias("v"),
+                            "b",
+                        )
+                        .groupBy("u", "v")
+                        .agg(F.sum("b").alias("b"))
+                    )
+                    # both orientations were accumulated; the reference reports
+                    # the per-edge total once (no halving in its edge-subset
+                    # rescale beyond the explicit scale)
+                out = res.select(
+                    "u", "v",
+                    (F.col("b") * F.lit(scale if scale is not None else 1.0)).alias(
+                        "betweenness"
+                    ),
+                )
+        else:
+            if acc is None:
+                out = vertices.select("id", F.lit(0.0).alias("betweenness"))
+            else:
+                out = vertices.join(acc, "id", "left").select(
+                    "id",
+                    (
+                        F.coalesce("b", F.lit(0.0))
+                        * F.lit(scale if scale is not None else 1.0)
+                    ).alias("betweenness"),
+                )
+        return cache.result(cache.truncate(out))
 
 
 def betweenness_centrality_subset(
@@ -1307,34 +1271,31 @@ def betweenness_centrality_subset(
             g, sources, targets, normalized, edges_out=False
         )
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    src_df = spark.createDataFrame(
-        [(int(x),) for x in sources], "id long"
-    ).join(vertices, "id", "left_semi")
-    tgt_df = spark.createDataFrame([(int(x),) for x in targets], "id long")
-    acc = _weighted_betweenness(
-        g, src_df, None, weight, cache, 10_000, targets=tgt_df, edges_out=False
-    )
-    if normalized:
-        scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
-    else:
-        scale = None if g.directed else 0.5
-    if acc is None:
-        out = vertices.select("id", F.lit(0.0).alias("betweenness"))
-    else:
-        out = vertices.join(acc, "id", "left").select(
-            "id",
-            (
-                F.coalesce("b", F.lit(0.0))
-                * F.lit(scale if scale is not None else 1.0)
-            ).alias("betweenness"),
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        src_df = spark.createDataFrame(
+            [(int(x),) for x in sources], "id long"
+        ).join(vertices, "id", "left_semi")
+        tgt_df = spark.createDataFrame([(int(x),) for x in targets], "id long")
+        acc = _weighted_betweenness(
+            g, src_df, None, weight, cache, 10_000, targets=tgt_df, edges_out=False
         )
-    out = out.persist()
-    out.count()
-    vertices.unpersist()
-    return out
+        if normalized:
+            scale = 1.0 / ((n - 1) * (n - 2)) if n > 2 else None
+        else:
+            scale = None if g.directed else 0.5
+        if acc is None:
+            out = vertices.select("id", F.lit(0.0).alias("betweenness"))
+        else:
+            out = vertices.join(acc, "id", "left").select(
+                "id",
+                (
+                    F.coalesce("b", F.lit(0.0))
+                    * F.lit(scale if scale is not None else 1.0)
+                ).alias("betweenness"),
+            )
+        return cache.result(cache.truncate(out))
 
 
 def edge_betweenness_centrality_subset(
@@ -1347,43 +1308,45 @@ def edge_betweenness_centrality_subset(
             g, sources, targets, normalized, edges_out=True
         )
     spark = g.spark
-    cache = SuperstepCache(spark)
-    vertices = g.vertices.select("id").persist()
-    n = vertices.count()
-    src_df = spark.createDataFrame(
-        [(int(x),) for x in sources], "id long"
-    ).join(vertices, "id", "left_semi")
-    tgt_df = spark.createDataFrame([(int(x),) for x in targets], "id long")
-    acc = _weighted_betweenness(
-        g, src_df, None, weight, cache, 10_000, targets=tgt_df, edges_out=True
-    )
-    if normalized:
-        scale = 1.0 / (n * (n - 1)) if n > 1 else None
-    else:
-        scale = None if g.directed else 0.5
-    if acc is None:
-        out = spark.createDataFrame([], "u long, v long, betweenness double")
-    else:
-        if not g.directed:
-            acc = (
-                acc.select(
-                    F.least("u", "v").alias("u"),
-                    F.greatest("u", "v").alias("v"),
-                    "b",
+    n = g.number_of_nodes()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        vertices = cache.pin(g.vertices.select("id"))
+        src_df = spark.createDataFrame(
+            [(int(x),) for x in sources], "id long"
+        ).join(vertices, "id", "left_semi")
+        tgt_df = spark.createDataFrame([(int(x),) for x in targets], "id long")
+        acc = _weighted_betweenness(
+            g, src_df, None, weight, cache, 10_000, targets=tgt_df, edges_out=True
+        )
+        if normalized:
+            scale = 1.0 / (n * (n - 1)) if n > 1 else None
+        else:
+            scale = None if g.directed else 0.5
+        if acc is None:
+            out = spark.createDataFrame([], "u long, v long, betweenness double")
+        else:
+            if not g.directed:
+                acc = (
+                    acc.select(
+                        F.least("u", "v").alias("u"),
+                        F.greatest("u", "v").alias("v"),
+                        "b",
+                    )
+                    .groupBy("u", "v")
+                    .agg(F.sum("b").alias("b"))
                 )
-                .groupBy("u", "v")
-                .agg(F.sum("b").alias("b"))
+            out = cache.result(
+                cache.truncate(
+                    acc.select(
+                        "u",
+                        "v",
+                        (F.col("b") * F.lit(scale if scale is not None else 1.0)).alias(
+                            "betweenness"
+                        ),
+                    )
+                )
             )
-        out = acc.select(
-            "u",
-            "v",
-            (F.col("b") * F.lit(scale if scale is not None else 1.0)).alias(
-                "betweenness"
-            ),
-        ).persist()
-        out.count()
-    vertices.unpersist()
-    return out
+        return out
 
 
 def _ids_df(g: SparkGraph, C) -> DataFrame:
@@ -1423,115 +1386,103 @@ def group_betweenness_centrality(
     compares weighted distances with the same exact-sum semantics.
     """
     spark = g.spark
-    c_ids = _ids_df(g, C).persist()
-    missing = c_ids.join(g.vertices.select("id"), "id", "left_anti")
-    if missing.limit(1).count():
-        from linkgraph.exceptions import NodeNotFound
-
-        raise NodeNotFound("The node(s) in C are not in G.")
     n = g.number_of_nodes()
-    c = c_ids.count()
-    cache = SuperstepCache(spark)
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    outside = g.vertices.select("id").join(c_ids, "id", "left_anti").persist()
+    with SuperstepCache(spark, partitions=_pair_partitions(spark, n)) as cache:
+        c_ids = cache.pin(_ids_df(g, C))
+        missing = c_ids.join(g.vertices.select("id"), "id", "left_anti")
+        if missing.limit(1).count():
+            from linkgraph.exceptions import NodeNotFound
 
-    if weight is not None:
-        warcs = _weighted_arcs(g, weight)
-
-        def _wfwd(srcs, arc_tbl):
-            levels, dag = _weighted_levels_and_dag(srcs, arc_tbl, cache, 10_000)
-            dag.unpersist()
-            from functools import reduce
-
-            return reduce(
-                lambda a, b: a.unionByName(b),
-                (lvl.select("s", "v", "dist", "sigma") for lvl in levels),
-            )
-
-        levels_full = None
-        full = _wfwd(outside, warcs).filter(F.col("dist") > 0)
-        warcs_avoid = (
-            warcs.join(c_ids.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(c_ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .persist()
+            raise NodeNotFound("The node(s) in C are not in G.")
+        c = c_ids.count()
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-        avoid = (
-            _wfwd(outside, warcs_avoid)
-            .filter(F.col("dist") > 0)
-            .select(
-                "s", "v",
-                F.col("dist").alias("dist_a"),
-                F.col("sigma").alias("sigma_a"),
-            )
-        )
-        warcs_avoid.unpersist()
-    else:
-        levels_full = _forward_levels(outside, arcs, cache, 10_000)
-        full = None
-        for lvl in levels_full:
-            part = lvl.filter(F.col("dist") > 0).select("s", "v", "dist", "sigma")
-            full = part if full is None else full.unionByName(part)
+        outside = cache.pin(g.vertices.select("id").join(c_ids, "id", "left_anti"))
 
-        arcs_avoid = (
-            arcs.join(c_ids.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(c_ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .persist()
-        )
-        levels_avoid = _forward_levels(outside, arcs_avoid, cache, 10_000)
-        avoid = None
-        for lvl in levels_avoid:
-            part = lvl.filter(F.col("dist") > 0).select(
-                "s", "v", F.col("dist").alias("dist_a"), F.col("sigma").alias("sigma_a")
-            )
-            avoid = part if avoid is None else avoid.unionByName(part)
-    # restrict targets to outside-the-group nodes
-    full = full.join(outside.withColumnRenamed("id", "v"), "v", "left_semi")
+        if weight is not None:
+            warcs = _weighted_arcs(g, weight, cache)
 
-    joined = full.join(avoid, ["s", "v"], "left").select(
-        (
+            def _wfwd(srcs, arc_tbl):
+                levels, dag = _weighted_levels_and_dag(srcs, arc_tbl, cache, 10_000)
+                cache.release(dag)
+                from functools import reduce
+
+                return reduce(
+                    lambda a, b: a.unionByName(b),
+                    (lvl.select("s", "v", "dist", "sigma") for lvl in levels),
+                )
+
+            levels_full = None
+            full = _wfwd(outside, warcs).filter(F.col("dist") > 0)
+            warcs_avoid = cache.pin(
+                warcs.join(c_ids.withColumnRenamed("id", "src"), "src", "left_anti")
+                .join(c_ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
+            )
+            avoid = (
+                _wfwd(outside, warcs_avoid)
+                .filter(F.col("dist") > 0)
+                .select(
+                    "s", "v",
+                    F.col("dist").alias("dist_a"),
+                    F.col("sigma").alias("sigma_a"),
+                )
+            )
+        else:
+            levels_full = _forward_levels(outside, arcs, cache, 10_000)
+            full = None
+            for lvl in levels_full:
+                part = lvl.filter(F.col("dist") > 0).select("s", "v", "dist", "sigma")
+                full = part if full is None else full.unionByName(part)
+
+            arcs_avoid = cache.pin(
+                arcs.join(c_ids.withColumnRenamed("id", "src"), "src", "left_anti")
+                .join(c_ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
+            )
+            levels_avoid = _forward_levels(outside, arcs_avoid, cache, 10_000)
+            avoid = None
+            for lvl in levels_avoid:
+                part = lvl.filter(F.col("dist") > 0).select(
+                    "s", "v", F.col("dist").alias("dist_a"), F.col("sigma").alias("sigma_a")
+                )
+                avoid = part if avoid is None else avoid.unionByName(part)
+        # restrict targets to outside-the-group nodes
+        full = full.join(outside.withColumnRenamed("id", "v"), "v", "left_semi")
+
+        joined = full.join(avoid, ["s", "v"], "left").select(
             (
-                F.col("sigma")
-                - F.when(
-                    F.col("dist_a") == F.col("dist"), F.col("sigma_a")
-                ).otherwise(F.lit(0.0))
-            )
-            / F.col("sigma")
-        ).alias("frac")
-    )
-    total = joined.agg(F.sum("frac")).first()[0] or 0.0
+                (
+                    F.col("sigma")
+                    - F.when(
+                        F.col("dist_a") == F.col("dist"), F.col("sigma_a")
+                    ).otherwise(F.lit(0.0))
+                )
+                / F.col("sigma")
+            ).alias("frac")
+        )
+        total = joined.agg(F.sum("frac")).first()[0] or 0.0
 
-    if endpoints:
-        # reachability FROM each group node over the full graph
-        reach = _forward_levels(c_ids, arcs, cache, 10_000)
-        scale = 0.0
-        for lvl in reach:
-            part = lvl.filter(F.col("dist") > 0)
-            in_g = part.join(
-                c_ids.withColumnRenamed("id", "v"), "v", "left_semi"
-            ).count()
-            tot = part.count()
-            scale += in_g * 1.0 + (tot - in_g) * 2.0
-        total += scale
-
-    arcs.unpersist()
-    if weight is not None:
-        warcs.unpersist()
-    else:
-        arcs_avoid.unpersist()
-    outside.unpersist()
-    c_ids.unpersist()
-    if normalized:
-        denom = (n - c) * (n - c - 1)
-        return float(total) / denom if denom > 0 else 0.0
-    if not g.directed:
-        return float(total) / 2.0
-    return float(total)
+        if endpoints:
+            # reachability FROM each group node over the full graph
+            reach = _forward_levels(c_ids, arcs, cache, 10_000)
+            scale = 0.0
+            for lvl in reach:
+                part = lvl.filter(F.col("dist") > 0)
+                in_g = part.join(
+                    c_ids.withColumnRenamed("id", "v"), "v", "left_semi"
+                ).count()
+                tot = part.count()
+                scale += in_g * 1.0 + (tot - in_g) * 2.0
+            total += scale
+        if normalized:
+            denom = (n - c) * (n - c - 1)
+            return float(total) / denom if denom > 0 else 0.0
+        if not g.directed:
+            return float(total) / 2.0
+        return float(total)
 
 
 def prominent_group(
@@ -1558,11 +1509,11 @@ def prominent_group(
     from collections import deque
 
     if weight is not None:
-        warcs = _weighted_arcs(g, weight)
+        with SuperstepCache(g.spark) as cache:
+            warcs = _weighted_arcs(g, weight, cache).collect()
         wadj: dict = {}
-        for r in warcs.collect():
+        for r in warcs:
             wadj.setdefault(r["src"], {})[r["dst"]] = float(r["w"])
-        warcs.unpersist()
         adj = {u: set(vs) for u, vs in wadj.items()}
     else:
         arcs = (

@@ -469,46 +469,47 @@ def to_vertex_cover(g: SparkGraph, matching: DataFrame, top_nodes: DataFrame) ->
     cover = (top − Z) ∪ (bottom ∩ Z). Alternating reachability is one
     distributed BFS over (unmatched-direction top→bottom, matched-direction
     bottom→top) arcs."""
-    from linkgraph.iterutils import SuperstepCache
+    from linkgraph.iterutils import SuperstepCache, row_count
 
-    spark = g.spark
-    top = top_nodes.select(
-        F.col(top_nodes.columns[0]).cast("long").alias("id")
-    ).persist()
-    verts = g.vertices.select("id")
-    bottom = verts.join(top, "id", "left_anti")
-    m = matching.select(
-        F.col(matching.columns[0]).cast("long").alias("u"),
-        F.col(matching.columns[1]).cast("long").alias("v"),
-    ).persist()
-    arcs = g.symmetric_edges().select("src", "dst")
-    tb = arcs.join(top.withColumnRenamed("id", "src"), "src", "left_semi").join(
-        bottom.withColumnRenamed("id", "dst"), "dst", "left_semi"
-    )
-    unmatched_fwd = tb.join(m.withColumnRenamed("u", "src").withColumnRenamed("v", "dst"), ["src", "dst"], "left_anti")
-    matched_back = m.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    walk = unmatched_fwd.unionByName(matched_back).persist()
-    free_top = top.join(m.select(F.col("u").alias("id")), "id", "left_anti")
-    cache = SuperstepCache(spark)
-    seen = cache.truncate(free_top.select("id"))
-    frontier = seen
-    while True:
-        nxt = cache.truncate(
-            walk.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(seen, "id", "left_anti")
+    with SuperstepCache(g.spark) as cache:
+        top = cache.pin(
+            top_nodes.select(F.col(top_nodes.columns[0]).cast("long").alias("id"))
         )
-        if nxt.limit(1).count() == 0:
-            break
-        seen = cache.truncate(seen.unionByName(nxt))
-        frontier = nxt
-    z = seen.localCheckpoint(eager=True)
-    cover = top.join(z, "id", "left_anti").unionByName(
-        bottom.join(z, "id", "left_semi")
-    )
-    walk.unpersist()
-    return cover
+        verts = g.vertices.select("id")
+        bottom = verts.join(top, "id", "left_anti")
+        m = cache.pin(
+            matching.select(
+                F.col(matching.columns[0]).cast("long").alias("u"),
+                F.col(matching.columns[1]).cast("long").alias("v"),
+            )
+        )
+        arcs = g.symmetric_edges().select("src", "dst")
+        tb = arcs.join(top.withColumnRenamed("id", "src"), "src", "left_semi").join(
+            bottom.withColumnRenamed("id", "dst"), "dst", "left_semi"
+        )
+        unmatched_fwd = tb.join(m.withColumnRenamed("u", "src").withColumnRenamed("v", "dst"), ["src", "dst"], "left_anti")
+        matched_back = m.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        walk = cache.pin(unmatched_fwd.unionByName(matched_back))
+        free_top = top.join(m.select(F.col("u").alias("id")), "id", "left_anti")
+        seen = cache.truncate(free_top.select("id"))
+        frontier = seen
+        while True:
+            nxt, found = cache.truncate(
+                walk.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(seen, "id", "left_anti"),
+                retire=None if frontier is seen else frontier,
+                figures=row_count(),
+            )
+            if found["rows"] == 0:
+                break
+            seen = cache.truncate(seen.unionByName(nxt), retire=seen)
+            frontier = nxt
+        cover = top.join(seen, "id", "left_anti").unionByName(
+            bottom.join(seen, "id", "left_semi")
+        )
+        return cache.result(cover)
 
 
 def latapy_clustering(g: SparkGraph, *, mode: str = "dot") -> DataFrame:

@@ -44,152 +44,175 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, loop_partitions, row_count
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 
 _VROOT = -(2**61)
 
 
-def _rooted(edges: DataFrame, n0: int, root: int, spark) -> DataFrame:
+def _rooted(
+    edges: DataFrame, n0: int, root: int, spark, spanning: bool = False
+) -> DataFrame:
     """Contraction + expansion. ``edges``: (src, dst, w, ow) no self-loops,
     w = working weight (negated for maximization), ow = original weight.
-    Returns the selected original arcs (ou, ov, ow)."""
-    from linkgraph.algos.components import connected_components
+    Returns the selected original arcs (src, dst, weight). ``spanning``
+    raises unless exactly one selected arc leaves ``root`` (the
+    virtual-root reduction's test for a spanning arborescence). The
+    loop's shuffles are sized by the ``n0`` nodes."""
+    from linkgraph.algos.components import _components
 
-    cache = SuperstepCache(spark)
-    arcs = cache.truncate(
-        edges.groupBy("src", "dst")
-        .agg(F.min(F.struct("w", "ow")).alias("m"))
-        .select(
-            F.col("src").alias("u"),
-            F.col("dst").alias("v"),
-            F.col("m.w").alias("w"),
-            F.col("src").alias("ou"),
-            F.col("dst").alias("ov"),
-            F.col("m.ow").alias("ow"),
-            F.col("dst").alias("enter"),
-        )
-    )
-    n_nodes = n0
-    levels: list[tuple[DataFrame, DataFrame, DataFrame]] = []
-
-    while True:
-        picks = cache.truncate(
-            arcs.filter(F.col("v") != root)
-            .groupBy("v")
-            .agg(F.min(F.struct("w", "ou", "ov", "u", "ow", "enter")).alias("m"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with SuperstepCache(spark, partitions=loop_partitions(n0, cap)) as loop:
+        arcs = loop.truncate(
+            edges.groupBy("src", "dst")
+            .agg(F.min(F.struct("w", "ow")).alias("m"))
             .select(
-                "v",
-                F.col("m.u").alias("u"),
+                F.col("src").alias("u"),
+                F.col("dst").alias("v"),
                 F.col("m.w").alias("w"),
-                F.col("m.ou").alias("ou"),
-                F.col("m.ov").alias("ov"),
+                F.col("src").alias("ou"),
+                F.col("dst").alias("ov"),
                 F.col("m.ow").alias("ow"),
-                F.col("m.enter").alias("enter"),
+                F.col("dst").alias("enter"),
             )
         )
-        if picks.count() < n_nodes - 1:
-            raise NetworkXError("No spanning arborescence in G.")
+        n_nodes = n0
+        levels: list[tuple[DataFrame, DataFrame, DataFrame]] = []
 
-        # cycle nodes = image of the 2^K-step ancestor map, root excluded
-        anc = cache.truncate(
-            picks.select("v", F.col("u").alias("a")).unionByName(
-                spark.createDataFrame([(int(root), int(root))], "v long, a long")
+        while True:
+            picks, seen = loop.truncate(
+                arcs.filter(F.col("v") != root)
+                .groupBy("v")
+                .agg(F.min(F.struct("w", "ou", "ov", "u", "ow", "enter")).alias("m"))
+                .select(
+                    "v",
+                    F.col("m.u").alias("u"),
+                    F.col("m.w").alias("w"),
+                    F.col("m.ou").alias("ou"),
+                    F.col("m.ov").alias("ov"),
+                    F.col("m.ow").alias("ow"),
+                    F.col("m.enter").alias("enter"),
+                ),
+                figures=row_count(),
             )
-        )
-        for _ in range(max(1, int(n_nodes).bit_length() + 1)):
-            anc = cache.truncate(
-                anc.join(
-                    anc.select(F.col("v").alias("a"), F.col("a").alias("a2")),
-                    "a",
-                ).select("v", F.col("a2").alias("a")),
+            if seen["rows"] < n_nodes - 1:
+                raise NetworkXError("No spanning arborescence in G.")
+
+            # cycle nodes = image of the 2^K-step ancestor map, root excluded
+            anc = loop.truncate(
+                picks.select("v", F.col("u").alias("a")).unionByName(
+                    spark.createDataFrame([(int(root), int(root))], "v long, a long")
+                )
+            )
+            for _ in range(max(1, int(n_nodes).bit_length() + 1)):
+                anc = loop.truncate(
+                    anc.join(
+                        anc.select(F.col("v").alias("a"), F.col("a").alias("a2")),
+                        "a",
+                    ).select("v", F.col("a2").alias("a")),
+                    retire=anc,
+                )
+            cyc_nodes, seen = loop.truncate(
+                anc.filter(F.col("a") != root).select(F.col("a").alias("v")).distinct(),
                 retire=anc,
+                figures=row_count(),
             )
-        cyc_nodes = cache.truncate(
-            anc.filter(F.col("a") != root).select(F.col("a").alias("v")).distinct()
-        )
-        cache.release([anc])
-        if cyc_nodes.limit(1).count() == 0:
-            selected = picks
-            break
+            if seen["rows"] == 0:
+                selected = picks
+                break
 
-        cyc_arcs = (
-            picks.join(cyc_nodes, "v", "left_semi")
-            .join(cyc_nodes.select(F.col("v").alias("u")), "u", "left_semi")
-            .select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        labels = cache.truncate(
-            connected_components(
-                SparkGraph(cyc_arcs, directed=False, coalesce_edges=False)
-            ).select(F.col("id").alias("node"), F.col("component").alias("super"))
-        )
-        levels.append((arcs, picks, labels))
+            # the cycle arcs are a snapshot of their own, so releasing the
+            # labeling below frees it and the labeling's rounds only
+            cyc_arcs = loop.truncate(
+                picks.join(cyc_nodes, "v", "left_semi")
+                .join(cyc_nodes.select(F.col("v").alias("u")), "u", "left_semi")
+                .select(F.col("v").alias("src"), F.col("u").alias("dst")),
+                retire=cyc_nodes,
+            )
+            cc = _components(
+                SparkGraph(cyc_arcs, directed=False, coalesce_edges=False), loop
+            )
+            labels, seen = loop.truncate(
+                cc.select(F.col("id").alias("node"), F.col("component").alias("super")),
+                figures={
+                    "nodes": F.count(F.lit(1)),
+                    # a component is labeled by its least node
+                    "supers": F.sum((F.col("node") == F.col("super")).cast("long")),
+                },
+            )
+            loop.release(cc)
+            levels.append((arcs, picks, labels))
 
-        mapped = (
-            arcs.join(
-                labels.select(F.col("node").alias("u"), F.col("super").alias("mu")),
-                "u",
-                "left",
+            mapped = (
+                arcs.join(
+                    labels.select(F.col("node").alias("u"), F.col("super").alias("mu")),
+                    "u",
+                    "left",
+                )
+                .join(
+                    labels.select(F.col("node").alias("v"), F.col("super").alias("mv")),
+                    "v",
+                    "left",
+                )
+                .join(picks.select("v", F.col("w").alias("pw")), "v", "left")
+                .select(
+                    F.coalesce("mu", "u").alias("nu"),
+                    F.coalesce("mv", "v").alias("nv"),
+                    F.when(F.col("mv").isNotNull(), F.col("w") - F.col("pw"))
+                    .otherwise(F.col("w"))
+                    .alias("w"),
+                    "ou",
+                    "ov",
+                    "ow",
+                    F.col("v").alias("enter"),
+                )
+                .filter(F.col("nu") != F.col("nv"))
             )
-            .join(
-                labels.select(F.col("node").alias("v"), F.col("super").alias("mv")),
-                "v",
-                "left",
+            arcs = loop.truncate(
+                mapped.groupBy(F.col("nu").alias("u"), F.col("nv").alias("v"))
+                .agg(F.min(F.struct("w", "ou", "ov", "ow", "enter")).alias("m"))
+                .select(
+                    "u",
+                    "v",
+                    F.col("m.w").alias("w"),
+                    F.col("m.ou").alias("ou"),
+                    F.col("m.ov").alias("ov"),
+                    F.col("m.ow").alias("ow"),
+                    F.col("m.enter").alias("enter"),
+                )
             )
-            .join(picks.select("v", F.col("w").alias("pw")), "v", "left")
-            .select(
-                F.coalesce("mu", "u").alias("nu"),
-                F.coalesce("mv", "v").alias("nv"),
-                F.when(F.col("mv").isNotNull(), F.col("w") - F.col("pw"))
-                .otherwise(F.col("w"))
-                .alias("w"),
-                "ou",
-                "ov",
-                "ow",
-                F.col("v").alias("enter"),
-            )
-            .filter(F.col("nu") != F.col("nv"))
-        )
-        arcs = cache.truncate(
-            mapped.groupBy(F.col("nu").alias("u"), F.col("nv").alias("v"))
-            .agg(F.min(F.struct("w", "ou", "ov", "ow", "enter")).alias("m"))
-            .select(
-                "u",
-                "v",
-                F.col("m.w").alias("w"),
-                F.col("m.ou").alias("ou"),
-                F.col("m.ov").alias("ov"),
-                F.col("m.ow").alias("ow"),
-                F.col("m.enter").alias("enter"),
-            )
-        )
-        n_contracted = labels.count() - labels.select("super").distinct().count()
-        if n_contracted <= 0:
-            raise RuntimeError("arborescence contraction failed to shrink")
-        n_nodes -= n_contracted
+            n_contracted = seen["nodes"] - seen["supers"]
+            if n_contracted <= 0:
+                raise RuntimeError("arborescence contraction failed to shrink")
+            n_nodes -= n_contracted
 
-    # ---- expansion ----------------------------------------------------- #
-    sel = selected
-    for arcs_l, picks_l, labels_l in reversed(levels):
-        cyc_picks = picks_l.join(
-            labels_l.select(F.col("node").alias("v")), "v", "left_semi"
-        )
-        kept_cyc = cyc_picks.join(
-            sel.select(F.col("enter").alias("v")), "v", "left_anti"
-        )
-        sel_below = arcs_l.join(
-            sel.select("ou", "ov"), ["ou", "ov"], "left_semi"
-        )
-        sel = cache.truncate(
-            sel_below.select("v", "u", "w", "ou", "ov", "ow", "enter").unionByName(
-                kept_cyc.select("v", "u", "w", "ou", "ov", "ow", "enter")
+        # ---- expansion ------------------------------------------------- #
+        sel = selected
+        for arcs_l, picks_l, labels_l in reversed(levels):
+            cyc_picks = picks_l.join(
+                labels_l.select(F.col("node").alias("v")), "v", "left_semi"
             )
+            kept_cyc = cyc_picks.join(
+                sel.select(F.col("enter").alias("v")), "v", "left_anti"
+            )
+            sel_below = arcs_l.join(
+                sel.select("ou", "ov"), ["ou", "ov"], "left_semi"
+            )
+            sel = loop.truncate(
+                sel_below.select("v", "u", "w", "ou", "ov", "ow", "enter").unionByName(
+                    kept_cyc.select("v", "u", "w", "ou", "ov", "ow", "enter")
+                )
+            )
+            loop.release([arcs_l, picks_l, labels_l])
+        out, seen = loop.truncate(
+            sel.select(
+                F.col("ou").alias("src"), F.col("ov").alias("dst"), F.col("ow").alias("weight")
+            ),
+            figures={"roots": F.sum((F.col("src") == root).cast("long"))},
         )
-        cache.release([arcs_l, picks_l, labels_l])
-    out = sel.select(
-        F.col("ou").alias("src"), F.col("ov").alias("dst"), F.col("ow").alias("weight")
-    ).localCheckpoint(eager=True)
-    return out
+        if spanning and seen["roots"] != 1:
+            raise NetworkXError("No spanning arborescence in G.")
+        return loop.result(out)
 
 
 def _prep(g: SparkGraph, maximize: bool) -> DataFrame:
@@ -229,14 +252,8 @@ def _spanning_arborescence(
         F.lit(float(big)).alias("w"),
         F.lit(float(big)).alias("ow"),
     )
-    sel = _rooted(edges.unionByName(varcs), n + 1, _VROOT, spark)
-    sel = sel.persist()
-    if sel.filter(F.col("src") == _VROOT).count() != 1:
-        sel.unpersist()
-        raise NetworkXError("No spanning arborescence in G.")
-    out = sel.filter(F.col("src") != _VROOT).localCheckpoint(eager=True)
-    sel.unpersist()
-    return out
+    sel = _rooted(edges.unionByName(varcs), n + 1, _VROOT, spark, spanning=True)
+    return sel.filter(F.col("src") != _VROOT)
 
 
 def minimum_spanning_arborescence(g: SparkGraph, *, root=None) -> DataFrame:

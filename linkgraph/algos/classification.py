@@ -84,7 +84,7 @@ def _spread(
     labeled = _labeled(g, labels, label_attr)
     if labeled.isEmpty():
         raise ValueError("No node on the input graph is labeled.")
-    lids = _label_ids(labeled).persist()
+    lids = _label_ids(labeled)
     cap = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
     n_parts = loop_partitions(g.number_of_edges(), cap)
 
@@ -113,12 +113,10 @@ def _spread(
                 (F.lit(alpha) * F.col("weight") / F.sqrt(F.col("ds") * F.col("dd"))).alias("p"),
             )
         )
-    arcs = arcs.repartition(n_parts, "dst").persist()
-    base = base.localCheckpoint(eager=True)
-
-    cache = SuperstepCache(g.spark)
-    scores = base
-    try:
+    with SuperstepCache(g.spark, partitions=n_parts) as cache:
+        arcs = cache.pin(arcs.repartition(n_parts, "dst"))
+        base = cache.truncate(base)
+        scores = base
         for _ in range(max_iter):
             prop = (
                 arcs.join(scores.withColumnRenamed("id", "dst"), "dst")
@@ -146,11 +144,7 @@ def _spread(
             .join(lids, "lbl")
             .select("id", "label")
         )
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        arcs.unpersist()
-        lids.unpersist()
+        return cache.result(cache.truncate(out))
 
 
 def harmonic_function(

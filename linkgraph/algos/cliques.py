@@ -34,7 +34,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 from linkgraph.exceptions import NotImplementedForDirected
 
 
@@ -104,24 +104,34 @@ def k_cliques(g: SparkGraph, k: int) -> DataFrame:
         raise ValueError("k must be >= 1")
     if k == 1:
         return g.vertices.select(F.array("id").alias("members"))
-    cache = SuperstepCache(g.spark)
-    oriented = cache.truncate(_oriented(g))
-    cur = oriented.select(
-        F.array("s", "d").alias("members"), F.col("d").alias("last")
-    )
-    size = 2
-    while size < k:
-        cur = cache.truncate(_extend(cur, oriented, size))
-        size += 1
-        if cur.limit(1).count() == 0:
-            break
-    out = cur.select("members").localCheckpoint(eager=True)
-    return out if size == k else g.spark.createDataFrame([], "members array<bigint>")
+    with SuperstepCache(g.spark) as cache:
+        oriented = cache.truncate(_oriented(g))
+        cur = oriented.select(
+            F.array("s", "d").alias("members"), F.col("d").alias("last")
+        )
+        size = 2
+        while size < k:
+            # the 2-cliques are the oriented arcs themselves
+            cur, seen = cache.truncate(
+                _extend(cur, oriented, size),
+                retire=cur if size > 2 else None,
+                figures=row_count(),
+            )
+            size += 1
+            if seen["rows"] == 0:
+                break
+        if size != k:
+            return g.spark.createDataFrame([], "members array<bigint>")
+        return cache.result(cur.select("members"))
 
 
 def k_clique_count(g: SparkGraph, k: int) -> int:
     """Number of k-cliques."""
-    return k_cliques(g, k).count()
+    with SuperstepCache(g.spark) as loop:
+        cliques = k_cliques(g, k)
+        n = cliques.count()
+        loop.release(cliques)
+    return n
 
 
 def node_clique_counts(g: SparkGraph, k: int) -> DataFrame:
@@ -146,59 +156,57 @@ def find_cliques(g: SparkGraph, max_size: Optional[int] = None) -> DataFrame:
     their own maximal 1-cliques, matching the reference). ``max_size``
     caps enumeration (cliques above the cap are neither returned nor used
     to disqualify smaller ones); without it the loop runs to ω(G)."""
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    oriented = cache.truncate(_oriented(g))
+    with SuperstepCache(g.spark) as cache:
+        oriented = cache.truncate(_oriented(g))
 
-    # 1-cliques: isolated vertices only (any edge-covered vertex is in a
-    # 2-clique); they are maximal by definition
-    endpoints = oriented.select(F.col("s").alias("id")).unionAll(
-        oriented.select(F.col("d").alias("id"))
-    )
-    singletons = (
-        g.vertices.select("id")
-        .join(endpoints, "id", "left_anti")
-        .select(F.array("id").alias("members"))
-    )
+        # 1-cliques: isolated vertices only (any edge-covered vertex is in a
+        # 2-clique); they are maximal by definition
+        endpoints = oriented.select(F.col("s").alias("id")).unionAll(
+            oriented.select(F.col("d").alias("id"))
+        )
+        singletons = (
+            g.vertices.select("id")
+            .join(endpoints, "id", "left_anti")
+            .select(F.array("id").alias("members"))
+        )
 
-    levels = []  # per size: (members, last)
-    cur = oriented.select(
-        F.array("s", "d").alias("members"), F.col("d").alias("last")
-    )
-    size = 2
-    while True:
-        cur = cache.truncate(cur)
-        if cur.limit(1).count() == 0:
-            break
-        levels.append((size, cur))
-        if max_size is not None and size >= max_size:
-            break
-        cur = _extend(cur, oriented, size)
-        size += 1
+        levels = []  # per size: (members, last)
+        cur = oriented.select(
+            F.array("s", "d").alias("members"), F.col("d").alias("last")
+        )
+        size = 2
+        while True:
+            cur, seen = cache.truncate(cur, figures=row_count())
+            if seen["rows"] == 0:
+                break
+            levels.append((size, cur))
+            if max_size is not None and size >= max_size:
+                break
+            cur = _extend(cur, oriented, size)
+            size += 1
 
-    out = singletons
-    for i, (size, lvl) in enumerate(levels):
-        if i + 1 < len(levels):
-            bigger = levels[i + 1][1]
-            # drop-one subsets of each (size+1)-clique, as sorted arrays
-            subsets = bigger.select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(size)),
-                        lambda idx: F.filter(
-                            "members", lambda _, j: j != idx
-                        ),
-                    )
-                ).alias("members")
-            ).distinct()
-            maximal = lvl.select("members").join(
-                subsets, "members", "left_anti"
-            )
-        else:
-            maximal = lvl.select("members")
-        out = out.unionByName(maximal)
-    out = out.localCheckpoint(eager=True)
-    return out
+        out = singletons
+        for i, (size, lvl) in enumerate(levels):
+            if i + 1 < len(levels):
+                bigger = levels[i + 1][1]
+                # drop-one subsets of each (size+1)-clique, as sorted arrays
+                subsets = bigger.select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(0), F.lit(size)),
+                            lambda idx: F.filter(
+                                "members", lambda _, j: j != idx
+                            ),
+                        )
+                    ).alias("members")
+                ).distinct()
+                maximal = lvl.select("members").join(
+                    subsets, "members", "left_anti"
+                )
+            else:
+                maximal = lvl.select("members")
+            out = out.unionByName(maximal)
+        return cache.result(cache.truncate(out))
 
 
 def node_clique_number(g: SparkGraph, *, max_size: Optional[int] = None) -> DataFrame:

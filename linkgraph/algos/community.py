@@ -344,8 +344,9 @@ def _refine_connectivity(
     community never lowers Q (intra weight is unchanged; the degree-sum
     penalty (D/2m)² strictly drops), so refined levels dominate unrefined
     ones. Reuses the large-star/small-star CC machinery over the
-    intra-community edge set — one extra CC run per level."""
-    from linkgraph.algos.components import connected_components
+    intra-community edge set — one extra CC run per level, on ``cache``,
+    whose exit releases its labeling."""
+    from linkgraph.algos.components import _components
 
     lab = comm.select(F.col("id").alias("src"), F.col("community").alias("c_src"))
     lab2 = comm.select(F.col("id").alias("dst"), F.col("community").alias("c_dst"))
@@ -361,7 +362,7 @@ def _refine_connectivity(
         directed=False,  # weak connectivity is the Leiden criterion
         coalesce_edges=False,
     )
-    cc = connected_components(sub)
+    cc = _components(sub, cache)
     return cache.truncate(cc.select("id", F.col("component").alias("community")))
 
 

@@ -207,7 +207,7 @@ def is_connected(g: SparkGraph) -> bool:
         raise ValueError(
             "Connectivity is undefined for the null graph."
         )
-    return number_connected_components(g) == 1
+    return _one_component(g)
 
 
 def is_weakly_connected(g: SparkGraph) -> bool:
@@ -222,6 +222,12 @@ def is_weakly_connected(g: SparkGraph) -> bool:
         raise ValueError(
             "Connectivity is undefined for the null graph."
         )
+    return _one_component(g)
+
+
+def _one_component(g: SparkGraph) -> bool:
+    """Whether ``g``'s labeling has one component: a second distinct label
+    ends the scan, so no full count of the labels runs."""
     return _component_scalar(
         g, lambda cc: cc.select("component").distinct().limit(2).count() == 1
     )

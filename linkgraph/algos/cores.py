@@ -26,7 +26,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 
 def _arc_ends(edges: DataFrame) -> DataFrame:
@@ -40,49 +40,63 @@ def _arc_ends(edges: DataFrame) -> DataFrame:
 
 def core_number(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFrame:
     """Return DataFrame ``(id BIGINT, core BIGINT)`` for every vertex."""
-    if g.edges.filter(F.col("src") == F.col("dst")).limit(1).count() > 0:
+    with SuperstepCache(g.spark) as loop:
+        edges, remaining, left = _peel_start(g, loop)
+        out = None
+        k = 0
+        rounds = 0
+        while left > 0:
+            deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+            cur = remaining.join(deg, "id", "left").select(
+                "id", F.coalesce("deg", F.lit(0)).alias("deg")
+            )
+            peel, seen = loop.truncate(
+                cur.filter(F.col("deg") <= k).select(
+                    "id", F.lit(k).cast("long").alias("core")
+                ),
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                k += 1
+                continue
+            out = peel if out is None else out.unionByName(peel)
+            left -= seen["rows"]
+            remaining, edges = _peel(loop, remaining, edges, peel)
+            rounds += 1
+            if rounds > max_rounds:
+                raise RuntimeError("core_number exceeded max_rounds")
+        if out is None:
+            return g.spark.createDataFrame([], "id long, core long")
+        return loop.result(loop.truncate(out))
+
+
+def _peel_start(g: SparkGraph, loop: SuperstepCache, verb: str = "has"):
+    """``(edges, remaining, node count)``, the start of a level peel; raises
+    on a self-loop with the reference's message (``core.py:101-106``)."""
+    edges, seen = loop.truncate(
+        g.edges.select("src", "dst"),
+        figures={"loops": F.sum((F.col("src") == F.col("dst")).cast("long"))},
+    )
+    if seen["loops"]:
         raise ValueError(
-            "Input graph has self loops which is not permitted; "
+            f"Input graph {verb} self loops which is not permitted; "
             "Consider using G.remove_edges_from(nx.selfloop_edges(G))."
         )
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    edges = cache.truncate(g.edges.select("src", "dst"))
-    remaining = cache.truncate(g.vertices.select("id"))
-    assigned = []  # list of (DataFrame (id), k)
-    k = 0
-    rounds = 0
-    while True:
-        n_remaining = remaining.count()
-        if n_remaining == 0:
-            break
-        deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-        cur = remaining.join(deg, "id", "left").select(
-            "id", F.coalesce("deg", F.lit(0)).alias("deg")
-        )
-        peel = cur.filter(F.col("deg") <= k).select("id")
-        peel = cache.truncate(peel)
-        if peel.count() == 0:
-            k += 1
-            continue
-        assigned.append((peel, k))
-        remaining = cache.truncate(remaining.join(peel, "id", "left_anti"))
-        edges = cache.truncate(
-            edges.join(peel.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(peel.withColumnRenamed("id", "dst"), "dst", "left_anti")
-        )
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError("core_number exceeded max_rounds")
-    out = None
-    for df, kk in assigned:
-        part = df.select("id", F.lit(kk).cast("long").alias("core"))
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return g.spark.createDataFrame([], "id long, core long")
-    res = out.persist()
-    res.count()
-    return res
+    remaining, seen = loop.truncate(g.vertices.select("id"), figures=row_count())
+    return edges, remaining, seen["rows"]
+
+
+def _peel(loop: SuperstepCache, remaining, edges, peeled):
+    """``remaining`` and ``edges`` without the ``peeled`` nodes."""
+    ids = peeled.select("id")
+    return (
+        loop.truncate(remaining.join(ids, "id", "left_anti"), retire=remaining),
+        loop.truncate(
+            edges.join(ids.withColumnRenamed("id", "src"), "src", "left_anti")
+            .join(ids.withColumnRenamed("id", "dst"), "dst", "left_anti"),
+            retire=edges,
+        ),
+    )
 
 
 def _core_subgraph(g: SparkGraph, keep_ids: DataFrame) -> SparkGraph:
@@ -154,57 +168,47 @@ def onion_layers(g: SparkGraph, *, max_rounds: int = 10_000) -> DataFrame:
     Each round is a degree aggregation + min-aggregation + anti-join —
     the level-peel shape of ``core_number`` with a layer counter.
     """
-    if g.edges.filter(F.col("src") == F.col("dst")).limit(1).count() > 0:
-        raise ValueError(
-            "Input graph contains self loops which is not permitted; "
-            "Consider using G.remove_edges_from(nx.selfloop_edges(G))."
+    with SuperstepCache(g.spark) as loop:
+        edges, remaining, left = _peel_start(g, loop, "contains")
+        current_layer = 1
+        # isolated nodes -> layer 1 (core.py:556-563)
+        deg0 = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+        out, seen = loop.truncate(
+            remaining.join(deg0, "id", "left_anti").select(
+                "id", F.lit(1).cast("long").alias("layer")
+            ),
+            figures=row_count(),
         )
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    edges = cache.truncate(g.edges.select("src", "dst"))
-    remaining = cache.truncate(g.vertices.select("id"))
-    assigned = []  # (DataFrame (id), layer)
-    current_layer = 1
-    # isolated nodes -> layer 1 (core.py:556-563)
-    deg0 = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    isolated = remaining.join(deg0, "id", "left_anti")
-    isolated = cache.truncate(isolated)
-    if isolated.limit(1).count() > 0:
-        assigned.append((isolated, 1))
-        remaining = cache.truncate(remaining.join(isolated, "id", "left_anti"))
-        current_layer = 2
-    current_core = 1
-    rounds = 0
-    while remaining.limit(1).count() > 0:
-        deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-        cur = remaining.join(deg, "id", "left").select(
-            "id", F.coalesce("deg", F.lit(0)).alias("deg")
-        )
-        min_deg = cur.agg(F.min("deg")).first()[0]
-        if min_deg > current_core:
-            current_core = min_deg
-        layer_nodes = cache.truncate(
-            cur.filter(F.col("deg") <= current_core).select("id")
-        )
-        assigned.append((layer_nodes, current_layer))
-        current_layer += 1
-        remaining = cache.truncate(remaining.join(layer_nodes, "id", "left_anti"))
-        edges = cache.truncate(
-            edges.join(layer_nodes.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(layer_nodes.withColumnRenamed("id", "dst"), "dst", "left_anti")
-        )
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError("onion_layers exceeded max_rounds")
-    out = None
-    for df, layer in assigned:
-        part = df.select("id", F.lit(layer).cast("long").alias("layer"))
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return spark.createDataFrame([], "id long, layer long")
-    res = out.persist()
-    res.count()
-    return res
+        if seen["rows"] > 0:
+            left -= seen["rows"]
+            remaining = loop.truncate(
+                remaining.join(out.select("id"), "id", "left_anti"), retire=remaining
+            )
+            current_layer = 2
+        current_core = 1
+        rounds = 0
+        while left > 0:
+            deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+            cur = remaining.join(deg, "id", "left").select(
+                "id", F.coalesce("deg", F.lit(0)).alias("deg")
+            )
+            min_deg = cur.agg(F.min("deg")).first()[0]
+            if min_deg > current_core:
+                current_core = min_deg
+            layer_nodes, seen = loop.truncate(
+                cur.filter(F.col("deg") <= current_core).select(
+                    "id", F.lit(current_layer).cast("long").alias("layer")
+                ),
+                figures=row_count(),
+            )
+            out = out.unionByName(layer_nodes)
+            current_layer += 1
+            left -= seen["rows"]
+            remaining, edges = _peel(loop, remaining, edges, layer_nodes)
+            rounds += 1
+            if rounds > max_rounds:
+                raise RuntimeError("onion_layers exceeded max_rounds")
+        return loop.result(loop.truncate(out))
 
 
 def k_truss(g: SparkGraph, k: int, *, max_rounds: int = 10_000) -> SparkGraph:
@@ -224,92 +228,93 @@ def k_truss(g: SparkGraph, k: int, *, max_rounds: int = 10_000) -> SparkGraph:
         raise NotImplementedForDirected(
             "k_truss: not implemented for directed type"
         )
-    if g.edges.filter(F.col("src") == F.col("dst")).limit(1).count() > 0:
-        raise ValueError(
-            "Input graph has self loops which is not permitted; "
-            "Consider using G.remove_edges_from(nx.selfloop_edges(G))."
+    with SuperstepCache(g.spark) as loop:
+        edges, seen = loop.truncate(
+            g.edges.select(
+                F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+            ).distinct(),
+            figures={"loops": F.sum((F.col("src") == F.col("dst")).cast("long"))},
         )
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    edges = cache.truncate(
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-    )
-    # Incremental support maintenance (the standard truss-decomposition
-    # plan, cf. Wang & Cheng VLDB 2012): triangles are enumerated ONCE via
-    # the degree-oriented wedge join; each peel round then touches only the
-    # triangles incident to the edges just dropped — join dropped edges →
-    # dead triangles → decrement the surviving edges' support — instead of
-    # re-running the full wedge join on the remaining edge set every round.
-    cur = SparkGraph(edges, directed=False, coalesce_edges=False)
-    with _triangle_corners(cur) as tri:
-        tri_edges = cache.truncate(
-            tri.select(
-                "a",
-                "b",
-                "c",
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
-                        ),
-                        F.struct(
-                            F.least("a", "c").alias("src"), F.greatest("a", "c").alias("dst")
-                        ),
-                        F.struct(
-                            F.least("b", "c").alias("src"), F.greatest("b", "c").alias("dst")
-                        ),
-                    )
-                ).alias("e"),
-            ).select("a", "b", "c", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-        )
-    support = cache.truncate(
-        edges.join(
-            tri_edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("support")),
-            ["src", "dst"],
-            "left",
-        ).select("src", "dst", F.coalesce("support", F.lit(0)).alias("support"))
-    )
-    rounds = 0
-    while True:
-        dropped = cache.truncate(
-            support.filter(F.col("support") < k - 2).select("src", "dst")
-        )
-        if dropped.limit(1).count() == 0:
-            edges = cache.truncate(support.select("src", "dst"))
-            cache.release([dropped, tri_edges, support])
-            break
-        dead = cache.truncate(
-            tri_edges.join(dropped, ["src", "dst"], "left_semi")
-            .select("a", "b", "c")
-            .distinct()
-        )
-        dec = (
-            tri_edges.join(dead, ["a", "b", "c"], "left_semi")
-            .join(dropped, ["src", "dst"], "left_anti")
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("dec"))
-        )
-        new_support = cache.truncate(
-            support.join(dropped, ["src", "dst"], "left_anti")
-            .join(dec, ["src", "dst"], "left")
-            .select(
-                "src",
-                "dst",
-                (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
+        if seen["loops"]:
+            raise ValueError(
+                "Input graph has self loops which is not permitted; "
+                "Consider using G.remove_edges_from(nx.selfloop_edges(G))."
             )
+        # Incremental support maintenance (the standard truss-decomposition
+        # plan, cf. Wang & Cheng VLDB 2012): triangles are enumerated ONCE
+        # via the degree-oriented wedge join; each peel round then touches
+        # only the triangles incident to the edges just dropped — join
+        # dropped edges → dead triangles → decrement the surviving edges'
+        # support — instead of re-running the full wedge join on the
+        # remaining edge set every round.
+        cur = SparkGraph(edges, directed=False, coalesce_edges=False)
+        with _triangle_corners(cur) as tri:
+            tri_edges = loop.truncate(
+                tri.select(
+                    "a",
+                    "b",
+                    "c",
+                    F.explode(
+                        F.array(
+                            F.struct(
+                                F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
+                            ),
+                            F.struct(
+                                F.least("a", "c").alias("src"), F.greatest("a", "c").alias("dst")
+                            ),
+                            F.struct(
+                                F.least("b", "c").alias("src"), F.greatest("b", "c").alias("dst")
+                            ),
+                        )
+                    ).alias("e"),
+                ).select("a", "b", "c", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
+            )
+        support = loop.truncate(
+            edges.join(
+                tri_edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("support")),
+                ["src", "dst"],
+                "left",
+            ).select("src", "dst", F.coalesce("support", F.lit(0)).alias("support")),
+            retire=edges,
         )
-        new_tri_edges = cache.truncate(
-            tri_edges.join(dead, ["a", "b", "c"], "left_anti")
-        )
-        cache.release([support, tri_edges, dropped, dead])
-        support, tri_edges = new_support, new_tri_edges
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError("k_truss exceeded max_rounds")
+        rounds = 0
+        while True:
+            dropped, seen = loop.truncate(
+                support.filter(F.col("support") < k - 2).select("src", "dst"),
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                edges = loop.truncate(support.select("src", "dst"))
+                break
+            dead = loop.truncate(
+                tri_edges.join(dropped, ["src", "dst"], "left_semi")
+                .select("a", "b", "c")
+                .distinct()
+            )
+            dec = (
+                tri_edges.join(dead, ["a", "b", "c"], "left_semi")
+                .join(dropped, ["src", "dst"], "left_anti")
+                .groupBy("src", "dst")
+                .agg(F.count(F.lit(1)).alias("dec"))
+            )
+            new_support = loop.truncate(
+                support.join(dropped, ["src", "dst"], "left_anti")
+                .join(dec, ["src", "dst"], "left")
+                .select(
+                    "src",
+                    "dst",
+                    (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
+                )
+            )
+            new_tri_edges = loop.truncate(
+                tri_edges.join(dead, ["a", "b", "c"], "left_anti")
+            )
+            loop.release([support, tri_edges, dropped, dead])
+            support, tri_edges = new_support, new_tri_edges
+            rounds += 1
+            if rounds > max_rounds:
+                raise RuntimeError("k_truss exceeded max_rounds")
+        loop.result(edges)
     vertices = (
         edges.select(F.col("src").alias("id"))
         .unionAll(edges.select(F.col("dst").alias("id")))
@@ -327,25 +332,25 @@ def k_truss(g: SparkGraph, k: int, *, max_rounds: int = 10_000) -> SparkGraph:
 def k_core(g: SparkGraph, k: int) -> SparkGraph:
     """Maximal subgraph with every degree >= k (``core.py:154``): iterate
     'drop nodes with degree < k' to fixpoint."""
-    cache = SuperstepCache(g.spark)
-    edges = cache.truncate(g.edges.select("src", "dst", "weight"))
-    vertices = cache.truncate(g.vertices.select("id"))
-    while True:
-        deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-        keep = vertices.join(deg, "id", "left").filter(
-            F.coalesce("deg", F.lit(0)) >= k
-        ).select("id")
-        keep = cache.truncate(keep)
-        n_before = vertices.count()
-        n_after = keep.count()
-        vertices = keep
-        edges = cache.truncate(
-            edges.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        )
-        if n_after == n_before:
-            break
-    sub = SparkGraph(
-        edges, vertices, directed=g.directed, coalesce_edges=False
-    )
-    return sub
+    with SuperstepCache(g.spark) as loop:
+        edges = loop.truncate(g.edges.select("src", "dst", "weight"))
+        vertices, seen = loop.truncate(g.vertices.select("id"), figures=row_count())
+        while True:
+            n_before = seen["rows"]
+            deg = _arc_ends(edges).groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+            vertices, seen = loop.truncate(
+                vertices.join(deg, "id", "left").filter(
+                    F.coalesce("deg", F.lit(0)) >= k
+                ).select("id"),
+                retire=vertices,
+                figures=row_count(),
+            )
+            edges = loop.truncate(
+                edges.join(vertices.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(vertices.withColumnRenamed("id", "dst"), "dst", "left_semi"),
+                retire=edges,
+            )
+            if seen["rows"] == n_before:
+                break
+        loop.result([edges, vertices])
+    return SparkGraph(edges, vertices, directed=g.directed, coalesce_edges=False)

@@ -71,90 +71,90 @@ def _batched_cg_diag(
     normalized Laplacian with ``diag`` ≡ 1 and ``scale=(id, g)`` holding
     d^{-1/2}. ``rhs`` is ``(s, id, b)`` with every b ⊥ null(M).
     """
-    cache = SuperstepCache(spark)
-    sc = scale if scale is not None else None
-    state = cache.truncate(
-        rhs.select("s", "id", F.lit(0.0).alias("x"), F.col("b").alias("r"), F.col("b").alias("p"))
-    )
-    rr = cache.truncate(
-        state.groupBy("s").agg(F.sum(F.col("r") * F.col("r")).alias("rr"))
-    )
-    for _ in range(max_iter):
-        p_in = state.select("s", F.col("id").alias("dst"), F.col("p").alias("pn"))
-        if sc is not None:
-            p_in = p_in.join(
-                sc.select(F.col("id").alias("dst"), F.col("g").alias("gn")), "dst"
-            ).select("s", "dst", (F.col("pn") * F.col("gn")).alias("pn"))
-        nbr = (
-            arcs.withColumnRenamed("src", "id").withColumnRenamed("dst", "dst")
-            .join(p_in, "dst")
-            .groupBy("s", "id")
-            .agg(F.sum(F.col("c") * F.col("pn")).alias("sm"))
-        )
-        if sc is not None:
-            nbr = nbr.join(sc, "id").select(
-                "s", "id", (F.col("sm") * F.col("g")).alias("sm")
-            )
-        st = (
-            state.join(diag, "id", "left")
-            .join(nbr, ["s", "id"], "left")
-            .select(
-                "s",
-                "id",
-                "x",
-                "r",
-                "p",
-                (
-                    F.coalesce("d", F.lit(0.0)) * F.col("p")
-                    - F.coalesce("sm", F.lit(0.0))
-                ).alias("lp"),
-            )
-        )
-        st = cache.truncate(st, retire=state)
-        pap = st.groupBy("s").agg(F.sum(F.col("p") * F.col("lp")).alias("pap"))
-        coef = rr.join(pap, "s", "left").select(
-            "s",
-            "rr",
-            F.when(F.col("pap") > 0, F.col("rr") / F.col("pap"))
-            .otherwise(0.0)
-            .alias("alpha"),
-        )
-        nxt = st.join(F.broadcast(coef), "s").select(
-            "s",
-            "id",
-            (F.col("x") + F.col("alpha") * F.col("p")).alias("x"),
-            (F.col("r") - F.col("alpha") * F.col("lp")).alias("r"),
-            "p",
-        )
-        nxt = cache.truncate(nxt, retire=st)
-        rr_new = cache.truncate(
-            nxt.groupBy("s").agg(F.sum(F.col("r") * F.col("r")).alias("rr"))
-        )
-        worst = rr_new.agg(F.max("rr")).first()[0] or 0.0
-        if worst < tol * tol:
-            state = nxt
-            break
-        betas = rr.select("s", F.col("rr").alias("rr_old")).join(rr_new, "s").select(
-            "s",
-            F.when(F.col("rr_old") > 0, F.col("rr") / F.col("rr_old"))
-            .otherwise(0.0)
-            .alias("beta"),
-        )
+    with SuperstepCache(spark) as cache:
+        sc = scale if scale is not None else None
         state = cache.truncate(
-            nxt.join(F.broadcast(betas), "s").select(
+            rhs.select("s", "id", F.lit(0.0).alias("x"), F.col("b").alias("r"), F.col("b").alias("p"))
+        )
+        rr = cache.truncate(
+            state.groupBy("s").agg(F.sum(F.col("r") * F.col("r")).alias("rr"))
+        )
+        for _ in range(max_iter):
+            p_in = state.select("s", F.col("id").alias("dst"), F.col("p").alias("pn"))
+            if sc is not None:
+                p_in = p_in.join(
+                    sc.select(F.col("id").alias("dst"), F.col("g").alias("gn")), "dst"
+                ).select("s", "dst", (F.col("pn") * F.col("gn")).alias("pn"))
+            nbr = (
+                arcs.withColumnRenamed("src", "id").withColumnRenamed("dst", "dst")
+                .join(p_in, "dst")
+                .groupBy("s", "id")
+                .agg(F.sum(F.col("c") * F.col("pn")).alias("sm"))
+            )
+            if sc is not None:
+                nbr = nbr.join(sc, "id").select(
+                    "s", "id", (F.col("sm") * F.col("g")).alias("sm")
+                )
+            st = (
+                state.join(diag, "id", "left")
+                .join(nbr, ["s", "id"], "left")
+                .select(
+                    "s",
+                    "id",
+                    "x",
+                    "r",
+                    "p",
+                    (
+                        F.coalesce("d", F.lit(0.0)) * F.col("p")
+                        - F.coalesce("sm", F.lit(0.0))
+                    ).alias("lp"),
+                )
+            )
+            st = cache.truncate(st, retire=state)
+            pap = st.groupBy("s").agg(F.sum(F.col("p") * F.col("lp")).alias("pap"))
+            coef = rr.join(pap, "s", "left").select(
+                "s",
+                "rr",
+                F.when(F.col("pap") > 0, F.col("rr") / F.col("pap"))
+                .otherwise(0.0)
+                .alias("alpha"),
+            )
+            nxt = st.join(F.broadcast(coef), "s").select(
                 "s",
                 "id",
-                "x",
-                "r",
-                (F.col("r") + F.col("beta") * F.col("p")).alias("p"),
-            ),
-            retire=nxt,
-        )
-        rr = rr_new
-    else:
-        raise NetworkXError(f"batched CG did not converge in {max_iter} iterations")
-    out = state.select("s", "id", "x").localCheckpoint(eager=True)
-    return out
+                (F.col("x") + F.col("alpha") * F.col("p")).alias("x"),
+                (F.col("r") - F.col("alpha") * F.col("lp")).alias("r"),
+                "p",
+            )
+            nxt = cache.truncate(nxt, retire=st)
+            rr_new, seen = cache.truncate(
+                nxt.groupBy("s").agg(F.sum(F.col("r") * F.col("r")).alias("rr")),
+                figures={"worst": F.max("rr")},
+            )
+            if (seen["worst"] or 0.0) < tol * tol:
+                state = nxt
+                break
+            betas = rr.select("s", F.col("rr").alias("rr_old")).join(rr_new, "s").select(
+                "s",
+                F.when(F.col("rr_old") > 0, F.col("rr") / F.col("rr_old"))
+                .otherwise(0.0)
+                .alias("beta"),
+            )
+            state = cache.truncate(
+                nxt.join(F.broadcast(betas), "s").select(
+                    "s",
+                    "id",
+                    "x",
+                    "r",
+                    (F.col("r") + F.col("beta") * F.col("p")).alias("p"),
+                ),
+                retire=nxt,
+            )
+            cache.release(rr)
+            rr = rr_new
+        else:
+            raise NetworkXError(f"batched CG did not converge in {max_iter} iterations")
+        return cache.result(cache.truncate(state.select("s", "id", "x")))
 
 
 def _weighted_arcs(g: SparkGraph, weight: Optional[str]):

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 
 def simple_cycles(
@@ -58,71 +58,61 @@ def simple_cycles(
         "src", "dst"
     ).distinct()
 
-    out = None
-
     # length-1 cycles: self-loops (cycles.py yields [v] for them)
-    loops = arcs.filter(F.col("src") == F.col("dst")).select(
+    out = arcs.filter(F.col("src") == F.col("dst")).select(
         F.array("src").alias("cycle")
     )
-    out = loops
-
-    if length_bound >= 2:
-        cache = SuperstepCache(spark)
-        arcs_ns = cache.truncate(arcs.filter(F.col("src") != F.col("dst")))
-        # paths (root, path, last): start with root -> x, x > root
-        paths = arcs_ns.filter(F.col("dst") > F.col("src")).select(
-            F.col("src").alias("root"),
-            F.array("src", "dst").alias("path"),
-            F.col("dst").alias("last"),
-        )
-        length = 2  # closing now yields a cycle of this length
-        while True:
-            paths = cache.truncate(paths)
-            closing = paths.join(
-                arcs_ns.select(
-                    F.col("src").alias("last"), F.col("dst").alias("root")
-                ),
-                ["last", "root"],
-                "left_semi",
+    with SuperstepCache(spark) as cache:
+        if length_bound >= 2:
+            arcs_ns = cache.truncate(arcs.filter(F.col("src") != F.col("dst")))
+            # paths (root, path, last): start with root -> x, x > root
+            paths = arcs_ns.filter(F.col("dst") > F.col("src")).select(
+                F.col("src").alias("root"),
+                F.array("src", "dst").alias("path"),
+                F.col("dst").alias("last"),
             )
-            if g.directed:
-                if length >= 2:
-                    cyc = closing.select(F.col("path").alias("cycle"))
+            length = 2  # closing now yields a cycle of this length
+            while True:
+                paths, seen = cache.truncate(paths, figures=row_count())
+                if seen["rows"] == 0:
+                    break
+                closing = paths.join(
+                    arcs_ns.select(
+                        F.col("src").alias("last"), F.col("dst").alias("root")
+                    ),
+                    ["last", "root"],
+                    "left_semi",
+                )
+                if g.directed:
                     # directed 2-cycles (u,v),(v,u) are simple cycles
-                    out = out.unionByName(cyc)
-            else:
-                # undirected: one rotation sense, length >= 3
-                if length >= 3:
+                    out = out.unionByName(closing.select(F.col("path").alias("cycle")))
+                elif length >= 3:
+                    # undirected: one rotation sense, length >= 3
                     cyc = closing.filter(
                         F.col("path")[1] < F.col("path")[length - 1]
                     ).select(F.col("path").alias("cycle"))
                     out = out.unionByName(cyc)
-            if length >= length_bound:
-                break
-            ext = (
-                paths.join(
-                    arcs_ns.select(
-                        F.col("src").alias("last"), F.col("dst").alias("nxt")
-                    ),
-                    "last",
+                if length >= length_bound:
+                    break
+                paths = (
+                    paths.join(
+                        arcs_ns.select(
+                            F.col("src").alias("last"), F.col("dst").alias("nxt")
+                        ),
+                        "last",
+                    )
+                    .filter(
+                        (F.col("nxt") > F.col("root"))
+                        & ~F.array_contains("path", F.col("nxt"))
+                    )
+                    .select(
+                        "root",
+                        F.concat("path", F.array("nxt")).alias("path"),
+                        F.col("nxt").alias("last"),
+                    )
                 )
-                .filter(
-                    (F.col("nxt") > F.col("root"))
-                    & ~F.array_contains("path", F.col("nxt"))
-                )
-                .select(
-                    "root",
-                    F.concat("path", F.array("nxt")).alias("path"),
-                    F.col("nxt").alias("last"),
-                )
-            )
-            paths = ext
-            length += 1
-            if paths.limit(1).count() == 0:
-                break
-        result = out.localCheckpoint(eager=True)
-        return result
-    return out.localCheckpoint(eager=True)
+                length += 1
+        return cache.result(cache.truncate(out))
 
 
 def is_eulerian(g) -> bool:
@@ -197,7 +187,7 @@ def cycle_basis(g: SparkGraph, *, max_iter: int = 100_000) -> DataFrame:
     State is one row per non-tree edge carrying its partial paths — the
     intrinsic Σ|cycle| output size; rounds = forest height.
     """
-    from linkgraph.algos.components import connected_components
+    from linkgraph.algos.components import _components
     from linkgraph.algos.setops import shortest_path_lengths
     from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 
@@ -206,107 +196,115 @@ def cycle_basis(g: SparkGraph, *, max_iter: int = 100_000) -> DataFrame:
             "cycle_basis: not implemented for directed type"
         )
     spark = g.spark
-    cache = SuperstepCache(spark)
+    with SuperstepCache(spark) as cache:
 
-    simple = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .distinct()
-    )
-    selfloops = (
-        g.edges.filter(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("id"))
-        .distinct()
-        .select(F.array(F.col("id").cast("long")).alias("cycle"))
-    )
-
-    roots = connected_components(g).select("component").distinct()
-    dist = cache.truncate(shortest_path_lengths(g, roots))
-
-    # min-id BFS parent per non-root node; parent table also carries depth
-    sym = simple.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        simple.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    parent = cache.truncate(
-        sym.join(dist.select(F.col("id").alias("src"), F.col("distance").alias("ds")), "src")
-        .join(dist.select(F.col("id").alias("dst"), F.col("distance").alias("dd")), "dst")
-        .filter(F.col("ds") + 1 == F.col("dd"))
-        .groupBy("dst")
-        .agg(F.min("src").alias("parent"))
-        .select(F.col("dst").alias("id"), "parent")
-    )
-
-    tree = parent.select(
-        F.least("id", "parent").alias("u"), F.greatest("id", "parent").alias("v")
-    )
-    nontree = simple.join(tree, ["u", "v"], "left_anti")
-
-    state = cache.truncate(
-        nontree.join(dist.select(F.col("id").alias("u"), F.col("distance").alias("du")), "u")
-        .join(dist.select(F.col("id").alias("v"), F.col("distance").alias("dv")), "v")
-        .select(
-            F.col("u").cast("long").alias("au"),
-            F.col("v").cast("long").alias("av"),
-            F.col("du").cast("long"),
-            F.col("dv").cast("long"),
-            F.array(F.col("u").cast("long")).alias("pu"),
-            F.array(F.col("v").cast("long")).alias("pv"),
+        simple = (
+            g.edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+            .distinct()
         )
-    )
-    done = spark.createDataFrame(
-        [], "au long, av long, du long, dv long, pu array<long>, pv array<long>"
-    )
-    done = cache.truncate(done)
-    pu_tbl = parent.select(
-        F.col("id").alias("au"), F.col("parent").alias("pau")
-    )
-    pv_tbl = parent.select(
-        F.col("id").alias("av"), F.col("parent").alias("pav")
-    )
-    for _ in range(max_iter):
-        if state.limit(1).count() == 0:
-            break
-        move_u = F.col("du") >= F.col("dv")
-        move_v = F.col("dv") >= F.col("du")
-        stepped = (
-            state.join(pu_tbl, "au", "left")
-            .join(pv_tbl, "av", "left")
-            .select(
-                F.when(move_u, F.col("pau")).otherwise(F.col("au")).alias("nau"),
-                F.when(move_v, F.col("pav")).otherwise(F.col("av")).alias("nav"),
-                F.when(move_u, F.col("du") - 1).otherwise(F.col("du")).alias("ndu"),
-                F.when(move_v, F.col("dv") - 1).otherwise(F.col("dv")).alias("ndv"),
-                F.when(move_u, F.concat("pu", F.array("pau")))
-                .otherwise(F.col("pu"))
-                .alias("npu"),
-                F.when(move_v, F.concat("pv", F.array("pav")))
-                .otherwise(F.col("pv"))
-                .alias("npv"),
-            )
-            .select(
-                F.col("nau").alias("au"),
-                F.col("nav").alias("av"),
-                F.col("ndu").alias("du"),
-                F.col("ndv").alias("dv"),
-                F.col("npu").alias("pu"),
-                F.col("npv").alias("pv"),
-            )
+        selfloops = (
+            g.edges.filter(F.col("src") == F.col("dst"))
+            .select(F.col("src").alias("id"))
+            .distinct()
+            .select(F.array(F.col("id").cast("long")).alias("cycle"))
         )
-        stepped = cache.truncate(stepped, retire=state)
-        finished = stepped.filter(F.col("au") == F.col("av"))
-        done = cache.truncate(done.unionByName(finished), retire=done)
-        state = cache.truncate(stepped.filter(F.col("au") != F.col("av")))
-    else:
-        raise NetworkXError(f"cycle_basis did not converge in {max_iter} rounds")
 
-    # pu = [u..lca], pv = [v..lca]  →  cycle = u..lca..v (lca kept once)
-    cycles = done.select(
-        F.concat(
-            "pu", F.reverse(F.slice("pv", 1, F.size("pv") - 1))
-        ).alias("cycle")
-    )
-    out = selfloops.unionByName(cycles).localCheckpoint(eager=True)
-    return out
+        roots = _components(g, cache).select("component").distinct()
+        reach = shortest_path_lengths(g, roots)
+        dist = cache.truncate(reach)
+        cache.release(reach)
+
+        # min-id BFS parent per non-root node; parent table also carries depth
+        sym = simple.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+            simple.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
+        parent = cache.truncate(
+            sym.join(dist.select(F.col("id").alias("src"), F.col("distance").alias("ds")), "src")
+            .join(dist.select(F.col("id").alias("dst"), F.col("distance").alias("dd")), "dst")
+            .filter(F.col("ds") + 1 == F.col("dd"))
+            .groupBy("dst")
+            .agg(F.min("src").alias("parent"))
+            .select(F.col("dst").alias("id"), "parent")
+        )
+
+        tree = parent.select(
+            F.least("id", "parent").alias("u"), F.greatest("id", "parent").alias("v")
+        )
+        nontree = simple.join(tree, ["u", "v"], "left_anti")
+
+        state, seen = cache.truncate(
+            nontree.join(dist.select(F.col("id").alias("u"), F.col("distance").alias("du")), "u")
+            .join(dist.select(F.col("id").alias("v"), F.col("distance").alias("dv")), "v")
+            .select(
+                F.col("u").cast("long").alias("au"),
+                F.col("v").cast("long").alias("av"),
+                F.col("du").cast("long"),
+                F.col("dv").cast("long"),
+                F.array(F.col("u").cast("long")).alias("pu"),
+                F.array(F.col("v").cast("long")).alias("pv"),
+            ),
+            figures=row_count(),
+        )
+        done = spark.createDataFrame(
+            [], "au long, av long, du long, dv long, pu array<long>, pv array<long>"
+        )
+        done = cache.truncate(done)
+        left = seen["rows"]
+        pu_tbl = parent.select(
+            F.col("id").alias("au"), F.col("parent").alias("pau")
+        )
+        pv_tbl = parent.select(
+            F.col("id").alias("av"), F.col("parent").alias("pav")
+        )
+        for _ in range(max_iter):
+            if left == 0:
+                break
+            move_u = F.col("du") >= F.col("dv")
+            move_v = F.col("dv") >= F.col("du")
+            stepped = (
+                state.join(pu_tbl, "au", "left")
+                .join(pv_tbl, "av", "left")
+                .select(
+                    F.when(move_u, F.col("pau")).otherwise(F.col("au")).alias("nau"),
+                    F.when(move_v, F.col("pav")).otherwise(F.col("av")).alias("nav"),
+                    F.when(move_u, F.col("du") - 1).otherwise(F.col("du")).alias("ndu"),
+                    F.when(move_v, F.col("dv") - 1).otherwise(F.col("dv")).alias("ndv"),
+                    F.when(move_u, F.concat("pu", F.array("pau")))
+                    .otherwise(F.col("pu"))
+                    .alias("npu"),
+                    F.when(move_v, F.concat("pv", F.array("pav")))
+                    .otherwise(F.col("pv"))
+                    .alias("npv"),
+                )
+                .select(
+                    F.col("nau").alias("au"),
+                    F.col("nav").alias("av"),
+                    F.col("ndu").alias("du"),
+                    F.col("ndv").alias("dv"),
+                    F.col("npu").alias("pu"),
+                    F.col("npv").alias("pv"),
+                )
+            )
+            stepped = cache.truncate(stepped, retire=state)
+            finished = stepped.filter(F.col("au") == F.col("av"))
+            done = cache.truncate(done.unionByName(finished), retire=done)
+            state, seen = cache.truncate(
+                stepped.filter(F.col("au") != F.col("av")),
+                retire=stepped,
+                figures=row_count(),
+            )
+            left = seen["rows"]
+        else:
+            raise NetworkXError(f"cycle_basis did not converge in {max_iter} rounds")
+
+        # pu = [u..lca], pv = [v..lca]  →  cycle = u..lca..v (lca kept once)
+        cycles = done.select(
+            F.concat(
+                "pu", F.reverse(F.slice("pv", 1, F.size("pv") - 1))
+            ).alias("cycle")
+        )
+        return cache.result(cache.truncate(selfloops.unionByName(cycles)))
 
 
 def _euler_walk(g, start, *, max_driver_edges: int, circuit: bool):

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NetworkXError, NetworkXUnfeasible
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 
 class GraphContainsCycle(NetworkXUnfeasible):
@@ -55,38 +55,45 @@ def topological_generations(
     nodes remain after peeling (``dag.py:284``)."""
     _require_directed(g, "topological_generations")
     spark = g.spark
-    cache = SuperstepCache(spark)
-    edges = cache.truncate(
-        g.edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    )
-    # self-loop = 1-cycle
-    if g.edges.filter(F.col("src") == F.col("dst")).limit(1).count() > 0:
-        raise GraphContainsCycle()
-    remaining = cache.truncate(g.vertices.select("id"))
-    assigned = []
-    gen = 0
-    while remaining.limit(1).count() > 0:
-        if gen > max_rounds:
-            raise RuntimeError("topological_generations exceeded max_rounds")
-        with_preds = edges.select(F.col("dst").alias("id")).distinct()
-        zero_in = cache.truncate(remaining.join(with_preds, "id", "left_anti"))
-        if zero_in.limit(1).count() == 0:
-            raise GraphContainsCycle()
-        assigned.append((zero_in, gen))
-        gen += 1
-        remaining = cache.truncate(remaining.join(zero_in, "id", "left_anti"))
-        edges = cache.truncate(
-            edges.join(zero_in.withColumnRenamed("id", "src"), "src", "left_anti")
+    with SuperstepCache(spark) as loop:
+        # a self-loop is a 1-cycle
+        edges, seen = loop.truncate(
+            g.edges.select("src", "dst").distinct(),
+            figures={"loops": F.sum((F.col("src") == F.col("dst")).cast("long"))},
         )
-    out = None
-    for df, k in assigned:
-        part = df.select("id", F.lit(k).cast("long").alias("generation"))
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return spark.createDataFrame([], "id long, generation long")
-    res = out.persist()
-    res.count()
-    return res
+        if seen["loops"]:
+            raise GraphContainsCycle()
+        remaining, seen = loop.truncate(g.vertices.select("id"), figures=row_count())
+        left = seen["rows"]
+        out = None
+        gen = 0
+        while left > 0:
+            if gen > max_rounds:
+                raise RuntimeError("topological_generations exceeded max_rounds")
+            with_preds = edges.select(F.col("dst").alias("id")).distinct()
+            zero_in, seen = loop.truncate(
+                remaining.join(with_preds, "id", "left_anti").select(
+                    "id", F.lit(gen).cast("long").alias("generation")
+                ),
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                raise GraphContainsCycle()
+            out = zero_in if out is None else out.unionByName(zero_in)
+            gen += 1
+            left -= seen["rows"]
+            if left == 0:
+                break
+            remaining = loop.truncate(
+                remaining.join(zero_in, "id", "left_anti"), retire=remaining
+            )
+            edges = loop.truncate(
+                edges.join(zero_in.select(F.col("id").alias("src")), "src", "left_anti"),
+                retire=edges,
+            )
+        if out is None:
+            return spark.createDataFrame([], "id long, generation long")
+        return loop.result(loop.truncate(out))
 
 
 def topological_sort(g: SparkGraph) -> DataFrame:
@@ -95,22 +102,28 @@ def topological_sort(g: SparkGraph) -> DataFrame:
     ``nx.topological_sort`` is one of many valid orders (``dag.py:164``);
     this one is reproducible under distribution. Indexing is
     sort + zipWithIndex — no single-partition window."""
-    gens = topological_generations(g)
-    ordered = gens.sort("generation", "id").select("id")
-    return ordered.rdd.map(lambda r: r[0]).zipWithIndex().toDF(
-        ["id", "position"]
-    ).select(F.col("id").cast("long"), F.col("position").cast("long"))
+    with SuperstepCache(g.spark) as loop:
+        gens = topological_generations(g)
+        ordered = gens.sort("generation", "id").select("id")
+        out = loop.truncate(
+            ordered.rdd.map(lambda r: r[0]).zipWithIndex().toDF(
+                ["id", "position"]
+            ).select(F.col("id").cast("long"), F.col("position").cast("long"))
+        )
+        loop.release(gens)
+        return loop.result(out)
 
 
 def is_directed_acyclic_graph(g: SparkGraph) -> bool:
     """``dag.py:91`` — True iff directed and Kahn peeling completes."""
     if not g.directed:
         return False
-    try:
-        topological_generations(g)
-        return True
-    except GraphContainsCycle:
-        return False
+    with SuperstepCache(g.spark) as loop:
+        try:
+            loop.release(topological_generations(g))
+            return True
+        except GraphContainsCycle:
+            return False
 
 
 def transitive_closure(
@@ -122,23 +135,26 @@ def transitive_closure(
     each."""
     _require_directed(g, "transitive_closure")
     spark = g.spark
-    cache = SuperstepCache(spark)
-    r = cache.truncate(g.edges.select("src", "dst").distinct())
-    n = r.count()
-    for _ in range(max_rounds):
-        two_hop = (
-            r.select(F.col("src"), F.col("dst").alias("mid"))
-            .join(r.select(F.col("src").alias("mid"), "dst"), "mid")
-            .select("src", "dst")
+    with SuperstepCache(spark) as loop:
+        r, seen = loop.truncate(
+            g.edges.select("src", "dst").distinct(), figures=row_count()
         )
-        r2 = cache.truncate(r.unionByName(two_hop).distinct())
-        n2 = r2.count()
-        r = r2
-        if n2 == n:
-            break
-        n = n2
-    else:
-        raise RuntimeError("transitive_closure did not converge")
+        n = seen["rows"]
+        for _ in range(max_rounds):
+            two_hop = (
+                r.select(F.col("src"), F.col("dst").alias("mid"))
+                .join(r.select(F.col("src").alias("mid"), "dst"), "mid")
+                .select("src", "dst")
+            )
+            r, seen = loop.truncate(
+                r.unionByName(two_hop).distinct(), retire=r, figures=row_count()
+            )
+            if seen["rows"] == n:
+                break
+            n = seen["rows"]
+        else:
+            raise RuntimeError("transitive_closure did not converge")
+        loop.result(r)
     if reflexive is True:
         r = r.unionByName(
             g.vertices.select(F.col("id").alias("src"), F.col("id").alias("dst"))
@@ -185,31 +201,41 @@ def dag_longest_path_length(
     ``default_weight``). Max-relaxation over topological generations: D
     supersteps of join + groupBy-max where D = the DAG depth."""
     _require_directed(g, "dag_longest_path_length")
-    # raises on cycles up front (the reference's topological_sort does)
+    with SuperstepCache(g.spark) as loop:
+        # raises on cycles up front (the reference's topological_sort does)
+        depth = _dag_depth(g, loop)
+        if depth is None:
+            return 0.0
+        w = _dag_weight_col(g, weight, default_weight, weighted)
+        arcs = loop.pin(g.edges.select("src", "dst", w.alias("w")))
+        best = {"best": F.max("dist")}
+        dist, seen = loop.truncate(
+            g.vertices.select("id", F.lit(0.0).alias("dist")), figures=best
+        )
+        for _ in range(int(depth)):
+            cand = (
+                arcs.join(dist.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.max(F.col("dist") + F.col("w")).alias("cand"))
+            )
+            dist, seen = loop.truncate(
+                dist.join(cand, "id", "left").select(
+                    "id",
+                    F.greatest("dist", F.coalesce("cand", F.col("dist"))).alias("dist"),
+                ),
+                retire=dist,
+                figures=best,
+            )
+        return float(seen["best"] or 0.0)
+
+
+def _dag_depth(g: SparkGraph, loop: SuperstepCache):
+    """The last topological generation of ``g`` (None when ``g`` has no
+    node); raises :class:`GraphContainsCycle` on a cycle."""
     gens = topological_generations(g)
     depth = gens.agg(F.max("generation")).first()[0]
-    if depth is None:
-        return 0.0
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    w = _dag_weight_col(g, weight, default_weight, weighted)
-    arcs = g.edges.select("src", "dst", w.alias("w")).persist()
-    dist = cache.truncate(g.vertices.select("id", F.lit(0.0).alias("dist")))
-    for _ in range(int(depth)):
-        cand = (
-            arcs.join(dist.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.max(F.col("dist") + F.col("w")).alias("cand"))
-        )
-        dist = cache.truncate(
-            dist.join(cand, "id", "left").select(
-                "id",
-                F.greatest("dist", F.coalesce("cand", F.col("dist"))).alias("dist"),
-            )
-        )
-    best = dist.agg(F.max("dist")).first()[0] or 0.0
-    arcs.unpersist()
-    return float(best)
+    loop.release(gens)
+    return depth
 
 
 def moral_graph(g: SparkGraph):
@@ -401,7 +427,8 @@ def transitive_closure_dag(g: SparkGraph, topo_order=None) -> SparkGraph:
     """``dag.py:829`` — same closure; the reference's DAG-ordered variant
     is a schedule optimization, the squaring kernel's result is identical.
     Raises on cycles like the reference (via topological_generations)."""
-    topological_generations(g)  # cycle check
+    with SuperstepCache(g.spark) as loop:
+        loop.release(topological_generations(g))  # cycle check
     return transitive_closure(g, reflexive=False)
 
 
@@ -418,63 +445,62 @@ def dag_longest_path(
     distributed max-relaxation of :func:`dag_longest_path_length` with a
     parent column; extraction is a size-guarded driver walk."""
     _require_directed(g, "dag_longest_path")
-    gens = topological_generations(g)
-    depth = gens.agg(F.max("generation")).first()[0]
-    if depth is None:
-        row = g.vertices.orderBy("id").first()
-        return [row["id"]] if row else []
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    w = _dag_weight_col(g, weight, default_weight, weighted)
-    arcs = g.edges.select("src", "dst", w.alias("w")).persist()
-    dist = cache.truncate(
-        g.vertices.select(
-            "id", F.lit(0.0).alias("dist"), F.lit(None).cast("long").alias("parent")
+    with SuperstepCache(g.spark) as loop:
+        depth = _dag_depth(g, loop)
+        if depth is None:
+            row = g.vertices.orderBy("id").first()
+            return [row["id"]] if row else []
+        w = _dag_weight_col(g, weight, default_weight, weighted)
+        arcs = loop.pin(g.edges.select("src", "dst", w.alias("w")))
+        dist, seen = loop.truncate(
+            g.vertices.select(
+                "id", F.lit(0.0).alias("dist"), F.lit(None).cast("long").alias("parent")
+            ),
+            figures=row_count(),
         )
-    )
-    for _ in range(int(depth)):
-        cand = (
-            arcs.join(
-                dist.select(F.col("id").alias("src"), F.col("dist").alias("pd")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            # max by (dist, -src) => deterministic min-id parent on ties
-            .agg(
-                F.max(
-                    F.struct(
-                        (F.col("pd") + F.col("w")).alias("d"),
-                        (-F.col("src")).alias("negsrc"),
-                    )
-                ).alias("best")
-            )
-            .select(
-                "id",
-                F.col("best.d").alias("cand"),
-                (-F.col("best.negsrc")).alias("cand_parent"),
-            )
-        )
-        dist = cache.truncate(
-            dist.join(cand, "id", "left").select(
-                "id",
-                F.greatest("dist", F.coalesce("cand", F.col("dist"))).alias("dist"),
-                F.when(
-                    F.col("cand").isNotNull() & (F.col("cand") >= F.col("dist")),
-                    F.col("cand_parent"),
+        for _ in range(int(depth)):
+            cand = (
+                arcs.join(
+                    dist.select(F.col("id").alias("src"), F.col("dist").alias("pd")),
+                    "src",
                 )
-                .otherwise(F.col("parent"))
-                .alias("parent"),
+                .groupBy(F.col("dst").alias("id"))
+                # max by (dist, -src) => deterministic min-id parent on ties
+                .agg(
+                    F.max(
+                        F.struct(
+                            (F.col("pd") + F.col("w")).alias("d"),
+                            (-F.col("src")).alias("negsrc"),
+                        )
+                    ).alias("best")
+                )
+                .select(
+                    "id",
+                    F.col("best.d").alias("cand"),
+                    (-F.col("best.negsrc")).alias("cand_parent"),
+                )
             )
-        )
-    n = dist.count()
-    if n > max_driver_nodes:
-        raise ValueError(
-            f"dag_longest_path extraction needs the {n}-row parent map on "
-            f"the driver > max_driver_nodes={max_driver_nodes}; use "
-            "dag_longest_path_length (fully distributed) instead"
-        )
-    rows = dist.collect()
-    arcs.unpersist()
+            dist = loop.truncate(
+                dist.join(cand, "id", "left").select(
+                    "id",
+                    F.greatest("dist", F.coalesce("cand", F.col("dist"))).alias("dist"),
+                    F.when(
+                        F.col("cand").isNotNull() & (F.col("cand") >= F.col("dist")),
+                        F.col("cand_parent"),
+                    )
+                    .otherwise(F.col("parent"))
+                    .alias("parent"),
+                ),
+                retire=dist,
+            )
+        n = seen["rows"]
+        if n > max_driver_nodes:
+            raise ValueError(
+                f"dag_longest_path extraction needs the {n}-row parent map on "
+                f"the driver > max_driver_nodes={max_driver_nodes}; use "
+                "dag_longest_path_length (fully distributed) instead"
+            )
+        rows = dist.collect()
     best = max(rows, key=lambda r: (r["dist"], -r["id"]))
     parent = {r["id"]: r["parent"] for r in rows}
     path = [best["id"]]
@@ -610,51 +636,44 @@ def root_to_leaf_paths(
     Distributed frontier expansion carrying the path array — row volume
     is the output size, the same cost the reference's generator defers."""
     _require_directed(g, "root_to_leaf_paths")
-    spark = g.spark
-    cache = SuperstepCache(spark)
-    arcs = cache.truncate(g.edges.select("src", "dst").distinct())
-    roots = (
-        g.vertices.select("id")
-        .join(arcs.select(F.col("dst").alias("id")).distinct(), "id", "left_anti")
-    )
-    leaves_set = (
-        g.vertices.select("id")
-        .join(arcs.select(F.col("src").alias("id")).distinct(), "id", "left_anti")
-    )
-    frontier = cache.truncate(
-        roots.select(F.col("id").alias("head"), F.array("id").alias("path"))
-    )
-    outs = [
-        frontier.join(
+    with SuperstepCache(g.spark) as loop:
+        arcs = loop.truncate(g.edges.select("src", "dst").distinct())
+        roots = (
+            g.vertices.select("id")
+            .join(arcs.select(F.col("dst").alias("id")).distinct(), "id", "left_anti")
+        )
+        leaves_set = (
+            g.vertices.select("id")
+            .join(arcs.select(F.col("src").alias("id")).distinct(), "id", "left_anti")
+        )
+        frontier = loop.truncate(
+            roots.select(F.col("id").alias("head"), F.array("id").alias("path"))
+        )
+        out = frontier.join(
             leaves_set.withColumnRenamed("id", "head"), "head", "left_semi"
         ).select("path")
-    ]
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError("root_to_leaf_paths exceeded max_rounds")
-        step = cache.truncate(
-            frontier.join(arcs.withColumnRenamed("src", "head"), "head")
-            .select(
-                F.col("dst").alias("head"),
-                F.concat("path", F.array("dst")).alias("path"),
+        rounds = 0
+        while True:
+            rounds += 1
+            if rounds > max_rounds:
+                raise RuntimeError("root_to_leaf_paths exceeded max_rounds")
+            step, seen = loop.truncate(
+                frontier.join(arcs.withColumnRenamed("src", "head"), "head")
+                .select(
+                    F.col("dst").alias("head"),
+                    F.concat("path", F.array("dst")).alias("path"),
+                ),
+                figures=row_count(),
             )
-        )
-        if step.limit(1).count() == 0:
-            break
-        outs.append(
-            step.join(
-                leaves_set.withColumnRenamed("id", "head"), "head", "left_semi"
-            ).select("path")
-        )
-        frontier = step
-    out = outs[0]
-    for df in outs[1:]:
-        out = out.unionByName(df)
-    out = out.persist()
-    out.count()
-    return out
+            if seen["rows"] == 0:
+                break
+            out = out.unionByName(
+                step.join(
+                    leaves_set.withColumnRenamed("id", "head"), "head", "left_semi"
+                ).select("path")
+            )
+            frontier = step
+        return loop.result(loop.truncate(out))
 
 
 def dag_to_branching(g: SparkGraph):

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["densest_subgraph", "densest_subgraph_rounds"]
 
@@ -41,65 +41,68 @@ def _peel_rounds(g: SparkGraph, eps, max_rounds):
     frac = 2 * (1 + Fraction(str(eps)))
     num, den = frac.numerator, frac.denominator
     spark = g.spark
-    cache = SuperstepCache(spark)
-    alive = cache.truncate(g.vertices.select("id"))
-    edges = cache.truncate(
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .distinct()
-    )
-    removed_acc = None
-    rounds = []
-    r = 0
-    while r < max_rounds:
-        n = alive.count()
-        if n == 0:
-            break
-        m = edges.count()
-        rounds.append((r, n, m))
-        if m == 0:
-            # everything left is isolated: removed in one final wave
-            final = alive.select("id", F.lit(r).alias("peel_round"))
-            removed_acc = (
-                final if removed_acc is None else removed_acc.unionByName(final)
+    with SuperstepCache(spark) as cache:
+        alive, seen = cache.truncate(g.vertices.select("id"), figures=row_count())
+        n = seen["rows"]
+        edges, seen = cache.truncate(
+            g.edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+            .distinct(),
+            figures=row_count(),
+        )
+        m = seen["rows"]
+        removed_acc = None
+        rounds = []
+        r = 0
+        while r < max_rounds:
+            if n == 0:
+                break
+            rounds.append((r, n, m))
+            if m == 0:
+                # everything left is isolated: removed in one final wave
+                final = alive.select("id", F.lit(r).alias("peel_round"))
+                removed_acc = (
+                    final if removed_acc is None else removed_acc.unionByName(final)
+                )
+                break
+            deg = (
+                edges.select(F.col("u").alias("id"))
+                .unionAll(edges.select(F.col("v").alias("id")))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).alias("deg"))
             )
-            break
-        deg = (
-            edges.select(F.col("u").alias("id"))
-            .unionAll(edges.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
+            deg = alive.join(deg, "id", "left").select(
+                "id", F.coalesce("deg", F.lit(0)).alias("deg")
+            )
+            # integer-exact threshold: deg <= 2(1+eps) * m / n
+            drop = deg.filter(
+                F.col("deg") * F.lit(int(den)) * F.lit(int(n))
+                <= F.lit(int(num)) * F.lit(int(m))
+            ).select("id", F.lit(r).alias("peel_round"))
+            drop = cache.truncate(drop)
+            removed_acc = (
+                drop if removed_acc is None else removed_acc.unionByName(drop)
+            )
+            alive, seen = cache.truncate(
+                alive.join(drop.select("id"), "id", "left_anti"),
+                retire=alive,
+                figures=row_count(),
+            )
+            n = seen["rows"]
+            edges, seen = cache.truncate(
+                edges.join(drop.select(F.col("id").alias("u")), "u", "left_anti")
+                .join(drop.select(F.col("id").alias("v")), "v", "left_anti"),
+                retire=edges,
+                figures=row_count(),
+            )
+            m = seen["rows"]
+            r += 1
+        removed = (
+            removed_acc
+            if removed_acc is not None
+            else spark.createDataFrame([], "id long, peel_round int")
         )
-        deg = alive.join(deg, "id", "left").select(
-            "id", F.coalesce("deg", F.lit(0)).alias("deg")
-        )
-        # integer-exact threshold: deg <= 2(1+eps) * m / n
-        drop = deg.filter(
-            F.col("deg") * F.lit(int(den)) * F.lit(int(n))
-            <= F.lit(int(num)) * F.lit(int(m))
-        ).select("id", F.lit(r).alias("peel_round"))
-        drop = cache.truncate(drop)
-        removed_acc = (
-            drop if removed_acc is None else removed_acc.unionByName(drop)
-        )
-        new_alive = cache.truncate(
-            alive.join(drop.select("id"), "id", "left_anti"), retire=alive
-        )
-        new_edges = cache.truncate(
-            edges.join(drop.select(F.col("id").alias("u")), "u", "left_anti")
-            .join(drop.select(F.col("id").alias("v")), "v", "left_anti"),
-            retire=edges,
-        )
-        alive, edges = new_alive, new_edges
-        r += 1
-    removed = (
-        removed_acc
-        if removed_acc is not None
-        else spark.createDataFrame([], "id long, peel_round int")
-    )
-    removed = removed.persist()
-    removed.count()
-    return rounds, removed
+        return rounds, cache.result(cache.truncate(removed))
 
 
 def densest_subgraph_rounds(
@@ -108,8 +111,9 @@ def densest_subgraph_rounds(
     """(round, n_nodes, m_edges): the peel trajectory — density candidates
     m/n at every round start. Deterministic integers (the oracle surface);
     :func:`densest_subgraph` picks the best round from this table."""
-    rounds, removed = _peel_rounds(g, eps, max_rounds)
-    removed.unpersist()
+    with SuperstepCache(g.spark) as loop:
+        rounds, removed = _peel_rounds(g, eps, max_rounds)
+        loop.release(removed)
     return g.spark.createDataFrame(
         [(int(r), int(n), int(m)) for r, n, m in rounds],
         "round int, n_nodes bigint, m_edges bigint",
@@ -124,21 +128,20 @@ def densest_subgraph(
     ``approximation/density.py:217``). ``nodes`` is the surviving node set
     at the best peel round (exact-fraction argmax, ties → earliest round).
     """
-    rounds, removed = _peel_rounds(g, eps, max_rounds)
-    if not rounds:
-        return 0.0, g.vertices.select("id").limit(0)
-    best_r, best_n, best_m = max(
-        rounds, key=lambda t: (Fraction(t[2], t[1]), -t[0])
-    )
-    nodes = (
-        g.vertices.select("id")
-        .join(
-            removed.filter(F.col("peel_round") < best_r).select("id"),
-            "id",
-            "left_anti",
+    with SuperstepCache(g.spark) as loop:
+        rounds, removed = _peel_rounds(g, eps, max_rounds)
+        if not rounds:
+            loop.release(removed)
+            return 0.0, g.vertices.select("id").limit(0)
+        best_r, best_n, best_m = max(
+            rounds, key=lambda t: (Fraction(t[2], t[1]), -t[0])
         )
-        .persist()
-    )
-    nodes.count()
-    removed.unpersist()
-    return (best_m / best_n if best_n else 0.0), nodes
+        nodes = loop.truncate(
+            g.vertices.select("id").join(
+                removed.filter(F.col("peel_round") < best_r).select("id"),
+                "id",
+                "left_anti",
+            )
+        )
+        loop.release(removed)
+        return (best_m / best_n if best_n else 0.0), loop.result(nodes)

@@ -41,7 +41,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = [
     "incremental_closeness_centrality",
@@ -103,35 +103,35 @@ def all_pairs_shortest_path_lengths(
             raise ValueError("max_depth only applies to the unweighted BFS")
         return _all_pairs_weighted(g, src_df, reverse, distance)
 
-    adj = _arcs(g, reverse).persist()
-    cache = SuperstepCache(spark)
-    visited = cache.truncate(
-        src_df.select(
-            "source",
-            F.col("source").alias("id"),
-            F.lit(0).cast("long").alias("distance"),
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(_arcs(g, reverse))
+        visited = cache.truncate(
+            src_df.select(
+                "source",
+                F.col("source").alias("id"),
+                F.lit(0).cast("long").alias("distance"),
+            )
         )
-    )
-    frontier = visited
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        depth += 1
-        nxt = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, ["source", "id"], "left_anti")
-            .select("source", "id", F.lit(depth).cast("long").alias("distance"))
-        )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = cache.truncate(visited.unionByName(nxt))
-        frontier = nxt
-    adj.unpersist()
-    return visited
+        frontier = visited
+        depth = 0
+        while True:
+            if max_depth is not None and depth >= max_depth:
+                break
+            depth += 1
+            nxt, seen = cache.truncate(
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select("source", F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, ["source", "id"], "left_anti")
+                .select("source", "id", F.lit(depth).cast("long").alias("distance")),
+                retire=None if frontier is visited else frontier,
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                break
+            visited = cache.truncate(visited.unionByName(nxt), retire=visited)
+            frontier = nxt
+        return cache.result(visited)
 
 
 def _all_pairs_weighted(g: SparkGraph, src_df, reverse: bool, distance):
@@ -148,56 +148,54 @@ def _all_pairs_weighted(g: SparkGraph, src_df, reverse: bool, distance):
         adj = adj.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
-    adj = adj.groupBy("src", "dst").agg(F.min("w").alias("w")).persist()
-    if adj.filter(F.col("w") < 0).limit(1).count():
-        adj.unpersist()
-        raise ValueError(
-            "all_pairs_shortest_path_lengths(distance=...): negative "
-            "weights are outside the Dijkstra cost class the reference "
-            "uses here"
-        )
-    cache = SuperstepCache(spark)
-    dist = cache.truncate(
-        src_df.select(
-            "source", F.col("source").alias("id"), F.lit(0.0).alias("distance")
-        )
-    )
-    frontier = dist
-    while True:
-        cand = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                (F.col("distance") + F.col("w")).alias("distance"),
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(adj.groupBy("src", "dst").agg(F.min("w").alias("w")))
+        if adj.filter(F.col("w") < 0).limit(1).count():
+            raise ValueError(
+                "all_pairs_shortest_path_lengths(distance=...): negative "
+                "weights are outside the Dijkstra cost class the reference "
+                "uses here"
             )
-            .groupBy("source", "id")
-            .agg(F.min("distance").alias("distance"))
-        )
-        improved = cache.truncate(
-            cand.join(
-                dist.select(
-                    "source", "id", F.col("distance").alias("_old")
-                ),
-                ["source", "id"],
-                "left",
+        dist = cache.truncate(
+            src_df.select(
+                "source", F.col("source").alias("id"), F.lit(0.0).alias("distance")
             )
-            .filter(F.col("_old").isNull() | (F.col("distance") < F.col("_old")))
-            .select("source", "id", "distance")
         )
-        if improved.limit(1).count() == 0:
-            cache.release(improved)
-            break
-        new_dist = cache.truncate(
-            dist.join(
-                improved.select("source", "id"), ["source", "id"], "left_anti"
-            ).unionByName(improved)
-        )
-        cache.release(dist)
-        dist = new_dist
-        frontier = improved
-    adj.unpersist()
-    return dist
+        frontier = dist
+        while True:
+            cand = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(
+                    "source",
+                    F.col("dst").alias("id"),
+                    (F.col("distance") + F.col("w")).alias("distance"),
+                )
+                .groupBy("source", "id")
+                .agg(F.min("distance").alias("distance"))
+            )
+            improved, seen = cache.truncate(
+                cand.join(
+                    dist.select(
+                        "source", "id", F.col("distance").alias("_old")
+                    ),
+                    ["source", "id"],
+                    "left",
+                )
+                .filter(F.col("_old").isNull() | (F.col("distance") < F.col("_old")))
+                .select("source", "id", "distance"),
+                retire=None if frontier is dist else frontier,
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                break
+            dist = cache.truncate(
+                dist.join(
+                    improved.select("source", "id"), ["source", "id"], "left_anti"
+                ).unionByName(improved),
+                retire=dist,
+            )
+            frontier = improved
+        return cache.result(dist)
 
 
 def closeness_centrality(
@@ -285,25 +283,27 @@ def _ecc_table(
         k = sources.count()
     else:
         k = n
-    sp = all_pairs_shortest_path_lengths(
-        g, sources, reverse=False, distance=weight
-    ).persist()
-    try:
-        reached = sp.count()
-        if reached != k * n:
-            kind = "strongly connected" if g.directed else "connected"
-            raise ValueError(
-                "Found infinite path length because the "
-                f"{'di' if g.directed else ''}graph is not {kind}"
-            )
-        ecc = sp.groupBy(F.col("source").alias("id")).agg(
-            F.max("distance").alias("eccentricity")
+    with SuperstepCache(g.spark) as loop:
+        sp = all_pairs_shortest_path_lengths(
+            g, sources, reverse=False, distance=weight
         )
-        # materialize before releasing the BFS table
-        rows = ecc.localCheckpoint(eager=True)
-    finally:
-        sp.unpersist()
-    return rows
+        try:
+            ecc, seen = loop.truncate(
+                sp.groupBy(F.col("source").alias("id")).agg(
+                    F.max("distance").alias("eccentricity"),
+                    F.count(F.lit(1)).alias("reached"),
+                ),
+                figures={"reached": F.sum("reached")},
+            )
+            if (seen["reached"] or 0) != k * n:
+                kind = "strongly connected" if g.directed else "connected"
+                raise ValueError(
+                    "Found infinite path length because the "
+                    f"{'di' if g.directed else ''}graph is not {kind}"
+                )
+            return loop.result(ecc.select("id", "eccentricity"))
+        finally:
+            loop.release(sp)
 
 
 def eccentricity(
@@ -336,41 +336,42 @@ def eccentricity_bounds(g: SparkGraph, landmarks: DataFrame) -> DataFrame:
         )
     n = g.number_of_nodes()
     k = landmarks.count()
-    sp = all_pairs_shortest_path_lengths(g, landmarks, reverse=False).persist()
-    try:
-        if sp.count() != k * n:
-            raise ValueError(
-                "Found infinite path length because the graph is not connected"
+    with SuperstepCache(g.spark) as loop:
+        sp = all_pairs_shortest_path_lengths(g, landmarks, reverse=False)
+        try:
+            if sp.count() != k * n:
+                raise ValueError(
+                    "Found infinite path length because the graph is not connected"
+                )
+            # exact ecc of each landmark falls out of its own BFS row-set
+            lecc = sp.groupBy("source").agg(F.max("distance").alias("lecc"))
+            bounds = (
+                sp.join(F.broadcast(lecc), "source")
+                .groupBy("id")
+                .agg(
+                    F.max("distance").alias("ecc_lower"),
+                    F.min(F.col("distance") + F.col("lecc")).alias("ecc_upper"),
+                )
             )
-        # exact ecc of each landmark falls out of its own BFS row-set
-        lecc = sp.groupBy("source").agg(F.max("distance").alias("lecc"))
-        bounds = (
-            sp.join(F.broadcast(lecc), "source")
-            .groupBy("id")
-            .agg(
-                F.max("distance").alias("ecc_lower"),
-                F.min(F.col("distance") + F.col("lecc")).alias("ecc_upper"),
+            # a landmark's own row is exact on both sides (d(l,l)=0 already
+            # makes the upper bound tight; lift the lower bound to match)
+            bounds = (
+                bounds.join(
+                    F.broadcast(lecc.select(F.col("source").alias("id"), "lecc")),
+                    "id",
+                    "left",
+                )
+                .select(
+                    "id",
+                    F.greatest(
+                        "ecc_lower", F.coalesce("lecc", F.lit(0))
+                    ).alias("ecc_lower"),
+                    "ecc_upper",
+                )
             )
-        )
-        # a landmark's own row is exact on both sides (d(l,l)=0 already
-        # makes the upper bound tight; lift the lower bound to match)
-        bounds = (
-            bounds.join(
-                F.broadcast(lecc.select(F.col("source").alias("id"), "lecc")),
-                "id",
-                "left",
-            )
-            .select(
-                "id",
-                F.greatest(
-                    "ecc_lower", F.coalesce("lecc", F.lit(0))
-                ).alias("ecc_lower"),
-                "ecc_upper",
-            )
-        )
-        return bounds.localCheckpoint(eager=True)
-    finally:
-        sp.unpersist()
+            return loop.result(loop.truncate(bounds))
+        finally:
+            loop.release(sp)
 
 
 def approximate_diameter(g: SparkGraph) -> int:
@@ -387,22 +388,34 @@ def approximate_diameter(g: SparkGraph) -> int:
     if g.number_of_nodes() == 0:
         raise ValueError("the graph is empty")
     seed = g.vertices.select(F.min("id").alias("id"))
-    sweep1 = all_pairs_shortest_path_lengths(g, seed, reverse=False)
-    far = (
-        sweep1.orderBy(F.desc("distance"), F.asc("id")).limit(1).select("id")
-    )
-    sweep2 = all_pairs_shortest_path_lengths(g, far, reverse=False)
-    return int(sweep2.agg(F.max("distance")).first()[0])
+    with SuperstepCache(g.spark) as loop:
+        sweep1 = all_pairs_shortest_path_lengths(g, seed, reverse=False)
+        far = (
+            sweep1.orderBy(F.desc("distance"), F.asc("id")).limit(1).select("id")
+        )
+        sweep2 = all_pairs_shortest_path_lengths(g, far, reverse=False)
+        bound = int(sweep2.agg(F.max("distance")).first()[0])
+        loop.release([sweep1, sweep2])
+    return bound
 
 
 def diameter(g: SparkGraph, weight=None) -> int:
     """Max eccentricity (``distance_measures.py:230``)."""
-    return _ecc_table(g, weight=weight).agg(F.max("eccentricity")).first()[0]
+    return _ecc_extreme(g, weight, F.max)
 
 
 def radius(g: SparkGraph, weight=None) -> int:
     """Min eccentricity (``distance_measures.py:292``)."""
-    return _ecc_table(g, weight=weight).agg(F.min("eccentricity")).first()[0]
+    return _ecc_extreme(g, weight, F.min)
+
+
+def _ecc_extreme(g: SparkGraph, weight, extreme):
+    """``extreme`` (``F.min`` or ``F.max``) of the eccentricities."""
+    with SuperstepCache(g.spark) as loop:
+        ecc = _ecc_table(g, weight=weight)
+        value = ecc.agg(extreme("eccentricity")).first()[0]
+        loop.release(ecc)
+    return value
 
 
 def center(g: SparkGraph, weight=None) -> DataFrame:
@@ -433,19 +446,16 @@ def average_shortest_path_length(
         raise ValueError(
             "the graph is empty" if n == 0 else "graph has fewer than two nodes"
         )
-    sp = all_pairs_shortest_path_lengths(
-        g, reverse=False, distance=weight
-    ).persist()
-    try:
+    with SuperstepCache(g.spark) as loop:
+        sp = all_pairs_shortest_path_lengths(g, reverse=False, distance=weight)
         row = sp.agg(
             F.count("*").alias("pairs"), F.sum("distance").alias("total")
         ).first()
-        if row["pairs"] != n * n:
-            kind = "strongly connected" if g.directed else "connected"
-            raise ValueError(f"Graph is not {kind}.")
-        return float(row["total"]) / (n * (n - 1))
-    finally:
-        sp.unpersist()
+        loop.release(sp)
+    if row["pairs"] != n * n:
+        kind = "strongly connected" if g.directed else "connected"
+        raise ValueError(f"Graph is not {kind}.")
+    return float(row["total"]) / (n * (n - 1))
 
 
 def barycenter(g: SparkGraph, weight=None) -> DataFrame:
@@ -456,23 +466,25 @@ def barycenter(g: SparkGraph, weight=None) -> DataFrame:
     reference's NetworkXNoPath. One aggregation over the batched
     all-pairs table plus a global-min semi-filter."""
     n = g.number_of_nodes()
-    sums = (
-        all_pairs_shortest_path_lengths(g, distance=weight)
-        .groupBy(F.col("source").alias("id"))
-        .agg(F.sum("distance").alias("s"), F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    try:
-        bad = sums.filter(F.col("c") < n).limit(1).count()
-        if bad or sums.count() < n:
+    with SuperstepCache(g.spark) as loop:
+        sp = all_pairs_shortest_path_lengths(g, distance=weight)
+        sums, seen = loop.truncate(
+            sp.groupBy(F.col("source").alias("id")).agg(
+                F.sum("distance").alias("s"), F.count(F.lit(1)).alias("c")
+            ),
+            figures={
+                "rows": F.count(F.lit(1)),
+                "bad": F.count(F.when(F.col("c") < n, 1)),
+                "best": F.min("s"),
+            },
+        )
+        loop.release(sp)
+        if seen["bad"] or seen["rows"] < n:
             raise ValueError(
                 "Input graph is disconnected, so every induced subgraph has "
                 "infinite barycentricity."
             )
-        best = sums.agg(F.min("s")).first()[0]
-        return sums.filter(F.col("s") == best).select("id")
-    finally:
-        sums.unpersist()
+        return loop.result(sums.filter(F.col("s") == seen["best"]).select("id"))
 
 
 def incremental_closeness_centrality(

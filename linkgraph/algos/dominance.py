@@ -58,45 +58,46 @@ def dominator_pairs(g: SparkGraph, start, *, max_iter: int = 100) -> DataFrame:
     (every node dominates itself; ``start`` dominates everything)."""
     spark = g.spark
     start = int(start)
-    cache = SuperstepCache(spark)
-    preds = cache.truncate(_preds(g))
+    with SuperstepCache(spark) as cache:
+        preds = cache.truncate(_preds(g))
 
-    root = spark.createDataFrame([(start, start)], "n long, d long")
-    dom = cache.truncate(root)
-    prev_sig = None
-    for _ in range(max_iter):
-        defined = dom.select("n").distinct()
-        # defined predecessors of every non-start node
-        defp = (
-            preds.join(defined.select(F.col("n").alias("p")), "p", "left_semi")
-            .filter(F.col("n") != start)
-        )
-        npred = defp.groupBy("n").agg(F.count(F.lit(1)).alias("np"))
-        # ⋂ over defined preds: d survives iff it dominates ALL of them
-        inter = (
-            defp.join(dom.select(F.col("n").alias("p"), "d"), "p")
-            .groupBy("n", "d")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .join(npred, "n")
-            .filter(F.col("c") == F.col("np"))
-            .select("n", "d")
-        )
-        new_dom = (
-            root.unionByName(npred.select("n", F.col("n").alias("d")))
-            .unionByName(inter)
-            .distinct()
-        )
-        new_dom = cache.truncate(new_dom, retire=dom)
-        sig = new_dom.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(F.xxhash64("n", "d").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        dom = new_dom
-        if prev_sig == (sig["c"], sig["h"]):
-            out = dom.localCheckpoint(eager=True)
-            return out
-        prev_sig = (sig["c"], sig["h"])
-    raise NetworkXError(f"dominator fixpoint did not converge in {max_iter} rounds")
+        root = spark.createDataFrame([(start, start)], "n long, d long")
+        dom = cache.truncate(root)
+        prev_sig = None
+        for _ in range(max_iter):
+            defined = dom.select("n").distinct()
+            # defined predecessors of every non-start node
+            defp = (
+                preds.join(defined.select(F.col("n").alias("p")), "p", "left_semi")
+                .filter(F.col("n") != start)
+            )
+            npred = defp.groupBy("n").agg(F.count(F.lit(1)).alias("np"))
+            # ⋂ over defined preds: d survives iff it dominates ALL of them
+            inter = (
+                defp.join(dom.select(F.col("n").alias("p"), "d"), "p")
+                .groupBy("n", "d")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .join(npred, "n")
+                .filter(F.col("c") == F.col("np"))
+                .select("n", "d")
+            )
+            new_dom = (
+                root.unionByName(npred.select("n", F.col("n").alias("d")))
+                .unionByName(inter)
+                .distinct()
+            )
+            dom, sig = cache.truncate(
+                new_dom,
+                retire=dom,
+                figures={
+                    "c": F.count(F.lit(1)),
+                    "h": F.sum(F.xxhash64("n", "d").cast("decimal(38,0)")),
+                },
+            )
+            if prev_sig == (sig["c"], sig["h"]):
+                return cache.result(dom)
+            prev_sig = (sig["c"], sig["h"])
+        raise NetworkXError(f"dominator fixpoint did not converge in {max_iter} rounds")
 
 
 def immediate_dominators(g: SparkGraph, start, *, max_iter: int = 100) -> DataFrame:

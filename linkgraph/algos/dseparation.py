@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["is_d_separator", "find_minimal_d_separator"]
 
@@ -58,25 +58,20 @@ def is_d_separator(
 
     from linkgraph.algos.setops import shortest_path_lengths
 
-    spark = g.spark
-    arcs = g.edges.select("src", "dst").distinct().persist()
-    z = z.persist()
-    y = y.persist()
-    # ancestors(X) ∪ X ∪ Z — the forward-collider opening set
-    anc_or_z = (
-        shortest_path_lengths(g.reverse(), x)
-        .select("id")
-        .unionAll(z.select("id"))
-        .distinct()
-        .persist()
-    )
-
-    cache = SuperstepCache(spark)
-    bwd_frontier = cache.truncate(x)
-    fwd_frontier = None  # empty
-    bwd_seen = bwd_frontier
-    fwd_seen = None
-    try:
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(g.edges.select("src", "dst").distinct())
+        z = cache.pin(z)
+        y = cache.pin(y)
+        # ancestors(X) ∪ X ∪ Z — the forward-collider opening set
+        ancestors = shortest_path_lengths(g.reverse(), x)
+        anc_or_z = cache.truncate(
+            ancestors.select("id").unionAll(z.select("id")).distinct()
+        )
+        cache.release(ancestors)
+        bwd_frontier = cache.truncate(x)
+        fwd_frontier = None  # empty
+        bwd_seen = bwd_frontier
+        fwd_seen = None
         # the start set itself may touch nothing; X∩Y is impossible (disjoint)
         while True:
             new_bwd_parts = []
@@ -104,28 +99,8 @@ def is_d_separator(
                 )
             if not new_bwd_parts and not new_fwd_parts:
                 return True
-
-            def _merge(parts, seen):
-                if not parts:
-                    return None
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionAll(p)
-                out = out.distinct()
-                if seen is not None:
-                    out = out.join(seen, "id", "left_anti")
-                return out
-
-            nb = _merge(new_bwd_parts, bwd_seen)
-            nf = _merge(new_fwd_parts, fwd_seen)
-            nb = cache.truncate(nb) if nb is not None else None
-            nf = cache.truncate(nf) if nf is not None else None
-            nb_n = nb.count() if nb is not None else 0
-            nf_n = nf.count() if nf is not None else 0
-            if nb_n == 0:
-                nb = None
-            if nf_n == 0:
-                nf = None
+            nb = _step(cache, new_bwd_parts, bwd_seen)
+            nf = _step(cache, new_fwd_parts, fwd_seen)
             if nb is None and nf is None:
                 return True
             # reached Y in either mode → d-connected
@@ -136,20 +111,33 @@ def is_d_separator(
                 touch = nf if touch is None else touch.unionAll(nf)
             if touch.join(y, "id", "left_semi").limit(1).count():
                 return False
+            # a seen set is retired once its successor is materialized
             if nb is not None:
                 bwd_seen = cache.truncate(
-                    nb if bwd_seen is None else bwd_seen.unionAll(nb).distinct()
+                    nb if bwd_seen is None else bwd_seen.unionAll(nb).distinct(),
+                    retire=bwd_seen,
                 )
             if nf is not None:
                 fwd_seen = cache.truncate(
-                    nf if fwd_seen is None else fwd_seen.unionAll(nf).distinct()
+                    nf if fwd_seen is None else fwd_seen.unionAll(nf).distinct(),
+                    retire=fwd_seen,
                 )
             bwd_frontier, fwd_frontier = nb, nf
-    finally:
-        arcs.unpersist()
-        z.unpersist()
-        y.unpersist()
-        anc_or_z.unpersist()
+
+
+def _step(cache: SuperstepCache, parts, seen):
+    """The distinct union of ``parts`` minus ``seen``, truncated on
+    ``cache``; None when ``parts`` is empty or the union has no new node."""
+    if not parts:
+        return None
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    out = out.distinct()
+    if seen is not None:
+        out = out.join(seen, "id", "left_anti")
+    out, found = cache.truncate(out, figures=row_count())
+    return out if found["rows"] else None
 
 
 def _reachable(g: SparkGraph, x: DataFrame, a: DataFrame, z: DataFrame) -> DataFrame:
@@ -164,60 +152,54 @@ def _reachable(g: SparkGraph, x: DataFrame, a: DataFrame, z: DataFrame) -> DataF
     - to a successor n (f=True): allowed only when v ∉ Z;
     - always restricted to n ∈ A.
     """
-    spark = g.spark
-    arcs = g.edges.select("src", "dst").distinct().persist()
-    a = a.select(F.col(a.columns[0]).cast("long").alias("id")).distinct().persist()
-    z = z.select(F.col(z.columns[0]).cast("long").alias("id")).distinct().persist()
     xx = _ids(x)
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(g.edges.select("src", "dst").distinct())
+        a = cache.pin(a.select(F.col(a.columns[0]).cast("long").alias("id")).distinct())
+        z = cache.pin(z.select(F.col(z.columns[0]).cast("long").alias("id")).distinct())
 
-    # start states: (v, e=True) if v has predecessors, (v, e=False) if v
-    # has successors
-    has_pred = xx.join(arcs.select(F.col("dst").alias("id")).distinct(), "id", "left_semi")
-    has_succ = xx.join(arcs.select(F.col("src").alias("id")).distinct(), "id", "left_semi")
-    frontier = (
-        has_pred.select("id", F.lit(True).alias("e"))
-        .unionAll(has_succ.select("id", F.lit(False).alias("e")))
-        .distinct()
-    )
-    cache = SuperstepCache(spark)
-    frontier = cache.truncate(frontier)
-    seen = frontier
-    reached = xx.unionAll(frontier.select("id")).distinct()
-    while True:
-        fz = frontier.join(
-            z.withColumn("_z", F.lit(True)), "id", "left"
-        ).select("id", "e", F.col("_z").isNotNull().alias("in_z"))
-        # backward moves (to predecessors, f=False): v not in Z or e
-        back = (
-            fz.filter(~F.col("in_z") | F.col("e"))
-            .withColumnRenamed("id", "dst")
-            .join(arcs, "dst")
-            .select(F.col("src").alias("id"), F.lit(False).alias("e"))
-        )
-        # forward moves (to successors, f=True): v not in Z
-        fwd = (
-            fz.filter(~F.col("in_z"))
-            .withColumnRenamed("id", "src")
-            .join(arcs, "src")
-            .select(F.col("dst").alias("id"), F.lit(True).alias("e"))
-        )
-        new = (
-            back.unionAll(fwd)
+        # start states: (v, e=True) if v has predecessors, (v, e=False) if v
+        # has successors
+        has_pred = xx.join(arcs.select(F.col("dst").alias("id")).distinct(), "id", "left_semi")
+        has_succ = xx.join(arcs.select(F.col("src").alias("id")).distinct(), "id", "left_semi")
+        frontier = cache.truncate(
+            has_pred.select("id", F.lit(True).alias("e"))
+            .unionAll(has_succ.select("id", F.lit(False).alias("e")))
             .distinct()
-            .join(a, "id", "left_semi")
-            .join(seen, ["id", "e"], "left_anti")
         )
-        new = cache.truncate(new)
-        if new.limit(1).count() == 0:
-            break
-        seen = cache.truncate(seen.unionAll(new).distinct(), retire=None)
-        reached = reached.unionAll(new.select("id")).distinct()
-        frontier = new
-    out = cache.truncate(reached)
-    arcs.unpersist()
-    a.unpersist()
-    z.unpersist()
-    return out
+        seen = frontier
+        reached = xx.unionAll(frontier.select("id")).distinct()
+        while True:
+            fz = frontier.join(
+                z.withColumn("_z", F.lit(True)), "id", "left"
+            ).select("id", "e", F.col("_z").isNotNull().alias("in_z"))
+            # backward moves (to predecessors, f=False): v not in Z or e
+            back = (
+                fz.filter(~F.col("in_z") | F.col("e"))
+                .withColumnRenamed("id", "dst")
+                .join(arcs, "dst")
+                .select(F.col("src").alias("id"), F.lit(False).alias("e"))
+            )
+            # forward moves (to successors, f=True): v not in Z
+            fwd = (
+                fz.filter(~F.col("in_z"))
+                .withColumnRenamed("id", "src")
+                .join(arcs, "src")
+                .select(F.col("dst").alias("id"), F.lit(True).alias("e"))
+            )
+            new, found = cache.truncate(
+                back.unionAll(fwd)
+                .distinct()
+                .join(a, "id", "left_semi")
+                .join(seen, ["id", "e"], "left_anti"),
+                figures=row_count(),
+            )
+            if found["rows"] == 0:
+                break
+            seen = cache.truncate(seen.unionAll(new).distinct())
+            reached = reached.unionAll(new.select("id")).distinct()
+            frontier = new
+        return cache.result(cache.truncate(reached))
 
 
 def find_minimal_d_separator(
@@ -238,7 +220,6 @@ def find_minimal_d_separator(
             "find_minimal_d_separator: not implemented for directed type"
         )
     from linkgraph.algos.dag import is_directed_acyclic_graph
-    from linkgraph.algos.setops import shortest_path_lengths
 
     if not is_directed_acyclic_graph(g):
         raise NetworkXError("graph should be directed acyclic")
@@ -260,36 +241,39 @@ def find_minimal_d_separator(
         raise ValueError("The node(s) are not found in G")
 
     nodeset = x.unionAll(y).unionAll(inc).distinct()
-    anc = (
-        shortest_path_lengths(g.reverse(), nodeset)
-        .select("id")
-        .distinct()
-        .persist()
-    )  # ancestors of the nodeset, nodeset included (distance 0 rows)
-    z_init = (
-        rest.join(anc, "id", "left_semi")
-        .join(x, "id", "left_anti")
-        .join(y, "id", "left_anti")
-        .persist()
-    )
-    x_closure = _reachable(g, x, anc, z_init)
-    if x_closure.join(y, "id", "left_semi").limit(1).count():
-        anc.unpersist()
-        z_init.unpersist()
-        return None
-    z_updated = z_init.join(
-        x_closure.unionAll(inc).distinct(), "id", "left_semi"
-    ).persist()
-    y_closure = _reachable(g, y, anc, z_updated)
-    out = z_updated.join(
-        y_closure.unionAll(inc).distinct(), "id", "left_semi"
-    )
-    out = out.persist()
-    out.count()
-    anc.unpersist()
-    z_init.unpersist()
-    z_updated.unpersist()
-    return out
+    with SuperstepCache(spark) as cache:
+        # ancestors of the nodeset, nodeset included (distance 0 rows)
+        anc = _ancestors(g, nodeset, cache)
+        z_init = cache.pin(
+            rest.join(anc, "id", "left_semi")
+            .join(x, "id", "left_anti")
+            .join(y, "id", "left_anti")
+        )
+        x_closure = _reachable(g, x, anc, z_init)
+        try:
+            if x_closure.join(y, "id", "left_semi").limit(1).count():
+                return None
+            z_updated = cache.pin(
+                z_init.join(x_closure.unionAll(inc).distinct(), "id", "left_semi")
+            )
+            y_closure = _reachable(g, y, anc, z_updated)
+            out = cache.truncate(
+                z_updated.join(y_closure.unionAll(inc).distinct(), "id", "left_semi")
+            )
+            cache.release(y_closure)
+            return cache.result(out)
+        finally:
+            cache.release(x_closure)
+
+
+def _ancestors(g: SparkGraph, nodes: DataFrame, cache: SuperstepCache) -> DataFrame:
+    """(id): ``nodes`` and their ancestors, a snapshot of ``cache``."""
+    from linkgraph.algos.setops import shortest_path_lengths
+
+    reach = shortest_path_lengths(g.reverse(), nodes)
+    anc = cache.truncate(reach.select("id").distinct())
+    cache.release(reach)
+    return anc
 
 
 def is_minimal_d_separator(
@@ -307,7 +291,6 @@ def is_minimal_d_separator(
     REACHABLE closures as :func:`find_minimal_d_separator` (van der
     Zander & Liśkiewicz 2020), each one distributed Bayes-Ball sweep."""
     from linkgraph.algos.dag import is_directed_acyclic_graph
-    from linkgraph.algos.setops import shortest_path_lengths
 
     if not g.directed:
         raise NotImplementedForDirected(
@@ -335,33 +318,27 @@ def is_minimal_d_separator(
         raise ValueError("The node(s) are not found in G")
 
     nodeset = x.unionAll(y).unionAll(inc).distinct()
-    anc = (
-        shortest_path_lengths(g.reverse(), nodeset)
-        .select("id")
-        .distinct()
-        .persist()
-    )
-    z = z.persist()
-    x_closure = _reachable(g, x, anc, z)
-    if x_closure.join(y, "id", "left_semi").limit(1).count():
-        anc.unpersist()
-        z.unpersist()
-        return False
-    if z.join(anc, "id", "left_anti").limit(1).count():
-        anc.unpersist()
-        z.unpersist()
-        return False
-    y_closure = _reachable(g, y, anc, z)
-    # every z-node outside `included` must be touched by BOTH closures
-    need = z.join(inc, "id", "left_anti")
-    ok = (
-        need.join(
-            x_closure.join(y_closure, "id", "left_semi"), "id", "left_anti"
-        )
-        .limit(1)
-        .count()
-        == 0
-    )
-    anc.unpersist()
-    z.unpersist()
-    return ok
+    with SuperstepCache(spark) as cache:
+        anc = _ancestors(g, nodeset, cache)
+        z = cache.pin(z)
+        x_closure = _reachable(g, x, anc, z)
+        try:
+            if x_closure.join(y, "id", "left_semi").limit(1).count():
+                return False
+            if z.join(anc, "id", "left_anti").limit(1).count():
+                return False
+            y_closure = _reachable(g, y, anc, z)
+            # every z-node outside `included` must be touched by BOTH closures
+            need = z.join(inc, "id", "left_anti")
+            ok = (
+                need.join(
+                    x_closure.join(y_closure, "id", "left_semi"), "id", "left_anti"
+                )
+                .limit(1)
+                .count()
+                == 0
+            )
+            cache.release(y_closure)
+            return ok
+        finally:
+            cache.release(x_closure)

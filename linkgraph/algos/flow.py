@@ -40,7 +40,7 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 _INF = float("inf")
 
@@ -81,6 +81,14 @@ def _residual(g: SparkGraph, capacity) -> DataFrame:
     )
 
 
+def _reach_figures(t: int) -> dict:
+    """A BFS level's figures: its row count and whether it holds ``t``."""
+    return {
+        "rows": F.count(F.lit(1)),
+        "hit": F.sum((F.col("node") == int(t)).cast("long")),
+    }
+
+
 def _bfs_parents(res: DataFrame, s: int, t: int, cache: SuperstepCache):
     """BFS over cap>0 arcs from s; returns list of per-level parent tables
     ``(node, parent)`` (deterministic min-parent), stopping early when t
@@ -93,19 +101,21 @@ def _bfs_parents(res: DataFrame, s: int, t: int, cache: SuperstepCache):
     seen = frontier
     levels = []
     while True:
-        nxt = (
+        nxt, seen_t = cache.truncate(
             live.join(frontier.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
             .agg(F.min("u").alias("parent"))
-            .join(seen, "node", "left_anti")
+            .join(seen, "node", "left_anti"),
+            figures=_reach_figures(t),
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
+        if seen_t["rows"] == 0:
             return None
         levels.append(nxt)
-        if nxt.filter(F.col("node") == t).limit(1).count() > 0:
+        if seen_t["hit"] > 0:
             return levels
-        seen = cache.truncate(seen.unionByName(nxt.select("node")))
+        seen = cache.truncate(
+            seen.unionByName(nxt.select("node")), retire=seen
+        )
         frontier = nxt.select("node")
 
 
@@ -126,56 +136,63 @@ def _walk_path(levels, s: int, t: int):
 def _level_arcs(res: DataFrame, s: int, t: int, cache: SuperstepCache):
     """Arcs of the pruned Dinitz level DAG: cap>0, lvl(v) == lvl(u)+1,
     and backward-reachable from t — exactly the union of shortest s→t
-    paths in the residual. None when t is unreachable. One forward BFS +
-    one backward sweep, both O(dist(t)) supersteps."""
+    paths in the residual, with its arc count. None when t is
+    unreachable. One forward BFS + one backward sweep, both O(dist(t))
+    supersteps."""
     spark = res.sparkSession
     live = res.filter(F.col("cap") > 0).select("u", "v", "cap")
-    frontier = cache.truncate(spark.createDataFrame([(int(s), 0)], "node long, lvl int"))
-    levels = frontier
+    levels = cache.truncate(spark.createDataFrame([(int(s), 0)], "node long, lvl int"))
+    frontier = levels
     lvl = 0
     reached = False
     while not reached:
         lvl += 1
-        nxt = (
+        nxt, seen = cache.truncate(
             live.join(
                 frontier.select(F.col("node").alias("u")), "u"
             )
             .select(F.col("v").alias("node"))
             .distinct()
             .join(levels.select("node"), "node", "left_anti")
-            .withColumn("lvl", F.lit(lvl))
+            .withColumn("lvl", F.lit(lvl)),
+            retire=None if frontier is levels else frontier,
+            figures=_reach_figures(t),
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
+        if seen["rows"] == 0:
             return None
-        levels = cache.truncate(levels.unionByName(nxt))
-        reached = nxt.filter(F.col("node") == t).limit(1).count() > 0
+        levels = cache.truncate(levels.unionByName(nxt), retire=levels)
+        reached = seen["hit"] > 0
         frontier = nxt
-    larcs = (
+    larcs = cache.truncate(
         live.join(levels.select(F.col("node").alias("u"), F.col("lvl").alias("lu")), "u")
         .join(levels.select(F.col("node").alias("v"), F.col("lvl").alias("lv")), "v")
         .filter((F.col("lv") == F.col("lu") + 1) & (F.col("lv") <= lvl))
         .select("u", "v", "cap")
     )
-    larcs = cache.truncate(larcs)
+    cache.release([levels, frontier])
     # backward prune from t: keep only arcs feeding shortest s->t paths
     keep = cache.truncate(spark.createDataFrame([(int(t),)], "node long"))
     back = keep
     while True:
-        prev = cache.truncate(
+        prev, seen = cache.truncate(
             larcs.join(back.withColumnRenamed("node", "v"), "v")
             .select(F.col("u").alias("node"))
             .distinct()
-            .join(keep, "node", "left_anti")
+            .join(keep, "node", "left_anti"),
+            retire=None if back is keep else back,
+            figures=row_count(),
         )
-        if prev.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
-        keep = cache.truncate(keep.unionByName(prev))
+        keep = cache.truncate(keep.unionByName(prev), retire=keep)
         back = prev
-    return cache.truncate(
+    out, seen = cache.truncate(
         larcs.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+        .join(keep.withColumnRenamed("node", "v"), "v", "left_semi"),
+        figures=row_count(),
     )
+    cache.release([larcs, keep, back, prev])
+    return out, seen["rows"]
 
 
 def _blocking_flow(rows, s: int, t: int):
@@ -242,81 +259,83 @@ def _max_flow(
     s, t = int(s), int(t)
     if s == t:
         raise ValueError("source and sink are the same node")
-    cache = SuperstepCache(spark)
-    res0 = _residual(g, capacity)
-    res = cache.truncate(res0)
-    orig = cache.truncate(res0)  # initial caps, for flow extraction
-    total = 0.0
-    n_aug = 0
-    while True:
-        larcs = _level_arcs(res, s, t, cache)
-        if larcs is None:
-            break
-        n_arcs = larcs.count()
-        if n_arcs > max_driver_edges:
-            import warnings
+    with SuperstepCache(spark) as cache:
+        res0 = _residual(g, capacity)
+        res = cache.truncate(res0)
+        orig = cache.truncate(res0)  # initial caps, for flow extraction
+        total = 0.0
+        n_aug = 0
+        while True:
+            found = _level_arcs(res, s, t, cache)
+            if found is None:
+                break
+            larcs, n_arcs = found
+            if n_arcs > max_driver_edges:
+                import warnings
 
-            warnings.warn(
-                f"maximum_flow: pruned level DAG has {n_arcs} arcs > "
-                f"max_driver_edges={max_driver_edges}; falling back to "
-                "per-path augmentation for this phase (slower)",
-                stacklevel=2,
-            )
-            levels = _bfs_parents(res, s, t, cache)
-            if levels is None:
-                break
-            path = _walk_path(levels, s, t)
-            caps = {
-                (r["u"], r["v"]): r["cap"]
-                for r in res.join(
-                    F.broadcast(spark.createDataFrame(path, "u long, v long")),
-                    ["u", "v"],
-                    "left_semi",
-                ).collect()
-            }
-            bottleneck = min(caps[p] for p in path)
-            if bottleneck == _INF:
-                raise NetworkXUnbounded(
-                    "Infinite capacity path, flow unbounded above."
+                warnings.warn(
+                    f"maximum_flow: pruned level DAG has {n_arcs} arcs > "
+                    f"max_driver_edges={max_driver_edges}; falling back to "
+                    "per-path augmentation for this phase (slower)",
+                    stacklevel=2,
                 )
-            phase_value = bottleneck
-            phase_flow = {p: bottleneck for p in path}
-        else:
-            phase_value, phase_flow, unbounded = _blocking_flow(
-                larcs.collect(), s, t
-            )
-            if unbounded:
-                raise NetworkXUnbounded(
-                    "Infinite capacity path, flow unbounded above."
+                levels = _bfs_parents(res, s, t, cache)
+                if levels is None:
+                    break
+                path = _walk_path(levels, s, t)
+                caps = {
+                    (r["u"], r["v"]): r["cap"]
+                    for r in res.join(
+                        F.broadcast(spark.createDataFrame(path, "u long, v long")),
+                        ["u", "v"],
+                        "left_semi",
+                    ).collect()
+                }
+                bottleneck = min(caps[p] for p in path)
+                if bottleneck == _INF:
+                    raise NetworkXUnbounded(
+                        "Infinite capacity path, flow unbounded above."
+                    )
+                phase_value = bottleneck
+                phase_flow = {p: bottleneck for p in path}
+            else:
+                phase_value, phase_flow, unbounded = _blocking_flow(
+                    larcs.collect(), s, t
                 )
-            if phase_value == 0.0:
-                break
-        n_aug += len(phase_flow)
-        if n_aug > max_augmentations:
-            raise RuntimeError("maximum_flow exceeded max_augmentations")
-        total += phase_value
-        updates = [(u, v, -f) for (u, v), f in phase_flow.items()] + [
-            (v, u, f) for (u, v), f in phase_flow.items()
-        ]
-        upd = spark.createDataFrame(updates, "u long, v long, d double")
-        upd = upd.groupBy("u", "v").agg(F.sum("d").alias("d"))
-        res = cache.truncate(
-            res.join(F.broadcast(upd), ["u", "v"], "left").select(
-                "u",
-                "v",
-                (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"),
-            ),
-            retire=res,
+                if unbounded:
+                    raise NetworkXUnbounded(
+                        "Infinite capacity path, flow unbounded above."
+                    )
+                if phase_value == 0.0:
+                    break
+            cache.release(larcs)
+            n_aug += len(phase_flow)
+            if n_aug > max_augmentations:
+                raise RuntimeError("maximum_flow exceeded max_augmentations")
+            total += phase_value
+            updates = [(u, v, -f) for (u, v), f in phase_flow.items()] + [
+                (v, u, f) for (u, v), f in phase_flow.items()
+            ]
+            upd = spark.createDataFrame(updates, "u long, v long, d double")
+            upd = upd.groupBy("u", "v").agg(F.sum("d").alias("d"))
+            res = cache.truncate(
+                res.join(F.broadcast(upd), ["u", "v"], "left").select(
+                    "u",
+                    "v",
+                    (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"),
+                ),
+                retire=res,
+            )
+
+        flow = (
+            orig.withColumnRenamed("cap", "cap0")
+            .join(res.select("u", "v", F.col("cap").alias("capr")), ["u", "v"])
+            .select("u", "v", (F.col("cap0") - F.col("capr")).alias("flow"))
+            .filter(F.col("flow") > 0)
         )
-
-    flow = (
-        orig.withColumnRenamed("cap", "cap0")
-        .join(res.select("u", "v", F.col("cap").alias("capr")), ["u", "v"])
-        .select("u", "v", (F.col("cap0") - F.col("capr")).alias("flow"))
-        .filter(F.col("flow") > 0)
-    )
-    flow = flow.localCheckpoint(eager=True)
-    return float(total), flow, res
+        flow = cache.truncate(flow)
+        cache.result([flow, res])
+        return float(total), flow, res
 
 
 def maximum_flow(
@@ -329,7 +348,9 @@ def maximum_flow(
 ) -> Tuple[float, DataFrame]:
     """Return ``(flow_value, flow DataFrame (u, v, flow))`` — flow on the
     directed arc view (only arcs carrying positive flow are listed)."""
-    value, flow, _ = _max_flow(g, s, t, capacity, max_augmentations)
+    with SuperstepCache(g.spark) as loop:
+        value, flow, res = _max_flow(g, s, t, capacity, max_augmentations)
+        loop.release(res)
     return value, flow
 
 
@@ -337,7 +358,9 @@ def maximum_flow_value(
     g: SparkGraph, s: int, t: int, capacity: str = "capacity"
 ) -> float:
     """``maxflow.py:305``."""
-    value, _, _ = _max_flow(g, s, t, capacity, 100_000)
+    with SuperstepCache(g.spark) as loop:
+        value, flow, res = _max_flow(g, s, t, capacity, 100_000)
+        loop.release([flow, res])
     return value
 
 
@@ -347,26 +370,30 @@ def minimum_cut(
     """``maxflow.py:447`` — (cut_value, (reachable, non_reachable)): the
     residual-reachable side of the final residual graph and its complement
     (max-flow = min-cut)."""
-    value, _, res = _max_flow(g, s, t, capacity, 100_000)
+    value, flow, res = _max_flow(g, s, t, capacity, 100_000)
     spark = g.spark
-    cache = SuperstepCache(spark)
-    live = res.filter(F.col("cap") > 0).select("u", "v")
-    seen = cache.truncate(spark.createDataFrame([(int(s),)], "node long"))
-    frontier = seen
-    while True:
-        nxt = cache.truncate(
-            live.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(seen, "node", "left_anti")
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        seen = cache.truncate(seen.unionByName(nxt))
-        frontier = nxt
-    reachable = seen.select(F.col("node").alias("id")).localCheckpoint(eager=True)
-    rest = g.vertices.select("id").join(reachable, "id", "left_anti")
-    return value, (reachable, rest)
+    with SuperstepCache(spark) as cache:
+        cache.release(flow)
+        live = res.filter(F.col("cap") > 0).select("u", "v")
+        seen = cache.truncate(spark.createDataFrame([(int(s),)], "node long"))
+        frontier = seen
+        while True:
+            nxt, rows = cache.truncate(
+                live.join(frontier.withColumnRenamed("node", "u"), "u")
+                .select(F.col("v").alias("node"))
+                .distinct()
+                .join(seen, "node", "left_anti"),
+                retire=None if frontier is seen else frontier,
+                figures=row_count(),
+            )
+            if rows["rows"] == 0:
+                break
+            seen = cache.truncate(seen.unionByName(nxt), retire=seen)
+            frontier = nxt
+        cache.release(res)
+        reachable = cache.result(seen.select(F.col("node").alias("id")))
+        rest = g.vertices.select("id").join(reachable, "id", "left_anti")
+        return value, (reachable, rest)
 
 
 def edge_connectivity(g: SparkGraph, s: int = None, t: int = None) -> int:

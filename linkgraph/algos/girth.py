@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.exceptions import NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["girth"]
 
@@ -44,73 +44,74 @@ def girth(g: SparkGraph, *, max_rounds: int = 10_000) -> float:
         )
         if dup:
             return 2.0
-    arcs = (
-        g.symmetric_edges()
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
     spark = g.spark
-    cache = SuperstepCache(spark)
-    frontier = cache.truncate(
-        g.vertices.select(
-            F.col("id").alias("s"),
-            F.col("id").alias("v"),
-            F.lit(0).alias("dist"),
-            F.lit(None).cast("long").alias("parent"),
+    with SuperstepCache(spark) as cache:
+        arcs = cache.pin(
+            g.symmetric_edges()
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-    )
-    state = frontier
-    seen = frontier.select("s", "v")
-    d = 0
-    while True:
-        d += 1
-        if d > max_rounds:
-            raise RuntimeError("girth BFS exceeded max_rounds")
-        # min predecessor fixes the BFS tree deterministically
-        cand = (
-            frontier.select("s", F.col("v").alias("p"))
-            .join(arcs.withColumnRenamed("src", "p"), "p")
-            .groupBy("s", F.col("dst").alias("v"))
-            .agg(F.min("p").alias("parent"))
-        )
-        new = cache.truncate(
-            cand.join(seen, ["s", "v"], "left_anti").select(
-                "s", "v", F.lit(d).alias("dist"), "parent"
+        frontier = cache.truncate(
+            g.vertices.select(
+                F.col("id").alias("s"),
+                F.col("id").alias("v"),
+                F.lit(0).alias("dist"),
+                F.lit(None).cast("long").alias("parent"),
             )
         )
-        if new.limit(1).count() == 0:
-            break
-        state = state.unionByName(new)
-        seen = cache.truncate(seen.unionByName(new.select("s", "v")))
-        frontier = new
-    full = cache.truncate(state).persist()
-    # non-tree arcs per source: both endpoints reached from s, neither
-    # endpoint the other's BFS-tree parent (a child→parent arc closes no
-    # cycle — the reference's bfs_labeled_edges never feeds those in)
-    su = full.select(
-        F.col("s"),
-        F.col("v").alias("src"),
-        F.col("dist").alias("du"),
-        F.col("parent").alias("pu"),
-    )
-    sv = full.select(
-        F.col("s"),
-        F.col("v").alias("dst"),
-        F.col("dist").alias("dv"),
-        F.col("parent").alias("pv"),
-    )
-    best = (
-        arcs.join(su, "src")
-        .join(sv, ["s", "dst"])
-        .filter(
-            (F.col("pv").isNull() | (F.col("pv") != F.col("src")))
-            & (F.col("pu").isNull() | (F.col("pu") != F.col("dst")))
+        state = frontier
+        seen = frontier.select("s", "v")
+        d = 0
+        while True:
+            d += 1
+            if d > max_rounds:
+                raise RuntimeError("girth BFS exceeded max_rounds")
+            # min predecessor fixes the BFS tree deterministically
+            cand = (
+                frontier.select("s", F.col("v").alias("p"))
+                .join(arcs.withColumnRenamed("src", "p"), "p")
+                .groupBy("s", F.col("dst").alias("v"))
+                .agg(F.min("p").alias("parent"))
+            )
+            new, rows = cache.truncate(
+                cand.join(seen, ["s", "v"], "left_anti").select(
+                    "s", "v", F.lit(d).alias("dist"), "parent"
+                ),
+                figures=row_count(),
+            )
+            if rows["rows"] == 0:
+                break
+            state = state.unionByName(new)
+            # until the second level is in, ``seen`` is the first level itself
+            seen = cache.truncate(
+                seen.unionByName(new.select("s", "v")), retire=seen if d > 1 else None
+            )
+            frontier = new
+        full = cache.truncate(state)
+        # non-tree arcs per source: both endpoints reached from s, neither
+        # endpoint the other's BFS-tree parent (a child→parent arc closes no
+        # cycle — the reference's bfs_labeled_edges never feeds those in)
+        su = full.select(
+            F.col("s"),
+            F.col("v").alias("src"),
+            F.col("dist").alias("du"),
+            F.col("parent").alias("pu"),
         )
-        .agg(F.min(F.col("du") + F.col("dv") + 1))
-        .first()[0]
-    )
-    arcs.unpersist()
-    full.unpersist()
+        sv = full.select(
+            F.col("s"),
+            F.col("v").alias("dst"),
+            F.col("dist").alias("dv"),
+            F.col("parent").alias("pv"),
+        )
+        best = (
+            arcs.join(su, "src")
+            .join(sv, ["s", "dst"])
+            .filter(
+                (F.col("pv").isNull() | (F.col("pv") != F.col("src")))
+                & (F.col("pu").isNull() | (F.col("pu") != F.col("dst")))
+            )
+            .agg(F.min(F.col("du") + F.col("dv") + 1))
+            .first()[0]
+        )
     return float("inf") if best is None else float(best)

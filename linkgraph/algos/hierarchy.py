@@ -111,17 +111,15 @@ def trophic_levels(
     )
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     n_parts = loop_partitions(g.number_of_edges(), cap)
-    p = p.repartition(n_parts, "dst").persist()
-
     nodes = g.vertices.select("id").join(
         in_w.select("id").withColumn("_fed", F.lit(True)), "id", "left"
     )
     basal = nodes.filter(F.col("_fed").isNull()).select("id")
     state = nodes.select("id", F.lit(1.0).alias("s"), F.col("_fed").isNotNull().alias("fed"))
 
-    cache = SuperstepCache(spark)
-    state = cache.truncate(state)
-    try:
+    with SuperstepCache(spark, partitions=n_parts) as cache:
+        p = cache.pin(p.repartition(n_parts, "dst"))
+        state = cache.truncate(state)
         for _ in range(max_iter):
             contrib = (
                 p.join(
@@ -142,21 +140,20 @@ def trophic_levels(
                     "s",
                 )
             )
-            # fuse the convergence check into the materialization
+            # the convergence check is observed on the materialization
             nxt = nxt.withColumn("delta", F.abs(F.col("s_new") - F.col("s"))).select(
                 "id", F.col("s_new").alias("s"), "fed", "delta"
             )
-            new_state = cache.truncate(nxt, retire=state)
-            err = new_state.agg(F.max("delta")).first()[0] or 0.0
+            new_state, seen = cache.truncate(
+                nxt, retire=state, figures={"err": F.max("delta")}
+            )
             state = new_state.select("id", "s", "fed")
-            if err < tol:
-                return state.select("id", F.col("s").alias("trophic_level"))
+            if (seen["err"] or 0.0) < tol:
+                return cache.result(state.select("id", F.col("s").alias("trophic_level")))
         raise NetworkXError(
             "Trophic levels are only defined for graphs where every node "
             "has a path from a basal node (matrix has no inverse)."
         )
-    finally:
-        p.unpersist()
 
 
 def trophic_differences(
@@ -212,91 +209,87 @@ def _weighted_reach_table(g: SparkGraph, weight, sources):
     reference's tie choice among equal-distance paths is dict-order
     arbitrary, so only tie-free fixtures are parity-comparable."""
     from linkgraph.graph import resolve_weight_column
-    from linkgraph.iterutils import SuperstepCache
+    from linkgraph.iterutils import SuperstepCache, row_count
 
     base = g.edges if g.directed else g.symmetric_edges()
-    arcs = (
-        base.select(
-            "src", "dst", resolve_weight_column(base, weight).alias("w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.max("w").alias("w"))
-        .persist()
-    )
-    if arcs.filter(F.col("w") <= 0).limit(1).count():
-        arcs.unpersist()
-        raise NetworkXError("edge weights must be positive")
-    total_w = float(
-        g.edges.select(resolve_weight_column(g.edges, weight).alias("w"))
-        .agg(F.sum("w"))
-        .first()[0]
-        or 0.0
-    )
-    if total_w <= 0:
-        arcs.unpersist()
-        raise NetworkXError("Size of G must be positive")
-    warcs = arcs.select(
-        "src", "dst", "w", (F.lit(total_w) / F.col("w")).alias("inv")
-    )
     spark = g.spark
-    cache = SuperstepCache(spark)
-    src_df = (
-        g.vertices.select(F.col("id").alias("source"))
-        if sources is None
-        else sources.select(
-            F.col(sources.columns[0]).cast("long").alias("source")
-        )
-    )
-    init = src_df.select(
-        "source",
-        F.col("source").alias("id"),
-        F.struct(
-            F.lit(0.0).alias("dist"),
-            F.lit(0).cast("long").alias("hops"),
-            F.lit(0.0).alias("wsum"),
-        ).alias("s"),
-    )
-    state = cache.truncate(init)
-    frontier = state
-    while True:
-        cand = (
-            warcs.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                F.struct(
-                    (F.col("s.dist") + F.col("inv")).alias("dist"),
-                    (F.col("s.hops") + F.lit(1)).alias("hops"),
-                    (F.col("s.wsum") + F.col("w")).alias("wsum"),
-                ).alias("s"),
+    with SuperstepCache(spark) as cache:
+        arcs = cache.pin(
+            base.select(
+                "src", "dst", resolve_weight_column(base, weight).alias("w")
             )
-            .groupBy("source", "id")
-            .agg(F.min("s").alias("s"))
+            .groupBy("src", "dst")
+            .agg(F.max("w").alias("w"))
         )
-        improved = cache.truncate(
-            cand.join(
-                state.select("source", "id", F.col("s").alias("_old")),
-                ["source", "id"],
-                "left",
+        if arcs.filter(F.col("w") <= 0).limit(1).count():
+            raise NetworkXError("edge weights must be positive")
+        total_w = float(
+            g.edges.select(resolve_weight_column(g.edges, weight).alias("w"))
+            .agg(F.sum("w"))
+            .first()[0]
+            or 0.0
+        )
+        if total_w <= 0:
+            raise NetworkXError("Size of G must be positive")
+        warcs = arcs.select(
+            "src", "dst", "w", (F.lit(total_w) / F.col("w")).alias("inv")
+        )
+        src_df = (
+            g.vertices.select(F.col("id").alias("source"))
+            if sources is None
+            else sources.select(
+                F.col(sources.columns[0]).cast("long").alias("source")
             )
-            .filter(F.col("_old").isNull() | (F.col("s") < F.col("_old")))
-            .select("source", "id", "s")
         )
-        if improved.limit(1).count() == 0:
-            cache.release(improved)
-            break
-        state = cache.truncate(
-            state.join(
-                improved.select("source", "id"), ["source", "id"], "left_anti"
-            ).unionByName(improved)
+        init = src_df.select(
+            "source",
+            F.col("source").alias("id"),
+            F.struct(
+                F.lit(0.0).alias("dist"),
+                F.lit(0).cast("long").alias("hops"),
+                F.lit(0.0).alias("wsum"),
+            ).alias("s"),
         )
-        frontier = improved
-    out = state.filter(F.col("source") != F.col("id")).select(
-        "source", "id", F.col("s.wsum").alias("wsum"), F.col("s.hops").alias("hops")
-    )
-    out = out.localCheckpoint(eager=True)
-    arcs.unpersist()
-    return out, total_w
+        state = cache.truncate(init)
+        frontier = state
+        while True:
+            cand = (
+                warcs.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(
+                    "source",
+                    F.col("dst").alias("id"),
+                    F.struct(
+                        (F.col("s.dist") + F.col("inv")).alias("dist"),
+                        (F.col("s.hops") + F.lit(1)).alias("hops"),
+                        (F.col("s.wsum") + F.col("w")).alias("wsum"),
+                    ).alias("s"),
+                )
+                .groupBy("source", "id")
+                .agg(F.min("s").alias("s"))
+            )
+            improved, seen = cache.truncate(
+                cand.join(
+                    state.select("source", "id", F.col("s").alias("_old")),
+                    ["source", "id"],
+                    "left",
+                )
+                .filter(F.col("_old").isNull() | (F.col("s") < F.col("_old")))
+                .select("source", "id", "s"),
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                break
+            state = cache.truncate(
+                state.join(
+                    improved.select("source", "id"), ["source", "id"], "left_anti"
+                ).unionByName(improved),
+                retire=state,
+            )
+            frontier = improved
+        out = state.filter(F.col("source") != F.col("id")).select(
+            "source", "id", F.col("s.wsum").alias("wsum"), F.col("s.hops").alias("hops")
+        )
+        return cache.result(cache.truncate(out)), total_w
 
 
 def local_reaching_centrality(
@@ -371,18 +364,17 @@ def global_reaching_centrality(
     ``weight``/``normalized`` thread into the per-node lrc exactly like
     the reference). With ``sources=`` both the max and the sum run over
     the landmark set (and the denominator is its size − 1)."""
-    lrc = local_reaching_centrality(
-        g, sources=sources, weight=weight, normalized=normalized
-    ).persist()
-    try:
+    with SuperstepCache(g.spark) as loop:
+        lrc = local_reaching_centrality(
+            g, sources=sources, weight=weight, normalized=normalized
+        )
         row = lrc.agg(
             F.max("lrc").alias("mx"),
             F.sum("lrc").alias("sm"),
             F.count(F.lit(1)).alias("n"),
         ).first()
-        n = int(row["n"])
-        if n <= 1:
-            raise NetworkXError("global_reaching_centrality is undefined on <2 nodes.")
-        return (n * float(row["mx"]) - float(row["sm"])) / (n - 1)
-    finally:
-        lrc.unpersist()
+        loop.release(lrc)
+    n = int(row["n"])
+    if n <= 1:
+        raise NetworkXError("global_reaching_centrality is undefined on <2 nodes.")
+    return (n * float(row["mx"]) - float(row["sm"])) / (n - 1)

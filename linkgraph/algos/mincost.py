@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
 from linkgraph.graph import SparkGraph, resolve_weight_column
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 _INF = float("inf")
 
@@ -233,146 +233,156 @@ def _min_cost_flow(
         F.lit("r").alias("kind"), F.lit(0.0).alias("cap"), "cost",
     )
 
-    cache = SuperstepCache(spark)
-    res = cache.truncate(
-        fwd.unionByName(fwd_neg0).unionByName(rev_neg).unionByName(rev0)
-        .unionByName(s_arcs).unionByName(t_arcs)
-        .unionByName(s_rev).unionByName(t_rev)
-    )
-    orig_caps = cache.truncate(
-        res.select("u", "v", "kind", F.col("cap").alias("cap0"))
-    )
-
-    pushed = 0.0
-    phases = 0
-    while pushed < required - 1e-9:
-        phases += 1
-        if phases > max_phases:
-            raise RuntimeError("min_cost_flow exceeded max_phases")
-        live = res.filter(F.col("cap") > 1e-12)
-        # ---- distributed Bellman-Ford from S over (u, v, cost) ----------
-        dist = cache.truncate(
-            spark.createDataFrame([(S, 0.0)], "id long, distance double")
-        )
-        frontier = dist
-        while True:
-            cand = (
-                live.join(frontier.withColumnRenamed("id", "u"), "u")
-                .groupBy(F.col("v").alias("id"))
-                .agg(F.min(F.col("distance") + F.col("cost")).alias("cand"))
-            )
-            merged = cache.truncate(
-                dist.join(cand, "id", "full").select(
-                    "id",
-                    F.least(
-                        F.coalesce("distance", F.lit(_INF)),
-                        F.coalesce("cand", F.lit(_INF)),
-                    ).alias("distance"),
-                    (
-                        F.col("distance").isNull()
-                        | (F.col("cand") < F.col("distance") - 1e-12)
-                    ).alias("_improved"),
-                )
-            )
-            frontier = merged.filter("_improved").select("id", "distance")
-            dist = merged.select("id", "distance")
-            if frontier.limit(1).count() == 0:
-                break
-        row_t = dist.filter(F.col("id") == T).first()
-        if row_t is None:
-            raise NetworkXUnfeasible(
-                "no flow satisfies all node demands (sink unreachable "
-                f"with {required - pushed} units left to route)"
-            )
-        # ---- admissible subgraph, pruned backward from T ----------------
-        adm = (
-            live.join(
-                dist.select(F.col("id").alias("u"), F.col("distance").alias("du")),
-                "u",
-            )
-            .join(
-                dist.select(F.col("id").alias("v"), F.col("distance").alias("dv")),
-                "v",
-            )
-            .filter(F.abs(F.col("du") + F.col("cost") - F.col("dv")) <= 1e-9)
-            .select("u", "v", "kind", "cap")
-        )
-        adm = cache.truncate(adm)
-        keep = cache.truncate(spark.createDataFrame([(T,)], "node long"))
-        back = keep
-        while True:
-            prev = cache.truncate(
-                adm.join(back.withColumnRenamed("node", "v"), "v")
-                .select(F.col("u").alias("node"))
-                .distinct()
-                .join(keep, "node", "left_anti")
-            )
-            if prev.limit(1).count() == 0:
-                break
-            keep = cache.truncate(keep.unionByName(prev))
-            back = prev
-        adm = adm.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-        adm = cache.truncate(adm)
-        n_arcs = adm.count()
-        if n_arcs > max_driver_edges:
-            raise RuntimeError(
-                f"admissible phase subgraph has {n_arcs} arcs > "
-                f"max_driver_edges={max_driver_edges}"
-            )
-        value, phase_flow = _driver_max_flow(adm.collect(), S, T)
-        if value <= 1e-12:
-            raise NetworkXUnfeasible(
-                "admissible subgraph carries no flow — demands unsatisfiable"
-            )
-        pushed += value
-        # cap -= f on the pushed row; partner row (v, u, opposite kind)
-        # gains f of pushback headroom
-        updates = [(u, v, k, -f) for (u, v, k), f in phase_flow.items()] + [
-            (v, u, ("r" if k == "f" else "f"), f)
-            for (u, v, k), f in phase_flow.items()
-        ]
-        upd = spark.createDataFrame(updates, "u long, v long, kind string, d double")
-        upd = upd.groupBy("u", "v", "kind").agg(F.sum("d").alias("d"))
+    with SuperstepCache(spark) as cache:
         res = cache.truncate(
-            res.join(F.broadcast(upd), ["u", "v", "kind"], "left").select(
-                "u", "v", "kind",
-                (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"),
-                "cost",
-            ),
-            retire=res,
+            fwd.unionByName(fwd_neg0).unionByName(rev_neg).unionByName(rev0)
+            .unionByName(s_arcs).unionByName(t_arcs)
+            .unionByName(s_rev).unionByName(t_rev)
+        )
+        orig_caps = cache.truncate(
+            res.select("u", "v", "kind", F.col("cap").alias("cap0"))
         )
 
-    # flow on non-negative original arcs = cap0 - cap of their forward row;
-    # flow on presend (negative) arcs = residual cap of their reverse row
-    used = (
-        res.filter((F.col("kind") == "f") & (F.col("u") != S) & (F.col("v") != T))
-        .join(orig_caps, ["u", "v", "kind"])
-        .join(presend.select("u", "v"), ["u", "v"], "left_anti")
-        .select("u", "v", (F.col("cap0") - F.col("cap")).alias("flow"))
-    )
-    neg_used = (
-        res.filter(F.col("kind") == "r")
-        .select(F.col("v").alias("u"), F.col("u").alias("v"), F.col("cap").alias("flow"))
-        .join(presend.select("u", "v"), ["u", "v"], "left_semi")
-    )
-    flow = (
-        used.unionByName(neg_used)
-        .filter(F.col("flow") > 1e-12)
-        .groupBy("u", "v")
-        .agg(F.sum("flow").alias("flow"))
-    )
-    cost_row = (
-        flow.join(arcs.select("u", "v", "cost"), ["u", "v"])
-        .agg(
-            F.sum(F.col("flow") * F.col("cost")).alias("c"),
-            F.max(F.abs(F.col("flow") - F.round("flow"))).alias("frac"),
+        pushed = 0.0
+        phases = 0
+        while pushed < required - 1e-9:
+            phases += 1
+            if phases > max_phases:
+                raise RuntimeError("min_cost_flow exceeded max_phases")
+            live = res.filter(F.col("cap") > 1e-12)
+            # ---- distributed Bellman-Ford from S over (u, v, cost) ----------
+            dist = state = cache.truncate(
+                spark.createDataFrame([(S, 0.0)], "id long, distance double")
+            )
+            frontier = dist
+            while True:
+                cand = (
+                    live.join(frontier.withColumnRenamed("id", "u"), "u")
+                    .groupBy(F.col("v").alias("id"))
+                    .agg(F.min(F.col("distance") + F.col("cost")).alias("cand"))
+                )
+                state, seen = cache.truncate(
+                    dist.join(cand, "id", "full").select(
+                        "id",
+                        F.least(
+                            F.coalesce("distance", F.lit(_INF)),
+                            F.coalesce("cand", F.lit(_INF)),
+                        ).alias("distance"),
+                        (
+                            F.col("distance").isNull()
+                            | (F.col("cand") < F.col("distance") - 1e-12)
+                        ).alias("_improved"),
+                    ),
+                    retire=state,
+                    figures={
+                        "improved": F.count(F.when(F.col("_improved"), 1)),
+                        "sink": F.count(F.when(F.col("id") == T, 1)),
+                    },
+                )
+                frontier = state.filter("_improved").select("id", "distance")
+                dist = state.select("id", "distance")
+                if seen["improved"] == 0:
+                    break
+            if seen["sink"] == 0:
+                raise NetworkXUnfeasible(
+                    "no flow satisfies all node demands (sink unreachable "
+                    f"with {required - pushed} units left to route)"
+                )
+            # ---- admissible subgraph, pruned backward from T ----------------
+            adm = (
+                live.join(
+                    dist.select(F.col("id").alias("u"), F.col("distance").alias("du")),
+                    "u",
+                )
+                .join(
+                    dist.select(F.col("id").alias("v"), F.col("distance").alias("dv")),
+                    "v",
+                )
+                .filter(F.abs(F.col("du") + F.col("cost") - F.col("dv")) <= 1e-9)
+                .select("u", "v", "kind", "cap")
+            )
+            adm = cache.truncate(adm)
+            keep = cache.truncate(spark.createDataFrame([(T,)], "node long"))
+            back = keep
+            while True:
+                prev, seen = cache.truncate(
+                    adm.join(back.withColumnRenamed("node", "v"), "v")
+                    .select(F.col("u").alias("node"))
+                    .distinct()
+                    .join(keep, "node", "left_anti"),
+                    retire=None if back is keep else back,
+                    figures=row_count(),
+                )
+                if seen["rows"] == 0:
+                    break
+                keep = cache.truncate(keep.unionByName(prev), retire=keep)
+                back = prev
+            pruned, seen = cache.truncate(
+                adm.join(keep.withColumnRenamed("node", "u"), "u", "left_semi"),
+                figures=row_count(),
+            )
+            cache.release([state, adm, keep, back, prev])
+            adm = pruned
+            n_arcs = seen["rows"]
+            if n_arcs > max_driver_edges:
+                raise RuntimeError(
+                    f"admissible phase subgraph has {n_arcs} arcs > "
+                    f"max_driver_edges={max_driver_edges}"
+                )
+            value, phase_flow = _driver_max_flow(adm.collect(), S, T)
+            cache.release(adm)
+            if value <= 1e-12:
+                raise NetworkXUnfeasible(
+                    "admissible subgraph carries no flow — demands unsatisfiable"
+                )
+            pushed += value
+            # cap -= f on the pushed row; partner row (v, u, opposite kind)
+            # gains f of pushback headroom
+            updates = [(u, v, k, -f) for (u, v, k), f in phase_flow.items()] + [
+                (v, u, ("r" if k == "f" else "f"), f)
+                for (u, v, k), f in phase_flow.items()
+            ]
+            upd = spark.createDataFrame(updates, "u long, v long, kind string, d double")
+            upd = upd.groupBy("u", "v", "kind").agg(F.sum("d").alias("d"))
+            res = cache.truncate(
+                res.join(F.broadcast(upd), ["u", "v", "kind"], "left").select(
+                    "u", "v", "kind",
+                    (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"),
+                    "cost",
+                ),
+                retire=res,
+            )
+
+        # flow on non-negative original arcs = cap0 - cap of their forward row;
+        # flow on presend (negative) arcs = residual cap of their reverse row
+        used = (
+            res.filter((F.col("kind") == "f") & (F.col("u") != S) & (F.col("v") != T))
+            .join(orig_caps, ["u", "v", "kind"])
+            .join(presend.select("u", "v"), ["u", "v"], "left_anti")
+            .select("u", "v", (F.col("cap0") - F.col("cap")).alias("flow"))
         )
-        .first()
-    )
-    cost = float(cost_row["c"] or 0.0)
-    integral = (cost_row["frac"] or 0.0) < 1e-9
-    flow = flow.localCheckpoint(eager=True)
-    return cost, flow, integral
+        neg_used = (
+            res.filter(F.col("kind") == "r")
+            .select(F.col("v").alias("u"), F.col("u").alias("v"), F.col("cap").alias("flow"))
+            .join(presend.select("u", "v"), ["u", "v"], "left_semi")
+        )
+        flow = cache.truncate(
+            used.unionByName(neg_used)
+            .filter(F.col("flow") > 1e-12)
+            .groupBy("u", "v")
+            .agg(F.sum("flow").alias("flow"))
+        )
+        cost_row = (
+            flow.join(arcs.select("u", "v", "cost"), ["u", "v"])
+            .agg(
+                F.sum(F.col("flow") * F.col("cost")).alias("c"),
+                F.max(F.abs(F.col("flow") - F.round("flow"))).alias("frac"),
+            )
+            .first()
+        )
+        cost = float(cost_row["c"] or 0.0)
+        integral = (cost_row["frac"] or 0.0) < 1e-9
+        return cost, cache.result(flow), integral
 
 
 def network_simplex(

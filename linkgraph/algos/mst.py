@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
-from linkgraph.algos.components import connected_components
-from linkgraph.iterutils import SuperstepCache, loop_partitions
+from linkgraph.algos.components import _components
+from linkgraph.iterutils import SuperstepCache, loop_partitions, row_count
 
 __all__ = [
     "minimum_spanning_edges",
@@ -73,17 +73,11 @@ def minimum_spanning_edges(
     sign = F.lit(-1.0) if maximum else F.lit(1.0)
 
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cache = SuperstepCache(spark)
-    m = edges.count()
-    parts = loop_partitions(m, cap)
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        live = cache.truncate(edges)
+    parts = loop_partitions(edges.count(), cap)
+    with SuperstepCache(spark, partitions=parts) as loop:
+        live = loop.truncate(edges)
         # node -> component label (init: own id)
-        comp = cache.truncate(
-            g.vertices.select("id", F.col("id").alias("c"))
-        )
+        comp = loop.truncate(g.vertices.select("id", F.col("id").alias("c")))
         chosen = None  # accumulated forest edges
         for _ in range(max_rounds):
             lab_s = comp.select(F.col("id").alias("src"), F.col("c").alias("c_src"))
@@ -101,19 +95,18 @@ def minimum_spanning_edges(
             key = F.struct(
                 (sign * F.col("weight")).alias("w"), F.col("src"), F.col("dst")
             )
-            picked = (
+            picked, seen = loop.truncate(
                 cand.groupBy("c")
                 .agg(F.min_by(F.struct("src", "dst", "weight"), key).alias("e"))
                 .select("e.src", "e.dst", "e.weight")
-                .distinct()  # the two endpoint components may pick the same edge
+                .distinct(),  # the two endpoint components may pick the same edge
+                figures=row_count(),
             )
-            picked = cache.truncate(picked)
-            if picked.limit(1).count() == 0:
+            if seen["rows"] == 0:
                 break
-            chosen = (
-                picked
-                if chosen is None
-                else cache.truncate(chosen.unionByName(picked), retire=chosen)
+            chosen = loop.truncate(
+                picked if chosen is None else chosen.unionByName(picked),
+                retire=chosen,
             )
             # contract: CC over the picked component-graph merges labels
             merge_pairs = (
@@ -121,32 +114,27 @@ def minimum_spanning_edges(
                 .join(lab_d, "dst")
                 .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
             )
-            merged = connected_components(
+            merged = _components(
                 SparkGraph(
                     merge_pairs,
                     comp.select(F.col("c").alias("id")).distinct(),
                     directed=False,
                     coalesce_edges=False,
-                )
+                ),
+                loop,
             ).select(F.col("id").alias("c"), F.col("component").alias("c_new"))
-            # materialize BOTH successors before retiring either predecessor:
-            # new_live's plan reads the old comp labels (via ext) and new_comp's
-            # reads the old live (via merged←picked), so an early release would
-            # pull checkpoint blocks out from under the other's first read
-            new_live = cache.truncate(ext.select("src", "dst", "weight"))
-            new_comp = cache.truncate(
+            # materialize both successors before releasing: new_live reads
+            # comp (via ext), and merged reads comp, picked and the round's
+            # component labeling
+            new_live = loop.truncate(ext.select("src", "dst", "weight"))
+            new_comp = loop.truncate(
                 comp.join(merged, "c").select("id", F.col("c_new").alias("c"))
             )
-            cache.release(live)
-            cache.release(comp)
+            loop.release([live, merged])
             live, comp = new_live, new_comp
         if chosen is None:
-            out = spark.createDataFrame([], "src long, dst long, weight double")
-        else:
-            out = chosen.localCheckpoint(eager=True)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+            return spark.createDataFrame([], "src long, dst long, weight double")
+        return loop.result(chosen)
 
 
 def minimum_spanning_tree(

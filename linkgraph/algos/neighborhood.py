@@ -45,7 +45,7 @@ from linkgraph.graph import SparkGraph
 from linkgraph.algos.degrees import degrees
 from linkgraph.algos.triangles import triangles, _simple_edges
 from linkgraph.algos.distance import all_pairs_shortest_path_lengths
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = [
     "average_neighbor_degree",
@@ -285,20 +285,18 @@ def local_bridges(
     if not with_span:
         return bridges.select("u", "v")
 
-    bridges = bridges.persist()
     if weight is not None:
         return _local_bridge_spans_weighted(g, bridges, weight)
     arcs = sym.select(F.col("u").alias("a_src"), F.col("v").alias("a_dst"))
-    cache = SuperstepCache(g.spark)
-    # state: one BFS per bridge pair, rooted at u, looking for v,
-    # with that pair's own (u,v) edge removed from its copy of the graph.
-    frontier = bridges.select("u", "v", F.col("u").alias("id"))
-    visited = frontier
-    found = None
-    span_rows = []
-    try:
+    with SuperstepCache(g.spark) as cache:
+        bridges = cache.truncate(bridges)
+        # state: one BFS per bridge pair, rooted at u, looking for v,
+        # with that pair's own (u,v) edge removed from its copy of the graph.
+        frontier = bridges.select("u", "v", F.col("u").alias("id"))
+        visited = frontier
+        span_rows = []
         for d in range(1, max_span + 1):
-            nxt = (
+            nxt, seen = cache.truncate(
                 frontier.join(arcs, frontier["id"] == F.col("a_src"))
                 .filter(
                     ~(
@@ -308,26 +306,25 @@ def local_bridges(
                 )
                 .select("u", "v", F.col("a_dst").alias("id"))
                 .distinct()
-                .join(visited, ["u", "v", "id"], "left_anti")
+                .join(visited, ["u", "v", "id"], "left_anti"),
+                figures=row_count(),
             )
-            nxt = cache.truncate(nxt)
             hit = nxt.filter(F.col("id") == F.col("v")).select(
                 "u", "v", F.lit(d).alias("span")
             )
             span_rows.append(hit)
-            if nxt.isEmpty():
+            if seen["rows"] == 0:
                 break
             # pairs already resolved stop expanding
             frontier = nxt.join(hit.select("u", "v"), ["u", "v"], "left_anti")
-            visited = cache.truncate(visited.unionAll(nxt))
+            visited = cache.truncate(
+                visited.unionAll(nxt), retire=visited if d > 1 else None
+            )
         spans = span_rows[0]
         for s in span_rows[1:]:
             spans = spans.unionAll(s)
         out = bridges.join(spans, ["u", "v"], "left").select("u", "v", "span")
-        out = out.localCheckpoint()
-        return out
-    finally:
-        bridges.unpersist()
+        return cache.result(cache.truncate(out))
 
 
 def _local_bridge_spans_weighted(g, bridges, weight):
@@ -336,25 +333,23 @@ def _local_bridge_spans_weighted(g, bridges, weight):
     removed): one relaxation fixpoint keyed by bridge pair, each pair's
     own edge filtered from its copy of the arc table."""
     from linkgraph.graph import resolve_weight_column
-    from linkgraph.iterutils import SuperstepCache
 
     base = g.symmetric_edges().filter(F.col("src") != F.col("dst"))
-    warcs = (
-        base.select(
-            F.col("src").alias("a_src"),
-            F.col("dst").alias("a_dst"),
-            resolve_weight_column(base, weight).alias("w"),
+    with SuperstepCache(g.spark) as cache:
+        bridges = cache.truncate(bridges)
+        warcs = cache.pin(
+            base.select(
+                F.col("src").alias("a_src"),
+                F.col("dst").alias("a_dst"),
+                resolve_weight_column(base, weight).alias("w"),
+            )
+            .groupBy("a_src", "a_dst")
+            .agg(F.min("w").alias("w"))
         )
-        .groupBy("a_src", "a_dst")
-        .agg(F.min("w").alias("w"))
-        .persist()
-    )
-    cache = SuperstepCache(g.spark)
-    state = cache.truncate(
-        bridges.select("u", "v", F.col("u").alias("id"), F.lit(0.0).alias("d"))
-    )
-    frontier = state
-    try:
+        state = cache.truncate(
+            bridges.select("u", "v", F.col("u").alias("id"), F.lit(0.0).alias("d"))
+        )
+        frontier = state
         while True:
             cand = (
                 frontier.join(warcs, frontier["id"] == F.col("a_src"))
@@ -371,32 +366,31 @@ def _local_bridge_spans_weighted(g, bridges, weight):
                 .groupBy("u", "v", "id")
                 .agg(F.min("d").alias("d"))
             )
-            improved = cache.truncate(
+            improved, seen = cache.truncate(
                 cand.join(
                     state.select("u", "v", "id", F.col("d").alias("_old")),
                     ["u", "v", "id"],
                     "left",
                 )
                 .filter(F.col("_old").isNull() | (F.col("d") < F.col("_old")))
-                .select("u", "v", "id", "d")
+                .select("u", "v", "id", "d"),
+                retire=None if frontier is state else frontier,
+                figures=row_count(),
             )
-            if improved.limit(1).count() == 0:
-                cache.release(improved)
+            if seen["rows"] == 0:
                 break
             state = cache.truncate(
                 state.join(
                     improved.select("u", "v", "id"), ["u", "v", "id"], "left_anti"
-                ).unionByName(improved)
+                ).unionByName(improved),
+                retire=state,
             )
             frontier = improved
         spans = state.filter(F.col("id") == F.col("v")).select(
             "u", "v", F.col("d").alias("span")
         )
         out = bridges.join(spans, ["u", "v"], "left").select("u", "v", "span")
-        return out.localCheckpoint()
-    finally:
-        warcs.unpersist()
-        bridges.unpersist()
+        return cache.result(cache.truncate(out))
 
 
 def effective_size(g: SparkGraph, weight=None) -> DataFrame:
@@ -614,23 +608,21 @@ def local_efficiency(g: SparkGraph) -> float:
             F.col("e.src").alias("a_src"),
             F.col("e.dst").alias("a_dst"),
         )
-        .persist()
     )
     n = g.number_of_nodes()
     if n == 0:
-        ego_arcs.unpersist()
         return 0.0
-    cache = SuperstepCache(g.spark)
-    frontier = adj.select(
-        "ego", F.col("member").alias("source"), F.col("member").alias("id")
-    )
-    visited = frontier
-    per_ego = None
-    try:
+    with SuperstepCache(g.spark) as cache:
+        ego_arcs = cache.pin(ego_arcs)
+        frontier = adj.select(
+            "ego", F.col("member").alias("source"), F.col("member").alias("id")
+        )
+        visited = frontier
+        per_ego = None
         d = 0
         while True:
             d += 1
-            nxt = (
+            nxt, seen = cache.truncate(
                 frontier.join(
                     ego_arcs,
                     (frontier["ego"] == ego_arcs["ego"])
@@ -638,17 +630,20 @@ def local_efficiency(g: SparkGraph) -> float:
                 )
                 .select(frontier["ego"], "source", F.col("a_dst").alias("id"))
                 .distinct()
-                .join(visited, ["ego", "source", "id"], "left_anti")
+                .join(visited, ["ego", "source", "id"], "left_anti"),
+                figures=row_count(),
             )
-            nxt = cache.truncate(nxt)
-            if nxt.isEmpty():
+            if seen["rows"] == 0:
                 break
             lvl = nxt.groupBy("ego").agg(
                 (F.count(F.lit(1)) / float(d)).alias("inv")
             )
             per_ego = lvl if per_ego is None else per_ego.unionAll(lvl)
             frontier = nxt
-            visited = cache.truncate(visited.unionAll(nxt))
+            # the first visited set is the members themselves, no snapshot
+            visited = cache.truncate(
+                visited.unionAll(nxt), retire=visited if d > 1 else None
+            )
         if per_ego is None:
             return 0.0
         deg = degrees(g)
@@ -664,9 +659,7 @@ def local_efficiency(g: SparkGraph) -> float:
             )
         )
         total = eff.agg(F.sum("eff")).first()[0] or 0.0
-        return float(total) / n
-    finally:
-        ego_arcs.unpersist()
+    return float(total) / n
 
 
 def schultz_index(g: SparkGraph, weight=None) -> float:
@@ -688,24 +681,25 @@ def _degree_distance_index(g: SparkGraph, product: bool, weight=None) -> float:
     from linkgraph.algos.degrees import degrees as _degrees
 
     n = g.number_of_nodes()
-    sp = all_pairs_shortest_path_lengths(g, distance=weight).persist()
-    try:
-        if sp.count() < n * n:
-            return float("inf")
-        deg = _degrees(g)
-        du = deg.select(F.col("id").alias("source"), F.col("degree").alias("du"))
-        dv = deg.select(F.col("id").alias("id"), F.col("degree").alias("dv"))
-        term = (
-            F.col("distance") * (F.col("du") * F.col("dv"))
-            if product
-            else F.col("distance") * (F.col("du") + F.col("dv"))
-        )
-        total = (
-            sp.join(du, "source").join(dv, "id").agg(F.sum(term)).first()[0] or 0.0
-        )
-        return float(total) / 2.0
-    finally:
-        sp.unpersist()
+    with SuperstepCache(g.spark) as loop:
+        sp = all_pairs_shortest_path_lengths(g, distance=weight)
+        try:
+            if sp.count() < n * n:
+                return float("inf")
+            deg = _degrees(g)
+            du = deg.select(F.col("id").alias("source"), F.col("degree").alias("du"))
+            dv = deg.select(F.col("id").alias("id"), F.col("degree").alias("dv"))
+            term = (
+                F.col("distance") * (F.col("du") * F.col("dv"))
+                if product
+                else F.col("distance") * (F.col("du") + F.col("dv"))
+            )
+            total = (
+                sp.join(du, "source").join(dv, "id").agg(F.sum(term)).first()[0] or 0.0
+            )
+            return float(total) / 2.0
+        finally:
+            loop.release(sp)
 
 
 def harmonic_diameter(g: SparkGraph, weight=None) -> float:

@@ -110,7 +110,6 @@ def shortest_path_tree(
             "src", "dst", resolve_weight_column(base, weight).alias("w")
         )
     d, _ = _distances(g, source, weight)
-    d = d.persist()
     du = d.select(F.col("id").alias("src"), F.col("distance").alias("ds"))
     dv = d.select(F.col("id").alias("dst"), F.col("distance").alias("dv"))
     parents = (
@@ -221,7 +220,7 @@ def predecessor(g: SparkGraph, source) -> DataFrame:
     empty array, like the reference's ``{source: []}``."""
     from linkgraph.algos.setops import shortest_path_lengths
 
-    d = shortest_path_lengths(g, [source]).persist()
+    d = shortest_path_lengths(g, [source])
     base = g.symmetric_edges() if not g.directed else g.edges
     du = d.select(F.col("id").alias("src"), F.col("distance").alias("ds"))
     dv = d.select(F.col("id").alias("dst"), F.col("distance").alias("dv"))
@@ -321,45 +320,46 @@ def _paths_from_tree(tree: DataFrame, source) -> DataFrame:
     shortest-path tree: iterative frontier join — level k resolves the
     paths of every node whose parent resolved at level k-1, so the whole
     reconstruction is O(depth) supersteps, never a driver walk."""
-    from linkgraph.iterutils import SuperstepCache
+    from linkgraph.iterutils import SuperstepCache, row_count
 
     spark = tree.sparkSession
-    cache = SuperstepCache(spark)
-    reached = tree.filter(F.col("distance").isNotNull())
-    known = cache.truncate(
-        reached.filter(F.col("id") == int(source)).select(
-            "id",
-            "distance",
-            F.array(F.lit(int(source)).cast("long")).alias("path"),
-        )
-    )
-    frontier = known
-    pending = cache.truncate(reached.filter(F.col("id") != int(source)))
-    result = known
-    while True:
-        nxt = (
-            pending.join(
-                frontier.select(
-                    F.col("id").alias("parent"), F.col("path").alias("ppath")
-                ),
-                "parent",
-            )
-            .select(
+    with SuperstepCache(spark) as cache:
+        reached = tree.filter(F.col("distance").isNotNull())
+        known = cache.truncate(
+            reached.filter(F.col("id") == int(source)).select(
                 "id",
                 "distance",
-                F.concat("ppath", F.array(F.col("id"))).alias("path"),
+                F.array(F.lit(int(source)).cast("long")).alias("path"),
             )
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        result = cache.truncate(result.unionByName(nxt))
-        pending = cache.truncate(
-            pending.join(nxt.select("id"), "id", "left_anti")
-        )
-        frontier = nxt
-    result = result.localCheckpoint(eager=True)
-    return result
+        frontier = known
+        pending = cache.truncate(reached.filter(F.col("id") != int(source)))
+        result = known
+        while True:
+            nxt = (
+                pending.join(
+                    frontier.select(
+                        F.col("id").alias("parent"), F.col("path").alias("ppath")
+                    ),
+                    "parent",
+                )
+                .select(
+                    "id",
+                    "distance",
+                    F.concat("ppath", F.array(F.col("id"))).alias("path"),
+                )
+            )
+            nxt, seen = cache.truncate(nxt, figures=row_count())
+            if seen["rows"] == 0:
+                break
+            result = cache.truncate(
+                result.unionByName(nxt), retire=result
+            )
+            pending = cache.truncate(
+                pending.join(nxt.select("id"), "id", "left_anti"), retire=pending
+            )
+            frontier = nxt
+        return cache.result(result)
 
 
 def single_source_shortest_path(g: SparkGraph, source, cutoff=None) -> DataFrame:
@@ -581,7 +581,7 @@ def dijkstra_predecessor_and_distance(
     shortest-path predecessor (dist(u) + w(u,v) == dist(v)), one join."""
     from linkgraph.algos.sssp import weighted_shortest_path_lengths
 
-    d = weighted_shortest_path_lengths(g, [source], weight=weight).persist()
+    d = weighted_shortest_path_lengths(g, [source], weight=weight)
     base = g.symmetric_edges() if not g.directed else g.edges
     arcs = base.select("src", "dst", resolve_weight_column(base, weight).alias("w"))
     preds = (
@@ -840,46 +840,49 @@ def bfs_beam_edges(
         else g.edges.select("src", "dst")
     )
     spark = g.spark
-    from linkgraph.iterutils import SuperstepCache
+    from linkgraph.iterutils import SuperstepCache, row_count
 
-    cache = SuperstepCache(spark)
-    visited = cache.truncate(
-        spark.createDataFrame([(int(source),)], "id long")
-    )
-    frontier = visited
-    depth = 0
-    edges_acc = None
-    while True:
-        depth += 1
-        nxt = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("src").alias("parent"))
-            .join(visited, "id", "left_anti")
+    with SuperstepCache(spark) as cache:
+        visited = cache.truncate(
+            spark.createDataFrame([(int(source),)], "id long")
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        if width is not None:
-            nxt = cache.truncate(
-                nxt.join(verts, "id")
-                .orderBy(F.col("_score").desc(), F.col("id"))
-                .limit(int(width))
-                .select("id", "parent")
+        frontier = visited
+        depth = 0
+        edges_acc = None
+        while True:
+            depth += 1
+            nxt = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("src").alias("parent"))
+                .join(visited, "id", "left_anti")
             )
-        level = nxt.select(
-            F.col("parent").alias("src"),
-            F.col("id").alias("dst"),
-            F.lit(depth).cast("long").alias("depth"),
-        )
-        edges_acc = level if edges_acc is None else edges_acc.unionByName(level)
-        edges_acc = cache.truncate(edges_acc)
-        visited = cache.truncate(visited.unionByName(nxt.select("id")))
-        frontier = nxt.select("id")
-    if edges_acc is None:
-        edges_acc = spark.createDataFrame([], "src long, dst long, depth long")
-    edges_acc = edges_acc.localCheckpoint(eager=True)
-    return edges_acc
+            nxt, seen = cache.truncate(nxt, figures=row_count())
+            if seen["rows"] == 0:
+                break
+            if width is not None:
+                nxt = cache.truncate(
+                    nxt.join(verts, "id")
+                    .orderBy(F.col("_score").desc(), F.col("id"))
+                    .limit(int(width))
+                    .select("id", "parent")
+                )
+            level = nxt.select(
+                F.col("parent").alias("src"),
+                F.col("id").alias("dst"),
+                F.lit(depth).cast("long").alias("depth"),
+            )
+            edges_acc = cache.truncate(
+                level if edges_acc is None else edges_acc.unionByName(level),
+                retire=edges_acc,
+            )
+            visited = cache.truncate(
+                visited.unionByName(nxt.select("id")), retire=visited
+            )
+            frontier = nxt.select("id")
+        if edges_acc is None:
+            return spark.createDataFrame([], "src long, dst long, depth long")
+        return cache.result(edges_acc)
 
 
 def _bfs_ranked(
@@ -918,65 +921,67 @@ def _bfs_ranked(
             adj = adj.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     else:
         adj = g.symmetric_edges().select("src", "dst")
-    adj = adj.persist()
 
-    from linkgraph.iterutils import SuperstepCache
+    from linkgraph.iterutils import SuperstepCache, row_count
 
-    cache = SuperstepCache(spark)
-    ranked = cache.truncate(
-        src_df.select(
-            "id",
-            F.lit(0).cast("long").alias("depth"),
-            F.row_number().over(Window.orderBy("_ord")).cast("long").alias("rank"),
-            F.lit(None).cast("long").alias("parent"),
-        )
-    )
-    frontier = ranked
-    offset = ranked.count()
-    depth = 0
-    while True:
-        if depth_limit is not None and depth >= depth_limit:
-            break
-        depth += 1
-        cand = (
-            adj.join(
-                frontier.select(
-                    F.col("id").alias("src"), F.col("rank").alias("_prank")
-                ),
-                "src",
-            )
-            .join(
-                ranked.select("id"),
-                F.col("dst") == F.col("id"),
-                "left_anti",
-            )
-            .groupBy(F.col("dst"))
-            .agg(F.min(F.struct("_prank", "src")).alias("_disc"))
-            .select(
-                F.col("dst").alias("id"),
-                F.col("_disc._prank").alias("_disc_rank"),
-                F.col("_disc.src").alias("parent"),
-            )
-        )
-        nxt = cache.truncate(
-            cand.select(
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(adj)
+        ranked, seen = cache.truncate(
+            src_df.select(
                 "id",
-                F.lit(depth).cast("long").alias("depth"),
-                (
-                    F.row_number().over(Window.orderBy("_disc_rank", "id"))
-                    + F.lit(offset)
-                ).cast("long").alias("rank"),
-                "parent",
-            )
+                F.lit(0).cast("long").alias("depth"),
+                F.row_number().over(Window.orderBy("_ord")).cast("long").alias("rank"),
+                F.lit(None).cast("long").alias("parent"),
+            ),
+            figures=row_count(),
         )
-        n = nxt.count()
-        if n == 0:
-            break
-        offset += n
-        ranked = cache.truncate(ranked.unionByName(nxt))
-        frontier = nxt
-    adj.unpersist()
-    return ranked
+        frontier = ranked
+        offset = seen["rows"]
+        depth = 0
+        while True:
+            if depth_limit is not None and depth >= depth_limit:
+                break
+            depth += 1
+            cand = (
+                adj.join(
+                    frontier.select(
+                        F.col("id").alias("src"), F.col("rank").alias("_prank")
+                    ),
+                    "src",
+                )
+                .join(
+                    ranked.select("id"),
+                    F.col("dst") == F.col("id"),
+                    "left_anti",
+                )
+                .groupBy(F.col("dst"))
+                .agg(F.min(F.struct("_prank", "src")).alias("_disc"))
+                .select(
+                    F.col("dst").alias("id"),
+                    F.col("_disc._prank").alias("_disc_rank"),
+                    F.col("_disc.src").alias("parent"),
+                )
+            )
+            nxt, seen = cache.truncate(
+                cand.select(
+                    "id",
+                    F.lit(depth).cast("long").alias("depth"),
+                    (
+                        F.row_number().over(Window.orderBy("_disc_rank", "id"))
+                        + F.lit(offset)
+                    ).cast("long").alias("rank"),
+                    "parent",
+                ),
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                break
+            offset += seen["rows"]
+            ranked = cache.truncate(
+                ranked.unionByName(nxt), retire=ranked
+            )
+            frontier = nxt
+        return cache.result(ranked)
 
 
 def bfs_edges(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, loop_partitions
 
 __all__ = ["resistance_distance"]
 
@@ -75,88 +75,88 @@ def resistance_distance(
     )
     if weight is not None and invert_weight:
         w = 1.0 / w
-    # conductance-weighted symmetric arcs, self-loops ignored (reference)
-    arcs = (
-        g.symmetric_edges()
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", w.alias("c"))
-        .persist()
-    )
-    deg = arcs.groupBy(F.col("src").alias("id")).agg(F.sum("c").alias("d")).persist()
     n = g.number_of_nodes()
     if max_iter is None:
         max_iter = max(200, 20 * n)
-
-    cache = SuperstepCache(spark)
     # state: (id, x, r, p); x0 = 0, r0 = b = e_a - e_b, p0 = r0
     b = F.when(F.col("id") == node_a, 1.0).when(F.col("id") == node_b, -1.0).otherwise(
         0.0
     )
-    state = cache.truncate(
-        g.vertices.select(
-            "id", F.lit(0.0).alias("x"), b.alias("r"), b.alias("p")
-        )
-    )
     rr = 2.0  # b·b for e_a - e_b
-
-    for _ in range(max_iter):
-        # Lp = d*p - sum_nbr c * p_nbr  (one join + one groupBy)
-        nbr = (
-            arcs.join(
-                state.select(F.col("id").alias("dst"), F.col("p").alias("pn")), "dst"
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.col("c") * F.col("pn")).alias("s"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with SuperstepCache(spark, partitions=loop_partitions(n, cap)) as cache:
+        # conductance-weighted symmetric arcs, self-loops ignored (reference)
+        arcs = cache.pin(
+            g.symmetric_edges()
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst", w.alias("c"))
         )
-        st = (
-            state.join(deg, "id", "left")
-            .join(nbr, "id", "left")
-            .select(
-                "id",
-                "x",
-                "r",
-                "p",
-                (
-                    F.coalesce("d", F.lit(0.0)) * F.col("p")
-                    - F.coalesce("s", F.lit(0.0))
-                ).alias("lp"),
-            )
-        )
-        st = cache.truncate(st, retire=state)
-        pap = st.agg(F.sum(F.col("p") * F.col("lp"))).first()[0] or 0.0
-        if pap <= 0:
-            state = st  # numerical floor: p in the null space direction
-            break
-        alpha = rr / pap
-        nxt = st.select(
-            "id",
-            (F.col("x") + F.lit(alpha) * F.col("p")).alias("x"),
-            (F.col("r") - F.lit(alpha) * F.col("lp")).alias("r"),
-            "p",
-        )
-        nxt = cache.truncate(nxt, retire=st)
-        rr_new = nxt.agg(F.sum(F.col("r") * F.col("r"))).first()[0] or 0.0
-        if rr_new < tol * tol:
-            state = nxt
-            break
-        beta = rr_new / rr
-        rr = rr_new
+        deg = cache.pin(arcs.groupBy(F.col("src").alias("id")).agg(F.sum("c").alias("d")))
         state = cache.truncate(
-            nxt.select(
-                "id", "x", "r", (F.col("r") + F.lit(beta) * F.col("p")).alias("p")
-            ),
-            retire=nxt,
+            g.vertices.select(
+                "id", F.lit(0.0).alias("x"), b.alias("r"), b.alias("p")
+            )
         )
-    else:
-        raise NetworkXError(
-            f"resistance_distance CG did not converge in {max_iter} iterations"
-        )
-    vals = {
-        r["id"]: r["x"]
-        for r in state.filter(F.col("id").isin([node_a, node_b])).collect()
-    }
-    arcs.unpersist()
-    deg.unpersist()
+        for _ in range(max_iter):
+            # Lp = d*p - sum_nbr c * p_nbr  (one join + one groupBy)
+            nbr = (
+                arcs.join(
+                    state.select(F.col("id").alias("dst"), F.col("p").alias("pn")), "dst"
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum(F.col("c") * F.col("pn")).alias("s"))
+            )
+            st, seen = cache.truncate(
+                state.join(deg, "id", "left")
+                .join(nbr, "id", "left")
+                .select(
+                    "id",
+                    "x",
+                    "r",
+                    "p",
+                    (
+                        F.coalesce("d", F.lit(0.0)) * F.col("p")
+                        - F.coalesce("s", F.lit(0.0))
+                    ).alias("lp"),
+                ),
+                retire=state,
+                figures={"pap": F.sum(F.col("p") * F.col("lp"))},
+            )
+            pap = seen["pap"] or 0.0
+            if pap <= 0:
+                state = st  # numerical floor: p in the null space direction
+                break
+            alpha = rr / pap
+            nxt, seen = cache.truncate(
+                st.select(
+                    "id",
+                    (F.col("x") + F.lit(alpha) * F.col("p")).alias("x"),
+                    (F.col("r") - F.lit(alpha) * F.col("lp")).alias("r"),
+                    "p",
+                ),
+                retire=st,
+                figures={"rr": F.sum(F.col("r") * F.col("r"))},
+            )
+            rr_new = seen["rr"] or 0.0
+            if rr_new < tol * tol:
+                state = nxt
+                break
+            beta = rr_new / rr
+            rr = rr_new
+            state = cache.truncate(
+                nxt.select(
+                    "id", "x", "r", (F.col("r") + F.lit(beta) * F.col("p")).alias("p")
+                ),
+                retire=nxt,
+            )
+        else:
+            raise NetworkXError(
+                f"resistance_distance CG did not converge in {max_iter} iterations"
+            )
+        vals = {
+            r["id"]: r["x"]
+            for r in state.filter(F.col("id").isin([node_a, node_b])).collect()
+        }
     return float(vals[node_a] - vals[node_b])
 
 

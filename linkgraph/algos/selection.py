@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = [
     "maximal_independent_set",
@@ -72,11 +72,10 @@ def maximal_independent_set(
         raise NotImplementedForDirected(
             "maximal_independent_set: not implemented for directed type"
         )
-    sym = _sym_arcs(g).persist()
-    cache = SuperstepCache(g.spark)
-    mis_parts = []
-    try:
-        active = cache.truncate(g.vertices.select("id"))
+    with SuperstepCache(g.spark) as cache:
+        sym = cache.pin(_sym_arcs(g))
+        mis_parts = []
+        active, seen = cache.truncate(g.vertices.select("id"), figures=row_count())
         if nodes is not None:
             seed_ids = nodes.select(
                 F.col(nodes.columns[0]).cast("long").alias("id")
@@ -96,12 +95,13 @@ def maximal_independent_set(
                 .select(F.col("dst").alias("id"))
                 .distinct()
             )
-            active = cache.truncate(
+            active, seen = cache.truncate(
                 active.join(seed_ids, "id", "left_anti").join(nbrs, "id", "left_anti"),
                 retire=active,
+                figures=row_count(),
             )
         rnd = 0
-        while not active.isEmpty():
+        while seen["rows"] > 0:
             rnd += 1
             pri = active.select(
                 "id", F.xxhash64(F.col("id"), F.lit(seed), F.lit(rnd)).alias("h")
@@ -131,20 +131,19 @@ def maximal_independent_set(
                 .select(F.col("dst").alias("id"))
                 .distinct()
             )
-            active = cache.truncate(
+            active, seen = cache.truncate(
                 active.join(sel, "id", "left_anti").join(
                     sel_nbrs, "id", "left_anti"
                 ),
                 retire=active,
+                figures=row_count(),
             )
         if not mis_parts:
             return g.vertices.select("id").limit(0)
         out = mis_parts[0]
         for p in mis_parts[1:]:
             out = out.unionAll(p)
-        return out.localCheckpoint()
-    finally:
-        sym.unpersist()
+        return cache.result(cache.truncate(out))
 
 
 def maximal_matching(g: SparkGraph, seed: int = 42) -> DataFrame:
@@ -158,54 +157,55 @@ def maximal_matching(g: SparkGraph, seed: int = 42) -> DataFrame:
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-    cache = SuperstepCache(g.spark)
-    parts = []
-    active = cache.truncate(e0)
-    rnd = 0
-    while not active.isEmpty():
-        rnd += 1
-        pri = active.select(
-            "u", "v",
-            F.xxhash64(F.col("u"), F.col("v"), F.lit(seed), F.lit(rnd)).alias("h"),
-        )
-        ends = pri.select(F.col("u").alias("node"), "u", "v", "h").unionAll(
-            pri.select(F.col("v").alias("node"), "u", "v", "h")
-        )
-        node_min = ends.groupBy("node").agg(
-            F.min(F.struct("h", "u", "v")).alias("m")
-        )
-        sel = (
-            pri.join(
-                node_min.withColumnRenamed("node", "u").withColumnRenamed("m", "mu"),
-                "u",
+    with SuperstepCache(g.spark) as cache:
+        parts = []
+        active, seen = cache.truncate(e0, figures=row_count())
+        rnd = 0
+        while seen["rows"] > 0:
+            rnd += 1
+            pri = active.select(
+                "u", "v",
+                F.xxhash64(F.col("u"), F.col("v"), F.lit(seed), F.lit(rnd)).alias("h"),
             )
-            .join(
-                node_min.withColumnRenamed("node", "v").withColumnRenamed("m", "mv"),
-                "v",
+            ends = pri.select(F.col("u").alias("node"), "u", "v", "h").unionAll(
+                pri.select(F.col("v").alias("node"), "u", "v", "h")
             )
-            .filter(
-                (F.struct("h", "u", "v") == F.col("mu"))
-                & (F.struct("h", "u", "v") == F.col("mv"))
+            node_min = ends.groupBy("node").agg(
+                F.min(F.struct("h", "u", "v")).alias("m")
             )
-            .select("u", "v")
-        )
-        sel = cache.truncate(sel)
-        parts.append(sel)
-        matched = sel.select(F.col("u").alias("node")).unionAll(
-            sel.select(F.col("v").alias("node"))
-        )
-        active = cache.truncate(
-            active.join(
-                matched.withColumnRenamed("node", "u"), "u", "left_anti"
-            ).join(matched.withColumnRenamed("node", "v"), "v", "left_anti"),
-            retire=active,
-        )
-    if not parts:
-        return e0.limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.localCheckpoint()
+            sel = (
+                pri.join(
+                    node_min.withColumnRenamed("node", "u").withColumnRenamed("m", "mu"),
+                    "u",
+                )
+                .join(
+                    node_min.withColumnRenamed("node", "v").withColumnRenamed("m", "mv"),
+                    "v",
+                )
+                .filter(
+                    (F.struct("h", "u", "v") == F.col("mu"))
+                    & (F.struct("h", "u", "v") == F.col("mv"))
+                )
+                .select("u", "v")
+            )
+            sel = cache.truncate(sel)
+            parts.append(sel)
+            matched = sel.select(F.col("u").alias("node")).unionAll(
+                sel.select(F.col("v").alias("node"))
+            )
+            active, seen = cache.truncate(
+                active.join(
+                    matched.withColumnRenamed("node", "u"), "u", "left_anti"
+                ).join(matched.withColumnRenamed("node", "v"), "v", "left_anti"),
+                retire=active,
+                figures=row_count(),
+            )
+        if not parts:
+            return e0.limit(0)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionAll(p)
+        return cache.result(cache.truncate(out))
 
 
 def voterank(g: SparkGraph, number_of_nodes: Optional[int] = None) -> DataFrame:
@@ -235,55 +235,55 @@ def voterank(g: SparkGraph, number_of_nodes: Optional[int] = None) -> DataFrame:
         return g.spark.createDataFrame([], "rank long, id long")
     f = 1.0 / avg_deg
 
-    cache = SuperstepCache(g.spark)
-    state = cache.truncate(
-        g.vertices.select(
-            "id", F.lit(1.0).alias("ability"), F.lit(False).alias("elected")
-        )
-    )
-    chosen = []
-    for _ in range(number_of_nodes):
-        # votes flow dst→src: score(src) = Σ ability(dst)
-        scores = (
-            arcs.join(
-                state.select(F.col("id").alias("dst"), "ability"), "dst"
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("ability").alias("score"))
-        )
-        top = (
-            state.filter(~F.col("elected"))
-            .join(scores, "id", "left")
-            .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
-            .orderBy(F.desc("score"), F.asc("id"))
-            .limit(1)
-            .first()
-        )
-        if top is None or top["score"] == 0.0:
-            break
-        nid = top["id"]
-        chosen.append(nid)
-        nbrs = arcs.filter(F.col("src") == nid).select(
-            F.col("dst").alias("id")
-        )
+    with SuperstepCache(g.spark) as cache:
         state = cache.truncate(
-            state.join(F.broadcast(nbrs.withColumn("hit", F.lit(True))), "id", "left")
-            .select(
-                "id",
-                F.when(F.col("id") == nid, 0.0)
-                .when(
-                    F.col("hit").isNotNull(),
-                    F.greatest(F.col("ability") - f, F.lit(0.0)),
-                )
-                .otherwise(F.col("ability"))
-                .alias("ability"),
-                (F.col("elected") | (F.col("id") == nid)).alias("elected"),
-            ),
-            retire=state,
+            g.vertices.select(
+                "id", F.lit(1.0).alias("ability"), F.lit(False).alias("elected")
+            )
         )
-    return g.spark.createDataFrame(
-        [(i, int(v)) for i, v in enumerate(chosen)], "rank long, id long"
-    )
+        chosen = []
+        for _ in range(number_of_nodes):
+            # votes flow dst→src: score(src) = Σ ability(dst)
+            scores = (
+                arcs.join(
+                    state.select(F.col("id").alias("dst"), "ability"), "dst"
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("ability").alias("score"))
+            )
+            top = (
+                state.filter(~F.col("elected"))
+                .join(scores, "id", "left")
+                .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
+                .orderBy(F.desc("score"), F.asc("id"))
+                .limit(1)
+                .first()
+            )
+            if top is None or top["score"] == 0.0:
+                break
+            nid = top["id"]
+            chosen.append(nid)
+            nbrs = arcs.filter(F.col("src") == nid).select(
+                F.col("dst").alias("id")
+            )
+            state = cache.truncate(
+                state.join(F.broadcast(nbrs.withColumn("hit", F.lit(True))), "id", "left")
+                .select(
+                    "id",
+                    F.when(F.col("id") == nid, 0.0)
+                    .when(
+                        F.col("hit").isNotNull(),
+                        F.greatest(F.col("ability") - f, F.lit(0.0)),
+                    )
+                    .otherwise(F.col("ability"))
+                    .alias("ability"),
+                    (F.col("elected") | (F.col("id") == nid)).alias("elected"),
+                ),
+                retire=state,
+            )
+        return g.spark.createDataFrame(
+            [(i, int(v)) for i, v in enumerate(chosen)], "rank long, id long"
+        )
 
 
 def dominating_set(g: SparkGraph, seed: int = 42) -> DataFrame:

@@ -41,42 +41,37 @@ def all_simple_paths(
     if target not in present:
         raise ValueError(f"target node {target} not in graph")
     spark = g.spark
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .persist()
-    )
-    cache = SuperstepCache(spark)
-    frontier = cache.truncate(
-        spark.createDataFrame([(source,)], "head bigint").select(
-            "head", F.array(F.col("head")).alias("path")
+    with SuperstepCache(spark) as cache:
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .distinct()
         )
-    )
-    outs = []
-    for _ in range(cutoff):
-        step = (
-            frontier.join(arcs.withColumnRenamed("src", "head"), "head")
-            .filter(~F.array_contains(F.col("path"), F.col("dst")))
-            .select(
-                F.col("dst").alias("head"),
-                F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+        frontier = cache.truncate(
+            spark.createDataFrame([(source,)], "head bigint").select(
+                "head", F.array(F.col("head")).alias("path")
             )
         )
-        step = cache.truncate(step)
-        done = step.filter(F.col("head") == target).select("path")
-        outs.append(done)
-        frontier = step.filter(F.col("head") != target)
-        if frontier.limit(1).count() == 0:
-            break
-    out = outs[0]
-    for df in outs[1:]:
-        out = out.unionByName(df)
-    out = out.persist()
-    out.count()
-    arcs.unpersist()
-    return out
+        outs = []
+        for _ in range(cutoff):
+            step, seen = cache.truncate(
+                frontier.join(arcs.withColumnRenamed("src", "head"), "head")
+                .filter(~F.array_contains(F.col("path"), F.col("dst")))
+                .select(
+                    F.col("dst").alias("head"),
+                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+                ),
+                figures={"open": F.count(F.when(F.col("head") != target, 1))},
+            )
+            outs.append(step.filter(F.col("head") == target).select("path"))
+            frontier = step.filter(F.col("head") != target)
+            if seen["open"] == 0:
+                break
+        out = outs[0]
+        for df in outs[1:]:
+            out = out.unionByName(df)
+        return cache.result(cache.truncate(out))
 
 
 def all_simple_edge_paths(

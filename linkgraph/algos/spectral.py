@@ -76,51 +76,47 @@ def _expm_pairs(
     g: SparkGraph, tol: float, max_terms: int
 ) -> DataFrame:
     """(src, dst, comm) = truncated-Taylor expm(A) over the 0/1 adjacency."""
-    spark = g.spark
-    arcs = _zero_one_arcs(g).persist()
-    cache = SuperstepCache(spark)
-
-    # k = 0: identity; k = 1: A itself.
-    terms = [
-        g.vertices.select(
-            F.col("id").alias("src"),
-            F.col("id").alias("dst"),
-            F.lit(1.0).alias("term"),
-        )
-    ]
-    cur = cache.truncate(arcs.select("src", "dst", F.lit(1.0).alias("term")))
-    prev_max = float("inf")
-    k = 1
-    while True:
-        terms.append(cur)
-        if k >= max_terms:
-            raise NetworkXError(
-                f"communicability series did not converge in {max_terms} terms"
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(_zero_one_arcs(g))
+        # k = 0: identity; k = 1: A itself.
+        terms = [
+            g.vertices.select(
+                F.col("id").alias("src"),
+                F.col("id").alias("dst"),
+                F.lit(1.0).alias("term"),
             )
-        k += 1
-        # T_k = T_{k-1} · A / k — one join + one keyed sum (A entries are 1).
-        nxt = cache.truncate(
-            cur.withColumnRenamed("dst", "mid")
-            .join(arcs.withColumnRenamed("src", "mid"), "mid")
-            .groupBy("src", "dst")
-            .agg((F.sum("term") / F.lit(float(k))).alias("term"))
-        )
-        row = nxt.agg(F.max(F.abs(F.col("term"))).alias("m")).collect()[0]
-        cur_max = row["m"] if row["m"] is not None else 0.0
-        if cur_max < tol and cur_max < prev_max:
-            terms.append(nxt)
-            break
-        prev_max = cur_max
-        cur = nxt
+        ]
+        cur = cache.truncate(arcs.select("src", "dst", F.lit(1.0).alias("term")))
+        prev_max = float("inf")
+        k = 1
+        while True:
+            terms.append(cur)
+            if k >= max_terms:
+                raise NetworkXError(
+                    f"communicability series did not converge in {max_terms} terms"
+                )
+            k += 1
+            # T_k = T_{k-1} · A / k — one join + one keyed sum (A entries are 1).
+            nxt, seen = cache.truncate(
+                cur.withColumnRenamed("dst", "mid")
+                .join(arcs.withColumnRenamed("src", "mid"), "mid")
+                .groupBy("src", "dst")
+                .agg((F.sum("term") / F.lit(float(k))).alias("term")),
+                figures={"m": F.max(F.abs(F.col("term")))},
+            )
+            cur_max = seen["m"] if seen["m"] is not None else 0.0
+            if cur_max < tol and cur_max < prev_max:
+                terms.append(nxt)
+                break
+            prev_max = cur_max
+            cur = nxt
 
-    total = (
-        reduce(DataFrame.unionByName, terms)
-        .groupBy("src", "dst")
-        .agg(F.sum("term").alias("comm"))
-    )
-    out = total.localCheckpoint(eager=True)
-    arcs.unpersist()
-    return out
+        total = (
+            reduce(DataFrame.unionByName, terms)
+            .groupBy("src", "dst")
+            .agg(F.sum("term").alias("comm"))
+        )
+        return cache.result(cache.truncate(total))
 
 
 def communicability(
@@ -132,10 +128,7 @@ def communicability(
     pairs; the relational form drops those structural zeros, like
     ``number_of_walks``."""
     pairs = _expm_pairs(g, tol, max_terms)
-    out = pairs.select(
-        "src", "dst", F.col("comm").alias("communicability")
-    ).localCheckpoint(eager=True)
-    return out
+    return pairs.select("src", "dst", F.col("comm").alias("communicability"))
 
 
 def communicability_exp(
@@ -153,38 +146,36 @@ def _spectral_radius(
     (the shift keeps the dominant eigenvalue unique on bipartite graphs,
     where ±λ_max tie on A itself). Distributed: one arc⋈vector join per
     step; the vector is O(n) rows, never n×n."""
-    cache = SuperstepCache(g.spark)
-    x = cache.truncate(
-        g.vertices.select(F.col("id"), F.lit(1.0).alias("x"))
-    )
-    prev_lam = None
-    prev = None
-    for _ in range(max_iter):
-        # y = (A + I) x
-        ax = (
-            x.withColumnRenamed("id", "mid")
-            .join(arcs.withColumnRenamed("src", "mid"), "mid")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("ax"))
-        )
-        y = (
-            x.join(ax, "id", "left")
-            .select("id", (F.col("x") + F.coalesce("ax", F.lit(0.0))).alias("y"))
-        )
-        stats = y.join(x, "id").agg(
-            F.sum(F.col("y") * F.col("y")).alias("yy"),
-            F.sum(F.col("y") * F.col("x")).alias("yx"),
-            F.sum(F.col("x") * F.col("x")).alias("xx"),
-        ).collect()[0]
-        lam = stats["yx"] / stats["xx"] - 1.0  # Rayleigh quotient of A
-        norm = stats["yy"] ** 0.5
-        nxt = cache.truncate(
-            y.select("id", (F.col("y") / F.lit(norm)).alias("x")), retire=prev
-        )
-        prev, x = x, nxt
-        if prev_lam is not None and abs(lam - prev_lam) < tol:
-            break
-        prev_lam = lam
+    with SuperstepCache(g.spark) as cache:
+        x = g.vertices.select(F.col("id"), F.lit(1.0).alias("x"))
+        prev_lam = None
+        prev = None
+        for _ in range(max_iter):
+            # y = (A + I) x
+            ax = (
+                x.withColumnRenamed("id", "mid")
+                .join(arcs.withColumnRenamed("src", "mid"), "mid")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("x").alias("ax"))
+            )
+            y, stats = cache.truncate(
+                x.join(ax, "id", "left").select(
+                    "id", "x", (F.col("x") + F.coalesce("ax", F.lit(0.0))).alias("y")
+                ),
+                retire=prev,
+                figures={
+                    "yy": F.sum(F.col("y") * F.col("y")),
+                    "yx": F.sum(F.col("y") * F.col("x")),
+                    "xx": F.sum(F.col("x") * F.col("x")),
+                },
+            )
+            lam = stats["yx"] / stats["xx"] - 1.0  # Rayleigh quotient of A
+            norm = stats["yy"] ** 0.5
+            x = y.select("id", (F.col("y") / F.lit(norm)).alias("x"))
+            prev = y
+            if prev_lam is not None and abs(lam - prev_lam) < tol:
+                break
+            prev_lam = lam
     return lam
 
 
@@ -199,19 +190,21 @@ def subgraph_centrality(
     (``subgraph_alg.py`` ``subgraph_centrality``). ``normalized=True``
     divides by e^{λ_max} (the reference's ``exp(w - w.max())`` shift),
     with λ_max from shifted power iteration."""
-    pairs = _expm_pairs(g, tol, max_terms)
-    diag = pairs.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("id"), F.col("comm").alias("centrality")
-    )
-    if normalized:
-        lam = _spectral_radius(g, _zero_one_arcs(g))
-        import math
-
-        diag = diag.select(
-            "id", (F.col("centrality") / F.lit(math.exp(lam))).alias("centrality")
+    with SuperstepCache(g.spark) as loop:
+        pairs = _expm_pairs(g, tol, max_terms)
+        diag = pairs.filter(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("id"), F.col("comm").alias("centrality")
         )
-    out = diag.localCheckpoint(eager=True)
-    return out
+        if normalized:
+            lam = _spectral_radius(g, _zero_one_arcs(g))
+            import math
+
+            diag = diag.select(
+                "id", (F.col("centrality") / F.lit(math.exp(lam))).alias("centrality")
+            )
+        out = loop.truncate(diag)
+        loop.release(pairs)
+        return loop.result(out)
 
 
 def subgraph_centrality_exp(
@@ -226,12 +219,14 @@ def estrada_index(
 ) -> float:
     """EE(G) = tr(expm(A)) = Σ_u subgraph_centrality(u)
     (``subgraph_alg.py`` ``estrada_index``)."""
-    pairs = _expm_pairs(g, tol, max_terms)
-    row = (
-        pairs.filter(F.col("src") == F.col("dst"))
-        .agg(F.sum("comm").alias("ee"))
-        .collect()[0]
-    )
+    with SuperstepCache(g.spark) as loop:
+        pairs = _expm_pairs(g, tol, max_terms)
+        row = (
+            pairs.filter(F.col("src") == F.col("dst"))
+            .agg(F.sum("comm").alias("ee"))
+            .collect()[0]
+        )
+        loop.release(pairs)
     return float(row["ee"])
 
 

@@ -202,74 +202,73 @@ def voronoi_cells(
         else g.edges.select("src", "dst", "weight")
     )
     w = F.col("weight") if weight else F.lit(1.0)
-    adj = adj.select("src", "dst", w.cast("double").alias("w")).persist()
+    adj = adj.select("src", "dst", w.cast("double").alias("w"))
 
-    cache = SuperstepCache(spark)
-    best = cache.truncate(
-        _source_df(g, center_nodes).select(
-            "id",
-            F.struct(
-                F.lit(0.0).alias("distance"), F.col("id").alias("center")
-            ).alias("best"),
-        )
-    )
-    frontier = best
-    n_limit = None
-    rounds = 0
-    while True:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            break
-        if max_rounds is None:
-            if n_limit is None and rounds > 64:
-                n_limit = g.number_of_nodes()
-            if n_limit is not None and rounds > n_limit:
-                adj.unpersist()
-                raise NegativeCycleError(
-                    "voronoi_cells: relaxation still improving after "
-                    f"{n_limit} rounds (negative weights?)"
-                )
-        cand = (
-            adj.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.min(
-                    F.struct(
-                        (F.col("best.distance") + F.col("w")).alias("distance"),
-                        F.col("best.center").alias("center"),
-                    )
-                ).alias("cand")
+    with SuperstepCache(spark) as cache:
+        adj = cache.pin(adj)
+        best = cache.truncate(
+            _source_df(g, center_nodes).select(
+                "id",
+                F.struct(
+                    F.lit(0.0).alias("distance"), F.col("id").alias("center")
+                ).alias("best"),
             )
         )
-        merged = cache.truncate(
-            best.join(cand, "id", "full").select(
-                "id",
-                F.when(
-                    F.col("best").isNull() | (F.col("cand") < F.col("best")),
-                    F.col("cand"),
+        frontier = best
+        n_limit = None
+        rounds = 0
+        while True:
+            rounds += 1
+            if max_rounds is not None and rounds > max_rounds:
+                break
+            if max_rounds is None:
+                if n_limit is None and rounds > 64:
+                    n_limit = g.number_of_nodes()
+                if n_limit is not None and rounds > n_limit:
+                    raise NegativeCycleError(
+                        "voronoi_cells: relaxation still improving after "
+                        f"{n_limit} rounds (negative weights?)"
+                    )
+            cand = (
+                adj.join(frontier.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(
+                    F.min(
+                        F.struct(
+                            (F.col("best.distance") + F.col("w")).alias("distance"),
+                            F.col("best.center").alias("center"),
+                        )
+                    ).alias("cand")
                 )
-                .otherwise(F.col("best"))
-                .alias("best"),
-                (
-                    F.col("best").isNull()
-                    | (F.col("cand") < F.col("best"))
-                ).alias("_improved"),
-            ),
-            retire=best,
+            )
+            merged, seen = cache.truncate(
+                best.join(cand, "id", "full").select(
+                    "id",
+                    F.when(
+                        F.col("best").isNull() | (F.col("cand") < F.col("best")),
+                        F.col("cand"),
+                    )
+                    .otherwise(F.col("best"))
+                    .alias("best"),
+                    (
+                        F.col("best").isNull()
+                        | (F.col("cand") < F.col("best"))
+                    ).alias("_improved"),
+                ),
+                retire=best,
+                figures={"improved": F.count(F.when(F.col("_improved"), 1))},
+            )
+            frontier = merged.filter("_improved").select("id", "best")
+            best = merged.select("id", "best")
+            if seen["improved"] == 0:
+                break
+        return cache.result(
+            best.select(
+                "id",
+                F.col("best.center").alias("center"),
+                F.col("best.distance").alias("distance"),
+            )
         )
-        frontier = merged.filter("_improved").select("id", "best")
-        new_best = merged.select("id", "best")
-        improved = frontier.limit(1).count()
-        best = new_best
-        if improved == 0:
-            break
-    out = best.select(
-        "id",
-        F.col("best.center").alias("center"),
-        F.col("best.distance").alias("distance"),
-    ).localCheckpoint(eager=True)
-    adj.unpersist()
-    return out
 
 
 def all_pairs_bellman_ford_path_lengths(

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 
 def _min_label_fixpoint(
@@ -52,23 +52,25 @@ def _min_label_fixpoint(
     groupBy-min + merge over the active frontier.
     """
     lab = cache.truncate(nodes.select("id", F.col("id").alias("lab")))
-    frontier = lab
+    frontier = state = lab
     for _ in range(max_rounds):
         cand = (
             edges.join(frontier.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("lab").alias("cand"))
         )
-        merged = cache.truncate(
+        state, seen = cache.truncate(
             lab.join(cand, "id", "left").select(
                 "id",
                 F.least("lab", F.coalesce("cand", F.col("lab"))).alias("lab"),
                 (F.col("cand") < F.col("lab")).alias("_improved"),
-            )
+            ),
+            retire=state,
+            figures={"improved": F.count(F.when(F.col("_improved"), 1))},
         )
-        frontier = merged.filter("_improved").select("id", "lab")
-        lab = merged.select("id", "lab")
-        if frontier.limit(1).count() == 0:
+        frontier = state.filter("_improved").select("id", "lab")
+        lab = state.select("id", "lab")
+        if seen["improved"] == 0:
             return lab
     raise RuntimeError(f"min-label propagation did not converge in {max_rounds} rounds")
 
@@ -87,70 +89,74 @@ def strongly_connected_components(
             "graphs (use connected_components)"
         )
     spark = g.spark
-    cache = SuperstepCache(spark)
-    remaining = cache.truncate(g.vertices.select("id"))
-    edges = cache.truncate(
-        g.edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    )
-    resolved = []  # (DataFrame (id, component)) chunks
-
-    for _outer in range(max_outer):
-        if remaining.limit(1).count() == 0:
-            break
-
-        # --- trim: zero in- or out-degree => singleton SCC --------------- #
-        while True:
-            has_out = edges.select(F.col("src").alias("id")).distinct()
-            has_in = edges.select(F.col("dst").alias("id")).distinct()
-            core = remaining.join(has_out, "id", "left_semi").join(
-                has_in, "id", "left_semi"
-            )
-            trimmed = remaining.join(core, "id", "left_anti")
-            trimmed = cache.truncate(trimmed)
-            if trimmed.limit(1).count() == 0:
-                break
-            resolved.append(trimmed.select("id", F.col("id").alias("component")))
-            remaining = cache.truncate(core)
-            edges = cache.truncate(
-                edges.join(core.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(core.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            )
-        if remaining.limit(1).count() == 0:
-            break
-
-        # --- double min-label: f forward, b backward --------------------- #
-        fwd = _min_label_fixpoint(edges, remaining, cache, max_rounds)
-        bwd = _min_label_fixpoint(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            remaining,
-            cache,
-            max_rounds,
-        )
-        done = (
-            fwd.join(bwd.select("id", F.col("lab").alias("blab")), "id")
-            .filter(F.col("lab") == F.col("blab"))
-            .select("id", F.col("lab").alias("component"))
-        )
-        done = cache.truncate(done)
-        resolved.append(done)
-        keep = remaining.join(done, "id", "left_anti")
-        remaining = cache.truncate(keep)
+    with SuperstepCache(spark) as cache:
+        remaining, seen = cache.truncate(g.vertices.select("id"), figures=row_count())
+        left = seen["rows"]
         edges = cache.truncate(
-            edges.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            g.edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
         )
-    else:
-        raise RuntimeError(f"SCC decomposition did not finish in {max_outer} rounds")
+        resolved = []  # (DataFrame (id, component)) chunks
 
-    if not resolved:
-        out = spark.createDataFrame([], "id long, component long")
-    else:
+        def keep_only(remaining, edges, keep):
+            """``remaining`` cut to ``keep``, and the arcs inside it."""
+            remaining = cache.truncate(keep, retire=remaining)
+            return remaining, cache.truncate(
+                edges.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi"),
+                retire=edges,
+            )
+
+        for _outer in range(max_outer):
+            if left == 0:
+                break
+
+            # --- trim: zero in- or out-degree => singleton SCC --------------- #
+            while True:
+                has_out = edges.select(F.col("src").alias("id")).distinct()
+                has_in = edges.select(F.col("dst").alias("id")).distinct()
+                core = remaining.join(has_out, "id", "left_semi").join(
+                    has_in, "id", "left_semi"
+                )
+                trimmed, seen = cache.truncate(
+                    remaining.join(core, "id", "left_anti"), figures=row_count()
+                )
+                if seen["rows"] == 0:
+                    break
+                resolved.append(trimmed.select("id", F.col("id").alias("component")))
+                left -= seen["rows"]
+                remaining, edges = keep_only(remaining, edges, core)
+            if left == 0:
+                break
+
+            # --- double min-label: f forward, b backward --------------------- #
+            fwd = _min_label_fixpoint(edges, remaining, cache, max_rounds)
+            bwd = _min_label_fixpoint(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                remaining,
+                cache,
+                max_rounds,
+            )
+            done = (
+                fwd.join(bwd.select("id", F.col("lab").alias("blab")), "id")
+                .filter(F.col("lab") == F.col("blab"))
+                .select("id", F.col("lab").alias("component"))
+            )
+            done, seen = cache.truncate(done, figures=row_count())
+            cache.release([fwd, bwd])
+            resolved.append(done)
+            left -= seen["rows"]
+            remaining, edges = keep_only(
+                remaining, edges, remaining.join(done, "id", "left_anti")
+            )
+        else:
+            raise RuntimeError(f"SCC decomposition did not finish in {max_outer} rounds")
+
+        if not resolved:
+            return spark.createDataFrame([], "id long, component long")
         out = resolved[0]
         for df in resolved[1:]:
             out = out.unionByName(df)
-        out = out.persist()
-        out.count()
-    return out
+        return cache.result(cache.truncate(out))
 
 
 def number_strongly_connected_components(g: SparkGraph, **kwargs) -> int:
@@ -208,18 +214,14 @@ def attracting_components(g: SparkGraph) -> DataFrame:
         raise NotImplementedForDirected(
             "attracting_components: not implemented for undirected type"
         )
-    scc = strongly_connected_components(g).persist()
+    scc = strongly_connected_components(g)
     cond = condensation(g, scc)
     sinks = cond.vertices.select("id").join(
         cond.edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
     )
-    out = scc.join(
+    return scc.join(
         sinks.withColumnRenamed("id", "component"), "component", "left_semi"
     ).select("id", "component")
-    out = out.persist()
-    out.count()
-    scc.unpersist()
-    return out
 
 
 def number_attracting_components(g: SparkGraph) -> int:
@@ -245,26 +247,27 @@ def is_semiconnected(g: SparkGraph) -> bool:
 
     if not is_weakly_connected(g):
         return False
-    cond = condensation(g)
-    gen = topological_generations(cond).persist()
-    try:
-        # unique topological order: one component per generation
-        if gen.groupBy("generation").count().filter(F.col("count") > 1).limit(
-            1
-        ).count():
-            return False
-        # consecutive singletons must be linked
-        chain = gen.select(F.col("id").alias("src"), F.col("generation").alias("gs"))
-        nxt = gen.select(F.col("id").alias("dst"), F.col("generation").alias("gd"))
-        need = (
-            chain.join(nxt, F.col("gd") == F.col("gs") + 1)
-            .join(cond.edges.select("src", "dst"), ["src", "dst"], "left_anti")
-            .limit(1)
-            .count()
-        )
-        return need == 0
-    finally:
-        gen.unpersist()
+    with SuperstepCache(g.spark) as loop:
+        cond = condensation(g)
+        gen = topological_generations(cond)
+        try:
+            # unique topological order: one component per generation
+            if gen.groupBy("generation").count().filter(F.col("count") > 1).limit(
+                1
+            ).count():
+                return False
+            # consecutive singletons must be linked
+            chain = gen.select(F.col("id").alias("src"), F.col("generation").alias("gs"))
+            nxt = gen.select(F.col("id").alias("dst"), F.col("generation").alias("gd"))
+            need = (
+                chain.join(nxt, F.col("gd") == F.col("gs") + 1)
+                .join(cond.edges.select("src", "dst"), ["src", "dst"], "left_anti")
+                .limit(1)
+                .count()
+            )
+            return need == 0
+        finally:
+            loop.release([gen, cond.vertices])
 
 
 def is_aperiodic(g: SparkGraph) -> bool:

@@ -163,89 +163,87 @@ def snap_aggregation(
         )
     else:
         arcs = arcs.select("src", "dst", F.lit("*").alias("etype"))
-    arcs = arcs.persist()
-
     attrs_json = F.to_json(F.struct(*node_attributes))
     assign = g.vertices.select(
         "id", F.xxhash64(attrs_json).alias("group")
     )
 
-    cache = SuperstepCache(g.spark)
-    prev = None
-    n_groups = -1
-    for _ in range(max_iter):
-        nbr_groups = assign.withColumnRenamed("id", "dst").withColumnRenamed(
-            "group", "nbr_group"
-        )
-        sig = (
-            arcs.join(nbr_groups, "dst")
-            .select("src", F.struct("nbr_group", "etype").alias("p"))
-            .groupBy("src")
-            .agg(F.sort_array(F.collect_set("p")).alias("sig"))
-        )
-        nxt = (
-            assign.join(sig.withColumnRenamed("src", "id"), "id", "left")
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(arcs)
+        prev = None
+        n_groups = -1
+        for _ in range(max_iter):
+            nbr_groups = assign.withColumnRenamed("id", "dst").withColumnRenamed(
+                "group", "nbr_group"
+            )
+            sig = (
+                arcs.join(nbr_groups, "dst")
+                .select("src", F.struct("nbr_group", "etype").alias("p"))
+                .groupBy("src")
+                .agg(F.sort_array(F.collect_set("p")).alias("sig"))
+            )
+            nxt = (
+                assign.join(sig.withColumnRenamed("src", "id"), "id", "left")
+                .select(
+                    "id",
+                    F.xxhash64(
+                        F.col("group"), F.coalesce(F.to_json("sig"), F.lit("[]"))
+                    ).alias("group"),
+                )
+            )
+            nxt = cache.truncate(nxt, retire=prev)
+            prev = nxt
+            k = nxt.select("group").distinct().count()
+            if k == n_groups:
+                assign = nxt
+                break
+            n_groups = k
+            assign = nxt
+
+        # densify group ids (small table: one row per group)
+        dense = (
+            assign.groupBy("group")
+            .agg(F.min("id").alias("rep"), F.count(F.lit(1)).alias("size"))
             .select(
-                "id",
-                F.xxhash64(
-                    F.col("group"), F.coalesce(F.to_json("sig"), F.lit("[]"))
-                ).alias("group"),
+                "group",
+                "size",
+                (F.dense_rank().over(Window.orderBy("rep")) - 1).alias("g"),
             )
         )
-        nxt = cache.truncate(nxt, retire=prev)
-        prev = nxt
-        k = nxt.select("group").distinct().count()
-        if k == n_groups:
-            assign = nxt
-            break
-        n_groups = k
-        assign = nxt
+        assignment = cache.result(
+            cache.truncate(
+                assign.join(dense.select("group", "g"), "group")
+                .select("id", F.col("g").alias("group"))
+            )
+        )
 
-    # densify group ids (small table: one row per group)
-    dense = (
-        assign.groupBy("group")
-        .agg(F.min("id").alias("rep"), F.count(F.lit(1)).alias("size"))
-        .select(
-            "group",
-            "size",
-            (F.dense_rank().over(Window.orderBy("rep")) - 1).alias("g"),
+        supernodes = (
+            g.vertices.select("id", *node_attributes)
+            .join(assignment, "id")
+            .groupBy("group")
+            .agg(
+                *[F.first(a).alias(a) for a in node_attributes],
+                F.count(F.lit(1)).alias("size"),
+            )
         )
-    )
-    assignment = (
-        assign.join(dense.select("group", "g"), "group")
-        .select("id", F.col("g").alias("group"))
-        .persist()
-    )
-    assignment.count()
-
-    supernodes = (
-        g.vertices.select("id", *node_attributes)
-        .join(assignment, "id")
-        .groupBy("group")
-        .agg(
-            *[F.first(a).alias(a) for a in node_attributes],
-            F.count(F.lit(1)).alias("size"),
+        eg = (
+            arcs.join(assignment.withColumnRenamed("id", "src"), "src")
+            .withColumnRenamed("group", "group_u")
+            .join(
+                assignment.withColumnRenamed("id", "dst").withColumnRenamed(
+                    "group", "group_v"
+                ),
+                "dst",
+            )
         )
-    )
-    eg = (
-        arcs.join(assignment.withColumnRenamed("id", "src"), "src")
-        .withColumnRenamed("group", "group_u")
-        .join(
-            assignment.withColumnRenamed("id", "dst").withColumnRenamed(
-                "group", "group_v"
-            ),
-            "dst",
+        if not g.directed:
+            eg = eg.select(
+                F.least("group_u", "group_v").alias("group_u"),
+                F.greatest("group_u", "group_v").alias("group_v"),
+                "etype",
+            )
+        superedges = (
+            eg.groupBy("group_u", "group_v")
+            .agg(F.sort_array(F.collect_set("etype")).alias("types"))
         )
-    )
-    if not g.directed:
-        eg = eg.select(
-            F.least("group_u", "group_v").alias("group_u"),
-            F.greatest("group_u", "group_v").alias("group_v"),
-            "etype",
-        )
-    superedges = (
-        eg.groupBy("group_u", "group_v")
-        .agg(F.sort_array(F.collect_set("etype")).alias("types"))
-    )
-    arcs.unpersist()
-    return supernodes, superedges, assignment
+        return supernodes, superedges, assignment

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["double_edge_swap"]
 
@@ -51,104 +51,106 @@ def double_edge_swap(
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-    cache = SuperstepCache(g.spark)
-    edges = cache.truncate(e)
-    m = edges.count()
-    if m < 2:
-        return SparkGraph(
-            e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+    with SuperstepCache(g.spark) as cache:
+        edges, seen = cache.truncate(e, figures=row_count())
+        m = seen["rows"]
+        if m < 2:
+            return SparkGraph(
+                e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+                g.vertices.select("id"),
+                directed=False,
+                coalesce_edges=False,
+            )
+        done = 0
+        rnd = 0
+        while done < nswap and rnd < max_rounds:
+            rnd += 1
+            # random pairing: hash-rank edges, pair rank 2i with 2i+1
+            # inside hash buckets (window over bucket keeps the sort local)
+            h = F.xxhash64("u", "v", F.lit(seed), F.lit(rnd))
+            n_buckets = max(1, m // 10_000)
+            ranked = edges.select(
+                "u", "v", h.alias("h"), F.pmod(h, F.lit(n_buckets)).alias("b")
+            ).withColumn(
+                "rn", F.row_number().over(Window.partitionBy("b").orderBy("h"))
+            )
+            a = ranked.filter(F.col("rn") % 2 == 1).select(
+                "b", ((F.col("rn") + 1) / 2).cast("long").alias("pair"),
+                F.col("u").alias("u1"), F.col("v").alias("v1"),
+            )
+            bb = ranked.filter(F.col("rn") % 2 == 0).select(
+                "b", (F.col("rn") / 2).cast("long").alias("pair"),
+                F.col("u").alias("u2"), F.col("v").alias("v2"),
+            )
+            prop = (
+                a.join(bb, ["b", "pair"])
+                # swap (u1,v1),(u2,v2) -> (u1,v2),(u2,v1); all 4 distinct
+                .filter(
+                    (F.col("u1") != F.col("u2")) & (F.col("u1") != F.col("v2"))
+                    & (F.col("v1") != F.col("u2")) & (F.col("v1") != F.col("v2"))
+                )
+                .select(
+                    F.col("u1").alias("ou1"), F.col("v1").alias("ov1"),
+                    F.col("u2").alias("ou2"), F.col("v2").alias("ov2"),
+                    F.least("u1", "v2").alias("n1u"), F.greatest("u1", "v2").alias("n1v"),
+                    F.least("u2", "v1").alias("n2u"), F.greatest("u2", "v1").alias("n2v"),
+                )
+                .filter(  # no self-loops in the replacements
+                    (F.col("n1u") != F.col("n1v")) & (F.col("n2u") != F.col("n2v"))
+                )
+            )
+            # replacements must not already exist in the graph
+            prop = prop.join(
+                edges.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
+                ["n1u", "n1v"], "left_anti",
+            ).join(
+                edges.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
+                ["n2u", "n2v"], "left_anti",
+            )
+            # no two proposals may create the same new edge, and a
+            # proposal's two replacements must differ from each other
+            prop = prop.filter(
+                ~((F.col("n1u") == F.col("n2u")) & (F.col("n1v") == F.col("n2v")))
+            )
+            news = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
+                prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
+            )
+            clash = (
+                news.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
+                .filter(F.col("c") > 1)
+            )
+            prop = prop.join(
+                clash.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
+                ["n1u", "n1v"], "left_anti",
+            ).join(
+                clash.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
+                ["n2u", "n2v"], "left_anti",
+            )
+            prop, seen = cache.truncate(prop, figures=row_count())
+            applied = seen["rows"]
+            if applied == 0:
+                cache.release(prop)
+                continue
+            olds = prop.select(F.col("ou1").alias("u"), F.col("ov1").alias("v")).unionAll(
+                prop.select(F.col("ou2").alias("u"), F.col("ov2").alias("v"))
+            )
+            adds = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
+                prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
+            )
+            edges = cache.truncate(
+                edges.join(olds, ["u", "v"], "left_anti").unionAll(adds),
+                retire=edges,
+            )
+            cache.release(prop)
+            done += applied
+        out = SparkGraph(
+            edges.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             g.vertices.select("id"),
             directed=False,
             coalesce_edges=False,
         )
-    done = 0
-    rnd = 0
-    while done < nswap and rnd < max_rounds:
-        rnd += 1
-        # random pairing: hash-rank edges, pair rank 2i with 2i+1
-        # inside hash buckets (window over bucket keeps the sort local)
-        h = F.xxhash64("u", "v", F.lit(seed), F.lit(rnd))
-        n_buckets = max(1, m // 10_000)
-        ranked = edges.select(
-            "u", "v", h.alias("h"), F.pmod(h, F.lit(n_buckets)).alias("b")
-        ).withColumn(
-            "rn", F.row_number().over(Window.partitionBy("b").orderBy("h"))
-        )
-        a = ranked.filter(F.col("rn") % 2 == 1).select(
-            "b", ((F.col("rn") + 1) / 2).cast("long").alias("pair"),
-            F.col("u").alias("u1"), F.col("v").alias("v1"),
-        )
-        bb = ranked.filter(F.col("rn") % 2 == 0).select(
-            "b", (F.col("rn") / 2).cast("long").alias("pair"),
-            F.col("u").alias("u2"), F.col("v").alias("v2"),
-        )
-        prop = (
-            a.join(bb, ["b", "pair"])
-            # swap (u1,v1),(u2,v2) -> (u1,v2),(u2,v1); all 4 distinct
-            .filter(
-                (F.col("u1") != F.col("u2")) & (F.col("u1") != F.col("v2"))
-                & (F.col("v1") != F.col("u2")) & (F.col("v1") != F.col("v2"))
-            )
-            .select(
-                F.col("u1").alias("ou1"), F.col("v1").alias("ov1"),
-                F.col("u2").alias("ou2"), F.col("v2").alias("ov2"),
-                F.least("u1", "v2").alias("n1u"), F.greatest("u1", "v2").alias("n1v"),
-                F.least("u2", "v1").alias("n2u"), F.greatest("u2", "v1").alias("n2v"),
-            )
-            .filter(  # no self-loops in the replacements
-                (F.col("n1u") != F.col("n1v")) & (F.col("n2u") != F.col("n2v"))
-            )
-        )
-        # replacements must not already exist in the graph
-        prop = prop.join(
-            edges.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
-            ["n1u", "n1v"], "left_anti",
-        ).join(
-            edges.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
-            ["n2u", "n2v"], "left_anti",
-        )
-        # no two proposals may create the same new edge, and a
-        # proposal's two replacements must differ from each other
-        prop = prop.filter(
-            ~((F.col("n1u") == F.col("n2u")) & (F.col("n1v") == F.col("n2v")))
-        )
-        news = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
-            prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
-        )
-        clash = (
-            news.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-        )
-        prop = prop.join(
-            clash.select(F.col("u").alias("n1u"), F.col("v").alias("n1v")),
-            ["n1u", "n1v"], "left_anti",
-        ).join(
-            clash.select(F.col("u").alias("n2u"), F.col("v").alias("n2v")),
-            ["n2u", "n2v"], "left_anti",
-        )
-        prop = cache.truncate(prop)
-        applied = prop.count()
-        if applied == 0:
-            continue
-        olds = prop.select(F.col("ou1").alias("u"), F.col("ov1").alias("v")).unionAll(
-            prop.select(F.col("ou2").alias("u"), F.col("ov2").alias("v"))
-        )
-        adds = prop.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).unionAll(
-            prop.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
-        )
-        edges = cache.truncate(
-            edges.join(olds, ["u", "v"], "left_anti").unionAll(adds),
-            retire=edges,
-        )
-        done += applied
-    out = SparkGraph(
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        g.vertices.select("id"),
-        directed=False,
-        coalesce_edges=False,
-    )
-    out.edges = out.edges.localCheckpoint(eager=True)
-    return out
+        out.edges = cache.result(cache.truncate(out.edges))
+        return out
 
 
 def directed_edge_swap(
@@ -167,19 +169,18 @@ def directed_edge_swap(
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
     )
-    cache = SuperstepCache(g.spark)
-    edges = cache.truncate(e)
-    m = edges.count()
-    if m < 2:
-        return SparkGraph(
-            e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            g.vertices.select("id"),
-            directed=True,
-            coalesce_edges=False,
-        )
-    done = 0
-    rnd = 0
-    try:
+    with SuperstepCache(g.spark) as cache:
+        edges, seen = cache.truncate(e, figures=row_count())
+        m = seen["rows"]
+        if m < 2:
+            return SparkGraph(
+                e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+                g.vertices.select("id"),
+                directed=True,
+                coalesce_edges=False,
+            )
+        done = 0
+        rnd = 0
         while done < nswap and rnd < max_rounds:
             rnd += 1
             h = F.xxhash64("u", "v", F.lit(seed), F.lit(rnd))
@@ -231,9 +232,10 @@ def directed_edge_swap(
                 clash.select(F.col("u").alias("u2"), F.col("v").alias("v1")),
                 ["u2", "v1"], "left_anti",
             )
-            ok = cache.truncate(ok)
-            n_ok = ok.count()
+            ok, seen = cache.truncate(ok, figures=row_count())
+            n_ok = seen["rows"]
             if n_ok == 0:
+                cache.release(ok)
                 continue
             olds = ok.select(F.col("u1").alias("u"), F.col("v1").alias("v")).unionAll(
                 ok.select(F.col("u2").alias("u"), F.col("v2").alias("v"))
@@ -245,13 +247,14 @@ def directed_edge_swap(
                 edges.join(olds, ["u", "v"], "left_anti").unionByName(adds),
                 retire=edges,
             )
+            cache.release(ok)
             done += n_ok
-    finally:
-        out = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        out = out.localCheckpoint(eager=True)
-    return SparkGraph(
-        out, g.vertices.select("id"), directed=True, coalesce_edges=False
-    )
+        out = cache.result(
+            cache.truncate(edges.select(F.col("u").alias("src"), F.col("v").alias("dst")))
+        )
+        return SparkGraph(
+            out, g.vertices.select("id"), directed=True, coalesce_edges=False
+        )
 
 
 def connected_double_edge_swap(

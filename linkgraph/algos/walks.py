@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, row_count
 
 __all__ = ["number_of_walks"]
 
@@ -36,28 +36,24 @@ def number_of_walks(g: SparkGraph, walk_length: int) -> DataFrame:
     # A with multigraph multiplicity (weight=None in the reference counts
     # parallel edges); undirected self-loops enter once, like the
     # reference's dict-of-dict adjacency.
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("a"))
-        .persist()
-    )
-    cache = SuperstepCache(g.spark)
-    walks = arcs.select("src", "dst", F.col("a").alias("walks"))
-    prev = None
-    for _ in range(walk_length - 1):
-        walks = cache.truncate(
-            walks.withColumnRenamed("dst", "mid")
-            .join(arcs.withColumnRenamed("src", "mid"), "mid")
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(
+            (g.edges if g.directed else g.symmetric_edges())
             .groupBy("src", "dst")
-            .agg(F.sum(F.col("walks") * F.col("a")).alias("walks")),
-            retire=prev,
+            .agg(F.count(F.lit(1)).alias("a"))
         )
-        prev = walks
-    out = walks.persist()
-    out.count()
-    arcs.unpersist()
-    return out
+        walks = arcs.select("src", "dst", F.col("a").alias("walks"))
+        prev = None
+        for _ in range(walk_length - 1):
+            walks = cache.truncate(
+                walks.withColumnRenamed("dst", "mid")
+                .join(arcs.withColumnRenamed("src", "mid"), "mid")
+                .groupBy("src", "dst")
+                .agg(F.sum(F.col("walks") * F.col("a")).alias("walks")),
+                retire=prev,
+            )
+            prev = walks
+        return cache.result(walks)
 
 
 def generate_random_paths(
@@ -89,55 +85,56 @@ def generate_random_paths(
     ).filter(F.col("w") > 0)
     win = Window.partitionBy("src").orderBy("dst")
     tot = Window.partitionBy("src")
-    trans = arcs.select(
-        "src",
-        "dst",
-        (F.sum("w").over(win) / F.sum("w").over(tot)).alias("hi"),
-        (
-            (F.sum("w").over(win) - F.col("w")) / F.sum("w").over(tot)
-        ).alias("lo"),
-    ).persist()
-
-    # start nodes: hash-uniform over the vertex table (rank join)
-    verts = g.vertices.select("id")
-    n = verts.count()
-    ranked = verts.select(
-        "id",
-        (F.row_number().over(Window.orderBy("id")) - 1).alias("_r"),
-    )
-    samples = spark.range(int(sample_size)).select(
-        F.col("id").alias("sample"),
-        F.pmod(F.xxhash64("id", F.lit(int(seed))), F.lit(n)).alias("_r"),
-    )
-    state = samples.join(ranked, "_r").select(
-        "sample", F.lit(0).alias("step"), F.col("id").alias("node")
-    )
-    cache = SuperstepCache(spark)
-    out = cache.truncate(state)
-    frontier = out
-    for s in range(1, int(path_length) + 1):
-        coin = (
-            F.pmod(
-                F.xxhash64("sample", F.lit(int(seed) + 1), F.lit(s)),
-                F.lit(1 << 53),
+    with SuperstepCache(spark) as cache:
+        trans = cache.pin(
+            arcs.select(
+                "src",
+                "dst",
+                (F.sum("w").over(win) / F.sum("w").over(tot)).alias("hi"),
+                (
+                    (F.sum("w").over(win) - F.col("w")) / F.sum("w").over(tot)
+                ).alias("lo"),
             )
-            / F.lit(float(1 << 53))
         )
-        nxt = (
-            frontier.select("sample", F.col("node").alias("src"))
-            .withColumn("u", coin)
-            .join(trans, "src")
-            .filter((F.col("u") >= F.col("lo")) & (F.col("u") < F.col("hi")))
-            .select("sample", F.lit(s).alias("step"), F.col("dst").alias("node"))
+
+        # start nodes: hash-uniform over the vertex table (rank join)
+        verts = g.vertices.select("id")
+        n = verts.count()
+        ranked = verts.select(
+            "id",
+            (F.row_number().over(Window.orderBy("id")) - 1).alias("_r"),
         )
-        nxt = cache.truncate(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        out = cache.truncate(out.unionByName(nxt))
-        frontier = nxt
-    trans.unpersist()
-    res = out.localCheckpoint(eager=True)
-    return res
+        samples = spark.range(int(sample_size)).select(
+            F.col("id").alias("sample"),
+            F.pmod(F.xxhash64("id", F.lit(int(seed))), F.lit(n)).alias("_r"),
+        )
+        state = samples.join(ranked, "_r").select(
+            "sample", F.lit(0).alias("step"), F.col("id").alias("node")
+        )
+        out = cache.truncate(state)
+        frontier = out
+        for s in range(1, int(path_length) + 1):
+            coin = (
+                F.pmod(
+                    F.xxhash64("sample", F.lit(int(seed) + 1), F.lit(s)),
+                    F.lit(1 << 53),
+                )
+                / F.lit(float(1 << 53))
+            )
+            nxt, seen = cache.truncate(
+                frontier.select("sample", F.col("node").alias("src"))
+                .withColumn("u", coin)
+                .join(trans, "src")
+                .filter((F.col("u") >= F.col("lo")) & (F.col("u") < F.col("hi")))
+                .select("sample", F.lit(s).alias("step"), F.col("dst").alias("node")),
+                retire=None if frontier is out else frontier,
+                figures=row_count(),
+            )
+            if seen["rows"] == 0:
+                break
+            out = cache.truncate(out.unionByName(nxt), retire=out)
+            frontier = nxt
+        return cache.result(out)
 
 
 def panther_similarity(

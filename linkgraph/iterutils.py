@@ -36,8 +36,9 @@ carry none of it themselves. Used as a context manager it:
   made, except the snapshots the loop's :meth:`~SuperstepCache.result`
   reads. The caller releases those with :meth:`~SuperstepCache.release`.
 
-Without ``with`` it is only a truncate/release helper: the conf is left
-alone and nothing is released on the caller's behalf.
+Every loop in the library opens it with ``with``; outside ``with`` it is
+only meant for releasing a returned result,
+``SuperstepCache(spark).release(result)``.
 """
 
 from __future__ import annotations
@@ -157,6 +158,18 @@ def _snapshot_rdd_ids(df: DataFrame) -> set:
     return ids
 
 
+def _snapshots_read(dfs) -> set:
+    """:func:`_snapshot_rdd_ids` over a DataFrame or a list of them (None
+    entries skipped)."""
+    if isinstance(dfs, DataFrame):
+        dfs = [dfs]
+    ids = set()
+    for d in dfs:
+        if d is not None:
+            ids |= _snapshot_rdd_ids(d)
+    return ids
+
+
 class SuperstepCache:
     """The superstep runtime of one iterative loop (see module docstring).
 
@@ -176,8 +189,9 @@ class SuperstepCache:
         self._saved: dict = {}
         self._pinned: list = []
         self._snapshots: set = set()
-        self._result: Optional[DataFrame] = None
+        self._result = None
         self._keyed = False
+        self._jsc_sc = None
         self._t0 = time.monotonic()
 
     def __enter__(self) -> "SuperstepCache":
@@ -196,7 +210,7 @@ class SuperstepCache:
                 df.unpersist()
             keep = set()
             if exc_type is None and self._result is not None:
-                keep = _snapshot_rdd_ids(self._result)
+                keep = _snapshots_read(self._result)
             self._unpersist(self._snapshots - keep)
         finally:
             for k, v in self._saved.items():
@@ -219,11 +233,12 @@ class SuperstepCache:
         self._t0 = time.monotonic()
         return df
 
-    def result(self, df: DataFrame) -> DataFrame:
-        """Mark ``df`` as what the loop returns: the snapshots it reads
+    def result(self, dfs):
+        """Mark ``dfs`` (a DataFrame, or a list of them: a graph's edges
+        and vertices) as what the loop returns: the snapshots they read
         survive the exit (release them with :meth:`release` once done)."""
-        self._result = df
-        return df
+        self._result = dfs
+        return dfs
 
     def resume(self) -> "tuple[int, Optional[DataFrame]]":
         """``(start iteration, state)`` from the store's latest complete
@@ -267,7 +282,16 @@ class SuperstepCache:
         observed on the checkpoint's own job."""
         self._superstep_conf()
         df, observed = _observed(df, figures)
-        out = _strip_origin_stats(df.localCheckpoint(eager=True))
+        # The checkpoint pins its RDD before its job runs; should the job
+        # raise, no snapshot carries that RDD's id, so every RDD pinned
+        # since this mark is unpersisted before the error propagates.
+        mark = self._sc().newRddId()
+        try:
+            out = _strip_origin_stats(df.localCheckpoint(eager=True))
+        except Exception:
+            pinned = self.spark.sparkContext._jsc.getPersistentRDDs()
+            self._unpersist([rid for rid in pinned.keySet() if rid > mark])
+            raise
         self._snapshots |= _snapshot_rdd_ids(out)
         if retire is not None:
             self.release(retire)
@@ -279,13 +303,12 @@ class SuperstepCache:
         release API; the ids come off the plans' ``LogicalRDD`` leaves).
         A no-op for frames that read no snapshot. Those snapshots must
         never be read again — their blocks are gone."""
-        if isinstance(dfs, DataFrame):
-            dfs = [dfs]
-        ids = set()
-        for d in dfs:
-            if d is not None:
-                ids |= _snapshot_rdd_ids(d)
-        self._unpersist(ids)
+        self._unpersist(_snapshots_read(dfs))
+
+    def _sc(self):
+        if self._jsc_sc is None:
+            self._jsc_sc = self.spark.sparkContext._jsc.sc()
+        return self._jsc_sc
 
     def _superstep_conf(self) -> None:
         if self._keyed:

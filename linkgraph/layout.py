@@ -272,71 +272,67 @@ def spring_layout(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "_w"
             )
         )
-    arcs = (
-        half.groupBy("src", "dst").agg(F.max("_w").alias("_w")).persist()
-    )
     t = 0.1
     dt = t / (int(iterations) + 1)
     from linkgraph.iterutils import SuperstepCache
 
-    cache = SuperstepCache(g.spark)
-    p = cache.truncate(p)
-    eps = 1e-9
-    for _ in range(int(iterations)):
-        a = p
-        b = p.select(
-            F.col("id").alias("jid"),
-            F.col("x0").alias("jx0"),
-            F.col("x1").alias("jx1"),
-        )
-        pair = a.join(b, F.col("id") != F.col("jid"))
-        dx = F.col("x0") - F.col("jx0")
-        dy = F.col("x1") - F.col("jx1")
-        dist = F.greatest(F.sqrt(dx * dx + dy * dy), F.lit(eps))
-        rep = pair.groupBy("id").agg(
-            F.sum(dx / dist * (F.lit(k * k) / dist)).alias("fx"),
-            F.sum(dy / dist * (F.lit(k * k) / dist)).alias("fy"),
-        )
-        att_pair = (
-            arcs.join(a.withColumnRenamed("id", "src"), "src")
-            .join(
-                b.withColumnRenamed("jid", "dst"),
-                "dst",
+    with SuperstepCache(g.spark) as cache:
+        arcs = cache.pin(half.groupBy("src", "dst").agg(F.max("_w").alias("_w")))
+        p = cache.truncate(p)
+        eps = 1e-9
+        for _ in range(int(iterations)):
+            a = p
+            b = p.select(
+                F.col("id").alias("jid"),
+                F.col("x0").alias("jx0"),
+                F.col("x1").alias("jx1"),
             )
-        )
-        adx = F.col("x0") - F.col("jx0")
-        ady = F.col("x1") - F.col("jx1")
-        adist = F.greatest(F.sqrt(adx * adx + ady * ady), F.lit(eps))
-        att = att_pair.groupBy(F.col("src").alias("id")).agg(
-            F.sum(-adx / adist * (F.col("_w") * adist * adist / F.lit(k))).alias("ax"),
-            F.sum(-ady / adist * (F.col("_w") * adist * adist / F.lit(k))).alias("ay"),
-        )
-        disp = (
-            p.join(rep, "id", "left")
-            .join(att, "id", "left")
-            .select(
-                "id", "x0", "x1",
-                (F.coalesce("fx", F.lit(0.0)) + F.coalesce("ax", F.lit(0.0))).alias("dx"),
-                (F.coalesce("fy", F.lit(0.0)) + F.coalesce("ay", F.lit(0.0))).alias("dy"),
+            pair = a.join(b, F.col("id") != F.col("jid"))
+            dx = F.col("x0") - F.col("jx0")
+            dy = F.col("x1") - F.col("jx1")
+            dist = F.greatest(F.sqrt(dx * dx + dy * dy), F.lit(eps))
+            rep = pair.groupBy("id").agg(
+                F.sum(dx / dist * (F.lit(k * k) / dist)).alias("fx"),
+                F.sum(dy / dist * (F.lit(k * k) / dist)).alias("fy"),
             )
-        )
-        dlen = F.greatest(
-            F.sqrt(F.col("dx") * F.col("dx") + F.col("dy") * F.col("dy")),
-            F.lit(eps),
-        )
-        step = F.least(dlen, F.lit(t))
-        p = cache.truncate(
-            disp.select(
-                "id",
-                (F.col("x0") + F.col("dx") / dlen * step).alias("x0"),
-                (F.col("x1") + F.col("dy") / dlen * step).alias("x1"),
-            ),
-            retire=p,
-        )
-        t -= dt
-    arcs.unpersist()
-    out = rescale_layout(p, scale=scale).localCheckpoint(eager=True)
-    return out
+            att_pair = (
+                arcs.join(a.withColumnRenamed("id", "src"), "src")
+                .join(
+                    b.withColumnRenamed("jid", "dst"),
+                    "dst",
+                )
+            )
+            adx = F.col("x0") - F.col("jx0")
+            ady = F.col("x1") - F.col("jx1")
+            adist = F.greatest(F.sqrt(adx * adx + ady * ady), F.lit(eps))
+            att = att_pair.groupBy(F.col("src").alias("id")).agg(
+                F.sum(-adx / adist * (F.col("_w") * adist * adist / F.lit(k))).alias("ax"),
+                F.sum(-ady / adist * (F.col("_w") * adist * adist / F.lit(k))).alias("ay"),
+            )
+            disp = (
+                p.join(rep, "id", "left")
+                .join(att, "id", "left")
+                .select(
+                    "id", "x0", "x1",
+                    (F.coalesce("fx", F.lit(0.0)) + F.coalesce("ax", F.lit(0.0))).alias("dx"),
+                    (F.coalesce("fy", F.lit(0.0)) + F.coalesce("ay", F.lit(0.0))).alias("dy"),
+                )
+            )
+            dlen = F.greatest(
+                F.sqrt(F.col("dx") * F.col("dx") + F.col("dy") * F.col("dy")),
+                F.lit(eps),
+            )
+            step = F.least(dlen, F.lit(t))
+            p = cache.truncate(
+                disp.select(
+                    "id",
+                    (F.col("x0") + F.col("dx") / dlen * step).alias("x0"),
+                    (F.col("x1") + F.col("dy") / dlen * step).alias("x1"),
+                ),
+                retire=p,
+            )
+            t -= dt
+        return cache.result(cache.truncate(rescale_layout(p, scale=scale)))
 
 
 fruchterman_reingold_layout = spring_layout

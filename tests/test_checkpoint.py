@@ -120,8 +120,38 @@ LOOP_CONF_KEYS = (
 )
 
 
+def _dag(g):
+    """``g``'s edges oriented from the smaller id to the larger: a DAG."""
+    from linkgraph.graph import SparkGraph
+
+    return SparkGraph(
+        g.edges.filter("src < dst"), g.vertices, directed=True, coalesce_edges=False
+    )
+
+
+def _both_ways(g):
+    """``g`` as a digraph with every edge in both directions: cyclic."""
+    from linkgraph.graph import SparkGraph
+
+    arcs = g.edges.select("src", "dst")
+    return SparkGraph(
+        arcs.unionByName(arcs.selectExpr("dst as src", "src as dst")),
+        g.vertices,
+        directed=True,
+        coalesce_edges=False,
+    )
+
+
 def _call_cases():
+    """name -> (call, exception it raises or None, expected result rows:
+    None for one row per node, else a function of the networkx graph)."""
+    from linkgraph.algos.betweenness import betweenness_centrality
+    from linkgraph.algos.branchings import maximum_spanning_arborescence
     from linkgraph.algos.coloring import greedy_color
+    from linkgraph.algos.cores import core_number, k_truss
+    from linkgraph.algos.dag import GraphContainsCycle, topological_generations
+    from linkgraph.algos.distance import all_pairs_shortest_path_lengths
+    from linkgraph.algos.mst import minimum_spanning_edges
     from linkgraph.algos.lpa import label_propagation_communities
     from linkgraph.algos.lpa_variants import (
         asyn_fluidc,
@@ -175,6 +205,36 @@ def _call_cases():
             lambda g: weighted_shortest_path_lengths(g, [0], weight="-weight"),
             NegativeCycleError,
         ),
+        "topological-generations": (
+            lambda g: topological_generations(_dag(g)),
+            None,
+        ),
+        "topological-generations-cycle": (
+            lambda g: topological_generations(_both_ways(g)),
+            GraphContainsCycle,
+        ),
+        "core-number": (lambda g: core_number(g), None),
+        "k-truss": (
+            lambda g: k_truss(g, 3).edges,
+            None,
+            lambda G: nx.k_truss(G, 3).number_of_edges(),
+        ),
+        "minimum-spanning-edges": (
+            lambda g: minimum_spanning_edges(g, weight="weight"),
+            None,
+            lambda G: G.number_of_nodes() - 1,
+        ),
+        "maximum-spanning-arborescence": (
+            lambda g: maximum_spanning_arborescence(_dag(g)),
+            None,
+            lambda G: G.number_of_nodes() - 1,
+        ),
+        "betweenness": (lambda g: betweenness_centrality(g), None),
+        "all-pairs-shortest-path-lengths": (
+            lambda g: all_pairs_shortest_path_lengths(g),
+            None,
+            lambda G: G.number_of_nodes() ** 2,
+        ),
     }
 
 
@@ -203,14 +263,14 @@ def test_call_leaves_no_pinned_state(spark, G, case):
     result is consumed and released, and restores the loop conf."""
     from linkgraph.iterutils import SuperstepCache
 
-    fn, raises = _call_cases()[case]
+    fn, raises, *rows = _call_cases()[case]
     g = from_nx(spark, G)
     jsc = _start_clean(spark)
     conf0 = {k: spark.conf.get(k) for k in LOOP_CONF_KEYS}
     dirs0 = _superstep_dirs()
     if raises is None:
         result = fn(g)
-        assert result.count() == G.number_of_nodes()
+        assert result.count() == (rows[0](G) if rows else G.number_of_nodes())
         SuperstepCache(spark).release(result)
     else:
         with pytest.raises(raises):
@@ -269,10 +329,12 @@ def test_component_scalars_release_their_result(spark, G):
 
 
 def _family_cases():
-    """Label-propagation-family calls on the superstep runtime, each with
-    its set-up allowance: the Spark jobs a call runs outside its
-    supersteps."""
+    """Calls on the superstep runtime — the label-propagation family and
+    two peel loops — each with its set-up allowance: the Spark jobs a
+    call runs outside its supersteps."""
     from linkgraph.algos.coloring import greedy_color
+    from linkgraph.algos.cores import core_number
+    from linkgraph.algos.dag import topological_generations
     from linkgraph.algos.lpa import label_propagation_communities
     from linkgraph.algos.lpa_variants import (
         asyn_fluidc,
@@ -282,6 +344,8 @@ def _family_cases():
 
     return {
         # one job per superstep, the initial state included: no set-up
+        "core-number": (lambda g: core_number(g), 0),
+        "topological-generations": (lambda g: topological_generations(_dag(g)), 0),
         "asyn-lpa": (lambda g: asyn_lpa_communities(g, seed=7), 0),
         "fast-lpa": (lambda g: fast_label_propagation_communities(g, seed=7), 0),
         "greedy-color-jp": (lambda g: greedy_color(g, strategy="jones_plassmann"), 0),
@@ -300,7 +364,8 @@ def _family_cases():
 @pytest.mark.parametrize("case", sorted(_family_cases()))
 def test_label_propagation_family_runs_one_job_per_superstep(spark, monkeypatch, case):
     """With automatic broadcasts and adaptive execution off (each action
-    is then one job), a label-propagation-family call on the karate club runs at most one
+    is then one job), a label-propagation-family or peel call on the karate
+    club (oriented into a DAG for topological generations) runs at most one
     Spark job per superstep — decisions come from figures observed on the
     superstep's own job — plus its stated set-up allowance."""
     from linkgraph.iterutils import SuperstepCache
@@ -335,3 +400,47 @@ def test_label_propagation_family_runs_one_job_per_superstep(spark, monkeypatch,
     SuperstepCache(spark).release(result)
     assert supersteps
     assert jobs <= len(supersteps) + setup, (jobs, len(supersteps))
+
+
+def test_failed_truncate_leaves_nothing_pinned(spark):
+    """A superstep whose checkpoint job raises leaves no RDD pinned: the
+    checkpoint registers its RDD before the job runs, and ``truncate``
+    unpersists it before the error propagates."""
+    from pyspark.sql import functions as F
+
+    from linkgraph.iterutils import SuperstepCache
+
+    jsc = _start_clean(spark)
+    failing = spark.range(10).select("id", F.expr("1 div (id - 5)").alias("x"))
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        with SuperstepCache(spark) as loop:
+            loop.truncate(failing)
+    assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_every_runtime_is_opened_with_with():
+    """Every ``SuperstepCache(...)`` call in the library is the context
+    expression of a ``with`` item: there is no bare runtime that truncates
+    without setting the loop conf or releasing what it made."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "linkgraph"
+    bare = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        opened = {
+            id(item.context_expr)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.With, ast.AsyncWith))
+            for item in node.items
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", None))
+                == "SuperstepCache"
+                and id(node) not in opened
+            ):
+                bare.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    assert not bare, bare
