@@ -24,7 +24,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
+from linkgraph.iterutils import local_checkpoint
+
+# Edge rows the sequential kernels collect onto the driver: the local
+# search, the TSP walks and the elimination heuristic, and the smaller
+# approximation-tail kernels.
+_DRIVER_EDGES = 5_000_000
+_TAIL_EDGES = 1_000_000
 
 __all__ = [
     "christofides",
@@ -113,9 +120,9 @@ def randomized_partitioning(
         F.pmod(F.xxhash64(F.lit(int(seed)), F.col("id")), F.lit(2**32))
         / F.lit(float(2**32))
     )
-    sides = g.vertices.select(
+    sides = local_checkpoint(g.vertices.select(
         "id", (coin < F.lit(float(p))).cast("int").alias("side")
-    ).localCheckpoint(eager=True)
+    ))
     base = g.edges
     wcol = resolve_weight_column(base, weight)
     cut = (
@@ -134,7 +141,6 @@ def one_exchange(
     *,
     seed: int = 0,
     weight=None,
-    max_driver_edges: int = 5_000_000,
 ) -> tuple[float, DataFrame]:
     """(cut_size, (id, side)): 1-exchange local-search maxcut
     (``maxcut.py:60``) — start from the hash-coin partition and flip any
@@ -149,15 +155,11 @@ def one_exchange(
     arcs = base.select("src", "dst", wcol.alias("w")).filter(
         F.col("src") != F.col("dst")
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"one_exchange local search is sequential; {m} edges > "
-            f"max_driver_edges={max_driver_edges}. Use "
-            "randomized_partitioning (distributed) at scale."
-        )
     adj: dict[int, dict[int, float]] = {}
-    for r in arcs.collect():
+    for r in driver_rows(
+        arcs, _DRIVER_EDGES, "one_exchange local search is sequential",
+        "Use randomized_partitioning (distributed) at scale.",
+    ):
         u, v, w = int(r["src"]), int(r["dst"]), float(r["w"])
         adj.setdefault(u, {})[v] = adj.setdefault(u, {}).get(v, 0.0) + w
         adj.setdefault(v, {})[u] = adj.setdefault(v, {}).get(u, 0.0) + w
@@ -195,7 +197,6 @@ def greedy_tsp(
     *,
     weight=None,
     source=None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(order, id): nearest-neighbor TSP cycle over a COMPLETE weighted
     graph (``traveling_salesman.py:316`` ``greedy_tsp``): from the source,
@@ -210,14 +211,8 @@ def greedy_tsp(
     arcs = base.select(
         "src", "dst", resolve_weight_column(base, weight).alias("w")
     ).filter(F.col("src") != F.col("dst"))
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"greedy_tsp walk is sequential; {m} arcs > "
-            f"max_driver_edges={max_driver_edges}."
-        )
     adj: dict[int, dict[int, float]] = {}
-    for r in arcs.collect():
+    for r in driver_rows(arcs, _DRIVER_EDGES, "greedy_tsp walk is sequential"):
         adj.setdefault(int(r["src"]), {})[int(r["dst"])] = float(r["w"])
     ids = sorted(int(r["id"]) for r in g.vertices.select("id").collect())
     n = len(ids)
@@ -249,7 +244,6 @@ def christofides(
     g: SparkGraph,
     *,
     weight=None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(order, id): Christofides 1.5-approximate TSP cycle over a COMPLETE
     weighted graph satisfying the triangle inequality
@@ -273,16 +267,13 @@ def christofides(
     arcs = base.select(
         "src", "dst", resolve_weight_column(base, weight).alias("w")
     ).filter(F.col("src") != F.col("dst"))
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"christofides matching step is driver-gated; {m} arcs > "
-            f"max_driver_edges={max_driver_edges}."
-        )
+    rows = driver_rows(
+        arcs, _DRIVER_EDGES, "christofides matching step is driver-gated"
+    )
     ids = sorted(int(r["id"]) for r in g.vertices.select("id").collect())
     n = len(ids)
     wmap: dict[tuple[int, int], float] = {}
-    for r in arcs.collect():
+    for r in rows:
         wmap[(int(r["src"]), int(r["dst"]))] = float(r["w"])
     if any(
         (u, v) not in wmap
@@ -373,9 +364,7 @@ def christofides(
     )
 
 
-def treewidth_min_degree(
-    g: SparkGraph, *, max_driver_edges: int = 5_000_000
-) -> tuple[int, DataFrame, DataFrame]:
+def treewidth_min_degree(g: SparkGraph) -> tuple[int, DataFrame, DataFrame]:
     """(width, bags, tree): an upper-bound tree decomposition by the
     min-degree elimination heuristic
     (``approximation/treewidth.py`` ``treewidth_min_degree``).
@@ -397,14 +386,8 @@ def treewidth_min_degree(
         if not g.directed
         else g.edges.select("src", "dst")
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"treewidth elimination is sequential; {m} arcs > "
-            f"max_driver_edges={max_driver_edges}."
-        )
     adj: dict[int, set] = {}
-    for r in arcs.collect():
+    for r in driver_rows(arcs, _DRIVER_EDGES, "treewidth elimination is sequential"):
         u, v = int(r["src"]), int(r["dst"])
         if u != v:
             adj.setdefault(u, set()).add(v)
@@ -461,14 +444,18 @@ def treewidth_min_degree(
 # ---------------------------------------------------------------------- #
 
 
-def _collect_simple_adj(g: SparkGraph, max_driver_edges: int = 1_000_000):
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("approximation kernel exceeds driver guard")
+def _collect_simple_adj(g: SparkGraph):
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _TAIL_EDGES, "approximation kernel"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
-    for r in g.symmetric_edges().select("src", "dst").collect():
-        if r["src"] != r["dst"]:
-            adj[r["src"]].add(r["dst"])
+    for r in rows:
+        u, v = r["src"], r["dst"]
+        if u != v:
+            adj[u].add(v)
+            if not g.directed:
+                adj[v].add(u)
     return nodes, adj
 
 

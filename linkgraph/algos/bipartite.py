@@ -23,7 +23,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
+from linkgraph.iterutils import local_checkpoint
+
+
+# Edges of the graphs the driver kernels take: the callable projection and
+# the full matching, and (per-pair flows) maximal_extendability.
+_DRIVER_EDGES = 1_000_000
+_EXTENDABILITY_EDGES = 100_000
 
 __all__ = [
     "projected_graph",
@@ -368,14 +375,14 @@ def color(g: SparkGraph) -> DataFrame:
     roots = comp.select(F.col("component").alias("id")).distinct()
     dist = all_pairs_shortest_path_lengths(und, sources=roots)
     deg0 = und.symmetric_edges().select(F.col("src").alias("id")).distinct()
-    colors = (
+    colors = local_checkpoint(
         dist.select("id", (1 - F.pmod(F.col("distance"), F.lit(2))).alias("color"))
         .join(deg0, "id", "left_semi")  # non-isolates: parity color
         .unionByName(
             g.vertices.select("id").join(deg0, "id", "left_anti")
             .select("id", F.lit(0).cast("long").alias("color"))
         )
-    ).localCheckpoint()
+    )
     bad = (
         und.symmetric_edges()
         .join(colors.select(F.col("id").alias("src"), F.col("color").alias("cs")), "src")
@@ -727,7 +734,7 @@ def node_redundancy(g: SparkGraph, nodes: Optional[DataFrame] = None) -> DataFra
             ).alias("redundancy"),
         )
     )
-    out = out.localCheckpoint(eager=True)
+    out = local_checkpoint(out)
     wedges.unpersist()
     deg.unpersist()
     return out
@@ -842,8 +849,7 @@ def collaboration_weighted_projected_graph(
 
 
 def generic_weighted_projected_graph(
-    g: SparkGraph, nodes: DataFrame, weight_function=None,
-    *, max_driver_edges: int = 1_000_000,
+    g: SparkGraph, nodes: DataFrame, weight_function=None
 ) -> SparkGraph:
     """``bipartite/projection.py`` ``generic_weighted_projected_graph`` —
     default weight (shared-neighbor count) runs as one distributed wedge
@@ -866,8 +872,9 @@ def generic_weighted_projected_graph(
             .agg(F.count(F.lit(1)).cast("double").alias("weight"))
         )
         return SparkGraph(e, side, directed=False, coalesce_edges=False)
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("generic projection callable exceeds driver guard")
+    check_driver_limit(
+        g.edges.count(), _DRIVER_EDGES, "generic projection with a weight_function"
+    )
     adj = {}
     for r in arcs.collect():
         adj.setdefault(r["src"], set()).add(r["dst"])
@@ -886,8 +893,7 @@ def generic_weighted_projected_graph(
 
 
 def minimum_weight_full_matching(
-    g: SparkGraph, top_nodes: DataFrame, weight="weight",
-    *, max_driver_edges: int = 1_000_000,
+    g: SparkGraph, top_nodes: DataFrame, weight="weight"
 ) -> DataFrame:
     """``bipartite/matching.py`` ``minimum_weight_full_matching`` — the
     assignment problem: match EVERY node of the smaller side at minimum
@@ -897,8 +903,9 @@ def minimum_weight_full_matching(
     Returns (u, v) rows with u on the top side."""
     from linkgraph.graph import resolve_weight_column
 
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("minimum_weight_full_matching exceeds driver guard")
+    check_driver_limit(
+        g.edges.count(), _DRIVER_EDGES, "minimum_weight_full_matching"
+    )
     top = sorted(
         r["id"]
         for r in top_nodes.select(
@@ -983,7 +990,7 @@ def minimum_weight_full_matching(
     )
 
 
-def maximal_extendability(g: SparkGraph, *, max_driver_edges: int = 100_000) -> int:
+def maximal_extendability(g: SparkGraph) -> int:
     """``bipartite/extendability.py`` ``maximal_extendability`` — for a
     connected bipartite graph with a perfect matching: the largest k such
     that every matching of size k extends to a perfect one = the minimum
@@ -993,8 +1000,9 @@ def maximal_extendability(g: SparkGraph, *, max_driver_edges: int = 100_000) -> 
     reference's per-pair ``node_disjoint_paths`` loop."""
     from collections import deque
 
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("maximal_extendability exceeds driver guard")
+    check_driver_limit(
+        g.edges.count(), _EXTENDABILITY_EDGES, "maximal_extendability"
+    )
     from linkgraph.algos.components import is_connected
 
     if not is_connected(g):

@@ -43,11 +43,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.iterutils import SuperstepCache, loop_partitions, row_count
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 
 _VROOT = -(2**61)
+
+# Arcs ArborescenceIterator collects onto the driver.
+_DRIVER_EDGES = 1_000_000
 
 
 def _rooted(
@@ -420,23 +423,22 @@ class ArborescenceIterator:
     SparkGraphs. Driver-gated enumeration (output may be exponential)."""
 
     def __init__(self, g, weight="weight", minimum: bool = True,
-                 init_partition=None, *, max_driver_edges: int = 1_000_000):
+                 init_partition=None):
         from linkgraph.graph import resolve_weight_column
 
         if not g.directed:
             raise NetworkXError("ArborescenceIterator needs a directed graph")
-        if g.edges.count() > max_driver_edges:
-            raise NetworkXError("ArborescenceIterator exceeds driver guard")
         self.g = g
         self.minimum = minimum
         base = g.edges
-        from pyspark.sql import functions as F
-
         self.arcs = [
             (r["src"], r["dst"], float(r["w"]))
-            for r in base.select(
-                "src", "dst", resolve_weight_column(base, weight).alias("w")
-            ).collect()
+            for r in driver_rows(
+                base.select(
+                    "src", "dst", resolve_weight_column(base, weight).alias("w")
+                ),
+                _DRIVER_EDGES, "ArborescenceIterator",
+            )
         ]
         self.nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
         self.init_partition = {}

@@ -22,14 +22,15 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
 
+# Arcs the chain decomposition's DFS collects onto the driver.
+_DRIVER_ARCS = 5_000_000
+
 __all__ = ["chain_decomposition", "prefix_tree"]
 
 NIL = -1
 
 
-def chain_decomposition(
-    g: SparkGraph, root=None, *, max_driver_edges: int = 5_000_000
-) -> "list[list[tuple[int, int]]]":
+def chain_decomposition(g: SparkGraph, root=None) -> "list[list[tuple[int, int]]]":
     """The Schmidt chain decomposition (``chains.py:9``): a list of chains,
     each a list of edges; every non-bridge edge appears in exactly one
     chain. Deterministic: DFS visits sorted neighbors, back edges are
@@ -38,7 +39,7 @@ def chain_decomposition(
         raise ValueError("chain_decomposition is defined on undirected graphs")
     from linkgraph.algos.dfs import _driver_adjacency
 
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_ARCS)
     roots = [int(root)] if root is not None else nodes
     visited_dfs = set()
     dfs_num = {}

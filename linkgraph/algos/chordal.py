@@ -16,59 +16,62 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from linkgraph.exceptions import NetworkXException
-from linkgraph.graph import SparkGraph
+from linkgraph.exceptions import (
+    NetworkXError,
+    NetworkXException,
+    NotImplementedForDirected,
+)
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = ["is_chordal"]
 
 
-def is_chordal(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> bool:
-    """``nx.is_chordal`` twin. Directed input raises like the reference
-    (``chordal.py`` is ``@not_implemented_for("directed")``)."""
-    from linkgraph.exceptions import NotImplementedForDirected
+# Simple edges the MCS kernel collects onto the driver.
+_DRIVER_EDGES = 5_000_000
 
-    if g.directed:
-        raise NotImplementedForDirected(
-            "is_chordal: not implemented for directed type"
-        )
-    arcs = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
+
+def _undirected_adjacency(
+    g: SparkGraph, limit: int, what: str, *, weighted: bool = False
+):
+    """``(adj, edges, nodes)``: the simple undirected graph on the driver —
+    ``edges`` its canonical non-loop edges ``(u < v, w)``, at most ``limit``
+    of them (:func:`linkgraph.graph.driver_rows`), with ``w`` the largest
+    parallel weight when ``weighted`` (else None); ``adj`` every node's
+    neighbor set and ``nodes`` the ascending node list."""
+    pairs = g.edges.filter(F.col("src") != F.col("dst")).select(
+        F.least("src", "dst").alias("u"),
+        F.greatest("src", "dst").alias("v"),
+        *([F.col("weight")] if weighted else []),
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"chordality testing (MCS) is sequential; the driver kernel "
-            f"collects the edge list, but {m} edges > max_driver_edges="
-            f"{max_driver_edges}."
-        )
-    adj: dict = {}
-    for r in arcs.collect():
-        adj.setdefault(r["u"], set()).add(r["v"])
-        adj.setdefault(r["v"], set()).add(r["u"])
+    if weighted:
+        pairs = pairs.groupBy("u", "v").agg(F.max("weight").alias("w"))
+    else:
+        pairs = pairs.distinct()
+    edges = [
+        (r["u"], r["v"], float(r["w"]) if weighted else None)
+        for r in driver_rows(pairs, limit, what)
+    ]
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
-    for n_ in nodes:
-        adj.setdefault(n_, set())
-    n = len(nodes)
-    if n <= 3:
-        return True
+    adj: dict = {v: set() for v in nodes}
+    for u, v, _ in edges:
+        adj[u].add(v)
+        adj[v].add(u)
+    return adj, edges, nodes
 
-    # Maximum Cardinality Search with a bucket queue (O(n + m))
+
+def _mcs_numbering(adj: dict, nodes: list) -> dict:
+    """Maximum Cardinality Search with a bucket queue (O(n + m)): the
+    number (n..1) of every node, ties to the smallest id."""
     weight = {v: 0 for v in nodes}
     buckets: dict = {0: set(nodes)}
     maxw = 0
     number: dict = {}
-    order = []
-    for k in range(n, 0, -1):
+    for k in range(len(nodes), 0, -1):
         while maxw >= 0 and not buckets.get(maxw):
             maxw -= 1
         v = min(buckets[maxw])
         buckets[maxw].discard(v)
         number[v] = k
-        order.append(v)
         for w in adj[v]:
             if w in number:
                 continue
@@ -77,10 +80,14 @@ def is_chordal(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> bool:
             buckets.setdefault(weight[w], set()).add(w)
             if weight[w] > maxw:
                 maxw = weight[w]
+    return number
 
-    # PEO verification: order[] is numbered n..1; elimination order is the
-    # reverse. For v, the later (higher-numbered) neighbors must form a
-    # clique "anchored" at the earliest of them.
+
+def _is_peo(adj: dict, nodes: list, number: dict) -> bool:
+    """Whether the MCS numbering is a perfect elimination order — true
+    exactly for chordal graphs. The elimination order is the reverse of
+    the numbering: for each v, the later (higher-numbered) neighbors must
+    form a clique anchored at the earliest of them."""
     for v in nodes:
         later = [w for w in adj[v] if number[w] > number[v]]
         if len(later) <= 1:
@@ -92,64 +99,36 @@ def is_chordal(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> bool:
     return True
 
 
-def _mcs_state(g: SparkGraph, max_driver_edges: int):
-    """Shared MCS kernel: returns (adj, nodes, number) — the same
-    numbering :func:`is_chordal` computes."""
-    arcs = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
+def _mcs_state(g: SparkGraph):
+    """Shared MCS kernel: returns (adj, nodes, number)."""
+    adj, _, nodes = _undirected_adjacency(
+        g, _DRIVER_EDGES,
+        "chordality testing (MCS) is sequential; the driver kernel collects "
+        "the edge list",
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"MCS is sequential; {m} edges > max_driver_edges={max_driver_edges}"
+    return adj, nodes, _mcs_numbering(adj, nodes)
+
+
+def is_chordal(g: SparkGraph) -> bool:
+    """``nx.is_chordal`` twin. Directed input raises like the reference
+    (``chordal.py`` is ``@not_implemented_for("directed")``)."""
+    if g.directed:
+        raise NotImplementedForDirected(
+            "is_chordal: not implemented for directed type"
         )
-    adj: dict = {}
-    for r in arcs.collect():
-        adj.setdefault(r["u"], set()).add(r["v"])
-        adj.setdefault(r["v"], set()).add(r["u"])
-    nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
-    for n_ in nodes:
-        adj.setdefault(n_, set())
-    n = len(nodes)
-    weight = {v: 0 for v in nodes}
-    buckets: dict = {0: set(nodes)}
-    maxw = 0
-    number: dict = {}
-    for k in range(n, 0, -1):
-        while maxw >= 0 and not buckets.get(maxw):
-            maxw -= 1
-        v = min(buckets[maxw])
-        buckets[maxw].discard(v)
-        number[v] = k
-        for w in adj[v]:
-            if w in number:
-                continue
-            buckets[weight[w]].discard(w)
-            weight[w] += 1
-            buckets.setdefault(weight[w], set()).add(w)
-            if weight[w] > maxw:
-                maxw = weight[w]
-    return adj, nodes, number
+    return _is_peo(*_mcs_state(g))
 
 
-def chordal_graph_cliques(
-    g: SparkGraph, *, max_driver_edges: int = 5_000_000
-) -> "list[frozenset]":
+def chordal_graph_cliques(g: SparkGraph) -> "list[frozenset]":
     """``chordal.py`` ``chordal_graph_cliques`` — the maximal cliques of a
     chordal graph read off the PEO: {v} ∪ later-neighbors(v) for each v,
     keeping only sets not contained in another. Raises on non-chordal
     input like the reference."""
-    from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
-
     if g.directed:
         raise NotImplementedForDirected("chordal_graph_cliques: undirected only")
-    if not is_chordal(g, max_driver_edges=max_driver_edges):
+    adj, nodes, number = _mcs_state(g)
+    if not _is_peo(adj, nodes, number):
         raise NetworkXError("Input graph is not chordal.")
-    adj, nodes, number = _mcs_state(g, max_driver_edges)
     cands = []
     for v in nodes:
         later = {w for w in adj[v] if number[w] > number[v]}
@@ -163,11 +142,9 @@ def chordal_graph_cliques(
     return sorted(out, key=lambda s: (len(s), sorted(s)))
 
 
-def chordal_graph_treewidth(
-    g: SparkGraph, *, max_driver_edges: int = 5_000_000
-) -> int:
+def chordal_graph_treewidth(g: SparkGraph) -> int:
     """``chordal.py`` ``chordal_graph_treewidth`` — max clique size - 1."""
-    cliques = chordal_graph_cliques(g, max_driver_edges=max_driver_edges)
+    cliques = chordal_graph_cliques(g)
     return max((len(c) for c in cliques), default=1) - 1
 
 
@@ -213,8 +190,7 @@ def _chordality_breaker(adj, nodes, s, bound):
 
 
 def find_induced_nodes(
-    g: SparkGraph, s: int, t: int, treewidth_bound: int = None,
-    *, max_driver_edges: int = 5_000_000,
+    g: SparkGraph, s: int, t: int, treewidth_bound: int = None
 ) -> "set[int]":
     """``chordal.py`` ``find_induced_nodes`` — the induced nodes on the
     path from s to t in a chordal graph: add the chord (s, t), then
@@ -222,11 +198,13 @@ def find_induced_nodes(
     until the graph is chordal again; every witness joins the induced
     set. Driver-side like the recognition kernel; raises on non-chordal
     input and on a treewidth bound violation, like the reference."""
-    from linkgraph.exceptions import NetworkXError
-
-    if not is_chordal(g, max_driver_edges=max_driver_edges):
+    if g.directed:
+        raise NotImplementedForDirected(
+            "is_chordal: not implemented for directed type"
+        )
+    adj, nodes, number = _mcs_state(g)
+    if not _is_peo(adj, nodes, number):
         raise NetworkXError("Input graph is not chordal.")
-    adj, nodes, _number = _mcs_state(g, max_driver_edges)
     orig = {k: set(v) for k, v in adj.items()}
     s, t = int(s), int(t)
     adj = {k: set(v) for k, v in adj.items()}

@@ -38,6 +38,10 @@ from linkgraph.iterutils import SuperstepCache, row_count
 from linkgraph.exceptions import NotImplementedForDirected
 
 
+# Arcs max_weight_clique's branch and bound collects onto the driver.
+_DRIVER_ARCS = 5_000_000
+
+
 def _oriented(g: SparkGraph):
     """(oriented arcs (s, d), symmetric simple arcs (u, v)) — degree order."""
     if g.directed:
@@ -299,8 +303,7 @@ def make_clique_bipartite(g: SparkGraph) -> "tuple[SparkGraph, DataFrame]":
 
 
 def max_weight_clique(
-    g: SparkGraph, weight: Optional[str] = "weight",
-    *, max_driver_edges: int = 5_000_000,
+    g: SparkGraph, weight: Optional[str] = "weight"
 ) -> "tuple[list[int], float]":
     """(clique, weight): a maximum-weight clique
     (``networkx/algorithms/clique.py:732`` ``max_weight_clique``;
@@ -312,7 +315,7 @@ def max_weight_clique(
 
     if g.directed:
         raise ValueError("max_weight_clique: undirected graphs only")
-    adj_l, nodes = _driver_adjacency(g, max_driver_edges)
+    adj_l, nodes = _driver_adjacency(g, _DRIVER_ARCS)
     adj = {u: set(vs) - {u} for u, vs in adj_l.items()}
     for n in nodes:
         adj.setdefault(n, set())

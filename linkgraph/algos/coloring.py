@@ -33,17 +33,13 @@ Strategy parity notes:
 from __future__ import annotations
 
 import random
-from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.iterutils import SuperstepCache
-from linkgraph.algos.lpa import (
-    _greedy_color_largest_first,
-    _jones_plassmann_coloring,
-)
+from linkgraph.algos.lpa import _jones_plassmann_coloring
 
 __all__ = ["greedy_color", "equitable_color"]
 
@@ -56,21 +52,30 @@ STRATEGIES = (
 )
 
 
-def _collect(g: SparkGraph, max_driver_edges: int):
-    m = g.edges.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"greedy_color: sequential strategy order is inherently "
-            f"order-dependent; {m} edges > max_driver_edges="
-            f"{max_driver_edges}. Use strategy='jones_plassmann' for a "
-            f"distributed proper coloring at scale."
-        )
-    edges = [
-        (r["src"], r["dst"])
-        for r in g.symmetric_edges().select("src", "dst").collect()
-    ]
+# Edge rows the sequential colorings collect onto the driver.
+_DRIVER_EDGES = 5_000_000
+_EQUITABLE_EDGES = 1_000_000
+
+
+def _simple_adjacency(g: SparkGraph, limit: int, what: str, hint: str = ""):
+    """``(nodes, adj)``: the ascending node list and every node's neighbor
+    set in the undirected view of ``g``, self-loops dropped, from at most
+    ``limit`` collected edge rows (:func:`linkgraph.graph.driver_rows`)."""
+    rows = driver_rows(g.edges.select("src", "dst"), limit, what, hint)
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
-    return edges, nodes
+    return nodes, _undirected_adjacency(nodes, rows)
+
+
+def _undirected_adjacency(nodes, rows):
+    """Every node's neighbor set over the ``(src, dst)`` rows, both
+    directions, self-loops dropped."""
+    adj: dict = {v: set() for v in nodes}
+    for r in rows:
+        u, v = r["src"], r["dst"]
+        if u != v:
+            adj[u].add(v)
+            adj[v].add(u)
+    return adj
 
 
 def _greedy_assign(adj, order):
@@ -84,13 +89,15 @@ def _greedy_assign(adj, order):
     return colors
 
 
-def _adj(edges):
-    adj = defaultdict(set)
-    for u, v in edges:
-        if u != v:
-            adj[u].add(v)
-            adj[v].add(u)
-    return adj
+def _greedy_color_largest_first(adj, nodes):
+    """Exact replication of ``nx.coloring.greedy_color(G)`` with the default
+    ``largest_first`` strategy (``greedy_coloring.py:266``, strategy at
+    ``:42``): nodes sorted by degree descending (a stable sort: ties keep
+    ``nodes``' order, here ascending id), each assigned the smallest color
+    unused by already-colored neighbors. Returns {node: color}."""
+    return _greedy_assign(
+        adj, sorted(nodes, key=lambda n: len(adj[n]), reverse=True)
+    )
 
 
 def _order_smallest_last(adj, nodes):
@@ -135,7 +142,6 @@ def greedy_color(
     strategy: str = "largest_first",
     *,
     seed: int = 0,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(id, color): a proper greedy coloring of the undirected view of
     ``g`` (``greedy_coloring.py:266``). See module docstring for the
@@ -153,25 +159,30 @@ def greedy_color(
             )
             return loop.result(colors)
 
-    edges, nodes = _collect(g, max_driver_edges)
+    nodes, adj = _simple_adjacency(
+        g, _DRIVER_EDGES,
+        "greedy_color: a sequential strategy's order is inherently "
+        "order-dependent",
+        "Use strategy='jones_plassmann' for a distributed proper coloring at "
+        "scale.",
+    )
     if strategy == "largest_first":
-        colors = _greedy_color_largest_first(edges, nodes)
+        colors = _greedy_color_largest_first(adj, nodes)
     elif strategy == "random_sequential":
         order = list(nodes)
         random.Random(seed).shuffle(order)
-        colors = _greedy_assign(_adj(edges), order)
+        colors = _greedy_assign(adj, order)
     elif strategy == "smallest_last":
-        colors = _greedy_assign(_adj(edges), _order_smallest_last(_adj(edges), nodes))
+        colors = _greedy_assign(adj, _order_smallest_last(adj, nodes))
     else:  # saturation_largest_first
-        colors = _dsatur(_adj(edges), nodes)
+        colors = _dsatur(adj, nodes)
     return spark.createDataFrame(
         [(int(n), int(c)) for n, c in sorted(colors.items())],
         "id bigint, color int",
     )
 
 
-def equitable_color(g: SparkGraph, num_colors: int,
-                    *, max_driver_edges: int = 1_000_000) -> DataFrame:
+def equitable_color(g: SparkGraph, num_colors: int) -> DataFrame:
     """``coloring/equitable_coloring.py`` ``equitable_color`` — a proper
     coloring whose class sizes differ by at most one, guaranteed to exist
     whenever ``num_colors >= Δ + 1`` (Hajnal-Szemerédi); raises the
@@ -186,10 +197,7 @@ def equitable_color(g: SparkGraph, num_colors: int,
     distributed scale path for plain proper coloring remains
     Jones-Plassmann (``greedy_color``)."""
     spark = g.spark
-    edges, nodes = _collect(g, max_driver_edges)
-    adj = _adj(edges)
-    for v in nodes:
-        adj.setdefault(v, set())
+    nodes, adj = _simple_adjacency(g, _EQUITABLE_EDGES, "equitable_color")
     r_ = max((len(adj[v]) for v in nodes), default=0)
     if r_ >= num_colors:
         raise NetworkXError(

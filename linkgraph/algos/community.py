@@ -41,8 +41,12 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.iterutils import SuperstepCache, loop_partitions
+
+
+# Arcs greedy_modularity_communities collects onto the driver.
+_DRIVER_ARCS = 5_000_000
 
 __all__ = [
     "modularity",
@@ -564,7 +568,6 @@ def greedy_modularity_communities(
     resolution: float = 1.0,
     cutoff: int = 1,
     best_n: Optional[int] = None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """Clauset–Newman–Moore greedy modularity maximization
     (``community/modularity_max.py:228``) as ``(id, community)``; the
@@ -611,14 +614,12 @@ def greedy_modularity_communities(
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    m_arcs = arcs.count()
-    if m_arcs > max_driver_edges:
-        raise ValueError(
-            f"CNM's merge schedule is sequential; the driver loop collects "
-            f"the arc list, but {m_arcs} arcs > max_driver_edges="
-            f"{max_driver_edges}. Use louvain_communities for the scale path."
-        )
-    rows = arcs.collect()
+    rows = driver_rows(
+        arcs, _DRIVER_ARCS,
+        "CNM's merge schedule is sequential; the driver loop collects the arc "
+        "list",
+        "Use louvain_communities for the scale path.",
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     spark = g.spark
 

@@ -26,7 +26,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
+from linkgraph.iterutils import local_checkpoint
+
+
+# Edges of the graphs the sequential kernels collect: the local searches,
+# and the tree DP of lukes_partitioning.
+_DRIVER_EDGES = 1_000_000
+_LUKES_EDGES = 100_000
 
 __all__ = [
     "is_partition",
@@ -108,12 +115,12 @@ def girvan_newman(g: SparkGraph, most_valuable_edge=None):
                     .collect()[0]
                 )
                 u, v = row["src"], row["dst"]
-            e2 = work.edges.filter(
+            e2 = local_checkpoint(work.edges.filter(
                 ~(
                     ((F.col("src") == u) & (F.col("dst") == v))
                     | ((F.col("src") == v) & (F.col("dst") == u))
                 )
-            ).localCheckpoint(eager=True)
+            ))
             work = SparkGraph(
                 e2, work.vertices, directed=False, coalesce_edges=False
             )
@@ -125,7 +132,7 @@ def girvan_newman(g: SparkGraph, most_valuable_edge=None):
 
 def kernighan_lin_bisection(
     g: SparkGraph, partition=None, max_iter: int = 10, weight="weight",
-    seed: int = 0, *, max_driver_edges: int = 1_000_000,
+    seed: int = 0
 ):
     """``community/kernighan_lin.py`` ``kernighan_lin_bisection`` — the
     classic swap-sweep bisection heuristic; sequential by definition,
@@ -134,8 +141,7 @@ def kernighan_lin_bisection(
 
     if g.directed:
         raise NetworkXError("kernighan_lin_bisection: undirected only")
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("kernighan_lin_bisection exceeds driver guard")
+    check_driver_limit(g.edges.count(), _DRIVER_EDGES, "kernighan_lin_bisection")
     base = g.symmetric_edges()
     adj = {}
     for r in base.select(
@@ -270,14 +276,13 @@ def k_clique_communities(g: SparkGraph, k: int, cliques=None) -> DataFrame:
     )
     canon = out.groupBy("component").agg(F.min("id").alias("community"))
     res = out.join(canon, "component").select("id", "community").distinct()
-    res = res.localCheckpoint(eager=True)
+    res = local_checkpoint(res)
     cl.unpersist()
     return res
 
 
 def lukes_partitioning(
-    g: SparkGraph, max_size: int, node_weight=None, edge_weight=None,
-    *, max_driver_edges: int = 100_000,
+    g: SparkGraph, max_size: int, node_weight=None, edge_weight=None
 ):
     """``community/lukes.py`` ``lukes_partitioning`` — the optimal
     max-weight partition of a TREE into clusters of bounded node weight
@@ -286,8 +291,7 @@ def lukes_partitioning(
     vertex/edge columns (defaults 1)."""
     from linkgraph.algos.tree import is_tree
 
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("lukes_partitioning exceeds driver guard")
+    check_driver_limit(g.edges.count(), _LUKES_EDGES, "lukes_partitioning")
     if not is_tree(g):
         raise NetworkXError("lukes_partitioning works only on trees")
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
@@ -409,12 +413,12 @@ def _divisive_partition(g, number_of_sets, rank_fn):
     )
     while number_connected_components(work) < number_of_sets:
         u, v = rank_fn(work)
-        e2 = work.edges.filter(
+        e2 = local_checkpoint(work.edges.filter(
             ~(
                 ((F.col("src") == u) & (F.col("dst") == v))
                 | ((F.col("src") == v) & (F.col("dst") == u))
             )
-        ).localCheckpoint(eager=True)
+        ))
         work = SparkGraph(e2, work.vertices, directed=work.directed,
                           coalesce_edges=False)
     cc = connected_components(work)
@@ -573,13 +577,13 @@ def spectral_modularity_bipartition(g: SparkGraph, *, max_nodes: int = 20000):
 
 def greedy_node_swap_bipartition(
     g: SparkGraph, *, init_split=None, max_iter: int = 10, seed: int = 0,
-    max_driver_edges: int = 1_000_000,
 ):
     """``community/bipartition.py`` ``greedy_node_swap_bipartition`` —
     modularity-greedy node swaps between two halves (sequential local
     search, driver-side; seeded where the reference uses the global RNG)."""
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("greedy_node_swap_bipartition exceeds driver guard")
+    check_driver_limit(
+        g.edges.count(), _DRIVER_EDGES, "greedy_node_swap_bipartition"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
     m = 0
@@ -652,7 +656,7 @@ def greedy_node_swap_bipartition(
 
 def greedy_source_expansion(
     g: SparkGraph, *, source, cutoff: Optional[int] = None,
-    method: str = "clauset", max_driver_edges: int = 1_000_000,
+    method: str = "clauset",
 ):
     """``community/local.py`` ``greedy_source_expansion`` (Clauset 2005
     local modularity R) — grow a community from ``source`` by greedily
@@ -661,8 +665,7 @@ def greedy_source_expansion(
     state — driver kernel; returns the community set."""
     if method != "clauset":
         raise ValueError(f"{method} is not a valid choice for an algorithm.")
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("greedy_source_expansion exceeds driver guard")
+    check_driver_limit(g.edges.count(), _DRIVER_EDGES, "greedy_source_expansion")
     adj = {}
     for r in g.symmetric_edges().select("src", "dst").collect():
         adj.setdefault(r["src"], set()).add(r["dst"])

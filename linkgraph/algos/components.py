@@ -203,10 +203,6 @@ def is_connected(g: SparkGraph) -> bool:
         raise NotImplementedForDirected(
             "is_connected: not implemented for directed type"
         )
-    if g.number_of_nodes() == 0:
-        raise ValueError(
-            "Connectivity is undefined for the null graph."
-        )
     return _one_component(g)
 
 
@@ -218,19 +214,19 @@ def is_weakly_connected(g: SparkGraph) -> bool:
         raise ValueError(
             "is_weakly_connected: not implemented for undirected type"
         )
-    if g.number_of_nodes() == 0:
-        raise ValueError(
-            "Connectivity is undefined for the null graph."
-        )
     return _one_component(g)
 
 
 def _one_component(g: SparkGraph) -> bool:
     """Whether ``g``'s labeling has one component: a second distinct label
-    ends the scan, so no full count of the labels runs."""
-    return _component_scalar(
-        g, lambda cc: cc.select("component").distinct().limit(2).count() == 1
+    ends the scan, so no full count of the labels runs. No label at all is
+    the null graph, on which connectivity is undefined."""
+    labels = _component_scalar(
+        g, lambda cc: cc.select("component").distinct().limit(2).count()
     )
+    if labels == 0:
+        raise ValueError("Connectivity is undefined for the null graph.")
+    return labels == 1
 
 
 def node_connected_component(g: SparkGraph, n: int) -> DataFrame:

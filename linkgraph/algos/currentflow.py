@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
 from linkgraph.graph import SparkGraph
-from linkgraph.iterutils import SuperstepCache
+from linkgraph.iterutils import SuperstepCache, local_checkpoint
 
 __all__ = [
     "current_flow_closeness_centrality",
@@ -219,12 +219,12 @@ def current_flow_closeness_centrality(
         "id", F.col("x").alias("lvv")
     )
     trace = diag_lplus.agg(F.sum("lvv")).first()[0] or 0.0
-    out = diag_lplus.select(
+    out = local_checkpoint(diag_lplus.select(
         "id",
         (1.0 / (F.lit(float(n)) * F.col("lvv") + F.lit(float(trace)))).alias(
             "centrality"
         ),
-    ).localCheckpoint(eager=True)
+    ))
     arcs.unpersist()
     deg.unpersist()
     return out
@@ -405,7 +405,7 @@ def current_flow_betweenness_centrality(
         .agg(F.sum("b").alias("b"))
     )
     nb = (n - 1.0) * (n - 2.0) if normalized else 2.0
-    out = (
+    out = local_checkpoint(
         idx.join(acc, "id", "left")
         .select(
             "id",
@@ -413,7 +413,6 @@ def current_flow_betweenness_centrality(
                 (F.coalesce("b", F.lit(0.0)) - F.col("ix")) * 2.0 / F.lit(nb)
             ).alias("betweenness"),
         )
-        .localCheckpoint(eager=True)
     )
     arcs.unpersist()
     deg.unpersist()
@@ -470,7 +469,7 @@ def edge_current_flow_betweenness_centrality(
         Window.partitionBy("u", "w").orderBy(F.desc("f"), F.asc("i"))
     )
     nb = (n - 1.0) * (n - 2.0) if normalized else 2.0
-    out = (
+    out = local_checkpoint(
         fe.withColumn("pos1", pos1)
         .groupBy("u", "w")
         .agg(
@@ -482,7 +481,6 @@ def edge_current_flow_betweenness_centrality(
         .select(
             F.col("u").alias("src"), F.col("w").alias("dst"), "betweenness"
         )
-        .localCheckpoint(eager=True)
     )
     arcs.unpersist()
     deg.unpersist()
@@ -696,14 +694,13 @@ def approximate_current_flow_betweenness_centrality(
         )
     )
     factor = 1.0 if normalized else nb / 2.0
-    out = (
+    out = local_checkpoint(
         g.vertices.select("id")
         .join(contrib, "id", "left")
         .select(
             "id",
             (F.coalesce("b", F.lit(0.0)) * F.lit(factor)).alias("betweenness"),
         )
-        .localCheckpoint(eager=True)
     )
     arcs.unpersist()
     deg.unpersist()

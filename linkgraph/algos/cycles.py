@@ -28,15 +28,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.iterutils import SuperstepCache, row_count
+
+# Arcs the driver kernels collect: Johnson's search and the cycle basis
+# (and the calls built on them), and the Euler and find_cycle walks.
+_DRIVER_ARCS = 1_000_000
+_WALK_ARCS = 5_000_000
 
 
 def simple_cycles(
     g: SparkGraph,
     length_bound: "int | None" = None,
-    *,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """DataFrame ``(cycle array<BIGINT>)`` — each simple cycle exactly
     once, in canonical rotation (min node first; undirected additionally
@@ -50,7 +53,7 @@ def simple_cycles(
     size guard like the DFS family. Output can be exponential in the
     graph; the bound is the scale valve."""
     if length_bound is None:
-        return _simple_cycles_unbounded(g, max_driver_edges)
+        return _simple_cycles_unbounded(g)
     if length_bound < 1:
         raise ValueError("length_bound must be a positive integer")
     spark = g.spark
@@ -307,7 +310,7 @@ def cycle_basis(g: SparkGraph, *, max_iter: int = 100_000) -> DataFrame:
         return cache.result(cache.truncate(selfloops.unionByName(cycles)))
 
 
-def _euler_walk(g, start, *, max_driver_edges: int, circuit: bool):
+def _euler_walk(g, start, *, circuit: bool):
     """Driver-side Hierholzer walk (``euler.py`` ``eulerian_circuit`` /
     ``eulerian_path`` semantics). The walk order is inherently sequential
     (each step consumes the edge it crossed), so — like the DFS family —
@@ -319,15 +322,11 @@ def _euler_walk(g, start, *, max_driver_edges: int, circuit: bool):
     from pyspark.sql import functions as F
 
     arcs = (g.edges if g.directed else g.symmetric_edges()).select("src", "dst")
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"Euler walks are sequential by definition; the driver walk "
-            f"collects the edge list, but {m} arcs > max_driver_edges="
-            f"{max_driver_edges}."
-        )
     adj: dict = {}
-    for r in arcs.collect():
+    for r in driver_rows(
+        arcs, _WALK_ARCS,
+        "Euler walks are sequential; the driver walk collects the edge list",
+    ):
         adj.setdefault(r["src"], Counter())[r["dst"]] += 1
     stack = [start]
     trail: list = []
@@ -352,9 +351,7 @@ def _euler_walk(g, start, *, max_driver_edges: int, circuit: bool):
     return list(reversed(trail))
 
 
-def eulerian_circuit(
-    g, source=None, *, max_driver_edges: int = 5_000_000
-):
+def eulerian_circuit(g, source=None):
     """(src, dst, order): edges of an Euler circuit in traversal order
     (``euler.py:90`` ``eulerian_circuit``; Hierholzer). Raises when the
     graph is not Eulerian, like the reference. ``source=None`` starts at
@@ -366,15 +363,13 @@ def eulerian_circuit(
     if source is None:
         source = g.vertices.agg(F.min("id")).first()[0]
     seq = _euler_walk(
-        g, int(source), max_driver_edges=max_driver_edges, circuit=True
+        g, int(source), circuit=True
     )
     rows = [(seq[i], seq[i + 1], i + 1) for i in range(len(seq) - 1)]
     return g.spark.createDataFrame(rows or [], "src long, dst long, order long")
 
 
-def eulerian_path(
-    g, source=None, *, max_driver_edges: int = 5_000_000
-):
+def eulerian_path(g, source=None):
     """(src, dst, order): edges of an Euler path (``euler.py:294``
     ``eulerian_path``). Starts at the unique deficit node when one exists
     (odd-degree / out−in = 1), else at ``source`` or the minimum id."""
@@ -402,30 +397,27 @@ def eulerian_path(
             )
         source = unb if unb is not None else g.vertices.agg(F.min("id")).first()[0]
     seq = _euler_walk(
-        g, int(source), max_driver_edges=max_driver_edges, circuit=False
+        g, int(source), circuit=False
     )
     rows = [(seq[i], seq[i + 1], i + 1) for i in range(len(seq) - 1)]
     return g.spark.createDataFrame(rows or [], "src long, dst long, order long")
 
 
-def _simple_cycles_unbounded(g: SparkGraph, max_driver_edges: int) -> DataFrame:
+def _simple_cycles_unbounded(g: SparkGraph) -> DataFrame:
     """Driver-gated unbounded enumeration (see :func:`simple_cycles`)."""
     from pyspark.sql import functions as F
 
     arcs = (g.edges if g.directed else g.symmetric_edges()).select(
         "src", "dst"
     ).distinct()
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"unbounded simple_cycles is Johnson's sequential search; the "
-            f"driver walk collects the edge list, but {m} arcs > "
-            f"max_driver_edges={max_driver_edges}. Pass length_bound for "
-            "the distributed bounded enumeration."
-        )
     adj: dict = {}
     loops = []
-    for r in arcs.collect():
+    for r in driver_rows(
+        arcs, _DRIVER_ARCS,
+        "unbounded simple_cycles is Johnson's sequential search; the driver "
+        "walk collects the edge list",
+        "Pass length_bound for the distributed bounded enumeration.",
+    ):
         u, v = r["src"], r["dst"]
         if u == v:
             loops.append([u])
@@ -603,8 +595,6 @@ def find_cycle(
     g: SparkGraph,
     source=None,
     orientation=None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> list:
     """One cycle reachable from ``source`` (or anywhere when None) —
     ``networkx/algorithms/cycles.py`` ``find_cycle``.
@@ -618,8 +608,6 @@ def find_cycle(
     promise. Raises :class:`NetworkXNoCycle` when acyclic from the given
     roots.
     """
-    from linkgraph.algos.dfs import _driver_adjacency
-
     if orientation not in (None, "original", "reverse", "ignore"):
         raise ValueError(f"invalid orientation: {orientation!r}")
 
@@ -629,14 +617,11 @@ def find_cycle(
         .select("src", "dst")
         .distinct()
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"find_cycle walks sequentially on the driver; {m} arcs > "
-            f"max_driver_edges={max_driver_edges}. For cycle EXISTENCE at "
-            "scale use is_directed_acyclic_graph / girth (distributed)."
-        )
-    rows = arcs.collect()
+    rows = driver_rows(
+        arcs, _WALK_ARCS, "find_cycle walks sequentially on the driver",
+        "For cycle EXISTENCE at scale use is_directed_acyclic_graph / girth "
+        "(distributed).",
+    )
     adj: "dict[int, list[tuple[int, str]]]" = {}
     directed = g.directed
     tagged = orientation is not None and directed
@@ -720,18 +705,16 @@ def find_cycle(
     raise NetworkXNoCycle("No cycle found.")
 
 
-def recursive_simple_cycles(g: SparkGraph, *, max_driver_edges: int = 1_000_000) -> DataFrame:
+def recursive_simple_cycles(g: SparkGraph) -> DataFrame:
     """``cycles.py`` ``recursive_simple_cycles`` — same output contract as
     unbounded :func:`simple_cycles` (the reference keeps both only because
     one recurses); alias here."""
-    return simple_cycles(g, None, max_driver_edges=max_driver_edges)
+    return simple_cycles(g, None)
 
 
 def chordless_cycles(
     g: SparkGraph,
     length_bound: "int | None" = None,
-    *,
-    max_driver_edges: int = 1_000_000,
 ) -> DataFrame:
     """DataFrame ``(cycle array<BIGINT>)`` — the simple cycles C whose
     induced (di)graph has exactly ``len(C)`` edges, i.e. no chords
@@ -744,9 +727,9 @@ def chordless_cycles(
     explode membership, equi-join the arc table on both endpoints, and
     keep cycles whose induced-arc count equals their length. Never a
     per-cycle Python loop."""
-    cycles = simple_cycles(
-        g, length_bound, max_driver_edges=max_driver_edges
-    ).withColumn("cid", F.monotonically_increasing_id())
+    cycles = simple_cycles(g, length_bound).withColumn(
+        "cid", F.monotonically_increasing_id()
+    )
     loops_out = cycles.filter(F.size("cycle") == 1).select("cycle")
     multi = cycles.filter(F.size("cycle") > 1)
     member = multi.select("cid", F.explode("cycle").alias("node")).persist()
@@ -796,9 +779,7 @@ def chordless_cycles(
     return out
 
 
-def minimum_cycle_basis(
-    g: SparkGraph, weight=None, *, max_driver_edges: int = 1_000_000
-) -> DataFrame:
+def minimum_cycle_basis(g: SparkGraph, weight=None) -> DataFrame:
     """DataFrame ``(cycle array<BIGINT>)`` — a minimum-weight cycle basis
     (``cycles.py`` ``minimum_cycle_basis``; de Pina 1995 as in
     Horton/Amaldi): per connected component, maintain witness edge-sets
@@ -835,13 +816,13 @@ def minimum_cycle_basis(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    m = canon.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"minimum_cycle_basis' witness schedule is sequential; {m} "
-            f"edges > max_driver_edges={max_driver_edges}"
+    edges = [
+        (r["u"], r["v"], float(r["w"]))
+        for r in driver_rows(
+            canon, _DRIVER_ARCS,
+            "minimum_cycle_basis' witness schedule is sequential",
         )
-    edges = [(r["u"], r["v"], float(r["w"])) for r in canon.collect()]
+    ]
     adj: dict = {}
     for i, (u, v, w) in enumerate(edges):
         adj.setdefault(u, []).append((v, w, i))

@@ -29,9 +29,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 from linkgraph.exceptions import NetworkXError, NetworkXUnfeasible
 from linkgraph.iterutils import SuperstepCache, row_count
+
+# Arcs lexicographical_topological_sort's heap schedule collects, and the
+# parent-map rows dag_longest_path collects to walk its path.
+_DRIVER_ARCS = 5_000_000
+_DRIVER_NODES = 5_000_000
+# Arcs the exponential enumerations (all_topological_sorts, antichains)
+# collect.
+_ENUMERATION_ARCS = 1_000_000
 
 
 class GraphContainsCycle(NetworkXUnfeasible):
@@ -386,9 +394,7 @@ def tree_all_pairs_lowest_common_ancestor(
     return all_pairs_lowest_common_ancestor(g, pairs)
 
 
-def lexicographical_topological_sort(
-    g: SparkGraph, *, key=None, max_driver_edges: int = 5_000_000
-) -> "list[int]":
+def lexicographical_topological_sort(g: SparkGraph, *, key=None) -> "list[int]":
     """Topological order, smallest available node first
     (``networkx/algorithms/dag.py:219`` ``lexicographical_topological_sort``):
     the heap schedule is sequential by definition (each pop depends on all
@@ -400,7 +406,7 @@ def lexicographical_topological_sort(
     from linkgraph.algos.dfs import _driver_adjacency
 
     _require_directed(g, "lexicographical_topological_sort")
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_ARCS)
     key = key or (lambda x: x)
     indeg = {n: 0 for n in nodes}
     for u, vs in adj.items():
@@ -438,7 +444,6 @@ def dag_longest_path(
     default_weight: float = 1.0,
     *,
     weighted: "bool | None" = None,
-    max_driver_nodes: int = 5_000_000,
 ) -> "list[int]":
     """``dag.py:842`` — one longest path as a node list, with the
     reference's ``weight`` attribute-name contract. The DP is the
@@ -494,12 +499,10 @@ def dag_longest_path(
                 retire=dist,
             )
         n = seen["rows"]
-        if n > max_driver_nodes:
-            raise ValueError(
-                f"dag_longest_path extraction needs the {n}-row parent map on "
-                f"the driver > max_driver_nodes={max_driver_nodes}; use "
-                "dag_longest_path_length (fully distributed) instead"
-            )
+        check_driver_limit(
+            n, _DRIVER_NODES, "dag_longest_path extraction collects the parent map",
+            "Use dag_longest_path_length (fully distributed) instead.",
+        )
         rows = dist.collect()
     best = max(rows, key=lambda r: (r["dist"], -r["id"]))
     parent = {r["id"]: r["parent"] for r in rows}
@@ -509,26 +512,23 @@ def dag_longest_path(
     return list(reversed(path))
 
 
-def _collect_arcs(g: SparkGraph, max_driver_edges: int):
-    arcs = g.edges.select("src", "dst").distinct()
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"driver-gated enumeration: {m} arcs > "
-            f"max_driver_edges={max_driver_edges}"
-        )
-    succ: dict = {}
-    pred: dict = {}
-    for r in arcs.collect():
-        succ.setdefault(r["src"], set()).add(r["dst"])
-        pred.setdefault(r["dst"], set()).add(r["src"])
-    for v in (r["id"] for r in g.vertices.select("id").collect()):
-        succ.setdefault(v, set())
-        pred.setdefault(v, set())
+def _collect_arcs(g: SparkGraph):
+    """Successor and predecessor sets of every node, from the DFS family's
+    arc collection (at most ``_ENUMERATION_ARCS`` distinct arcs)."""
+    from linkgraph.algos.dfs import _driver_adjacency
+
+    adj, nodes = _driver_adjacency(
+        g, _ENUMERATION_ARCS, what="driver-gated enumeration", hint=""
+    )
+    succ = {v: set(adj.get(v, ())) for v in nodes}
+    pred: dict = {v: set() for v in nodes}
+    for u, vs in succ.items():
+        for v in vs:
+            pred[v].add(u)
     return succ, pred
 
 
-def all_topological_sorts(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
+def all_topological_sorts(g: SparkGraph):
     """Generator over EVERY linear extension of the DAG
     (``dag.py`` ``all_topological_sorts``; Knuth & Szwarcfiter 1974).
     Output is factorial in the worst case — enumeration itself is the
@@ -539,7 +539,7 @@ def all_topological_sorts(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
         raise NetworkXError(
             "Topological sort not defined on undirected graphs."
         )
-    succ, pred = _collect_arcs(g, max_driver_edges)
+    succ, pred = _collect_arcs(g)
 
     def gen():
         count = {v: len(pred[v]) for v in succ}
@@ -576,7 +576,7 @@ def all_topological_sorts(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
     return gen()
 
 
-def antichains(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
+def antichains(g: SparkGraph):
     """Generator over every antichain of the DAG (``dag.py``
     ``antichains``): node sets with no two comparable elements, starting
     with the empty antichain. The enumeration is exponential by
@@ -585,7 +585,7 @@ def antichains(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
     the reverse topological order (ties ascending id)."""
     if not g.directed:
         raise NetworkXError("antichains: directed acyclic input required")
-    succ, pred = _collect_arcs(g, max_driver_edges)
+    succ, pred = _collect_arcs(g)
 
     # local topological order (Kahn, min-id ties) + reach closure
     count = {v: len(pred[v]) for v in succ}

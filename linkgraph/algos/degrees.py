@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from typing import Optional
 
 from linkgraph.graph import SparkGraph
+from linkgraph.iterutils import local_checkpoint
 
 
 def _weight_col(weighted: bool, weight: Optional[str]) -> Optional[str]:
@@ -165,7 +166,7 @@ def laplacian_centrality(
             ).alias("laplacian_centrality"),
         )
     )
-    out = out.localCheckpoint(eager=True)
+    out = local_checkpoint(out)
     strength.unpersist()
     return out
 

@@ -25,7 +25,7 @@ from typing import Iterable, Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = [
     "dfs_edges",
@@ -35,33 +35,37 @@ __all__ = [
     "dfs_labeled_edges",
 ]
 
+# Arcs the driver walk collects.
+_DRIVER_EDGES = 5_000_000
+
 _SCHEMA_EDGES = "src long, dst long, order long"
 _SCHEMA_NODES = "id long, pos long"
 _SCHEMA_LABELED = "src long, dst long, label string, order long"
 
 
 def _driver_adjacency(
-    g: SparkGraph, max_driver_edges: int
+    g: SparkGraph,
+    limit: int,
+    *,
+    loops: bool = True,
+    what: str = "DFS visit order is sequential; the driver walk collects the arc list",
+    hint: str = (
+        "For order-free reachability at scale use bfs_edges/descendants "
+        "(distributed)."
+    ),
 ) -> "tuple[dict[int, list[int]], list[int]]":
-    """Collect the (deduplicated) arc list onto the driver under a size
-    guard and return ``{node: ascending neighbor ids}`` plus the ascending
-    node list. Parallel-edge multiplicity cannot change any DFS output, so
-    arcs are distinct()'d before the guard count."""
-    arcs = (
-        (g.edges if g.directed else g.symmetric_edges())
-        .select("src", "dst")
-        .distinct()
-    )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"DFS visit order is sequential by definition; the driver walk "
-            f"collects the edge list, but {m} arcs > max_driver_edges="
-            f"{max_driver_edges}. For order-free reachability at scale use "
-            "bfs_edges/descendants (distributed)."
-        )
+    """Collect the distinct arc list (both directions of an undirected
+    graph; self-loops dropped unless ``loops``) onto the driver, at most
+    ``limit`` arcs (:func:`linkgraph.graph.driver_rows`), and return
+    ``{node: ascending neighbor ids}`` plus the ascending node list.
+    Parallel-edge multiplicity cannot change any output of its users, so
+    arcs are distinct()'d before the count."""
+    arcs = g.edges if g.directed else g.symmetric_edges()
+    if not loops:
+        arcs = arcs.filter(F.col("src") != F.col("dst"))
+    arcs = arcs.select("src", "dst").distinct()
     adj: dict[int, list[int]] = {}
-    for r in arcs.collect():
+    for r in driver_rows(arcs, limit, what, hint):
         adj.setdefault(r["src"], []).append(r["dst"])
     for nbrs in adj.values():
         nbrs.sort()
@@ -119,14 +123,12 @@ def dfs_labeled_edges(
     g: SparkGraph,
     source=None,
     depth_limit: Optional[int] = None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(src, dst, label, order): the full DFS event stream
     (``depth_first_search.py:343`` semantics; roots appear as
     ``(r, r, 'forward')`` / ``(r, r, 'reverse')`` self-events). ``order``
     is the 1-based event position."""
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     events = [
         (u, v, lab, i + 1)
         for i, (u, v, lab) in enumerate(
@@ -140,12 +142,10 @@ def dfs_edges(
     g: SparkGraph,
     source=None,
     depth_limit: Optional[int] = None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(src, dst, order): DFS tree edges in visit order
     (``depth_first_search.py:19``). ``order`` is the 1-based yield position."""
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     rows = []
     for u, v, lab in _dfs_events(adj, _roots(g, source, nodes), depth_limit):
         if lab == "forward" and u != v:
@@ -157,13 +157,11 @@ def dfs_tree(
     g: SparkGraph,
     source=None,
     depth_limit: Optional[int] = None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> SparkGraph:
     """Directed DFS tree (forest when ``source=None``) over the visited
     nodes (``depth_first_search.py:122``) — unreached nodes are excluded,
     visited-but-unexpanded depth-limit leaves included, like the reference."""
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     rows, seen = [], []
     for u, v, lab in _dfs_events(adj, _roots(g, source, nodes), depth_limit):
         if lab == "forward":
@@ -178,8 +176,8 @@ def dfs_tree(
     return SparkGraph(edges, vertices=verts, directed=True, coalesce_edges=False)
 
 
-def _order_nodes(g, source, depth_limit, max_driver_edges, want: str) -> DataFrame:
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+def _order_nodes(g, source, depth_limit, want: str) -> DataFrame:
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     rows = []
     for u, v, lab in _dfs_events(adj, _roots(g, source, nodes), depth_limit):
         if lab == want:
@@ -191,32 +189,26 @@ def dfs_preorder_nodes(
     g: SparkGraph,
     source=None,
     depth_limit: Optional[int] = None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(id, pos): nodes in DFS discovery order, 1-based
     (``depth_first_search.py:268``)."""
-    return _order_nodes(g, source, depth_limit, max_driver_edges, "forward")
+    return _order_nodes(g, source, depth_limit, "forward")
 
 
 def dfs_postorder_nodes(
     g: SparkGraph,
     source=None,
     depth_limit: Optional[int] = None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(id, pos): nodes in DFS finish order, 1-based
     (``depth_first_search.py:203``). Depth-limit leaves never finish
     (``reverse-depth_limit``), so — like the reference — they are absent."""
-    return _order_nodes(g, source, depth_limit, max_driver_edges, "reverse")
+    return _order_nodes(g, source, depth_limit, "reverse")
 
 
 def edge_dfs(
     g: SparkGraph,
     source=None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> "list[tuple[int, int]]":
     """Every EDGE in depth-first order
     (``networkx/algorithms/traversal/edgedfs.py:12`` ``edge_dfs``,
@@ -224,7 +216,7 @@ def edge_dfs(
     once, including back/cross edges; undirected edges are reported in
     traversal orientation. Driver-gated like the node DFS family
     (sequential by definition)."""
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     roots = _roots(g, source, nodes)
     seen_edges: set = set()
     out = []
@@ -259,14 +251,12 @@ def edge_dfs(
 def edge_bfs(
     g: SparkGraph,
     source=None,
-    *,
-    max_driver_edges: int = 5_000_000,
 ) -> "list[tuple[int, int]]":
     """Every edge in breadth-first order (``traversal/edgebfs.py:12``
     ``edge_bfs``): edges grouped by the BFS level of their tail. The LEVEL
     structure is the distributed BFS; only the within-level emission order
     is driver work."""
-    adj, nodes = _driver_adjacency(g, max_driver_edges)
+    adj, nodes = _driver_adjacency(g, _DRIVER_EDGES)
     roots = _roots(g, source, nodes)
     from collections import deque
 
@@ -292,24 +282,20 @@ def edge_bfs(
     return out
 
 
-def dfs_predecessors(g: SparkGraph, source=None, depth_limit=None, *,
-                     max_driver_edges: int = 5_000_000) -> DataFrame:
+def dfs_predecessors(g: SparkGraph, source=None, depth_limit=None) -> DataFrame:
     """(id, pred) — each visited node's DFS-tree parent
     (``depth_first_search.py`` ``dfs_predecessors``; root rows absent,
     like the reference's dict)."""
-    t = dfs_tree(g, source=source, depth_limit=depth_limit,
-                 max_driver_edges=max_driver_edges)
+    t = dfs_tree(g, source=source, depth_limit=depth_limit)
     return t.edges.select(
         F.col("dst").alias("id"), F.col("src").alias("pred")
     )
 
 
-def dfs_successors(g: SparkGraph, source=None, depth_limit=None, *,
-                   max_driver_edges: int = 5_000_000) -> DataFrame:
+def dfs_successors(g: SparkGraph, source=None, depth_limit=None) -> DataFrame:
     """(id, successors array<long>) — DFS-tree children per expanded node
     (``depth_first_search.py`` ``dfs_successors``)."""
-    t = dfs_tree(g, source=source, depth_limit=depth_limit,
-                 max_driver_edges=max_driver_edges)
+    t = dfs_tree(g, source=source, depth_limit=depth_limit)
     return (
         t.edges.groupBy(F.col("src").alias("id"))
         .agg(F.sort_array(F.collect_list("dst")).alias("successors"))

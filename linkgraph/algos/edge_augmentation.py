@@ -23,7 +23,7 @@ import random as _random
 from collections import defaultdict, deque
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = [
     "k_edge_augmentation",
@@ -39,11 +39,12 @@ class _NXUnfeasible(NetworkXError):
 
 
 def _collect(g: SparkGraph):
-    if g.edges.count() > _MAX_DRIVER_EDGES:
-        raise NetworkXError("k_edge_augmentation exceeds driver guard")
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _MAX_DRIVER_EDGES, "k_edge_augmentation"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
-    for r in g.edges.select("src", "dst").collect():
+    for r in rows:
         u, v = r["src"], r["dst"]
         if u != v:
             adj[u].add(v)

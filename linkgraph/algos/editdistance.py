@@ -22,7 +22,7 @@ from __future__ import annotations
 import time
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = [
     "graph_edit_distance",
@@ -35,11 +35,12 @@ _MAX_DRIVER_EDGES = 1_000_000
 
 
 def _collect(g: SparkGraph):
-    if g.edges.count() > _MAX_DRIVER_EDGES:
-        raise NetworkXError("graph edit distance: graph exceeds driver guard")
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _MAX_DRIVER_EDGES, "graph edit distance"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
-    for r in g.edges.select("src", "dst").collect():
+    for r in rows:
         u, v = r["src"], r["dst"]
         adj[u].add(v)
         if not g.directed:

@@ -26,7 +26,7 @@ augmenting paths):
   fraction of a 100 TB graph; the classic current-arc Dinitz inner loop
   is pure in-memory work). All of the phase's augmentations land on the
   residual in ONE batched broadcast-join update.
-- If the pruned level DAG ever exceeds ``max_driver_edges``, the phase
+- If the pruned level DAG ever exceeds ``_DRIVER_EDGES`` arcs, the phase
   falls back to per-path augmentation (one parent-BFS walk per path) —
   correct at any scale, slower, and warned about.
 
@@ -39,7 +39,7 @@ from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit, driver_rows
 from linkgraph.iterutils import SuperstepCache, row_count
 
 _INF = float("inf")
@@ -47,8 +47,11 @@ _INF = float("inf")
 
 from linkgraph.exceptions import NetworkXUnbounded  # noqa: E402 (shared hierarchy)
 
-# the most edges a driver-gated kernel (the Stoer–Wagner phases) collects
+# the most edges a driver-gated kernel (the Stoer–Wagner phases, a Dinitz
+# phase's level DAG) collects
 _DRIVER_EDGES = 5_000_000
+# the most edges gomory_hu_tree runs its local Dinic over
+_GOMORY_HU_LOCAL_EDGES = 500_000
 
 
 def _residual(g: SparkGraph, capacity) -> DataFrame:
@@ -252,7 +255,6 @@ def _max_flow(
     t: int,
     capacity: str,
     max_augmentations: int,
-    max_driver_edges: int = 5_000_000,
 ):
     """Shared kernel: returns (value, flow DF, final residual DF)."""
     spark = g.spark
@@ -270,12 +272,12 @@ def _max_flow(
             if found is None:
                 break
             larcs, n_arcs = found
-            if n_arcs > max_driver_edges:
+            if n_arcs > _DRIVER_EDGES:
                 import warnings
 
                 warnings.warn(
-                    f"maximum_flow: pruned level DAG has {n_arcs} arcs > "
-                    f"max_driver_edges={max_driver_edges}; falling back to "
+                    f"maximum_flow: pruned level DAG has {n_arcs} arcs > the "
+                    f"driver limit of {_DRIVER_EDGES}; falling back to "
                     "per-path augmentation for this phase (slower)",
                     stacklevel=2,
                 )
@@ -584,7 +586,6 @@ def stoer_wagner(
     g: SparkGraph,
     *,
     weight=None,
-    max_driver_edges: int = _DRIVER_EDGES,
     _unit: bool = False,
 ) -> Tuple[float, Tuple[list, list]]:
     """(cut_value, (partition, rest)): the global minimum weighted edge
@@ -620,16 +621,10 @@ def stoer_wagner(
     arcs = base.select("src", "dst", wcol.alias("w")).filter(
         F.col("src") != F.col("dst")
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        from linkgraph.exceptions import NetworkXError
-
-        raise NetworkXError(
-            f"stoer_wagner phases are sequential by definition; {m} edges "
-            f"> max_driver_edges={max_driver_edges}."
-        )
     adj: dict[int, dict[int, float]] = {}
-    for r in arcs.collect():
+    for r in driver_rows(
+        arcs, _DRIVER_EDGES, "stoer_wagner phases are sequential by definition"
+    ):
         u, v, w = int(r["src"]), int(r["dst"]), float(r["w"])
         if w < 0:
             raise ValueError("graph has a negative-weighted edge.")
@@ -1029,7 +1024,6 @@ def gomory_hu_tree(
     capacity: str = "capacity",
     *,
     max_nodes: int = 2000,
-    max_driver_edges: int = 500_000,
 ) -> DataFrame:
     """Gomory–Hu cut tree as a DataFrame ``(u, v, weight)``
     (``networkx/algorithms/flow/gomoryhu.py:17`` ``gomory_hu_tree``,
@@ -1040,7 +1034,7 @@ def gomory_hu_tree(
 
     The per-node loop is inherently sequential (each cut depends on the
     re-parented tree), so the node count is guarded by ``max_nodes``.
-    Graphs whose edge table fits under ``max_driver_edges`` run the whole
+    Graphs of at most 500k edge rows run the whole
     loop driver-side with a local Dinic — n−1 DEPENDENT distributed flow
     runs cost thousands of tiny supersteps (measured ~6 min for the
     25-node contract ring) versus milliseconds locally, the same guard
@@ -1067,9 +1061,9 @@ def gomory_hu_tree(
     parent = {v: root for v in ids if v != root}
     weight = {}
 
-    m = g.edges.limit(max_driver_edges + 1).count()
+    m = g.edges.limit(_GOMORY_HU_LOCAL_EDGES + 1).count()
     local_adj = None
-    if m <= max_driver_edges:
+    if m <= _GOMORY_HU_LOCAL_EDGES:
         cap_rows = (
             g.edges.select(
                 "src", "dst", F.col(capacity).cast("double").alias("c")
@@ -1255,13 +1249,11 @@ def _component_batches(g: SparkGraph):
         ranges = []  # [lo, hi, edges] of each batch
         for r in sizes:
             c, m = int(r["component"]), int(r["m"])
-            if m > _DRIVER_EDGES:
-                from linkgraph.exceptions import NetworkXError
-
-                raise NetworkXError(
-                    "k_edge_subgraphs cuts with the sequential Stoer-Wagner "
-                    f"kernel; component {c} has {m} edges > {_DRIVER_EDGES}."
-                )
+            check_driver_limit(
+                m, _DRIVER_EDGES,
+                "k_edge_subgraphs cuts with the sequential Stoer-Wagner kernel; "
+                f"component {c}",
+            )
             if ranges and ranges[-1][2] + m <= _DRIVER_EDGES:
                 ranges[-1][1:] = [c, ranges[-1][2] + m]
             else:

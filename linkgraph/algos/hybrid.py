@@ -15,8 +15,7 @@ from __future__ import annotations
 
 from collections import deque
 
-from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = ["is_kl_connected", "kl_connected_subgraph"]
 
@@ -24,11 +23,10 @@ _MAX_DRIVER_EDGES = 1_000_000
 
 
 def _collect_adj(g: SparkGraph):
-    if g.edges.count() > _MAX_DRIVER_EDGES:
-        raise NetworkXError("kl_connected exceeds driver guard")
+    rows = driver_rows(g.edges.select("src", "dst"), _MAX_DRIVER_EDGES, "kl_connected")
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
-    for r in g.edges.select("src", "dst").collect():
+    for r in rows:
         u, v = r["src"], r["dst"]
         adj[u].add(v)
         adj[v].add(u)

@@ -38,8 +38,12 @@ from typing import Iterable, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.exceptions import NetworkXError
+
+# Rows an exact search collects onto the driver: arcs (both directions of
+# an undirected graph), or edges for tree isomorphism.
+_DRIVER_ARCS = 1_000_000
 
 
 def _pattern_norm(pattern_edges: Iterable[Tuple], directed: bool):
@@ -300,20 +304,17 @@ def could_be_isomorphic(g1: SparkGraph, g2: SparkGraph) -> bool:
     return fingerprint(g1) == fingerprint(g2)
 
 
-def _collect_adj_pair(g: SparkGraph, max_driver_edges: int):
+def _collect_adj_pair(g: SparkGraph):
     arcs = (g.edges if g.directed else g.symmetric_edges()).select("src", "dst")
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"exact isomorphism is a sequential backtracking search; the "
-            f"driver kernel collects the edge list, but {m} arcs > "
-            f"max_driver_edges={max_driver_edges}. Use "
-            "weisfeiler_lehman_graph_hash for a distributed near-certain "
-            "equality probe."
-        )
     out: dict = {}
     inn: dict = {}
-    for r in arcs.collect():
+    for r in driver_rows(
+        arcs, _DRIVER_ARCS,
+        "exact isomorphism is a sequential backtracking search; the driver "
+        "kernel collects the edge list",
+        "Use weisfeiler_lehman_graph_hash for a distributed near-certain "
+        "equality probe.",
+    ):
         out.setdefault(r["src"], set()).add(r["dst"])
         inn.setdefault(r["dst"], set()).add(r["src"])
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
@@ -353,8 +354,6 @@ def _color_refine(nodes, out, inn, directed, rounds=None):
 def is_isomorphic(
     g1: SparkGraph,
     g2: SparkGraph,
-    *,
-    max_driver_edges: int = 1_000_000,
 ) -> bool:
     """Exact graph isomorphism — ``isomorphvf2.py`` ``GraphMatcher
     .is_isomorphic`` semantics for attribute-free graphs. Backtracking
@@ -364,8 +363,8 @@ def is_isomorphic(
     color, then highest degree)."""
     if g1.directed != g2.directed:
         return False
-    n1, o1, i1 = _collect_adj_pair(g1, max_driver_edges)
-    n2, o2, i2 = _collect_adj_pair(g2, max_driver_edges)
+    n1, o1, i1 = _collect_adj_pair(g1)
+    n2, o2, i2 = _collect_adj_pair(g2)
     if len(n1) != len(n2):
         return False
     m1 = sum(len(s) for s in o1.values())
@@ -509,7 +508,6 @@ def _collect_attrs(g: SparkGraph):
 def _iso_mappings(
     g1: SparkGraph,
     g2: SparkGraph,
-    max_driver_edges: int,
     node_match=None,
     edge_match=None,
 ):
@@ -524,8 +522,8 @@ def _iso_mappings(
     either way)."""
     if g1.directed != g2.directed:
         return
-    n1, o1, i1 = _collect_adj_pair(g1, max_driver_edges)
-    n2, o2, i2 = _collect_adj_pair(g2, max_driver_edges)
+    n1, o1, i1 = _collect_adj_pair(g1)
+    n2, o2, i2 = _collect_adj_pair(g2)
     if len(n1) != len(n2):
         return
     if sum(len(s) for s in o1.values()) != sum(len(s) for s in o2.values()):
@@ -599,22 +597,18 @@ def _iso_mappings(
     yield from backtrack(0)
 
 
-def vf2pp_isomorphism(
-    g1: SparkGraph, g2: SparkGraph, *, max_driver_edges: int = 1_000_000
-):
+def vf2pp_isomorphism(g1: SparkGraph, g2: SparkGraph):
     """``vf2pp.py`` ``vf2pp_isomorphism`` — one isomorphism mapping as a
     dict (None when the graphs are not isomorphic)."""
-    for m in _iso_mappings(g1, g2, max_driver_edges):
+    for m in _iso_mappings(g1, g2):
         return m
     return None
 
 
-def vf2pp_all_isomorphisms(
-    g1: SparkGraph, g2: SparkGraph, *, max_driver_edges: int = 1_000_000
-):
+def vf2pp_all_isomorphisms(g1: SparkGraph, g2: SparkGraph):
     """``vf2pp.py`` ``vf2pp_all_isomorphisms`` — generator over every
     isomorphism mapping."""
-    yield from _iso_mappings(g1, g2, max_driver_edges)
+    yield from _iso_mappings(g1, g2)
 
 
 # ---------------------------------------------------------------------- #
@@ -649,7 +643,7 @@ class GraphMatcher:
 
     def is_isomorphic(self) -> bool:
         for m in _iso_mappings(
-            self.g1, self.g2, 1_000_000, self.node_match, self.edge_match
+            self.g1, self.g2, self.node_match, self.edge_match
         ):
             self.mapping = m
             return True
@@ -657,7 +651,7 @@ class GraphMatcher:
 
     def isomorphisms_iter(self):
         for m in _iso_mappings(
-            self.g1, self.g2, 1_000_000, self.node_match, self.edge_match
+            self.g1, self.g2, self.node_match, self.edge_match
         ):
             self.mapping = m
             yield m
@@ -809,20 +803,16 @@ def _ahu_code(adj, root, parent):
     return code[root]
 
 
-def rooted_tree_isomorphism(g1: SparkGraph, root1, g2: SparkGraph, root2,
-                            *, max_driver_edges: int = 1_000_000):
+def rooted_tree_isomorphism(g1: SparkGraph, root1, g2: SparkGraph, root2):
     """``isomorphism/tree_isomorphism.py`` ``rooted_tree_isomorphism``
     (Aho-Hopcroft-Ullman) — the node correspondence list when the rooted
     trees are isomorphic, else []. Canonical-code recursion, driver-side."""
 
     def collect(g):
-        if g.edges.count() > max_driver_edges:
-            raise NetworkXError("tree isomorphism exceeds driver guard")
         adj = {}
-        base = g.symmetric_edges() if not g.directed else g.edges.select(
-            "src", "dst"
-        )
-        for r in base.select("src", "dst").collect():
+        for r in driver_rows(
+            g.edges.select("src", "dst"), _DRIVER_ARCS, "tree isomorphism"
+        ):
             adj.setdefault(r["src"], set()).add(r["dst"])
             adj.setdefault(r["dst"], set()).add(r["src"])
         for r in g.vertices.select("id").collect():
@@ -852,8 +842,7 @@ def rooted_tree_isomorphism(g1: SparkGraph, root1, g2: SparkGraph, root2,
     return out
 
 
-def tree_isomorphism(g1: SparkGraph, g2: SparkGraph,
-                     *, max_driver_edges: int = 1_000_000):
+def tree_isomorphism(g1: SparkGraph, g2: SparkGraph):
     """``tree_isomorphism.py`` ``tree_isomorphism`` — free-tree variant:
     root both at their centers and try the ≤2 center pairings."""
     from linkgraph.algos.tree import is_tree
@@ -870,9 +859,7 @@ def tree_isomorphism(g1: SparkGraph, g2: SparkGraph,
     if len(c1) != len(c2):
         return []
     for r2 in c2:
-        m = rooted_tree_isomorphism(
-            g1, c1[0], g2, r2, max_driver_edges=max_driver_edges
-        )
+        m = rooted_tree_isomorphism(g1, c1[0], g2, r2)
         if m:
             return m
     return []
@@ -907,8 +894,8 @@ class ISMAGS:
     # -- collected driver structures ----------------------------------- #
     def _sides(self):
         if not hasattr(self, "_side_data"):
-            gn, go, gi = _collect_adj_pair(self.graph, 1_000_000)
-            sn, so, si = _collect_adj_pair(self.subgraph, 1_000_000)
+            gn, go, gi = _collect_adj_pair(self.graph)
+            sn, so, si = _collect_adj_pair(self.subgraph)
             ga = sa = gea = sea = None
             if self.node_match is not None or self.edge_match is not None:
                 ga, gea = _collect_attrs(self.graph)
@@ -923,7 +910,6 @@ class ISMAGS:
                 _iso_mappings(
                     self.subgraph,
                     self.subgraph,
-                    1_000_000,
                     self.node_match,
                     self.edge_match,
                 )

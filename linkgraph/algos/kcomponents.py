@@ -33,22 +33,20 @@ __all__ = [
 ]
 
 
-def _collect_adj(g: SparkGraph, max_driver_edges: int, *, directed=False):
-    arcs = (g.edges if directed else g.symmetric_edges()).filter(
-        F.col("src") != F.col("dst")
-    ).select("src", "dst").distinct()
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"driver-gated connectivity search: {m} arcs > "
-            f"max_driver_edges={max_driver_edges}"
-        )
-    adj: dict = {}
-    for r in arcs.collect():
-        adj.setdefault(r["src"], set()).add(r["dst"])
-    for v in (r["id"] for r in g.vertices.select("id").collect()):
-        adj.setdefault(v, set())
-    return adj
+# Distinct non-loop arcs the connectivity searches collect.
+_DRIVER_ARCS = 1_000_000
+
+
+def _collect_adj(g: SparkGraph):
+    """Every node's neighbor set (successors when directed), self-loops
+    dropped, from the DFS family's arc collection."""
+    from linkgraph.algos.dfs import _driver_adjacency
+
+    adj, nodes = _driver_adjacency(
+        g, _DRIVER_ARCS, loops=False,
+        what="driver-gated connectivity search", hint="",
+    )
+    return {v: set(adj.get(v, ())) for v in nodes}
 
 
 def _kappa_st(adj: dict, s, t, *, directed=False, cap=None) -> int:
@@ -141,7 +139,6 @@ def _connected(adj: dict, removed: frozenset) -> bool:
 
 def all_node_cuts(
     g: SparkGraph, k: int = None, flow_func=None, *, max_combinations: int = 2_000_000,
-    max_driver_edges: int = 1_000_000,
 ) -> "list[set]":
     """Every minimum-size separating node set of an undirected connected
     graph (``kcutsets.py`` ``all_node_cuts``; Kanevsky's enumeration).
@@ -156,7 +153,7 @@ def all_node_cuts(
 
     if g.directed:
         raise NotImplementedForDirected("all_node_cuts: undirected only")
-    adj = _collect_adj(g, max_driver_edges)
+    adj = _collect_adj(g)
     n = len(adj)
     if n == 0:
         raise NetworkXError("Input graph is disconnected.")
@@ -239,7 +236,7 @@ def _generate_partition(adj: dict, cuts, k):
 
 
 def k_components(
-    g: SparkGraph, *, max_driver_edges: int = 1_000_000,
+    g: SparkGraph, *,
     max_combinations: int = 2_000_000,
 ) -> "dict[int, list[set]]":
     """Exact k-component structure (``kcomponents.py`` ``k_components``;
@@ -253,7 +250,7 @@ def k_components(
     driver-gated (see module docstring)."""
     if g.directed:
         raise NotImplementedForDirected("k_components: undirected only")
-    adj = _collect_adj(g, max_driver_edges)
+    adj = _collect_adj(g)
     from linkgraph.algos.biconnected import biconnected_components
 
     k_comps: dict = {}
@@ -334,8 +331,7 @@ def _all_cuts_local(adj: dict, k: int, max_combinations: int):
 
 
 def all_pairs_node_connectivity(
-    g: SparkGraph, nbunch=None, flow_func=None, *,
-    max_driver_edges: int = 1_000_000
+    g: SparkGraph, nbunch=None, flow_func=None
 ) -> DataFrame:
     """(u, v, connectivity): local node connectivity for every node pair
     (ordered for digraphs, unordered u < v otherwise) —
@@ -344,7 +340,7 @@ def all_pairs_node_connectivity(
     (the direct edge contributes one disjoint path). Driver-gated: the
     pair space is quadratic by definition."""
     directed = g.directed
-    adj = _collect_adj(g, max_driver_edges, directed=directed)
+    adj = _collect_adj(g)
     if nbunch is not None:
         ids = sorted(int(x) for x in nbunch)
     else:

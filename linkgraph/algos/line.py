@@ -23,7 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
+
+# Edges inverse_line_graph collects onto the driver.
+_DRIVER_EDGES = 1_000_000
 
 __all__ = ["line_graph_edges", "line_graph", "inverse_line_graph"]
 
@@ -77,7 +80,7 @@ def line_graph(g: SparkGraph) -> SparkGraph:
     )
 
 
-def inverse_line_graph(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
+def inverse_line_graph(g: SparkGraph):
     """``networkx/generators/line.py`` ``inverse_line_graph`` — the root
     graph H with ``line_graph(H) ≅ g`` (Roussopoulos 1973): pick a
     starting cell (edge or odd-triangle clique), grow the Krausz
@@ -102,11 +105,12 @@ def inverse_line_graph(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
         e = spark.createDataFrame([], "src long, dst long, weight double")
         v = spark.createDataFrame([(0,)], "id long")
         return SparkGraph(e, v, directed=False, coalesce_edges=False)
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("inverse_line_graph exceeds max_driver_edges")
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _DRIVER_EDGES, "inverse_line_graph"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     adj = {v: set() for v in nodes}
-    for r in g.edges.select("src", "dst").collect():
+    for r in rows:
         u, v = r["src"], r["dst"]
         if u == v:
             raise NetworkXError(

@@ -29,6 +29,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
+from linkgraph.iterutils import local_checkpoint
 
 
 def _require_undirected(g: SparkGraph, fn: str):
@@ -237,7 +238,7 @@ def dispersion(
         ).otherwise(val)
     else:
         val = F.col("total")
-    res = out.select("u", "v", val.alias("dispersion")).localCheckpoint(eager=True)
+    res = local_checkpoint(out.select("u", "v", val.alias("dispersion")))
     D.unpersist()
     cn.unpersist()
     cand.unpersist()

@@ -24,8 +24,8 @@ distributed superstep of joins + groupBy aggregations (Cordasco & Gargano
 (``label_propagation.py:236``).
 
 Scale notes: the greedy coloring itself is sequential in the reference; it
-runs driver-side here over the collected simple edge list (guarded by
-``max_driver_edges``). For partition-exact parity this is unavoidable — any
+runs driver-side here over the collected simple edge list (at most
+``_DRIVER_EDGES`` edges). For partition-exact parity this is unavoidable — any
 other proper coloring changes the update schedule and may change the
 partition. At true web scale one would swap in a distributed Jones-Plassmann
 coloring (same proper-coloring contract, different schedule) and accept
@@ -35,43 +35,24 @@ schedule-agnostic and unchanged.
 
 from __future__ import annotations
 
-from collections import defaultdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 from linkgraph.iterutils import SuperstepCache, loop_partitions
 from linkgraph.state import CheckpointStore
 from linkgraph.exceptions import NotImplementedForDirected
+
+# Simple edges the reference coloring collects onto the driver; "auto"
+# colors larger graphs in Spark instead.
+_DRIVER_EDGES = 5_000_000
 
 __all__ = [
     "label_propagation_communities",
     "communities_as_sets",
     "NotImplementedForDirected",
 ]
-
-
-def _greedy_color_largest_first(edges: list[tuple[int, int]], nodes: list[int]):
-    """Exact replication of ``nx.coloring.greedy_color(G)`` with the default
-    ``largest_first`` strategy (``greedy_coloring.py:266``, strategy at
-    ``:42``): nodes sorted by degree descending (stable: ties keep
-    enumeration order, here ascending id), each assigned the smallest color
-    unused by already-colored neighbors. Returns {node: color}."""
-    adj = defaultdict(set)
-    for u, v in edges:
-        if u != v:
-            adj[u].add(v)
-            adj[v].add(u)
-    order = sorted(nodes, key=lambda n: len(adj[n]), reverse=True)
-    colors: dict[int, int] = {}
-    for n in order:
-        used = {colors[nbr] for nbr in adj[n] if nbr in colors}
-        c = 0
-        while c in used:
-            c += 1
-        colors[n] = c
-    return colors
 
 
 def _jones_plassmann_coloring(
@@ -148,7 +129,6 @@ def label_propagation_communities(
     g: SparkGraph,
     *,
     max_sweeps: int = 100,
-    max_driver_edges: int = 5_000_000,
     checkpoint_store: Optional[CheckpointStore] = None,
     coloring: str = "auto",
 ) -> DataFrame:
@@ -157,11 +137,11 @@ def label_propagation_communities(
     reference enumerates nodes in ascending-id order.
 
     ``coloring="reference"`` replicates ``greedy_color`` on the driver for
-    exact partition parity (guarded by ``max_driver_edges``, raises above
-    it); ``coloring="distributed"`` uses Jones-Plassmann coloring entirely
+    exact partition parity (up to 5M simple edges, raises above it);
+    ``coloring="distributed"`` uses Jones-Plassmann coloring entirely
     in Spark — the scale path: same LPA update rule and termination, a
     valid (but schedule-different) partition. ``coloring="auto"`` (default)
-    uses the reference schedule up to ``max_driver_edges`` and falls back
+    uses the reference schedule up to that limit and falls back
     to the distributed one (with a warning) beyond it, so big graphs run
     instead of raising.
     """
@@ -189,12 +169,12 @@ def label_propagation_communities(
             )
 
             if coloring == "auto":
-                if m > max_driver_edges:
+                if m > _DRIVER_EDGES:
                     import warnings
 
                     warnings.warn(
-                        f"label_propagation_communities: {m} edges > "
-                        f"max_driver_edges={max_driver_edges}; using distributed "
+                        f"label_propagation_communities: {m} edges > the driver "
+                        f"limit of {_DRIVER_EDGES}; using distributed "
                         "Jones-Plassmann coloring (schedule differs from the "
                         "reference's greedy_color; the partition is LPA-valid but "
                         "not bit-identical)",
@@ -208,15 +188,19 @@ def label_propagation_communities(
                 color_df = loop.pin(_jones_plassmann_coloring(sym, vertices, loop))
                 n_colors = (color_df.agg(F.max("color")).first()[0] or 0) + 1
             else:
-                if m > max_driver_edges:
-                    raise ValueError(
-                        f"exact-parity LPA collects the edge list for greedy coloring; "
-                        f"{m} edges > max_driver_edges={max_driver_edges}; "
-                        "use coloring='distributed' for the scale path"
-                    )
-                edge_list = [(r["src"], r["dst"]) for r in simple.collect()]
+                check_driver_limit(
+                    m, _DRIVER_EDGES,
+                    "exact-parity LPA collects the edge list for greedy coloring",
+                    "Use coloring='distributed' for the scale path.",
+                )
+                from linkgraph.algos.coloring import (
+                    _greedy_color_largest_first, _undirected_adjacency,
+                )
+
                 node_list = sorted(r["id"] for r in vertices.collect())
-                cmap = _greedy_color_largest_first(edge_list, node_list)
+                cmap = _greedy_color_largest_first(
+                    _undirected_adjacency(node_list, simple.collect()), node_list
+                )
                 n_colors = (max(cmap.values()) + 1) if cmap else 0
                 color_df = loop.pin(
                     spark.createDataFrame(list(cmap.items()), ["id", "color"])

@@ -343,8 +343,12 @@ def _blossom_kernel(n, edges, maxcardinality):
     return mate
 
 
-def _collect_edges(g: SparkGraph, weight, max_driver_edges):
-    from linkgraph.graph import resolve_weight_column
+# Simple edges the blossom kernel collects onto the driver.
+_DRIVER_EDGES = 5_000_000
+
+
+def _collect_edges(g: SparkGraph, weight):
+    from linkgraph.graph import driver_rows, resolve_weight_column
 
     und = g.edges if not g.directed else g.undirected_view().edges
     wexpr = resolve_weight_column(und, weight)
@@ -358,17 +362,14 @@ def _collect_edges(g: SparkGraph, weight, max_driver_edges):
         .groupBy("u", "v")
         .agg(F.max("w").alias("w"))
     )
-    cnt = simple.count()
-    if cnt > max_driver_edges:
-        raise ValueError(
-            f"blossom matching is a sequential primal-dual stage loop; the "
-            f"driver kernel collects the edge list, but {cnt} edges > "
-            f"max_driver_edges={max_driver_edges}. Use maximal_matching for "
-            "the distributed (unweighted, 1/2-approximate) path."
-        )
-    return sorted(
-        ((r["u"], r["v"], float(r["w"])) for r in simple.collect())
+    rows = driver_rows(
+        simple, _DRIVER_EDGES,
+        "blossom matching is a sequential primal-dual stage loop; the driver "
+        "kernel collects the edge list",
+        "Use maximal_matching for the distributed (unweighted, "
+        "1/2-approximate) path.",
     )
+    return sorted((r["u"], r["v"], float(r["w"])) for r in rows)
 
 
 def max_weight_matching(
@@ -376,7 +377,6 @@ def max_weight_matching(
     *,
     maxcardinality: bool = False,
     weight=None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """Maximum-weight matching as ``(src, dst)`` rows (``src < dst``),
     ``matching.py:247`` semantics: maximum total weight, or — with
@@ -384,7 +384,7 @@ def max_weight_matching(
     matchings. ``weight`` follows :func:`resolve_weight_column`."""
     ids = sorted(r["id"] for r in g.vertices.select("id").collect())
     idx = {v: i for i, v in enumerate(ids)}
-    raw = _collect_edges(g, weight, max_driver_edges)
+    raw = _collect_edges(g, weight)
     edges = [(idx[u], idx[v], w) for u, v, w in raw]
     mate = _blossom_kernel(len(ids), edges, maxcardinality)
     rows = []
@@ -398,7 +398,6 @@ def min_weight_matching(
     g: SparkGraph,
     *,
     weight=None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """Minimum-weight full-cardinality matching (``matching.py:186``):
     runs :func:`max_weight_matching` with ``maxcardinality=True`` on
@@ -423,6 +422,4 @@ def min_weight_matching(
         directed=False,
         coalesce_edges=False,
     )
-    return max_weight_matching(
-        g2, maxcardinality=True, max_driver_edges=max_driver_edges
-    )
+    return max_weight_matching(g2, maxcardinality=True)

@@ -47,10 +47,14 @@ from typing import Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph, resolve_weight_column
+from linkgraph.graph import SparkGraph, check_driver_limit, resolve_weight_column
 from linkgraph.iterutils import SuperstepCache, row_count
 
 _INF = float("inf")
+
+
+# Arcs of an admissible phase subgraph the driver max-flow collects.
+_DRIVER_EDGES = 5_000_000
 
 
 from linkgraph.exceptions import NetworkXUnfeasible  # noqa: E402 (shared hierarchy)
@@ -143,7 +147,6 @@ def _min_cost_flow(
     weight: str = "weight",
     *,
     max_phases: int = 10_000,
-    max_driver_edges: int = 5_000_000,
 ):
     """Shared kernel. Returns (cost, flow DataFrame (u, v, flow),
     all_integral: bool)."""
@@ -324,11 +327,9 @@ def _min_cost_flow(
             cache.release([state, adm, keep, back, prev])
             adm = pruned
             n_arcs = seen["rows"]
-            if n_arcs > max_driver_edges:
-                raise RuntimeError(
-                    f"admissible phase subgraph has {n_arcs} arcs > "
-                    f"max_driver_edges={max_driver_edges}"
-                )
+            check_driver_limit(
+                n_arcs, _DRIVER_EDGES, "the admissible phase subgraph"
+            )
             value, phase_flow = _driver_max_flow(adm.collect(), S, T)
             cache.release(adm)
             if value <= 1e-12:

@@ -178,8 +178,12 @@ class EdgePartition:
     EXCLUDED = 2
 
 
-def _collect_weighted(g, weight, max_driver_edges):
-    from linkgraph.graph import resolve_weight_column
+# Edges the driver-gated spanning-tree searches collect.
+_DRIVER_EDGES = 1_000_000
+
+
+def _collect_weighted(g, weight):
+    from linkgraph.graph import driver_rows, resolve_weight_column
 
     base = g.edges.filter(F.col("src") != F.col("dst"))
     cols = [
@@ -188,13 +192,10 @@ def _collect_weighted(g, weight, max_driver_edges):
         resolve_weight_column(base, weight).alias("w"),
     ]
     arcs = base.select(*cols).groupBy("u", "v").agg(F.min("w").alias("w"))
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"driver-gated spanning-tree search: {m} edges > "
-            f"max_driver_edges={max_driver_edges}"
-        )
-    edges = [(r["u"], r["v"], float(r["w"])) for r in arcs.collect()]
+    edges = [
+        (r["u"], r["v"], float(r["w"]))
+        for r in driver_rows(arcs, _DRIVER_EDGES, "driver-gated spanning-tree search")
+    ]
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     return edges, nodes
 
@@ -245,8 +246,6 @@ def partition_spanning_tree(
     minimum: bool = True,
     weight="weight",
     partition: str = "partition",
-    *,
-    max_driver_edges: int = 1_000_000,
 ):
     """``tree/mst.py`` ``partition_spanning_tree`` — the min/max spanning
     tree honoring per-edge INCLUDED/EXCLUDED constraints carried in the
@@ -256,7 +255,7 @@ def partition_spanning_tree(
     from linkgraph.exceptions import NetworkXException
     from linkgraph.graph import SparkGraph
 
-    edges, nodes = _collect_weighted(g, weight, max_driver_edges)
+    edges, nodes = _collect_weighted(g, weight)
     part: dict = {}
     if partition in g.edges.columns:
         rows = g.edges.select(
@@ -287,13 +286,10 @@ class SpanningTreeIterator:
     Sörensen partition scheme over a driver-gated Kruskal (each popped
     partition splits along its tree's open edges). Yields SparkGraphs."""
 
-    def __init__(self, g, weight="weight", minimum: bool = True,
-                 *, max_driver_edges: int = 1_000_000):
+    def __init__(self, g, weight="weight", minimum: bool = True):
         self.g = g
         self.minimum = minimum
-        self.edges, self.nodes = _collect_weighted(
-            g, weight, max_driver_edges
-        )
+        self.edges, self.nodes = _collect_weighted(g, weight)
 
     def __iter__(self):
         import heapq
@@ -359,7 +355,6 @@ def number_of_weighted_spanning_trees(edges, nodes, multiplicative=True):
 
 def random_spanning_tree(
     g, weight=None, *, multiplicative: bool = True, seed: int = 42,
-    max_driver_edges: int = 1_000_000,
 ):
     """``tree/mst.py`` ``random_spanning_tree`` — sample a spanning tree
     with probability proportional to the product (``multiplicative``) or
@@ -375,10 +370,7 @@ def random_spanning_tree(
     from linkgraph.graph import SparkGraph
 
     rng = _random.Random(seed)
-    if weight is None:
-        edges, nodes = _collect_weighted(g, "1.0", max_driver_edges)
-    else:
-        edges, nodes = _collect_weighted(g, weight, max_driver_edges)
+    edges, nodes = _collect_weighted(g, "1.0" if weight is None else weight)
     if multiplicative:
         chosen = []
         cur_edges = list(edges)

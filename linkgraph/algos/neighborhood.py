@@ -45,7 +45,7 @@ from linkgraph.graph import SparkGraph
 from linkgraph.algos.degrees import degrees
 from linkgraph.algos.triangles import triangles, _simple_edges
 from linkgraph.algos.distance import all_pairs_shortest_path_lengths
-from linkgraph.iterutils import SuperstepCache, row_count
+from linkgraph.iterutils import SuperstepCache, local_checkpoint, row_count
 
 __all__ = [
     "average_neighbor_degree",
@@ -522,7 +522,7 @@ def constraint(g: SparkGraph, weight=None) -> DataFrame:
         .join(agg, "id", "left")
         .select("id", F.col("constraint").cast("double").alias("constraint"))
     )
-    out = out.localCheckpoint()
+    out = local_checkpoint(out)
     p.unpersist()
     return out
 

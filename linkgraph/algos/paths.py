@@ -24,7 +24,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph, resolve_weight_column
+from linkgraph.graph import SparkGraph, driver_rows, resolve_weight_column
+
+
+# Rows the driver walks collect: shortest_path's path tree, and the
+# reachable arcs find_negative_cycle relaxes.
+_DRIVER_NODES = 5_000_000
+_DRIVER_EDGES = 5_000_000
 
 __all__ = [
     "shortest_path_tree",
@@ -135,19 +141,16 @@ def shortest_path(
     target,
     *,
     weight=None,
-    max_driver_nodes: int = 5_000_000,
 ) -> "list[int]":
     """The s→t shortest path as a node list (``generic.py:285`` with both
     endpoints given; ``weight=None`` hops, else the weighted kernel).
     Raises when no path exists, like the reference's ``NetworkXNoPath``."""
     source, target = int(source), int(target)
     tree = shortest_path_tree(g, source, weight=weight)
-    rows = tree.collect() if tree.count() <= max_driver_nodes else None
-    if rows is None:
-        raise NetworkXError(
-            f"shortest_path tree exceeds max_driver_nodes={max_driver_nodes}; "
-            "use shortest_path_tree (distributed) instead"
-        )
+    rows = driver_rows(
+        tree, _DRIVER_NODES, "shortest_path collects the path tree",
+        "Use shortest_path_tree (distributed) instead.",
+    )
     parent = {r["id"]: r["parent"] for r in rows}
     if target not in parent:
         raise NetworkXError(f"No path between {source} and {target}.")
@@ -655,9 +658,7 @@ def negative_edge_cycle(g: SparkGraph, weight="weight") -> bool:
         return True
 
 
-def find_negative_cycle(
-    g: SparkGraph, source, weight="weight", *, max_driver_edges: int = 5_000_000
-) -> "list[int]":
+def find_negative_cycle(g: SparkGraph, source, weight="weight") -> "list[int]":
     """``weighted.py:2315`` — one negative cycle reachable from source, as
     a closed node list. Cycle EXTRACTION walks predecessor pointers — a
     size-guarded driver step over the collected reachable arc set (the
@@ -671,12 +672,9 @@ def find_negative_cycle(
         base.select("src", "dst", resolve_weight_column(base, weight).alias("w"))
         .join(reach.withColumnRenamed("id", "src"), "src", "left_semi")
     )
-    n_arcs = arcs.count()
-    if n_arcs > max_driver_edges:
-        raise NetworkXError(
-            f"reachable arc set has {n_arcs} rows > max_driver_edges"
-        )
-    rows = arcs.collect()
+    rows = driver_rows(
+        arcs, _DRIVER_EDGES, "find_negative_cycle collects the reachable arc set"
+    )
     nodes = {r["src"] for r in rows} | {r["dst"] for r in rows} | {int(source)}
     dist = {n: _INF_ for n in nodes}
     pred = {n: None for n in nodes}

@@ -26,7 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
+
+
+# Simple edges the embedding search collects onto the driver.
+_DRIVER_EDGES = 5_000_000
 
 __all__ = ["is_planar", "check_planarity", "PlanarEmbedding"]
 
@@ -233,7 +237,7 @@ def _demoucron_planar(edges, *, want_faces=False):
             emb_edges.add(frozenset((a, b)))
 
 
-def is_planar(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> bool:
+def is_planar(g: SparkGraph) -> bool:
     """``nx.is_planar`` twin (``planarity.py``; boolean surface only).
     Directed graphs are tested on the underlying undirected edges, like
     the reference. Driver-gated (see module docstring)."""
@@ -246,12 +250,11 @@ def is_planar(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> bool:
     )
     m = arcs.count()
     n = g.number_of_nodes()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"planarity testing is a sequential embedding search; the "
-            f"driver kernel collects the edge list, but {m} edges > "
-            f"max_driver_edges={max_driver_edges}."
-        )
+    check_driver_limit(
+        m, _DRIVER_EDGES,
+        "planarity testing is a sequential embedding search; the driver "
+        "kernel collects the edge list",
+    )
     if n >= 3 and m > 3 * n - 6:
         return False  # Euler bound — no collect needed
     adj: dict = {}
@@ -299,8 +302,7 @@ class PlanarEmbedding:
         return max(faces, key=len)
 
 
-def check_planarity(g: SparkGraph, counterexample: bool = False,
-                    *, max_driver_edges: int = 5_000_000):
+def check_planarity(g: SparkGraph, counterexample: bool = False):
     """``planarity.py:1`` ``check_planarity`` — (is_planar, certificate):
     the certificate is a :class:`PlanarEmbedding` when planar, else None.
     ``counterexample=True`` (extracting a Kuratowski subdivision) is not
@@ -321,11 +323,7 @@ def check_planarity(g: SparkGraph, counterexample: bool = False,
     )
     m = arcs.count()
     n = g.number_of_nodes()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"planarity testing collects the edge list; {m} edges > "
-            f"max_driver_edges={max_driver_edges}."
-        )
+    check_driver_limit(m, _DRIVER_EDGES, "planarity testing collects the edge list")
     if n >= 3 and m > 3 * n - 6:
         return False, None
     adj: dict = {

@@ -10,8 +10,7 @@ exactly like the reference (sympy is a pure-Python dependency)."""
 
 from __future__ import annotations
 
-from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 
 __all__ = ["tutte_polynomial", "chromatic_polynomial"]
 
@@ -22,10 +21,7 @@ def _collect_multi(g: SparkGraph):
     """Edge multiset (weights from a SparkMultiGraph stay distinct rows;
     a plain SparkGraph contributes one copy per row)."""
     rows = g.edges.select("src", "dst").collect()
-    if len(rows) > _MAX_EDGES:
-        raise NetworkXError(
-            f"graph polynomial recursion exceeds {_MAX_EDGES} edges"
-        )
+    check_driver_limit(len(rows), _MAX_EDGES, "graph polynomial recursion")
     edges = [(r["src"], r["dst"]) for r in rows]
     nodes = {r["id"] for r in g.vertices.select("id").collect()}
     return nodes, edges

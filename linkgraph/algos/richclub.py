@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from linkgraph.graph import SparkGraph
+from linkgraph.iterutils import local_checkpoint
 from linkgraph.exceptions import NotImplementedForDirected
 
 
@@ -127,6 +128,6 @@ def generalized_degree(g: SparkGraph) -> DataFrame:
         ends = with_support.select(F.col("u").alias("id"), "t").unionAll(
             with_support.select(F.col("v").alias("id"), "t")
         )
-        return ends.groupBy("id", "t").agg(
+        return local_checkpoint(ends.groupBy("id", "t").agg(
             F.count(F.lit(1)).cast("long").alias("n_edges")
-        ).select("id", F.col("t").cast("long"), "n_edges").localCheckpoint(eager=True)
+        ).select("id", F.col("t").cast("long"), "n_edges"))

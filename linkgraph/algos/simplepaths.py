@@ -16,8 +16,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.iterutils import SuperstepCache
+
+
+# Arcs the spur schedule collects onto the driver.
+_DRIVER_EDGES = 5_000_000
 
 __all__ = ["all_simple_paths"]
 
@@ -98,7 +102,6 @@ def shortest_simple_paths(
     weight=None,
     *,
     k: int = None,
-    max_driver_edges: int = 5_000_000,
 ):
     """Yen's algorithm (``simple_paths.py:424`` ``shortest_simple_paths``):
     simple s→t paths in nondecreasing length order, as a lazy generator of
@@ -134,14 +137,10 @@ def shortest_simple_paths(
         warcs = base.select(
             "src", "dst", resolve_weight_column(base, weight).alias("w")
         )
-    m = warcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"shortest_simple_paths' spur schedule is sequential; {m} edges "
-            f"> max_driver_edges={max_driver_edges}"
-        )
     adj: dict = {}
-    for r in warcs.collect():
+    for r in driver_rows(
+        warcs, _DRIVER_EDGES, "shortest_simple_paths' spur schedule is sequential"
+    ):
         # parallel arcs coalesce to the min weight (shortest-path semantics)
         cur = adj.setdefault(r["src"], {})
         w = float(r["w"])

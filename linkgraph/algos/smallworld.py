@@ -10,8 +10,8 @@ seeded) for the references, the wedge-join transitivity, and the batched
 all-pairs BFS for L — so the whole measure is the composition of three
 already-distributed operators. ``omega`` composes the same kernels with
 ``lattice_reference`` — whose accept/reject rewiring chain is inherently
-one-swap-at-a-time and therefore runs driver-gated under
-``max_driver_edges`` with the reference's own seeded schedule.
+one-swap-at-a-time and therefore runs driver-gated (at most
+1M edges) with the reference's own seeded schedule.
 
 Deviation (documented): a randomized reference can disconnect; the
 reference's ``average_shortest_path_length`` would raise there, so for the
@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
+
+
+# Simple edges lattice_reference's rewiring chain collects onto the driver.
+_DRIVER_EDGES = 1_000_000
 
 __all__ = ["sigma", "random_reference", "lattice_reference", "omega"]
 
@@ -78,8 +82,6 @@ def lattice_reference(
     niter: int = 5,
     D=None,
     seed: int = 42,
-    *,
-    max_driver_edges: int = 1_000_000,
 ) -> SparkGraph:
     """Latticized degree-preserving reference (``smallworld.py:77``
     ``lattice_reference``; Sporns & Zwi "latmio"): double-edge swaps
@@ -99,14 +101,10 @@ def lattice_reference(
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"lattice_reference: {m} edges > max_driver_edges={max_driver_edges}"
-        )
+    rows = driver_rows(arcs, _DRIVER_EDGES, "lattice_reference")
     rng = _random.Random(seed)
     adj: dict = {}
-    for r in arcs.collect():
+    for r in rows:
         adj.setdefault(r["u"], set()).add(r["v"])
         adj.setdefault(r["v"], set()).add(r["u"])
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
@@ -115,7 +113,7 @@ def lattice_reference(
     keys = nodes
     idx = {v: i for i, v in enumerate(keys)}
     nnodes = len(keys)
-    nedges = m
+    nedges = len(rows)
     if nnodes < 4 or nedges < 2:
         return g
     if D is None:

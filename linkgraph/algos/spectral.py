@@ -48,8 +48,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NetworkXError, NotImplementedForDirected
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 from linkgraph.iterutils import SuperstepCache
+
+
+# Nodes of the dense driver-side matrices.
+_SECOND_ORDER_NODES = 1500
+_COMMUNICABILITY_NODES = 800
 
 __all__ = [
     "communicability",
@@ -230,19 +235,17 @@ def estrada_index(
     return float(row["ee"])
 
 
-def _collect_adjacency(
-    g: SparkGraph, *, weight: Optional[str], max_driver_nodes: int, what: str
-):
+def _collect_adjacency(g: SparkGraph, *, weight: Optional[str], limit: int, what: str):
     """Size-guarded driver collection → (ids sorted, dense numpy A)."""
     import numpy as np
 
     ids = [r["id"] for r in g.vertices.select("id").collect()]
     n = len(ids)
-    if n > max_driver_nodes:
-        raise NetworkXError(
-            f"{what} is a dense O(n^3) driver-side computation (the reference "
-            f"pays the same); {n} nodes > max_driver_nodes={max_driver_nodes}."
-        )
+    check_driver_limit(
+        n, limit,
+        f"{what} is a dense O(n^3) driver-side computation (the reference "
+        "pays the same)",
+    )
     ids.sort()
     idx = {v: i for i, v in enumerate(ids)}
     A = np.zeros((n, n))
@@ -257,7 +260,6 @@ def second_order_centrality(
     g: SparkGraph,
     *,
     weight: Optional[str] = None,
-    max_driver_nodes: int = 1500,
 ) -> DataFrame:
     """(id, centrality): standard deviation of Metropolis–Hastings random-
     walk return times (Kermarrec et al., Comput. Commun. 34(5), 2011;
@@ -278,7 +280,7 @@ def second_order_centrality(
             "second_order_centrality: not implemented for directed type"
         )
     ids, A = _collect_adjacency(
-        g, weight=weight, max_driver_nodes=max_driver_nodes,
+        g, weight=weight, limit=_SECOND_ORDER_NODES,
         what="second_order_centrality",
     )
     n = len(ids)
@@ -316,9 +318,7 @@ def second_order_centrality(
     )
 
 
-def communicability_betweenness_centrality(
-    g: SparkGraph, *, max_driver_nodes: int = 800
-) -> DataFrame:
+def communicability_betweenness_centrality(g: SparkGraph) -> DataFrame:
     """(id, centrality): fraction of all-pair walk weight that routes
     through each node — ω_r = (1/C) Σ_{p≠r≠q} (G_{prq}/G_{pq}) with
     G_{prq} = expm(A)_{pq} − expm(A − E(r))_{pq}, C = (n−1)² − (n−1)
@@ -343,7 +343,7 @@ def communicability_betweenness_centrality(
         return (v * np.exp(w)) @ v.T
 
     ids, A = _collect_adjacency(
-        g, weight=None, max_driver_nodes=max_driver_nodes,
+        g, weight=None, limit=_COMMUNICABILITY_NODES,
         what="communicability_betweenness_centrality",
     )
     A = (A != 0).astype(float)

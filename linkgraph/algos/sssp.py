@@ -27,10 +27,14 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 from linkgraph.exceptions import NetworkXUnbounded
 from linkgraph.iterutils import SuperstepCache
 from linkgraph.state import CheckpointStore
+
+
+# Arcs the A* heap walk collects onto the driver.
+_DRIVER_EDGES = 5_000_000
 
 
 class NegativeCycleError(NetworkXUnbounded):
@@ -381,10 +385,7 @@ def floyd_warshall(g: SparkGraph, *, weight=None, sources=None) -> DataFrame:
     )
 
 
-def _astar(
-    g: SparkGraph, source, target, heuristic, weight, max_driver_edges: int,
-    cutoff=None,
-):
+def _astar(g: SparkGraph, source, target, heuristic, weight, cutoff=None):
     """Textbook A* on a driver-collected weighted arc list (size-guarded).
 
     The reference (``astar.py:22``) is a sequential heap walk whose pop
@@ -402,13 +403,10 @@ def _astar(
     arcs = base.select(
         "src", "dst", resolve_weight_column(base, weight).alias("w")
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"astar_path pop order is sequential by definition; {m} arcs > "
-            f"max_driver_edges={max_driver_edges}. Use "
-            "weighted_shortest_path_lengths (distributed) for lengths."
-        )
+    check_driver_limit(
+        arcs.count(), _DRIVER_EDGES, "astar_path pop order is sequential",
+        "Use weighted_shortest_path_lengths (distributed) for lengths.",
+    )
     adj: dict[int, list[tuple[int, float]]] = {}
     nodes = {r["id"] for r in g.vertices.select("id").collect()}
     source, target = int(source), int(target)
@@ -464,7 +462,6 @@ def astar_path(
     *,
     weight=None,
     cutoff=None,
-    max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(order, id): nodes of a minimum-weight source→target path under an
     admissible ``heuristic(u, target)`` (``astar.py:22`` ``astar_path``) —
@@ -473,7 +470,7 @@ def astar_path(
     ``cutoff`` prunes nodes whose g+h exceeds it, exactly the reference's
     rule (``astar.py:165``)."""
     path, _ = _astar(
-        g, source, target, heuristic, weight, max_driver_edges, cutoff
+        g, source, target, heuristic, weight, cutoff
     )
     return g.spark.createDataFrame(
         [(i, int(v)) for i, v in enumerate(path)], "order int, id bigint"
@@ -488,11 +485,10 @@ def astar_path_length(
     *,
     weight=None,
     cutoff=None,
-    max_driver_edges: int = 5_000_000,
 ) -> float:
     """``astar.py:160`` ``astar_path_length`` — the cost of the A* path."""
     _, dist = _astar(
-        g, source, target, heuristic, weight, max_driver_edges, cutoff
+        g, source, target, heuristic, weight, cutoff
     )
     return float(dist)
 

@@ -24,9 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.exceptions import NotImplementedForDirected
 from linkgraph.iterutils import SuperstepCache, row_count
+
+
+# Simple edges connected_double_edge_swap collects onto the driver.
+_DRIVER_EDGES = 1_000_000
 
 __all__ = ["double_edge_swap"]
 
@@ -261,8 +265,6 @@ def connected_double_edge_swap(
     g: SparkGraph,
     nswap: int = 1,
     seed: int = 42,
-    *,
-    max_driver_edges: int = 1_000_000,
 ) -> "tuple[SparkGraph, int]":
     """``swap.py`` ``connected_double_edge_swap`` — degree-preserving
     swaps that keep the graph connected, undoing any swap that would
@@ -285,14 +287,8 @@ def connected_double_edge_swap(
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"connected_double_edge_swap: {m} edges > "
-            f"max_driver_edges={max_driver_edges}"
-        )
     adj: dict = {}
-    for r in arcs.collect():
+    for r in driver_rows(arcs, _DRIVER_EDGES, "connected_double_edge_swap"):
         adj.setdefault(r["u"], set()).add(r["v"])
         adj.setdefault(r["v"], set()).add(r["u"])
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())

@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.exceptions import NotImplementedForDirected
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
+
+
+# Arcs the tournament kernels collect onto the driver.
+_DRIVER_EDGES = 1_000_000
 
 __all__ = ["is_tournament", "score_sequence", "random_tournament", "hamiltonian_path", "is_reachable", "tournament_matrix"]
 
@@ -77,18 +81,16 @@ def random_tournament(spark, n: int, seed: int = 0) -> SparkGraph:
     return SparkGraph(e, v, directed=True, coalesce_edges=False)
 
 
-def hamiltonian_path(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
+def hamiltonian_path(g: SparkGraph):
     """``tournament.py`` ``hamiltonian_path`` — insertion construction
     (every tournament has one): insert each node before its first
     out-neighbor in the partial path. Sequential by definition; driver
     kernel over the collected arcs."""
-    from linkgraph.exceptions import NetworkXError
-
     _require_digraph(g, "hamiltonian_path")
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError("hamiltonian_path exceeds driver guard")
     succ = {}
-    for r in g.edges.select("src", "dst").collect():
+    for r in driver_rows(
+        g.edges.select("src", "dst"), _DRIVER_EDGES, "hamiltonian_path"
+    ):
         succ.setdefault(r["src"], set()).add(r["dst"])
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     path = []
@@ -102,7 +104,7 @@ def hamiltonian_path(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
     return path
 
 
-def is_reachable(g: SparkGraph, s, t, *, max_driver_edges: int = 1_000_000) -> bool:
+def is_reachable(g: SparkGraph, s, t) -> bool:
     """``tournament.py`` ``is_reachable`` — the Tantau two-neighborhood
     closure criterion (logspace in the reference); the same boolean via
     the criterion over the collected adjacency."""
@@ -114,7 +116,7 @@ def is_reachable(g: SparkGraph, s, t, *, max_driver_edges: int = 1_000_000) -> b
     for v in nodes:
         succ.setdefault(v, set())
         pred.setdefault(v, set())
-    for r in g.edges.select("src", "dst").collect():
+    for r in driver_rows(g.edges.select("src", "dst"), _DRIVER_EDGES, "is_reachable"):
         succ[r["src"]].add(r["dst"])
         pred[r["dst"]].add(r["src"])
 

@@ -32,6 +32,7 @@ from linkgraph.exceptions import (
     NotATree,
     NotImplementedForDirected,
 )
+from linkgraph.algos.chordal import _is_peo, _mcs_numbering, _undirected_adjacency
 from linkgraph.graph import SparkGraph
 
 __all__ = [
@@ -51,34 +52,17 @@ __all__ = [
 ]
 
 
-def _collect_undirected(g: SparkGraph, max_driver_edges: int):
-    arcs = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-            F.col("weight"),
-        )
-        .groupBy("u", "v")
-        .agg(F.max("weight").alias("w"))
+# Simple edges the driver kernels collect.
+_DRIVER_EDGES = 1_000_000
+
+
+def _collect_undirected(g: SparkGraph):
+    return _undirected_adjacency(
+        g, _DRIVER_EDGES, "driver-gated kernel", weighted=True
     )
-    m = arcs.count()
-    if m > max_driver_edges:
-        raise ValueError(
-            f"driver-gated kernel: {m} edges > max_driver_edges={max_driver_edges}"
-        )
-    edges = [(r["u"], r["v"], float(r["w"])) for r in arcs.collect()]
-    nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
-    adj: dict = {v: set() for v in nodes}
-    for u, v, _ in edges:
-        adj[u].add(v)
-        adj[v].add(u)
-    return adj, edges, nodes
 
 
-def k_factor(
-    g: SparkGraph, k: int, *, max_driver_edges: int = 1_000_000
-) -> SparkGraph:
+def k_factor(g: SparkGraph, k: int) -> SparkGraph:
     """``regular.py`` ``k_factor`` — a spanning k-regular subgraph, via
     the Meijer/Núñez-Rodríguez/Rappaport gadget reduction to maximum-
     cardinality perfect matching (the engine's own blossom kernel).
@@ -88,7 +72,7 @@ def k_factor(
 
     if g.directed:
         raise NotImplementedForDirected("k_factor: undirected only")
-    adj, edges, nodes = _collect_undirected(g, max_driver_edges)
+    adj, edges, nodes = _collect_undirected(g)
     if any(len(adj[v]) < k for v in nodes):
         raise NetworkXUnfeasible(
             "Graph contains a vertex with degree less than k"
@@ -150,9 +134,7 @@ def k_factor(
     )
 
 
-def connected_dominating_set(
-    g: SparkGraph, *, max_driver_edges: int = 1_000_000
-) -> set:
+def connected_dominating_set(g: SparkGraph) -> set:
     """``dominating.py`` ``connected_dominating_set`` — Guha–Khuller-style
     greedy: repeatedly pop the node covering the most unseen neighbors
     (lazy max-heap), exactly the reference's schedule with ascending-id
@@ -162,7 +144,7 @@ def connected_dominating_set(
 
     if g.directed:
         raise NotImplementedForDirected("connected_dominating_set: undirected only")
-    adj, _, nodes = _collect_undirected(g, max_driver_edges)
+    adj, _, nodes = _collect_undirected(g)
     n = len(nodes)
     if n == 0:
         return set()
@@ -248,24 +230,22 @@ def is_connected_dominating_set(g: SparkGraph, nbunch) -> bool:
     return ncomp == 1
 
 
-def _tree_adj(g: SparkGraph, max_driver_edges: int):
+def _tree_adj(g: SparkGraph):
     from linkgraph.algos.tree import is_tree
 
     if g.directed:
         raise NotImplementedForDirected("broadcasting: undirected only")
     if not is_tree(g):
         raise NotATree("G is not a tree")
-    adj, _, nodes = _collect_undirected(g, max_driver_edges)
+    adj, _, nodes = _collect_undirected(g)
     return adj, nodes
 
 
-def tree_broadcast_center(
-    g: SparkGraph, *, max_driver_edges: int = 1_000_000
-):
+def tree_broadcast_center(g: SparkGraph):
     """``broadcasting.py`` ``tree_broadcast_center`` — (minimum broadcast
     time, set of center nodes) by the Slater–Cockayne–Hedetniemi linear
     leaf-peel (driver-gated; ties ascending id)."""
-    adj, nodes = _tree_adj(g, max_driver_edges)
+    adj, nodes = _tree_adj(g)
     n = len(nodes)
     if n < 3:
         return n - 1, set(nodes)
@@ -299,9 +279,7 @@ def tree_broadcast_center(
     return b_T, set([v] + ranked[:j])
 
 
-def tree_broadcast_time(
-    g: SparkGraph, node=None, *, max_driver_edges: int = 1_000_000
-) -> int:
+def tree_broadcast_time(g: SparkGraph, node=None) -> int:
     """``broadcasting.py`` ``tree_broadcast_time`` — b(center) + the
     BFS distance from the broadcast center (whole-tree maximum when
     ``node`` is None)."""
@@ -310,7 +288,7 @@ def tree_broadcast_time(
     if node is not None:
         if g.vertices.filter(F.col("id") == int(node)).limit(1).count() == 0:
             raise NodeNotFound(f"node {node} not in G")
-    b_T, b_C = tree_broadcast_center(g, max_driver_edges=max_driver_edges)
+    b_T, b_C = tree_broadcast_center(g)
     d = shortest_path_lengths(
         g, g.spark.createDataFrame([(int(c),) for c in b_C], "id long")
     )
@@ -321,22 +299,18 @@ def tree_broadcast_time(
     )
 
 
-def complete_to_chordal_graph(
-    g: SparkGraph, *, max_driver_edges: int = 1_000_000
-):
+def complete_to_chordal_graph(g: SparkGraph):
     """``chordal.py`` ``complete_to_chordal_graph`` (MCS-M, Berry et al.
     2004) — (chordal supergraph, alpha elimination-order dict). The
     numbering schedule is one-vertex-at-a-time by definition
     (driver-gated; ties ascending id like the reference's dict order)."""
-    from linkgraph.algos.chordal import is_chordal
-
     if g.directed:
         raise NotImplementedForDirected(
             "complete_to_chordal_graph: undirected only"
         )
-    adj, edges, nodes = _collect_undirected(g, max_driver_edges)
+    adj, edges, nodes = _collect_undirected(g)
     alpha = {v: 0 for v in nodes}
-    if is_chordal(g, max_driver_edges=max_driver_edges):
+    if _is_peo(adj, nodes, _mcs_numbering(adj, nodes)):
         return g, alpha
     chords: set = set()
     h_adj = {v: set(adj[v]) for v in nodes}
@@ -388,7 +362,7 @@ def complete_to_chordal_graph(
     )
 
 
-def junction_tree(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
+def junction_tree(g: SparkGraph):
     """``tree/decomposition.py`` ``junction_tree`` — moralize (if
     directed), complete to chordal, take the maximal cliques, connect
     cliques weighted by separator size, keep a maximum spanning tree,
@@ -401,9 +375,7 @@ def junction_tree(g: SparkGraph, *, max_driver_edges: int = 1_000_000):
     from linkgraph.algos.dag import moral_graph
 
     base = moral_graph(g) if g.directed else g
-    chordal, _ = complete_to_chordal_graph(
-        base, max_driver_edges=max_driver_edges
-    )
+    chordal, _ = complete_to_chordal_graph(base)
     cliques = [tuple(sorted(c)) for c in chordal_graph_cliques(chordal)]
     # clique graph: weight = |separator|
     cedges = []
@@ -514,7 +486,7 @@ def to_nested_tuple(g: SparkGraph, root, canonical_form: bool = False):
 
     if not is_tree(g):
         raise NotATree("the graph is not a tree")
-    adj, _, nodes = _collect_undirected(g, 1_000_000)
+    adj, _, nodes = _collect_undirected(g)
     root = int(root)
     if root not in adj:
         raise NodeNotFound(f"root {root} is not in the tree")
@@ -592,9 +564,7 @@ def is_perfect_graph(g: SparkGraph, **kwargs) -> bool:
     return not (has_odd_hole(g) or has_odd_hole(complement(g)))
 
 
-def find_asteroidal_triple(
-    g: SparkGraph, *, max_driver_edges: int = 1_000_000
-):
+def find_asteroidal_triple(g: SparkGraph):
     """``asteroidal.py`` ``find_asteroidal_triple`` — three pairwise
     non-adjacent nodes such that each pair stays connected when the
     third's closed neighborhood is removed (Ekkehard & Köhler component
@@ -602,7 +572,7 @@ def find_asteroidal_triple(
     reference also materializes). Returns [u, v, w] or None."""
     if g.directed:
         raise NotImplementedForDirected("find_asteroidal_triple: undirected only")
-    adj, _, nodes = _collect_undirected(g, max_driver_edges)
+    adj, _, nodes = _collect_undirected(g)
     node_set = set(nodes)
     comp: dict = {}
     for u in nodes:

@@ -34,6 +34,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import SparkGraph
+from linkgraph.iterutils import local_checkpoint
 from linkgraph.exceptions import NotImplementedForDirected
 
 
@@ -116,9 +117,9 @@ def all_triangles(g: SparkGraph) -> DataFrame:
     corners sorted ascending."""
     arr = F.array_sort(F.array("a", "b", "c"))
     with _triangle_corners(g) as t:
-        return t.select(
+        return local_checkpoint(t.select(
             arr[0].alias("n1"), arr[1].alias("n2"), arr[2].alias("n3")
-        ).localCheckpoint(eager=True)
+        ))
 
 
 def triangles(g: SparkGraph) -> DataFrame:
@@ -130,9 +131,11 @@ def triangles(g: SparkGraph) -> DataFrame:
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("triangles"))
         )
-        return g.vertices.select("id").join(counts, "id", "left").select(
-            "id", F.coalesce("triangles", F.lit(0)).alias("triangles")
-        ).localCheckpoint(eager=True)
+        return local_checkpoint(
+            g.vertices.select("id").join(counts, "id", "left").select(
+                "id", F.coalesce("triangles", F.lit(0)).alias("triangles")
+            )
+        )
 
 
 def triangle_count(g: SparkGraph) -> int:
@@ -243,7 +246,7 @@ def clustering(g: SparkGraph, nodes=None, weight=None) -> DataFrame:
                     .alias("clustering"),
                 )
             )
-            return out.localCheckpoint(eager=True)
+            return local_checkpoint(out)
     finally:
         nw.unpersist()
 
@@ -350,7 +353,7 @@ def square_clustering(g: SparkGraph) -> DataFrame:
             .alias("square_clustering"),
         )
     )
-    out = out.localCheckpoint(eager=True)
+    out = local_checkpoint(out)
     sym.unpersist()
     pairs.unpersist()
     return out

@@ -34,6 +34,9 @@ code written against the reference (``except nx.NetworkXException``,
 - :class:`NotATree` — tree decoding of a non-tree
   (``networkx/algorithms/tree/coding.py:18``; lives here so the whole
   error surface is one import).
+- :class:`DriverLimitExceeded` — the engine's own: a driver kernel's input
+  is larger than the rows it may collect onto the driver (no reference
+  counterpart; it is both a :class:`NetworkXError` and a ``ValueError``).
 """
 
 from __future__ import annotations
@@ -55,6 +58,7 @@ __all__ = [
     "ExceededMaxIterations",
     "PowerIterationFailedConvergence",
     "NotATree",
+    "DriverLimitExceeded",
 ]
 
 
@@ -127,3 +131,10 @@ class PowerIterationFailedConvergence(ExceededMaxIterations):
 
 class NotATree(NetworkXException):
     """The graph handed to a tree-coding routine is not a tree."""
+
+
+class DriverLimitExceeded(NetworkXError, ValueError):
+    """A driver kernel's input has more rows than it may collect onto the
+    driver (:func:`linkgraph.graph.driver_rows`). Both a
+    :class:`NetworkXError` and a ``ValueError``, so ``except`` clauses
+    written for either catch it."""

@@ -66,6 +66,28 @@ def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> Data
     return DataFrame(jdf, spark)
 
 
+def check_driver_limit(n: int, limit: int, what: str, hint: str = "") -> None:
+    """Raise :class:`~linkgraph.exceptions.DriverLimitExceeded` when a
+    driver kernel's input of ``n`` rows is over its ``limit``. ``what``
+    names the kernel; ``hint`` names the distributed call to use instead,
+    where there is one."""
+    if n > limit:
+        from linkgraph.exceptions import DriverLimitExceeded
+
+        raise DriverLimitExceeded(
+            f"{what}: {n} rows exceed the driver limit of {limit}."
+            + (f" {hint}" if hint else "")
+        )
+
+
+def driver_rows(df: DataFrame, limit: int, what: str, hint: str = "") -> list:
+    """The rows of ``df``, collected onto the driver for a sequential
+    kernel: ``df`` is counted first and nothing is collected when the count
+    is over ``limit`` (:func:`check_driver_limit`)."""
+    check_driver_limit(df.count(), limit, what, hint)
+    return df.collect()
+
+
 class SparkGraph:
     """A graph as a pair of DataFrames.
 

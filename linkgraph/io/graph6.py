@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 
 __all__ = [
     "from_graph6_bytes",
@@ -28,6 +28,10 @@ __all__ = [
 ]
 
 _HEADER = b">>graph6<<"
+
+
+# Nodes of the dense upper triangle to_graph6_bytes encodes.
+_DRIVER_NODES = 100_000
 
 
 def _decode_n(data: list[int]) -> tuple[int, list[int]]:
@@ -103,7 +107,6 @@ def to_graph6_bytes(
     g: SparkGraph,
     *,
     header: bool = True,
-    max_driver_nodes: int = 100_000,
 ) -> bytes:
     """Encode an undirected simple graph (``graph6.py:107``): nodes are
     relabeled to 0..n-1 in ascending id order, like the reference's
@@ -113,11 +116,7 @@ def to_graph6_bytes(
         raise NetworkXError("graph6: not defined for directed graphs")
     ids = sorted(r["id"] for r in g.vertices.select("id").collect())
     n = len(ids)
-    if n > max_driver_nodes:
-        raise NetworkXError(
-            f"graph6 is a dense O(n^2)-bit format; {n} nodes > "
-            f"max_driver_nodes={max_driver_nodes}."
-        )
+    check_driver_limit(n, _DRIVER_NODES, "graph6 is a dense O(n^2)-bit format")
     idx = {v: i for i, v in enumerate(ids)}
     present = set()
     for r in g.edges.select("src", "dst").collect():

@@ -16,8 +16,7 @@ from __future__ import annotations
 import sys
 from collections import defaultdict
 
-from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 
 __all__ = ["generate_network_text", "write_network_text"]
 
@@ -49,15 +48,18 @@ _GLYPHS = {
 _ELLIPSIS = object()
 
 
-def _collect(g: SparkGraph, max_driver_edges: int):
-    if g.edges.count() > max_driver_edges:
-        raise NetworkXError(
-            f"generate_network_text exceeds max_driver_edges={max_driver_edges}"
-        )
+# Edges generate_network_text collects onto the driver.
+_DRIVER_EDGES = 1_000_000
+
+
+def _collect(g: SparkGraph):
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _DRIVER_EDGES, "generate_network_text"
+    )
     nodes = sorted(r["id"] for r in g.vertices.select("id").collect())
     succ = {v: [] for v in nodes}
     pred = {v: [] for v in nodes}
-    for r in g.edges.select("src", "dst").collect():
+    for r in rows:
         u, v = r["src"], r["dst"]
         if g.directed:
             succ[u].append(v)
@@ -123,8 +125,6 @@ def generate_network_text(
     max_depth=None,
     ascii_only: bool = False,
     vertical_chains: bool = False,
-    *,
-    max_driver_edges: int = 1_000_000,
 ):
     """``text.py:73`` ``generate_network_text`` — yield the lines of the
     DFS-forest drawing. ``with_labels`` may name a vertex column used as
@@ -140,7 +140,7 @@ def generate_network_text(
                 if r[attr] is not None
             }
 
-    nodes, succ, pred = _collect(g, max_driver_edges)
+    nodes, succ, pred = _collect(g)
     if max_depth == 0:
         yield glyphs["empty"] + " ..."
         return

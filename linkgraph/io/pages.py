@@ -184,6 +184,27 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return src.mapInPandas(run, _EXTRACT_SCHEMA)
 
 
+_HREFS_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("hrefs", ArrayType(StringType()), True),
+    ]
+)
+
+
+def _extract_hrefs(pages: DataFrame) -> DataFrame:
+    """(url, hrefs) via one Arrow-batched pass over html: the edge build's
+    projection of :func:`extract_pages`, which skips the text kernel."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"url": pdf["url"], "hrefs": X.extract_hrefs_series(pdf["html"])}
+            )
+
+    return pages.select("url", "html").mapInPandas(run, _HREFS_SCHEMA)
+
+
 def pages_to_edges(pages: DataFrame, *, in_crawl_only: bool = True) -> DataFrame:
     """Edge DataFrame (src, dst, weight) with ids = ``xxhash64(url)``.
 
@@ -191,8 +212,10 @@ def pages_to_edges(pages: DataFrame, *, in_crawl_only: bool = True) -> DataFrame
     construction (weights summed, ``convert_matrix.py:649-656``). With
     ``in_crawl_only`` the dst side is semi-joined against the crawl's own
     url set (dangling out-of-crawl targets dropped; in-crawl dangling pages
-    — no out-links — remain and are PageRank's dangling mass)."""
-    ext = extract_pages(pages)
+    — no out-links — remain and are PageRank's dangling mass). Without it
+    every micro-batch maps on its own, which is what the streaming ingest
+    (:func:`linkgraph.streaming.edges_stream`) runs."""
+    ext = _extract_hrefs(pages)
     raw = ext.select(
         F.xxhash64("url").alias("src"),
         F.explode("hrefs").alias("href"),

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, driver_rows
 from linkgraph.io.graph6 import _decode_n, _encode_n
 
 __all__ = [
@@ -33,6 +33,10 @@ __all__ = [
 ]
 
 _HEADER = b">>sparse6<<"
+
+
+# Edges to_sparse6_bytes walks on the driver.
+_DRIVER_EDGES = 5_000_000
 
 
 def from_sparse6_bytes(spark: SparkSession, data) -> SparkGraph:
@@ -86,7 +90,6 @@ def to_sparse6_bytes(
     g: SparkGraph,
     *,
     header: bool = True,
-    max_driver_edges: int = 5_000_000,
 ) -> bytes:
     """Encode per the spec's canonical edge walk: edges sorted by
     (max endpoint, min endpoint); ``b=1`` advances the current vertex by
@@ -99,16 +102,14 @@ def to_sparse6_bytes(
         raise NetworkXError("sparse6: not defined for directed graphs")
     ids = sorted(r["id"] for r in g.vertices.select("id").collect())
     n = len(ids)
-    m = g.edges.count()
-    if m > max_driver_edges:
-        raise NetworkXError(
-            f"sparse6 encode is a sequential walk; {m} edges > "
-            f"max_driver_edges={max_driver_edges}."
-        )
+    rows = driver_rows(
+        g.edges.select("src", "dst"), _DRIVER_EDGES,
+        "sparse6 encode is a sequential walk",
+    )
     idx = {u: i for i, u in enumerate(ids)}
     pairs = sorted(
         (max(idx[r["src"]], idx[r["dst"]]), min(idx[r["src"]], idx[r["dst"]]))
-        for r in g.edges.select("src", "dst").collect()
+        for r in rows
     )
     k = max((n - 1).bit_length(), 1)
 

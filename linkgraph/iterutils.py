@@ -36,6 +36,11 @@ carry none of it themselves. Used as a context manager it:
   made, except the snapshots the loop's :meth:`~SuperstepCache.result`
   reads. The caller releases those with :meth:`~SuperstepCache.release`.
 
+Every snapshot the library makes, in a loop or by a one-off
+:func:`local_checkpoint`, is marked by name on its RDD; ``release`` frees
+only marked snapshots, so releasing a result never frees a snapshot the
+caller's own input graph reads.
+
 Every loop in the library opens it with ``with``; outside ``with`` it is
 only meant for releasing a returned result,
 ``SuperstepCache(spark).release(result)``.
@@ -146,28 +151,52 @@ def row_count() -> dict:
     return {"rows": F.count(F.lit(1))}
 
 
-def _snapshot_rdd_ids(df: DataFrame) -> set:
-    """Ids of the RDDs behind every ``LogicalRDD`` leaf of ``df``'s plan —
-    the local-checkpoint snapshots (and any other RDD scans) it reads."""
-    ids = set()
+# The name :func:`local_checkpoint` gives the RDD behind each snapshot the
+# library makes; release frees no RDD without it. The mark lives on the RDD,
+# so it goes with its SparkContext (RDD ids restart in a new one).
+_SNAPSHOT_NAME = "linkgraph.snapshot"
+
+
+def _snapshot_rdds(df: DataFrame) -> list:
+    """The RDDs behind every ``LogicalRDD`` leaf of ``df``'s plan — the
+    local-checkpoint snapshots (and any other RDD scans) it reads."""
+    rdds = []
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
         if leaf.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
-            ids.add(leaf.rdd().id())
-    return ids
+            rdds.append(leaf.rdd())
+    return rdds
 
 
-def _snapshots_read(dfs) -> set:
-    """:func:`_snapshot_rdd_ids` over a DataFrame or a list of them (None
-    entries skipped)."""
+def _snapshot_rdd_ids(df: DataFrame) -> set:
+    """Ids of the RDDs of :func:`_snapshot_rdds`."""
+    return {rdd.id() for rdd in _snapshot_rdds(df)}
+
+
+def _snapshots_made(dfs) -> set:
+    """Ids of the library snapshots (:func:`local_checkpoint`) read by a
+    DataFrame or a list of them (None entries skipped)."""
     if isinstance(dfs, DataFrame):
         dfs = [dfs]
     ids = set()
     for d in dfs:
         if d is not None:
-            ids |= _snapshot_rdd_ids(d)
+            ids |= {
+                rdd.id() for rdd in _snapshot_rdds(d)
+                if rdd.name() == _SNAPSHOT_NAME
+            }
     return ids
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, marked as a library snapshot so
+    that :meth:`SuperstepCache.release` frees it with the result that
+    reads it."""
+    out = df.localCheckpoint(eager=True)
+    for rdd in _snapshot_rdds(out):
+        rdd.setName(_SNAPSHOT_NAME)
+    return out
 
 
 class SuperstepCache:
@@ -210,7 +239,7 @@ class SuperstepCache:
                 df.unpersist()
             keep = set()
             if exc_type is None and self._result is not None:
-                keep = _snapshots_read(self._result)
+                keep = _snapshots_made(self._result)
             self._unpersist(self._snapshots - keep)
         finally:
             for k, v in self._saved.items():
@@ -287,7 +316,7 @@ class SuperstepCache:
         # since this mark is unpersisted before the error propagates.
         mark = self._sc().newRddId()
         try:
-            out = _strip_origin_stats(df.localCheckpoint(eager=True))
+            out = _strip_origin_stats(local_checkpoint(df))
         except Exception:
             pinned = self.spark.sparkContext._jsc.getPersistentRDDs()
             self._unpersist([rid for rid in pinned.keySet() if rid > mark])
@@ -298,12 +327,14 @@ class SuperstepCache:
         return out if figures is None else (out, observed())
 
     def release(self, dfs) -> None:
-        """Unpersist the executor-pinned RDDs behind every snapshot the
-        given DataFrames read (``SparkContext.persistentRdds`` has no public
-        release API; the ids come off the plans' ``LogicalRDD`` leaves).
-        A no-op for frames that read no snapshot. Those snapshots must
-        never be read again — their blocks are gone."""
-        self._unpersist(_snapshots_read(dfs))
+        """Unpersist the executor-pinned RDDs behind every library snapshot
+        the given DataFrames read (``SparkContext.persistentRdds`` has no
+        public release API; the ids come off the plans' ``LogicalRDD``
+        leaves). Snapshots the library did not make, such as the caller's
+        own ``localCheckpoint`` frames under an input graph, stay. A no-op
+        for frames that read no library snapshot. The released snapshots
+        must never be read again — their blocks are gone."""
+        self._unpersist(_snapshots_made(dfs))
 
     def _sc(self):
         if self._jsc_sc is None:

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from linkgraph.exceptions import NetworkXError
 from linkgraph.graph import SparkGraph
+from linkgraph.iterutils import local_checkpoint
 
 __all__ = [
     "random_layout",
@@ -213,7 +214,7 @@ def _deflated_eigvec(g, against: "list[DataFrame]", seed: int,
     head = x.orderBy("id").limit(1).first()["v"]
     if head < 0:
         x = x.select("id", (-F.col("v")).alias("v"))
-    return x.localCheckpoint(eager=True)
+    return local_checkpoint(x)
 
 
 def spectral_layout(

@@ -21,7 +21,7 @@ from typing import Iterable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from linkgraph.exceptions import NetworkXError
-from linkgraph.graph import SparkGraph
+from linkgraph.graph import SparkGraph, check_driver_limit
 from linkgraph.generators import (
     _vertices,
     caveman_graph,
@@ -97,6 +97,12 @@ __all__ = [
 ]
 
 _U53 = float(1 << 53)
+
+
+# Tree edges to_prufer_sequence encodes on the driver, and nodes of the
+# dense adjacency is_regular_expander eigensolves.
+_PRUFER_EDGES = 5_000_000
+_EXPANDER_NODES = 200_000
 
 
 def _coin(*cols):
@@ -632,7 +638,7 @@ def from_prufer_sequence(spark: SparkSession, sequence: Sequence[int]) -> SparkG
                       coalesce_edges=False)
 
 
-def to_prufer_sequence(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> "list[int]":
+def to_prufer_sequence(g: SparkGraph) -> "list[int]":
     """``trees.py`` ``to_prufer_sequence`` — exact encode; the peel order
     is sequential by definition, so the (n-1)-edge tree is collected under
     the usual size guard."""
@@ -641,8 +647,7 @@ def to_prufer_sequence(g: SparkGraph, *, max_driver_edges: int = 5_000_000) -> "
     if not is_tree(g):
         raise NetworkXError("to_prufer_sequence: input is not a tree")
     rows = g.edges.select("src", "dst").collect()
-    if len(rows) > max_driver_edges:
-        raise NetworkXError("tree too large for driver encode")
+    check_driver_limit(len(rows), _PRUFER_EDGES, "to_prufer_sequence")
     adj: dict = {}
     for r in rows:
         adj.setdefault(r["src"], set()).add(r["dst"])
@@ -1702,8 +1707,7 @@ def maybe_regular_expander(
     return maybe_regular_expander_graph(spark, n, d, max_tries=max_tries, seed=seed)
 
 
-def is_regular_expander(g: SparkGraph, *, epsilon: float = 0,
-                        max_driver_nodes: int = 200_000) -> bool:
+def is_regular_expander(g: SparkGraph, *, epsilon: float = 0) -> bool:
     """``expanders.py`` ``is_regular_expander`` — d-regular AND
     ``|λ2| < 2√(d-1) + ε`` (Ramanujan bound). The spectral check collects
     the (sparse) adjacency to the driver under a size guard — an O(n)
@@ -1718,10 +1722,7 @@ def is_regular_expander(g: SparkGraph, *, epsilon: float = 0,
     if not is_regular(g):
         return False
     nv = g.vertices.count()
-    if nv > max_driver_nodes:
-        raise NetworkXError(
-            f"is_regular_expander: {nv} nodes exceeds max_driver_nodes"
-        )
+    check_driver_limit(nv, _EXPANDER_NODES, "is_regular_expander")
     ids = sorted(r["id"] for r in g.vertices.select("id").collect())
     idx = {v: i for i, v in enumerate(ids)}
     A = np.zeros((nv, nv))

@@ -17,8 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from linkgraph.io.pages import PAGES_SCHEMA, extract_pages
-from pyspark.sql import functions as F
+from linkgraph.io.pages import PAGES_SCHEMA, pages_to_edges
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -40,13 +39,7 @@ def edges_stream(pages: DataFrame) -> DataFrame:
     In-crawl filtering (dropping targets never seen in the crawl) is a
     join against a growing dictionary, so it runs downstream in batch.
     """
-    ext = extract_pages(pages)
-    return (
-        ext.select(
-            F.xxhash64("url").alias("src"), F.explode("hrefs").alias("href")
-        )
-        .select("src", F.xxhash64("href").alias("dst"), F.lit(1.0).alias("weight"))
-    )
+    return pages_to_edges(pages, in_crawl_only=False)
 
 
 def start_edge_ingest(

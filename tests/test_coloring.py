@@ -87,10 +87,13 @@ def test_jones_plassmann_distributed(spark):
         _is_proper(G, got)
 
 
-def test_guard_and_validation(spark):
+def test_guard_and_validation(spark, monkeypatch):
     _, G, g = _fixtures(spark)[0]
+    from linkgraph.algos import coloring
+
+    monkeypatch.setattr(coloring, "_DRIVER_EDGES", 3)
     with pytest.raises(NetworkXError):
-        linkgraph.greedy_color(g, max_driver_edges=3)
+        linkgraph.greedy_color(g)
     with pytest.raises(NetworkXError):
         linkgraph.greedy_color(g, "nope")
     # jones_plassmann ignores the guard (scale path)

@@ -51,7 +51,7 @@ def test_greedy_modularity_weighted(spark):
     assert got == want
 
 
-def test_greedy_modularity_quality_and_guards(spark):
+def test_greedy_modularity_quality_and_guards(spark, monkeypatch):
     G = nx.karate_club_graph()
     g = from_nx(spark, G)
     part = greedy_modularity_communities(g)
@@ -63,8 +63,11 @@ def test_greedy_modularity_quality_and_guards(spark):
         greedy_modularity_communities(g, cutoff=0)
     with pytest.raises(ValueError, match="best_n"):
         greedy_modularity_communities(g, cutoff=5, best_n=2)
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        greedy_modularity_communities(g, max_driver_edges=3)
+    from linkgraph.algos import community
+
+    monkeypatch.setattr(community, "_DRIVER_ARCS", 3)
+    with pytest.raises(ValueError, match="driver limit"):
+        greedy_modularity_communities(g)
 
 
 def test_greedy_modularity_edgeless(spark):

@@ -15,6 +15,7 @@ from linkgraph.algos.components import (
     weakly_connected_components,
     number_connected_components,
     is_connected,
+    is_weakly_connected,
     component_sizes,
 )
 
@@ -99,3 +100,12 @@ def test_long_path_chain_convergence(spark):
     g = from_nx(spark, G)
     got = _partition(connected_components(g, max_rounds=20))
     assert got == {frozenset(range(257))}
+
+
+def test_null_graph_connectivity_raises(spark):
+    """``connected.py``/``weakly_connected.py``: connectivity is undefined
+    on the null graph, for both the undirected and the directed check."""
+    with pytest.raises(ValueError, match="null graph"):
+        is_connected(from_nx(spark, nx.Graph()))
+    with pytest.raises(ValueError, match="null graph"):
+        is_weakly_connected(from_nx(spark, nx.DiGraph()))

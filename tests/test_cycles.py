@@ -96,7 +96,7 @@ def test_eulerian_circuit_parity(spark):
             ) == sorted((min(u, v), max(u, v)) for u, v in G.edges())
 
 
-def test_eulerian_path_and_guards(spark):
+def test_eulerian_path_and_guards(spark, monkeypatch):
     import networkx as nx
     import pytest
     from linkgraph.graph import from_nx
@@ -111,8 +111,11 @@ def test_eulerian_path_and_guards(spark):
     assert [(r["src"], r["dst"]) for r in rows] == [(0, 1), (1, 2), (2, 3), (3, 4)]
     with pytest.raises(ValueError, match="no Eulerian paths"):
         eulerian_path(from_nx(spark, nx.star_graph(3)))
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        eulerian_circuit(from_nx(spark, nx.cycle_graph(9)), max_driver_edges=2)
+    from linkgraph.algos import cycles
+
+    monkeypatch.setattr(cycles, "_WALK_ARCS", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        eulerian_circuit(from_nx(spark, nx.cycle_graph(9)))
 
 
 def _canon_cycles(cycles, directed):
@@ -151,12 +154,15 @@ def test_unbounded_simple_cycles_parity(spark):
         assert got == want, f"mismatch on {G}"
 
 
-def test_unbounded_simple_cycles_guard(spark):
+def test_unbounded_simple_cycles_guard(spark, monkeypatch):
     import networkx as nx
     import pytest
     from linkgraph.graph import from_nx
     from linkgraph.algos.cycles import simple_cycles
 
+    from linkgraph.algos import cycles
+
     g = from_nx(spark, nx.cycle_graph(9))
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        simple_cycles(g, max_driver_edges=2)
+    monkeypatch.setattr(cycles, "_DRIVER_ARCS", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        simple_cycles(g)

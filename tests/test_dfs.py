@@ -84,11 +84,15 @@ def test_dfs_tree_parity(spark, source):
     assert sorted(r["id"] for r in T.vertices.collect()) == sorted(want.nodes())
 
 
-def test_dfs_guards(spark):
+def test_dfs_guards(spark, monkeypatch):
     G = nx.path_graph(5)
     g = from_nx(spark, G)
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        dfs_edges(g, 0, max_driver_edges=2)
+    from linkgraph.algos import dfs
+
+    with monkeypatch.context() as mp:
+        mp.setattr(dfs, "_DRIVER_EDGES", 2)
+        with pytest.raises(ValueError, match="driver limit"):
+            dfs_edges(g, 0)
     with pytest.raises(ValueError, match="not in the graph"):
         dfs_edges(g, 99)
 

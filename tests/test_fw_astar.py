@@ -94,7 +94,7 @@ def test_astar_matches_nx_cost(spark, directed):
         assert cost == pytest.approx(want)
 
 
-def test_astar_heuristic_and_errors(spark):
+def test_astar_heuristic_and_errors(spark, monkeypatch):
     # grid with euclidean heuristic — admissible, must keep optimality
     G = nx.grid_2d_graph(6, 6)
     G = nx.convert_node_labels_to_integers(G, ordering="sorted")
@@ -117,8 +117,11 @@ def test_astar_heuristic_and_errors(spark):
     gh = _wgraph(spark, H, directed=False)
     with pytest.raises(NetworkXError):
         linkgraph.astar_path(gh, 0, 5)  # disconnected target
+    from linkgraph.algos import sssp
+
+    monkeypatch.setattr(sssp, "_DRIVER_EDGES", 2)
     with pytest.raises(NetworkXError):
-        linkgraph.astar_path(g, 0, 35, max_driver_edges=2)
+        linkgraph.astar_path(g, 0, 35)
 
 
 def test_astar_weight_expression(spark):

@@ -127,7 +127,7 @@ def test_pattern_validation(spark, G):
         subgraph_matches(g, [])
 
 
-def test_is_isomorphic_exact(spark):
+def test_is_isomorphic_exact(spark, monkeypatch):
     """Exact graph isomorphism (driver-gated WL-guided backtracking) vs
     the reference, including WL-indistinguishable 3-regular pairs."""
     import random
@@ -158,5 +158,8 @@ def test_is_isomorphic_exact(spark):
     Dp = nx.relabel_nodes(D, dict(zip(D.nodes(), rng.sample(list(D.nodes()), 10))))
     assert is_isomorphic(from_nx(spark, D), from_nx(spark, Dp))
 
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        is_isomorphic(from_nx(spark, G), from_nx(spark, H), max_driver_edges=2)
+    from linkgraph.algos import isomorphism
+
+    monkeypatch.setattr(isomorphism, "_DRIVER_ARCS", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        is_isomorphic(from_nx(spark, G), from_nx(spark, H))

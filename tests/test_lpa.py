@@ -15,7 +15,10 @@ from linkgraph.algos.lpa import (
     label_propagation_communities,
     communities_as_sets,
     NotImplementedForDirected,
+)
+from linkgraph.algos.coloring import (
     _greedy_color_largest_first,
+    _undirected_adjacency,
 )
 
 
@@ -95,7 +98,9 @@ def test_exact_partition_parity(spark, maker):
 def test_greedy_color_matches_nx():
     for maker in (nx.karate_club_graph, lambda: nx.lollipop_graph(4, 3)):
         G = _sorted_nx(maker())
-        ours = _greedy_color_largest_first(list(G.edges()), sorted(G.nodes()))
+        nodes = sorted(G.nodes())
+        rows = [{"src": u, "dst": v} for u, v in G.edges()]
+        ours = _greedy_color_largest_first(_undirected_adjacency(nodes, rows), nodes)
         theirs = nx.coloring.greedy_color(G)
         assert ours == theirs
 

@@ -85,12 +85,15 @@ def test_min_weight_matching_parity(spark):
     assert _wsum(G, got) == _wsum(G, want)
 
 
-def test_max_weight_matching_guards_and_empty(spark):
+def test_max_weight_matching_guards_and_empty(spark, monkeypatch):
     G = nx.empty_graph(4)
     g = from_nx(spark, G)
     assert _pairs(max_weight_matching(g)) == set()
     G2 = nx.path_graph(5)
     for u, v in G2.edges():
         G2[u][v]["weight"] = 1
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        max_weight_matching(from_nx(spark, G2), max_driver_edges=2)
+    from linkgraph.algos import matching_weight
+
+    monkeypatch.setattr(matching_weight, "_DRIVER_EDGES", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        max_weight_matching(from_nx(spark, G2))

@@ -88,17 +88,21 @@ def test_end_to_end_pagerank_over_crawl(spark, pages):
 
 
 def test_column_pruning_reaches_scan(spark, tmp_path, pages):
-    """The extraction scan must read only (url, html) — ReadSchema check."""
+    """The extraction and the edge build read only (url, html) — no scan
+    of either plan reads text, warc_ts or lang (ReadSchema check)."""
     path = str(tmp_path / "pages.parquet")
     pages.write.mode("overwrite").parquet(path)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    explained = (
-        extract_pages(spark.read.parquet(path))
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
-    read_schema = [l for l in explained.splitlines() if "ReadSchema" in l]
-    assert read_schema and "warc_ts" not in read_schema[0]
-    assert "text" not in read_schema[0]
+    for project in (extract_pages, pages_to_edges):
+        explained = (
+            project(spark.read.parquet(path))
+            ._jdf.queryExecution()
+            .explainString(mode)
+        )
+        read_schema = [l for l in explained.splitlines() if "ReadSchema" in l]
+        assert read_schema, project.__name__
+        for line in read_schema:
+            for col in ("text", "warc_ts", "lang"):
+                assert col not in line, (project.__name__, line)

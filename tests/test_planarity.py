@@ -50,13 +50,16 @@ def test_is_planar_random(spark):
         assert is_planar(from_nx(spark, G)) == nx.is_planar(G)
 
 
-def test_is_planar_guard(spark):
+def test_is_planar_guard(spark, monkeypatch):
     g = from_nx(spark, nx.cycle_graph(9))
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        is_planar(g, max_driver_edges=2)
+    from linkgraph.algos import planarity
+
+    monkeypatch.setattr(planarity, "_DRIVER_EDGES", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        is_planar(g)
 
 
-def test_is_chordal_parity(spark):
+def test_is_chordal_parity(spark, monkeypatch):
     """MCS chordality vs the reference (chordal.py)."""
     from linkgraph.algos.chordal import is_chordal
     from linkgraph.exceptions import NotImplementedForDirected
@@ -76,5 +79,8 @@ def test_is_chordal_parity(spark):
         assert is_chordal(from_nx(spark, G)) == want
     with pytest.raises(NotImplementedForDirected):
         is_chordal(from_nx(spark, nx.DiGraph([(0, 1)])))
-    with pytest.raises(ValueError, match="max_driver_edges"):
-        is_chordal(from_nx(spark, nx.complete_graph(6)), max_driver_edges=2)
+    from linkgraph.algos import chordal
+
+    monkeypatch.setattr(chordal, "_DRIVER_EDGES", 2)
+    with pytest.raises(ValueError, match="driver limit"):
+        is_chordal(from_nx(spark, nx.complete_graph(6)))

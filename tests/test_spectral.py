@@ -164,11 +164,12 @@ def test_second_order_disconnected_raises(spark):
         second_order_centrality(from_nx(spark, G))
 
 
-def test_second_order_guard(spark):
+def test_second_order_guard(spark, monkeypatch):
+    from linkgraph.algos import spectral
+
+    monkeypatch.setattr(spectral, "_SECOND_ORDER_NODES", 3)
     with pytest.raises(NetworkXError):
-        second_order_centrality(
-            from_nx(spark, nx.path_graph(5)), max_driver_nodes=3
-        )
+        second_order_centrality(from_nx(spark, nx.path_graph(5)))
 
 
 def _cbc_ref(G):
